@@ -145,6 +145,7 @@ def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     value."""
     import uuid
 
+    from fusets_spark.streaming import start_per_core
     from fusets_spark.streaming.rollup_stream import stream_rollup_df
 
     import os
@@ -169,13 +170,13 @@ def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     name = "stream_rollup_" + uuid.uuid4().hex[:8]
-    q = (
+    q = start_per_core(
+        spark,
         stream_rollup_df(stream, tier_seconds=60, integer_values=False)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     try:
         if not q.awaitTermination(600):
@@ -252,7 +253,7 @@ def q_stream_block_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a real readStream; each series' open buckets live in
     Spark-managed group state; event-time timeouts seal blocks as the
     watermark passes bucket ends (streaming/block_stream.py). The backlog
-    is drained deterministically with trailing sentinel batches, sealed
+    is drained deterministically with one trailing sentinel row, sealed
     blocks are decoded back to points, and the oracle checks
     stream-encode∘decode == identity against the plain events projection —
     so the stateful path must reproduce the batch codec byte-for-byte
@@ -270,19 +271,16 @@ def q_stream_block_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would accumulate full event-table copies in /tmp across rounds
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     work = f"/tmp/fusets_stream_blocks_{tag}"
-    # sink='parquet' is the exactly-once production path (blocks stream
-    # straight to files; the return is a plain scan of the sink) — the
-    # memory sink held every sealed block on the driver and re-parallelized
-    # it (guide §5: no driver materialization on a data path). Byte
-    # identity between the two sinks is pinned in tests/test_streaming.py.
+    # sealed blocks stream straight to parquet files under a checkpoint
+    # (exactly-once); the return is a plain scan of the sink
     sealed = seal_all_with_sentinels(
         spark, pts, work, block_seconds=86400, sink="parquet"
     )
     return decode_blocks(sealed).select(
         "source",
         "doc_id",
-        # memory-sink round trip ran under the pinned-UTC instant type;
-        # back to NTZ for hash parity with the DuckDB projection
+        # the stream ran under the pinned-UTC instant type; back to NTZ
+        # for hash parity with the DuckDB projection
         F.col("ts").cast("timestamp_ntz").alias("ts"),
         "value",
     )

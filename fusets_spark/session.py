@@ -108,7 +108,10 @@ def get_spark(
 
     cores: local[N] parallelism. Defaults to $SPARK_GRAFT_CPUS or all cores.
     shuffle_partitions: defaults to max(cores, 32) locally. On a cluster AQE
-        coalesces; start high and let adaptive execution shrink.
+        coalesces; start high and let adaptive execution shrink. AQE does
+        not run on streaming queries, so stateful streams do not take this
+        width: they start through streaming.start_per_core, which gives
+        them one state shard per core.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 8

@@ -20,9 +20,12 @@ the batch hash buckets, and per-series state is bounded by
 
 Draining semantics: a bucket seals when `bucket_ts + block_seconds <=
 watermark`. Spark's watermark for micro-batch N is derived from data seen
-through batch N-1, so a bounded backlog needs trailing sentinel rows
-(later event times, junk key) to push the watermark past the real data —
-see seal_all_with_sentinels() for the deterministic drain recipe the
+through batch N-1, so a bounded backlog needs a sentinel row (later event
+time, junk key) to push the watermark past the real data. One sentinel
+staged in the same write as the points is enough: micro-batch 0 buffers
+everything and moves the watermark past every real bucket, and Spark's
+no-data batch then fires the event-time timeouts that seal them — two
+micro-batches in all. See seal_all_with_sentinels() for the recipe the
 driver query uses.
 """
 
@@ -37,8 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..codec.blocks import BLOCK_SCHEMA, CODEC_NAME, _dt_ns
+from ..codec.blocks import BLOCK_SCHEMA, CODEC_NAME, POINTS_SCHEMA, _dt_ns
 from ..codec.gorilla import encode_blocks_batched
+from . import start_per_core
 
 # open points ride the state store as PACKED BINARY columns (raw numpy
 # buffers + a pickled doc-id array), not array<primitive>: list-typed state
@@ -204,35 +208,28 @@ def seal_all_with_sentinels(
     work_dir: str,
     block_seconds: int = 3600,
     sentinel_source: str = "__sentinel__",
-    sink: str = "memory",
+    sink: str = "parquet",
 ) -> DataFrame:
-    """Deterministic bounded-backlog drain: write the real points as one
-    file plus TWO trailing sentinel files whose event times lie far past
-    the real data (one micro-batch per file, oldest first). Spark derives
-    batch N's watermark from data through batch N-1, so the second
-    sentinel batch runs with the watermark already past every real
-    bucket — sealing all real blocks. Sentinel rows are filtered from the
-    returned (batch) DataFrame of sealed blocks.
+    """Deterministic bounded-backlog drain: stage the real points plus ONE
+    sentinel row, whose event time lies a year past the real data, in one
+    parquet write. Micro-batch 0 reads all of it, buffers every point and
+    moves the watermark to the sentinel's time; the no-data batch that
+    follows fires every real bucket's event-time timeout and seals it.
+    Sealed blocks stream to `<work_dir>/blocks` through a parquet file
+    sink with a checkpoint at `<work_dir>/ckpt` (exactly-once, nothing
+    held driver-side); the returned DataFrame is a parquet scan of the
+    sink with the sentinel's rows filtered out. Byte identity with the
+    batch encoder is pinned in tests/test_streaming.py.
 
-    Sinks: sink='memory' (default) materializes the sealed blocks through
-    a memory sink + collect — DRIVER-ROW-SCOPED: it exists so the driver
-    correctness query can hand back one bounded DataFrame, and it holds
-    the full result on the driver. The production path is sink='parquet',
-    which streams sealed blocks straight to `<work_dir>/blocks` files with
-    a checkpoint (exactly-once, nothing driver-side) — executors write,
-    the returned DataFrame is a plain parquet scan of the sink. Byte
-    identity with the batch encoder is pinned for BOTH sinks in
-    tests/test_streaming.py."""
-    import glob
+    sink: only 'parquet' (kept as a keyword for existing callers).
+    An empty backlog starts no stream and returns an empty block frame."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
-    pts_path = os.path.join(work_dir, "in")
-    tmp_path = os.path.join(work_dir, "tmp")
-    shutil.rmtree(pts_path, ignore_errors=True)
-    os.makedirs(pts_path, exist_ok=True)
+    if sink != "parquet":
+        raise ValueError(f"unknown sink {sink!r} (only 'parquet')")
     # watermarks need TIMESTAMP; parquet NTZ inputs are cast under the
     # session's pinned-UTC zone
     pts = points_df.select(
@@ -240,68 +237,35 @@ def seal_all_with_sentinels(
         "value",
     )
     far = pts.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    frames = [pts]
-    for i, days in enumerate((365, 366)):
-        frames.append(
-            spark.createDataFrame(
-                [(sentinel_source, "s", far, float(i))],
-                "source string, doc_id string, ts timestamp, value double",
-            ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS"))
-        )
-    # one flat file per micro-batch with strictly increasing mtimes — the
-    # file source processes oldest-modified first
-    for i, frame in enumerate(frames):
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        frame.coalesce(1).write.mode("overwrite").parquet(tmp_path)
-        part = glob.glob(os.path.join(tmp_path, "part-*.parquet"))[0]
-        dst = os.path.join(pts_path, f"{i:02d}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    stream = (
-        spark.readStream.schema(
-            "source string, doc_id string, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(pts_path)
+    if far is None:
+        return spark.createDataFrame([], BLOCK_SCHEMA)
+    # built from literals, not createDataFrame(list): a list goes through
+    # a Python RDD, whose tasks start Python workers of their own
+    sentinel = spark.range(1).select(
+        F.lit(sentinel_source).alias("source"),
+        F.lit("s").alias("doc_id"),
+        (F.lit(far) + F.expr("INTERVAL 365 DAYS")).alias("ts"),
+        F.lit(0.0).alias("value"),
     )
+    pts_path = os.path.join(work_dir, "in")
+    blocks_path = os.path.join(work_dir, "blocks")
+    ckpt_path = os.path.join(work_dir, "ckpt")
+    for path in (pts_path, blocks_path, ckpt_path):
+        shutil.rmtree(path, ignore_errors=True)
+    # one staging write; with no maxFilesPerTrigger the file source reads
+    # all of its part files in micro-batch 0
+    pts.unionByName(sentinel).write.parquet(pts_path)
+    stream = spark.readStream.schema(POINTS_SCHEMA).parquet(pts_path)
     out = stream_encode_blocks(stream, block_seconds=block_seconds)
-    if sink == "parquet":
-        blocks_path = os.path.join(work_dir, "blocks")
-        ckpt_path = os.path.join(work_dir, "ckpt")
-        shutil.rmtree(blocks_path, ignore_errors=True)
-        shutil.rmtree(ckpt_path, ignore_errors=True)
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", blocks_path)
-            .option("checkpointLocation", ckpt_path)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(blocks_path).filter(
-            F.col("source") != sentinel_source
-        )
-    if sink != "memory":
-        raise ValueError(f"unknown sink {sink!r} (memory|parquet)")
-    import uuid
-
-    name = f"stream_blocks_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
+    q = start_per_core(
+        spark,
+        out.writeStream.format("parquet")
+        .option("path", blocks_path)
+        .option("checkpointLocation", ckpt_path)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     q.awaitTermination()
-    # Materialize and drop the memory-sink table before returning: the sink
-    # holds the fully-built result in driver memory, and leaking one
-    # uuid-named table per call would accumulate across bench rounds /
-    # repeated driver runs in a long-lived session.
-    sealed = spark.table(name).filter(F.col("source") != sentinel_source)
-    schema = sealed.schema
-    rows = sealed.collect()
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+    return spark.read.parquet(blocks_path).filter(
+        F.col("source") != sentinel_source
+    )

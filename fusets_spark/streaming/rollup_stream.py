@@ -11,13 +11,21 @@ Aggregate set matches the batch tiers EXACTLY (n_obs/sum/min/max/avg +
 first/last): min_by/max_by are not streaming-supported, but
 min/max over struct(pos, value) is a streaming-legal commutative aggregate
 and pos is unique per series, so struct ordering == ordering by pos —
-first_val/last_val agree with the batch ladder bit-for-bit."""
+first_val/last_val agree with the batch ladder bit-for-bit.
+
+State width: the aggregation's state store has one shard per core
+(start_per_core, spark.sql.shuffle.partitions = defaultParallelism at
+start), so each micro-batch's stateful stage is one wave of tasks and
+one state commit per core. A checkpoint keeps the width it was created
+with; restarts never reshard it."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from . import start_per_core
 
 POINTS_DDL = (
     "source string, doc_id string, pos long, ts timestamp, value double"
@@ -83,11 +91,11 @@ def start_file_stream_rollup(
         .parquet(input_path)
     )
     out = stream_rollup_df(stream, tier_seconds, watermark)
-    return (
+    return start_per_core(
+        spark,
         out.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
