@@ -522,19 +522,6 @@ def q_geotiff_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_output_grid_p5d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ISO-8601 output date grid (reference _xarray_utils.py:43-46
-    _output_dates; the F6 71-date golden is in tests/test_timeaxis.py):
-    P5D spacing over the events month, generated JVM-side with
-    sequence() + explode."""
-    from fusets_spark.timeaxis import output_dates
-
-    _t(spark, sf_dir, "events")  # UTC pin + package ship side effects
-    return output_dates(
-        spark, "P5D", "2024-01-01 00:00:00", "2024-01-30 23:59:59"
-    )
-
-
 def q_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gorilla DoD+XOR block codec (north rule): encode the event stream into
     per-(series, 1-day-bucket) binary blocks, decode, and return restored
@@ -749,23 +736,6 @@ def q_harmonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "source", "doc_id", "n_obs",
         *[_rz(F.col(f"c{i}"), 4).alias(f"c{i}") for i in range(4)],
-    )
-
-
-def q_harmonic_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-point fitted values of the CCDC harmonic OLS fit (reference
-    ccdc.py:118-154) — the driver-verifiable face of harmonic_fit: fitted
-    values are basis-invariant, so the DuckDB oracle projects y onto the
-    same model space through a sequentially-orthogonalized basis (window
-    sums), avoiding the ill-conditioned raw normal equations."""
-    from fusets_spark.operators.harmonics import harmonic_fitted
-
-    pts = _event_points(spark, sf_dir).select(
-        "source", F.col("doc_id").cast("string").alias("doc_id"), "ts", "value"
-    )
-    out = harmonic_fitted(pts, num_coefficients=4)
-    return out.select(
-        "source", "doc_id", "ts", _rz(F.col("yhat"), 6).alias("yhat")
     )
 
 
@@ -2298,48 +2268,6 @@ WHERE (
              THEN 1 ELSE 0 END)
   FROM e
 ) % 2 = 1
-"""
-
-
-_HARMONIC_FITTED_ORACLE = """
-WITH p AS (
-  SELECT event_type AS source, CAST(user_id AS VARCHAR) AS doc_id, ts,
-         value AS y,
-         (epoch_us(ts) // 1000000) / 86400.0 AS day
-  FROM events
-), t0 AS (
-  SELECT *, day - min(day) OVER w AS t, count(*) OVER w AS n
-  FROM p WINDOW w AS (PARTITION BY source, doc_id)
-), x AS (
-  SELECT source, doc_id, ts, y, t,
-         cos(2 * pi() * t / 365.25) AS xc,
-         sin(2 * pi() * t / 365.25) AS xs
-  FROM t0 WHERE n >= 4
-), g1 AS (  -- u1 = const; center the remaining columns against it
-  SELECT *, avg(y) OVER w AS f1,
-         t  - avg(t)  OVER w AS u2,
-         xc - avg(xc) OVER w AS c2,
-         xs - avg(xs) OVER w AS s2,
-         y  - avg(y)  OVER w AS y2
-  FROM x WINDOW w AS (PARTITION BY source, doc_id)
-), g2 AS (  -- remove the u2 (centered t) component
-  SELECT *,
-    c2 - sum(c2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS u3,
-    s2 - sum(s2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS s3,
-    y2 - sum(y2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS y3,
-    f1 + sum(y2 * u2) OVER w / sum(u2 * u2) OVER w * u2 AS f2
-  FROM g1 WINDOW w AS (PARTITION BY source, doc_id)
-), g3 AS (  -- remove the u3 (orthogonalized cos) component
-  SELECT *,
-    s3 - sum(s3 * u3) OVER w / sum(u3 * u3) OVER w * u3 AS u4,
-    y3 - sum(y3 * u3) OVER w / sum(u3 * u3) OVER w * u3 AS y4,
-    f2 + sum(y3 * u3) OVER w / sum(u3 * u3) OVER w * u3 AS f3
-  FROM g2 WINDOW w AS (PARTITION BY source, doc_id)
-)
-SELECT source, doc_id, ts,
-       round(f3 + sum(y4 * u4) OVER w / sum(u4 * u4) OVER w * u4, 6) + 0.0
-         AS yhat
-FROM g3 WINDOW w AS (PARTITION BY source, doc_id)
 """
 
 

@@ -41,7 +41,14 @@ CODEC_NAME = "gorilla-dod-xor-v1"
 def _dt_ns(ns) -> np.ndarray:
     """int64 epoch-ns ndarray → datetime64[ns], as a free reinterpret.
     pd.to_datetime on integer input takes the per-element object path
-    (~0.28 s per million rows); the values are identical."""
+    (~0.28 s per million rows); the values are identical.
+
+    The reinterpret drops pd.to_datetime's OutOfBoundsDatetime check: an
+    int64 past the datetime64[ns] range would wrap silently instead of
+    raising. That is safe because every caller passes encoder-internal
+    values: timestamps that arrived as datetime64[ns] columns (so already
+    in range) and their bucket floors, a parsed t0 plus token offsets, or
+    points decoded from blocks this codec wrote from such values."""
     return np.ascontiguousarray(ns, dtype=np.int64).view("datetime64[ns]")
 
 
@@ -129,47 +136,6 @@ def block_frame(src_arr, doc_arr, d, ep_us, vals, block_seconds):
             "codec": CODEC_NAME,
             "block": blks,
         }
-    )
-
-
-def encode_blocks_from_tokens(
-    tokens_df: DataFrame,
-    t0: str = "2024-01-01 00:00:00",
-    block_seconds: int = 3600,
-) -> DataFrame:
-    """SHUFFLE-FREE block encoding straight from the tokenized-sequence table.
-
-    Each row's `tokens` array IS one series, already collocated — exploding
-    to points and re-grouping would shuffle the entire raw corpus for
-    nothing. This is the ingest-time path the 10^12-sequence deployment
-    uses: a pure mapInPandas over Iceberg input splits. Token position i ->
-    t0 + i seconds; sentinel -1 (missing) is skipped (the reference's NaN
-    convention, whittaker.py:40-42).
-
-    Produces the same blocks as explode_raw + encode_blocks (tested)."""
-    import pandas as pd  # local import: runs on executors
-
-    from ..operators.rollup import decode_token_batch
-
-    t0_us = int(pd.Timestamp(t0).value // 10**3)
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = decode_token_batch(pdf)
-            if dec is None:
-                continue
-            src_arr, doc_arr, d, pos, v = dec
-            yield block_frame(
-                src_arr,
-                doc_arr,
-                d,
-                t0_us + pos * 10**6,
-                v.astype(np.float64),
-                block_seconds,
-            )
-
-    return tokens_df.select("source", "doc_id", "tokens").mapInPandas(
-        _encode, schema=BLOCK_SCHEMA
     )
 
 

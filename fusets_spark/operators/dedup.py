@@ -519,8 +519,9 @@ def neardup_components(
         # materialized job — fold 1 finishes it, fold 2 confirms it,
         # both inside the same count — where a check-then-confirm loop
         # would launch two. max_iter is a fold budget rounded up to the
-        # enclosing check (a check may run up to 2 folds past it before
-        # the convergence test fires).
+        # enclosing check (a check may run up to n_folds - 1 folds past
+        # it before the convergence test fires: 3 on the four-fold first
+        # check, 1 on later checks).
         # The FIRST check runs FOUR folds: LSH candidate graphs are
         # overwhelmingly propagation-depth ≤ 3 (near-clique buckets
         # chained across bands; depth 2 dominates small corpora, depth 3

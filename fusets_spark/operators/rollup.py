@@ -27,14 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dt_ns(ns):
-    """int64 epoch-ns ndarray -> datetime64[ns], as a free reinterpret.
-    pd.to_datetime on integer input takes the per-element object path
-    (~0.28 s per million rows); the values are identical."""
-    import numpy as np
-
-    return np.ascontiguousarray(ns, dtype=np.int64).view("datetime64[ns]")
-
 TIERS = {"1m": 60, "5m": 300, "1h": 3600}
 SERIES_KEYS = ["source", "doc_id"]
 
@@ -155,241 +147,6 @@ def rollup_ladder(points: DataFrame) -> dict[str, DataFrame]:
     t5m = rollup_from_tier(t1m, "5m")
     t1h = rollup_from_tier(t5m, "1h")
     return {"1m": t1m, "5m": t5m, "1h": t1h}
-
-
-def rollup_tokens_native(
-    tokens_df: DataFrame,
-    tier: str,
-    t0: str = "2024-01-01 00:00:00",
-) -> DataFrame:
-    """SHUFFLE-FREE tier rollup straight from the tokenized-sequence table.
-
-    A (doc_id, bucket) group can never span two input rows — the tokens
-    array IS the whole series — so the aggregation is a pure map: one
-    vectorized numpy reduceat pass per Arrow batch, no explode, no shuffle.
-    This is the ingest-path twin of codec.blocks.encode_blocks_from_tokens
-    and produces rows identical to rollup_from_raw(explode_raw(tokens))
-    (tested). Missing tokens (-1) are skipped (reference NaN convention).
-
-    At 10^12-sequence scale this turns the hottest stage of the ladder from
-    a full-corpus shuffle into an embarrassingly parallel scan."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    seconds = TIERS[tier]
-    t0_s = int(pd.Timestamp(t0).value // 10**9)
-
-    def _roll(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        for pdf in batches:
-            tok_list = [np.asarray(t, dtype=np.int64) for t in pdf["tokens"]]
-            if not tok_list:
-                continue
-            lens = np.asarray([len(t) for t in tok_list], dtype=np.int64)
-            toks = np.concatenate(tok_list)
-            doc_idx = np.repeat(np.arange(len(tok_list)), lens)
-            doc_start = np.r_[0, np.cumsum(lens)[:-1]]
-            pos = np.arange(len(toks), dtype=np.int64) - doc_start[doc_idx]
-            keep = toks != -1
-            if not keep.any():
-                continue
-            d = doc_idx[keep]
-            p = pos[keep]
-            v = toks[keep]
-            epoch = t0_s + p
-            bucket = epoch - epoch % seconds
-            newgrp = np.r_[True, (d[1:] != d[:-1]) | (bucket[1:] != bucket[:-1])]
-            starts = np.flatnonzero(newgrp)
-            ends = np.r_[starts[1:], len(d)]
-            vf = v.astype(np.float64)
-            n_obs = (ends - starts).astype(np.int64)
-            sums = np.add.reduceat(v, starts)
-            yield pd.DataFrame(
-                {
-                    "source": pdf["source"].to_numpy()[d[starts]],
-                    "doc_id": pdf["doc_id"].to_numpy()[d[starts]],
-                    "bucket_ts": _dt_ns(bucket[starts] * 10**9),
-                    "n_obs": n_obs,
-                    "sum_val": sums,
-                    "min_val": np.minimum.reduceat(vf, starts),
-                    "max_val": np.maximum.reduceat(vf, starts),
-                    "first_val": vf[starts],
-                    "last_val": vf[ends - 1],
-                    "avg_val": sums / n_obs,
-                }
-            )
-
-    schema = (
-        "source string, doc_id string, bucket_ts timestamp, n_obs long, "
-        "sum_val long, min_val double, max_val double, first_val double, "
-        "last_val double, avg_val double"
-    )
-    return tokens_df.select("source", "doc_id", "tokens").mapInPandas(
-        _roll, schema=schema
-    )
-
-
-def decode_token_batch(pdf):
-    """Shared Arrow-batch decode for every from-tokens kernel: flatten one
-    pandas batch's `tokens` arrays into (src_arr, doc_arr, d, pos, v)
-    where d indexes src_arr/doc_arr, pos is the 0-based token position and
-    v the token value, with -1 sentinels (missing) dropped. Returns None
-    for empty / all-missing batches. Factoring the decode out lets the
-    fused single-scan ingest (operators/ingest.py) share ONE decode with
-    the ladder and the block encoder — at 200M points per bench run the
-    decode + Arrow transfer dominates kernel CPU, so fusing halves it —
-    and makes their outputs identical by construction."""
-    import numpy as np
-
-    tok_list = [np.asarray(t, dtype=np.int64) for t in pdf["tokens"]]
-    if not tok_list:
-        return None
-    lens = np.asarray([len(t) for t in tok_list], dtype=np.int64)
-    toks = np.concatenate(tok_list)
-    doc_idx = np.repeat(np.arange(len(tok_list)), lens)
-    doc_start = np.r_[0, np.cumsum(lens)[:-1]]
-    pos = np.arange(len(toks), dtype=np.int64) - doc_start[doc_idx]
-    keep = toks != -1
-    if not keep.any():
-        return None
-    return (
-        pdf["source"].to_numpy(),
-        pdf["doc_id"].to_numpy(),
-        doc_idx[keep],
-        pos[keep],
-        toks[keep],
-    )
-
-
-def ladder_frames(
-    src_arr, doc_arr, d, pos_kept, v, t0_s, with_order_keys
-):
-    """Pure-numpy ladder fold over one decoded batch -> list of per-tier
-    pandas frames: 1m reduced from raw positions, 5m re-aggregating the
-    in-memory 1m group arrays, 1h the 5m arrays (the same associative
-    merges as rollup_from_tier)."""
-    import numpy as np
-    import pandas as pd
-
-    def reduce_tier(d, bucket, n, s, mn, mx, fv, lv, fp, lp, seconds):
-        # merge finer-tier group arrays into coarser buckets (order keys
-        # ride along: groups are pos-sorted, so the coarse first is the
-        # first fine group's first)
-        b2 = bucket - bucket % seconds
-        new = np.r_[True, (d[1:] != d[:-1]) | (b2[1:] != b2[:-1])]
-        st = np.flatnonzero(new)
-        en = np.r_[st[1:], len(d)]
-        return (
-            d[st],
-            b2[st],
-            np.add.reduceat(n, st),
-            np.add.reduceat(s, st),
-            np.minimum.reduceat(mn, st),
-            np.maximum.reduceat(mx, st),
-            fv[st],
-            lv[en - 1],
-            fp[st],
-            lp[en - 1],
-        )
-
-    epoch = t0_s + pos_kept
-    bucket = epoch - epoch % TIERS["1m"]
-    new = np.r_[True, (d[1:] != d[:-1]) | (bucket[1:] != bucket[:-1])]
-    st = np.flatnonzero(new)
-    en = np.r_[st[1:], len(d)]
-    vf = v.astype(np.float64)
-    cur = (
-        d[st],
-        bucket[st],
-        (en - st).astype(np.int64),
-        np.add.reduceat(v, st),
-        np.minimum.reduceat(vf, st),
-        np.maximum.reduceat(vf, st),
-        vf[st],
-        vf[en - 1],
-        pos_kept[st],
-        pos_kept[en - 1],
-    )
-    frames = []
-    for tier, seconds in [("1m", None), ("5m", 300), ("1h", 3600)]:
-        if seconds is not None:
-            cur = reduce_tier(*cur, seconds)
-        td, tb, tn, ts_, tmn, tmx, tf, tl, tfp, tlp = cur
-        cols = {
-            "source": src_arr[td],
-            "doc_id": doc_arr[td],
-            "bucket_ts": _dt_ns(tb * 10**9),
-            "n_obs": tn,
-            "sum_val": ts_,
-            "min_val": tmn,
-            "max_val": tmx,
-            "first_val": tf,
-            "last_val": tl,
-            "avg_val": ts_ / tn,
-            "tier": tier,
-        }
-        if with_order_keys:
-            cols["first_pos"] = tfp
-            cols["last_pos"] = tlp
-        frames.append(pd.DataFrame(cols))
-    return frames
-
-
-LADDER_SCHEMA_BASE = (
-    "source string, doc_id string, bucket_ts timestamp, n_obs long, "
-    "sum_val long, min_val double, max_val double, first_val double, "
-    "last_val double, avg_val double, tier string"
-)
-
-
-def rollup_ladder_from_tokens(
-    tokens_df: DataFrame,
-    t0: str = "2024-01-01 00:00:00",
-    with_order_keys: bool = False,
-) -> DataFrame:
-    """ONE-PASS shuffle-free ladder: all three tiers (1m, 5m, 1h) from a
-    single scan of the tokenized-sequence table, inside one mapInPandas —
-    zero shuffles, zero explode (see ladder_frames for the fold).
-
-    Output: rollup rows + `tier` label column; exactly equal (tested) to
-    rollup_ladder_union(explode_raw(tokens))."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    t0_s = int(pd.Timestamp(t0).value // 10**9)
-
-    def _roll(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            dec = decode_token_batch(pdf)
-            if dec is None:
-                continue
-            src_arr, doc_arr, d, pos_kept, v = dec
-            yield pd.concat(
-                ladder_frames(
-                    src_arr, doc_arr, d, pos_kept, v, t0_s, with_order_keys
-                ),
-                ignore_index=True,
-            )
-
-    schema = LADDER_SCHEMA_BASE + (
-        ", first_pos long, last_pos long" if with_order_keys else ""
-    )
-    return tokens_df.select("source", "doc_id", "tokens").mapInPandas(
-        _roll, schema=schema
-    )
-
-
-def rollup_ladder_union(points: DataFrame) -> DataFrame:
-    """All tiers as one DataFrame with a `tier` label column — materializes
-    the whole ladder in a single Spark job (one map-side pass over raw
-    points; the coarse tiers reaggregate the fine tier's shuffle output)."""
-    ladder = rollup_ladder(points)
-    out = None
-    for tier, df in ladder.items():
-        tagged = df.withColumn("tier", F.lit(tier))
-        out = tagged if out is None else out.unionByName(tagged)
-    return out
 
 
 def salted_rollup(

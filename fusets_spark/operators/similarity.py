@@ -597,10 +597,11 @@ def embedding_neardup_pairs(
         # association ((0.0 + t0) + t1) + … — one vectorized
         # multiply-accumulate per dimension, never np.dot (pairwise
         # summation would change ULPs near the threshold) — and each
-        # vector's norm comes in as the SAME Catalyst `_norm` expression
-        # the join form attached, so cosines are bit-identical (pinned
-        # against the naive per-table self-join reference in
-        # tests/test_training_ops.py). The threshold filter and the
+        # vector's norm comes from the bucket kernel's numpy left-fold,
+        # pinned bit-identical to Catalyst `_norm`
+        # (test_bucket_kernel_matches_expression), so cosines are
+        # bit-identical (pinned against the naive per-table self-join
+        # reference in tests/test_training_ops.py). The threshold filter and the
         # 6-dp rounding stay in Catalyst on the kernel's raw output, so
         # NaN/rounding semantics are exactly the join form's (the kernel
         # over-emits NaN cosines for Catalyst to keep, matching Spark's
@@ -642,7 +643,7 @@ def embedding_neardup_pairs(
                         f"embedding length {a.shape[0]} != dim {dim}"
                     )
                 V[r] = a
-            nrm = pdf["nrm"].to_numpy()  # Catalyst _norm, attached upstream
+            nrm = pdf["nrm"].to_numpy()  # kernel fold, bit-equal to _norm
             codes = [
                 pd.factorize(pdf[prev_b[tp]])[0] for tp in range(t)
             ]

@@ -80,6 +80,10 @@ def _manifest_stats(df: DataFrame) -> tuple[int, str, str, str]:
     return n, f"{x:016x}-{s:08x}", lo, hi
 
 
+# _manifest_stats' hash of zero rows (both folds are empty)
+_EMPTY_HASH = f"{0:016x}-{0:08x}"
+
+
 def content_hash(df: DataFrame) -> tuple[int, str]:
     """(row count, order-insensitive content hash) — see _manifest_stats."""
     n, h, _, _ = _manifest_stats(df)
@@ -277,12 +281,30 @@ class TierStore:
             .option("partitionOverwriteMode", "dynamic")
             .parquet(self.tier_path(tier))
         )
-        # manifest stats come from the JUST-WRITTEN partition files, not a
-        # second execution of the input plan — on the unfused path the input
-        # is the full corpus scan and recomputing it doubles the batch cost.
-        # Partition-column type inference is disabled for the read-back (a
-        # numeric-looking source like '0123' must not round-trip as 123);
-        # casting to the input schema then restores exact dtypes.
+        if os.path.isdir(part):
+            n, h, lo, hi = self._partition_stats(df, tier, part)
+        else:
+            # a zero-row batch (empty or all-missing input): partitionBy
+            # creates no batch=<id> directory, so there is nothing to read
+            # back. Record what _manifest_stats gives for 0 rows.
+            n, h, lo, hi = 0, _EMPTY_HASH, "", ""
+        n_bytes = self._tree_bytes(part)
+        m = Manifest(
+            tier, batch_id, n, h, config_hash, n_bytes, lo, hi,
+            supersedes=sorted(supersedes) if supersedes else None,
+        )
+        self._write_manifest(m)
+        return m
+
+    def _partition_stats(
+        self, df: DataFrame, tier: str, part: str
+    ) -> tuple[int, str, str, str]:
+        """_manifest_stats of a just-written batch partition. The stats
+        come from the partition files, not a second execution of the
+        input plan, which may be an expensive scan. Partition-column type
+        inference is disabled for the read-back (a numeric-looking source
+        like '0123' must not round-trip as 123); casting to the input
+        schema then restores exact dtypes."""
         spark = df.sparkSession
         infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
         try:
@@ -301,7 +323,7 @@ class TierStore:
                     ]
                 )
             )
-            n, h, lo, hi = _manifest_stats(back)
+            return _manifest_stats(back)
         finally:
             # restore the session-wide flag — leaving it flipped changes how
             # partition columns type-infer in every later unrelated read
@@ -309,13 +331,6 @@ class TierStore:
                 spark.conf.unset(infer_key)
             else:
                 spark.conf.set(infer_key, prev_infer)
-        n_bytes = self._tree_bytes(part)
-        m = Manifest(
-            tier, batch_id, n, h, config_hash, n_bytes, lo, hi,
-            supersedes=sorted(supersedes) if supersedes else None,
-        )
-        self._write_manifest(m)
-        return m
 
     # --- snapshot-consistent read set
     def live_batches(self, tier: str) -> set[str]:

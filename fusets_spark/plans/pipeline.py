@@ -1,9 +1,9 @@
 """The continuous-aggregate rollup pipeline (north rule's production job).
 
 Incremental batch processing over an append-only tokenized-sequence table:
-each input batch flows through the shuffle-free ladder
-(rollup_ladder_from_tokens) and the Gorilla block encoder
-(encode_blocks_from_tokens); every tier + the block store commit per batch
+each input batch is staged by ONE token scan (operators/ingest.py:
+ingest_from_tokens, the shuffle-free ladder and Gorilla block fold); every
+tier + the block store then commit per batch from the staged parquet
 through the TierStore protocol (lineage manifest -> atomic watermark), so a
 kill at ANY point resumes to byte-identical content (tested).
 
@@ -25,8 +25,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec.blocks import encode_blocks_from_tokens
-from ..operators.rollup import TIERS, rollup_ladder_from_tokens
+from ..operators import ingest
+from ..operators.rollup import TIERS
 from .lineage import TierStore
 
 STAGES = [*TIERS.keys(), "blocks"]
@@ -83,98 +83,51 @@ class RollupPipeline:
         self.t0 = t0
         self.block_seconds = block_seconds
 
-    def _stage_df(self, tokens: DataFrame, stage: str) -> DataFrame:
-        if stage == "blocks":
-            return encode_blocks_from_tokens(
-                tokens, t0=self.t0, block_seconds=self.block_seconds
-            )
-        # order keys stored with every tier row so cross-batch partials for
-        # the same (series, bucket) — late data — merge EXACTLY on read
-        ladder = rollup_ladder_from_tokens(
-            tokens, t0=self.t0, with_order_keys=True
-        )
-        return ladder.filter(ladder["tier"] == stage).drop("tier")
-
-    def _staged_stage_df(self, staged: DataFrame, stage: str) -> DataFrame:
-        if stage == "blocks":
-            return staged.filter(staged["kind"] == "block").select(
-                "source", "doc_id", "bucket_ts", "n_points",
-                "min_ts", "max_ts", "codec", "block",
-            )
-        return staged.filter(
-            (staged["kind"] == "tier") & (staged["tier"] == stage)
-        ).select(
-            "source", "doc_id", "bucket_ts", "n_obs", "sum_val",
-            "min_val", "max_val", "first_val", "last_val", "avg_val",
-            "first_pos", "last_pos",
-        )
-
     def process_batch(
         self,
         tokens: DataFrame,
         batch_id: str,
         fail_after_stage: str | None = None,
-        fused: bool = True,
     ) -> None:
-        """Commit one input batch through every stage. `fail_after_stage`
-        simulates an executor/driver loss mid-commit (for the resume test):
-        the stage's data+manifest are written but the watermark is NOT.
+        """Commit one input batch through every pending stage.
+        `fail_after_stage` simulates an executor/driver loss mid-commit
+        (for the resume test): the stage's data+manifest are written but
+        the watermark is NOT.
 
-        fused=True (default, and the 10^12-scale path): ONE token scan
-        materializes every tier + the blocks into an uncommitted staging
-        dir (operators/ingest.py); each stage then commits from the cheap
-        staged parquet instead of re-scanning the corpus — 4 corpus scans
-        -> 1. Staging is overwrite-idempotent: a crash at any point
-        resumes by re-materializing it, and committed stages are skipped
-        exactly as before (content is byte-identical either way — the
-        fused operator shares the separate operators' frame builders)."""
+        ONE token scan materializes every tier + the blocks into an
+        uncommitted staging dir; each pending stage then commits from the
+        cheap staged parquet instead of re-scanning the corpus. Staging is
+        overwrite-idempotent: a crash at any point resumes by
+        re-materializing it (content is a pure function of the batch), and
+        committed stages are skipped."""
         import shutil
 
         staging = f"{self.store.root}/_staging/{batch_id}"
         pending = [
             s for s in STAGES if not self.store.is_committed(s, batch_id)
         ]
-        if not pending:
-            # a crashed fused run may have left staging behind after its
-            # last stage committed — clean it whenever the batch is done
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        if fused and len(pending) > 1:
-            from ..operators.ingest import ingest_from_tokens
-
-            spark = tokens.sparkSession
-            ingest_from_tokens(
-                tokens,
-                t0=self.t0,
-                block_seconds=self.block_seconds,
-                with_order_keys=True,
+        if pending:
+            # looked up on the module at call time, so a wrapper installed
+            # on ingest.ingest_from_tokens sees every staging scan
+            ingest.ingest_from_tokens(
+                tokens, t0=self.t0, block_seconds=self.block_seconds
             ).write.mode("overwrite").parquet(staging)
-            staged = spark.read.parquet(staging)
-            for stage in STAGES:
-                if self.store.is_committed(stage, batch_id):
-                    continue
-                self.store.write_batch(
-                    self._staged_stage_df(staged, stage),
-                    stage, batch_id, self.cfg_hash,
+            tiers, blocks = ingest.split_ingest(
+                tokens.sparkSession.read.parquet(staging)
+            )
+            for stage in pending:
+                df = (
+                    blocks
+                    if stage == "blocks"
+                    else tiers.filter(tiers["tier"] == stage).drop("tier")
                 )
+                self.store.write_batch(df, stage, batch_id, self.cfg_hash)
                 if fail_after_stage == stage:
                     raise RuntimeError(
                         f"simulated failure after {stage}/{batch_id}"
                     )
                 self.store.commit_watermark(stage, batch_id)
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        for stage in STAGES:
-            if self.store.is_committed(stage, batch_id):
-                continue  # already committed (resume path)
-            self.store.write_batch(
-                self._stage_df(tokens, stage), stage, batch_id, self.cfg_hash
-            )
-            if fail_after_stage == stage:
-                raise RuntimeError(f"simulated failure after {stage}/{batch_id}")
-            self.store.commit_watermark(stage, batch_id)
-        # non-fused completion of a batch whose fused run crashed with one
-        # stage left: its orphaned staging parquet is no longer needed
+        # also clears staging a crashed run left after its last commit
         shutil.rmtree(staging, ignore_errors=True)
 
     def run(

@@ -14,8 +14,7 @@ from fusets_spark.datagen import generate_tokens
 from fusets_spark.plans.pipeline import STAGES, RollupPipeline
 
 
-@pytest.fixture()
-def batches(spark):
+def _batches(spark):
     return {
         f"b{str(i).zfill(3)}": generate_tokens(
             spark, 60, seed=100 + i, min_tok=32, max_tok=200
@@ -24,8 +23,21 @@ def batches(spark):
     }
 
 
-def _content(spark, pipe, stage):
-    df = pipe.read_tier(spark, stage).toPandas()
+@pytest.fixture()
+def batches(spark):
+    return _batches(spark)
+
+
+@pytest.fixture(scope="module")
+def clean_pipe(spark, tmp_path_factory):
+    """One crash-free run, the reference for every crash stage."""
+    pipe = RollupPipeline(str(tmp_path_factory.mktemp("clean")))
+    pipe.run(spark, _batches(spark))
+    return pipe
+
+
+def _content(spark, pipe, stage, merged=False):
+    df = pipe.read_tier(spark, stage, merged=merged).toPandas()
     if "block" in df.columns:
         df["block"] = df["block"].map(bytes)
     return df.sort_values(
@@ -33,37 +45,74 @@ def _content(spark, pipe, stage):
     ).reset_index(drop=True)
 
 
-def test_kill_and_resume_identical(spark, batches, tmp_path):
-    clean_root = str(tmp_path / "clean")
+@pytest.mark.parametrize("stage", STAGES)
+def test_kill_and_resume_identical(spark, batches, clean_pipe, stage, tmp_path):
+    """A crash after any stage's data+manifest write (watermark not yet
+    advanced) resumes to the crash-free content. Crashing after 'blocks'
+    leaves exactly one stage pending."""
+    import os
+
     crash_root = str(tmp_path / "crash")
-
-    clean = RollupPipeline(clean_root)
-    clean.run(spark, batches)
-
     crash = RollupPipeline(crash_root)
     with pytest.raises(RuntimeError, match="simulated failure"):
-        crash.run(spark, batches, fail_at=("b001", "5m"))
-    # crash mid-batch: b000 fully committed, b001 partially (5m data +
-    # manifest written, watermark NOT advanced past 1m)
-    assert crash.store.watermark("1m") == "b001"
-    assert crash.store.watermark("5m") == "b000"
+        crash.run(spark, batches, fail_at=("b001", stage))
+    # b000 fully committed; b001 committed up to the stage before the crash
+    crashed_at = STAGES.index(stage)
+    for i, s in enumerate(STAGES):
+        assert crash.store.watermark(s) == ("b001" if i < crashed_at else "b000")
+    staging = os.path.join(crash_root, "_staging")
+    assert os.listdir(staging) == ["b001"]
     # resume
     crash.run(spark, batches)
+    assert os.listdir(staging) == []
 
-    for stage in STAGES:
-        assert crash.store.watermark(stage) == "b002"
-        cm = {m.batch_id: m for m in clean.store.manifests(stage)}
-        xm = {m.batch_id: m for m in crash.store.manifests(stage)}
+    for s in STAGES:
+        assert crash.store.watermark(s) == "b002"
+        cm = {m.batch_id: m for m in clean_pipe.store.manifests(s)}
+        xm = {m.batch_id: m for m in crash.store.manifests(s)}
         assert cm.keys() == xm.keys()
         for b in cm:
-            assert cm[b].content_hash == xm[b].content_hash, (stage, b)
+            assert cm[b].content_hash == xm[b].content_hash, (s, b)
             assert cm[b].n_rows == xm[b].n_rows
-        a = _content(spark, clean, stage)
-        b = _content(spark, crash, stage)
+        a = _content(spark, clean_pipe, s)
+        b = _content(spark, crash, s)
         pd.testing.assert_frame_equal(a, b)
 
-    shutil.rmtree(clean_root)
     shutil.rmtree(crash_root)
+
+
+def test_empty_batches_commit(spark, tmp_path):
+    """A batch with no points (every token missing, or no rows at all)
+    commits every stage with a zero-row manifest, and later batches read
+    exactly as in a store that never saw it."""
+    from pyspark.sql import functions as F
+
+    from fusets_spark.plans.lineage import content_hash
+
+    toks = generate_tokens(spark, 12, seed=5, min_tok=32, max_tok=128)
+    batches = {
+        "b0-missing": toks.withColumn(
+            "tokens", F.expr("transform(tokens, t -> -1)")
+        ),
+        "b1-norows": toks.limit(0),
+        "b2": toks,
+    }
+    pipe = RollupPipeline(str(tmp_path / "with_empty"))
+    pipe.run(spark, batches)
+    ref = RollupPipeline(str(tmp_path / "ref"))
+    ref.run(spark, {"b2": toks})
+
+    for stage in STAGES:
+        assert pipe.store.committed(stage) == set(batches)
+        _, empty_hash = content_hash(ref.read_tier(spark, stage).filter("false"))
+        for bid in ("b0-missing", "b1-norows"):
+            m = pipe.store.manifest(stage, bid)
+            assert (m.n_rows, m.content_hash, m.n_bytes, m.min_ts, m.max_ts) \
+                == (0, empty_hash, 0, "", ""), (stage, bid)
+        pd.testing.assert_frame_equal(
+            _content(spark, pipe, stage, merged=True),
+            _content(spark, ref, stage, merged=True),
+        )
 
 
 def test_partition_pruning_on_source(spark, batches, tmp_path):
@@ -228,41 +277,6 @@ def test_late_data_merged_read_exact(spark, tmp_path):
     assert raw.filter("count > 1").count() > 0
 
 
-def test_fused_pipeline_equals_per_stage_pipeline(spark, tmp_path):
-    """The fused single-scan process_batch must commit byte-identical tier
-    and block content to the per-stage (4-scan) path, and clean up its
-    staging dir."""
-    import os
-
-    from fusets_spark.datagen import generate_tokens
-    from fusets_spark.plans.pipeline import STAGES, RollupPipeline
-
-    toks = generate_tokens(spark, 40, seed=8, min_tok=32, max_tok=200)
-    a = RollupPipeline(str(tmp_path / "fused"))
-    a.process_batch(toks, "b1", fused=True)
-    b = RollupPipeline(str(tmp_path / "stages"))
-    b.process_batch(toks, "b1", fused=False)
-
-    for stage in STAGES:
-        pa = spark.read.parquet(a.store.tier_path(stage)).toPandas()
-        pb = spark.read.parquet(b.store.tier_path(stage)).toPandas()
-        key = [c for c in ("source", "doc_id", "bucket_ts") if c in pa.columns]
-        pa = pa.sort_values(key).reset_index(drop=True)
-        pb = pb.sort_values(key)[pa.columns].reset_index(drop=True)
-        assert len(pa) == len(pb) and len(pa) > 0
-        for col in pa.columns:
-            if col == "block":
-                assert all(
-                    bytes(x) == bytes(y) for x, y in zip(pa[col], pb[col])
-                )
-            else:
-                assert (
-                    pa[col].astype(str).to_numpy()
-                    == pb[col].astype(str).to_numpy()
-                ).all(), f"{stage}.{col} differs"
-    assert not os.path.exists(str(tmp_path / "fused" / "_staging" / "b1"))
-
-
 def test_block_batch_compaction_lifecycle(spark, tmp_path):
     """Compacting two aged fine-block batches into one daily batch must
     preserve every decoded point exactly, keep lineage (superseded
@@ -324,18 +338,16 @@ def test_compact_blocks_deterministic_on_overlap(spark):
     late-data scenario where two batches hold blocks for the same
     (doc_id, bucket_ts), including tied timestamps) yields byte-identical
     compacted blocks with true min/max ts."""
-    from fusets_spark.codec.blocks import (
-        compact_blocks,
-        encode_blocks_from_tokens,
-    )
+    from fusets_spark.codec.blocks import compact_blocks, encode_blocks
     from fusets_spark.datagen import generate_tokens
+    from fusets_spark.operators.explode import explode_raw
 
-    b1 = encode_blocks_from_tokens(
-        generate_tokens(spark, 10, seed=1, min_tok=32, max_tok=64),
+    b1 = encode_blocks(
+        explode_raw(generate_tokens(spark, 10, seed=1, min_tok=32, max_tok=64)),
         block_seconds=60,
     )
-    b2 = encode_blocks_from_tokens(
-        generate_tokens(spark, 10, seed=2, min_tok=32, max_tok=64),
+    b2 = encode_blocks(
+        explode_raw(generate_tokens(spark, 10, seed=2, min_tok=32, max_tok=64)),
         block_seconds=60,
     )
 
@@ -423,8 +435,12 @@ def test_snapshot_read_consistency(spark, tmp_path):
 
     # (1) crashed write: partition lands on disk, no manifest/commit
     t3 = generate_tokens(spark, 10, seed=3, min_tok=32, max_tok=128)
-    staged = pipe._stage_df(t3, "blocks")
     from pyspark.sql import functions as F
+
+    from fusets_spark.codec.blocks import encode_blocks
+    from fusets_spark.operators.explode import explode_raw
+
+    staged = encode_blocks(explode_raw(t3), block_seconds=60)
 
     staged.withColumn("batch", F.lit("crashed")).write.mode(
         "append"

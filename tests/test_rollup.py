@@ -77,25 +77,25 @@ def test_salted_rollup_is_exact(spark, raw_points):
 
 
 def test_tokens_native_rollup_equals_explode_path(spark):
-    """The shuffle-free ladder must equal explode_raw + groupBy exactly."""
-    from fusets_spark.operators.rollup import (
-        rollup_ladder_from_tokens,
-        rollup_ladder_union,
-        rollup_tokens_native,
-    )
+    """The shuffle-free token ingest's tiers, order keys included, must
+    equal explode_raw + groupBy exactly."""
+    from fusets_spark.operators.ingest import ingest_from_tokens, split_ingest
 
     toks = generate_tokens(spark, 80, seed=7, min_tok=32, max_tok=400)
+    tiers, _ = split_ingest(ingest_from_tokens(toks))
+    tiers = tiers.toPandas()
     pts = explode_raw(toks)
-    native = rollup_ladder_from_tokens(toks).toPandas()
-    via_groupby = rollup_ladder_union(pts).toPandas()
-    key = ["tier", "source", "doc_id", "bucket_ts"]
-    a = native.sort_values(key).reset_index(drop=True)
-    b = via_groupby[native.columns].sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-    one = rollup_tokens_native(toks, "5m").toPandas()
-    b5 = _canon(via_groupby[via_groupby["tier"] == "5m"].drop(columns="tier"))
-    pd.testing.assert_frame_equal(_canon(one), b5, check_dtype=False)
+    key = ["source", "doc_id", "bucket_ts"]
+    for tier in TIERS:
+        got = tiers[tiers["tier"] == tier].drop(columns="tier")
+        want = rollup_from_raw(pts, tier, with_order_keys=True).toPandas()
+        assert len(got) > 0
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            want[got.columns].sort_values(key).reset_index(drop=True),
+            check_dtype=False,
+            check_exact=True,
+        )
 
 
 def test_generator_deterministic_across_partitioning(spark):
@@ -144,42 +144,3 @@ def test_merge_tier_partials_equals_direct_rollup(spark):
         merge_tier_partials(partials)
     ).toPandas()[cols].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(again, direct, check_dtype=False)
-
-
-def test_fused_ingest_equals_separate_passes(spark):
-    """ingest_from_tokens must yield exactly rollup_ladder_from_tokens'
-    tier rows and encode_blocks_from_tokens' blocks (byte-identical) —
-    one scan instead of two."""
-    import numpy as np
-
-    from fusets_spark.codec.blocks import encode_blocks_from_tokens
-    from fusets_spark.datagen import generate_tokens
-    from fusets_spark.operators.ingest import ingest_from_tokens, split_ingest
-    from fusets_spark.operators.rollup import rollup_ladder_from_tokens
-
-    toks = generate_tokens(spark, 60, seed=3, min_tok=32, max_tok=300)
-    fused = ingest_from_tokens(toks, block_seconds=3600).persist()
-    tiers, blocks = split_ingest(fused)
-
-    key = ["source", "doc_id", "tier", "bucket_ts"]
-    a = tiers.toPandas().sort_values(key).reset_index(drop=True)
-    b = (
-        rollup_ladder_from_tokens(toks)
-        .toPandas()[a.columns]
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-    kb = ["source", "doc_id", "bucket_ts"]
-    c = blocks.toPandas().sort_values(kb).reset_index(drop=True)
-    d = (
-        encode_blocks_from_tokens(toks, block_seconds=3600)
-        .toPandas()[c.columns]
-        .sort_values(kb)
-        .reset_index(drop=True)
-    )
-    assert len(c) == len(d) and len(c) > 0
-    assert (c["n_points"].to_numpy() == d["n_points"].to_numpy()).all()
-    assert all(bytes(x) == bytes(y) for x, y in zip(c["block"], d["block"]))
-    fused.unpersist()
