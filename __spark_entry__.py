@@ -1244,12 +1244,11 @@ def q_retention_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
         "week", F.weekofyear("bucket_ts")
     )
     store = TierStore(tempfile.mkdtemp(prefix="fusets_retention_"))
-    # r7: one partitioned write + one grouped stats pass for ALL weekly
-    # batches (write_batches) — the per-week write_batch loop re-executed
-    # the full rollup AND ran a stats job per week: 2 jobs × ~52 weeks
-    # for seconds of data. Protocol, layout and manifest contents are
-    # identical (order-insensitive stats; equivalence pinned in
-    # tests/test_resume.py).
+    # one staged write for ALL weekly batches (write_batches), manifest
+    # stats observed per week on that write — a per-week commit would
+    # re-execute the full rollup once per week. Layout and manifest
+    # contents equal per-week commits (order-insensitive stats;
+    # equivalence pinned in tests/test_resume.py).
     batched = t1m.withColumn(
         "_batch", F.format_string("w%02d", F.col("week"))
     ).drop("week")
@@ -1291,12 +1290,20 @@ def q_late_data_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 1000).cast("long").alias("value"),
     )
     store = TierStore(tempfile.mkdtemp(prefix="fusets_latedata_"))
-    for bid, pred in (
-        ("b1-ontime", F.pmod("pos", F.lit(5)) != 0),
-        ("b2-late", F.pmod("pos", F.lit(5)) == 0),
-    ):
-        part = rollup_from_raw(pts.filter(pred), "1h", with_order_keys=True)
-        store.write_batch(part, "1h", bid, "cfg")
+    # both batches in one staged commit (write_batches), each its own
+    # batch partition + manifest + watermark
+    batched = [
+        rollup_from_raw(pts.filter(pred), "1h", with_order_keys=True)
+        .withColumn("_batch", F.lit(bid))
+        for bid, pred in (
+            ("b1-ontime", F.pmod("pos", F.lit(5)) != 0),
+            ("b2-late", F.pmod("pos", F.lit(5)) == 0),
+        )
+    ]
+    mans = store.write_batches(
+        batched[0].unionByName(batched[1]), "1h", "_batch", "cfg"
+    )
+    for bid in sorted(mans):
         store.commit_watermark("1h", bid)
     tier = spark.read.parquet(store.tier_path("1h")).drop("batch")
     merged = merge_tier_partials(tier)

@@ -32,16 +32,23 @@ from pyspark.sql import DataFrame
 from ..codec.blocks import _dt_ns, block_frame
 from .rollup import TIERS
 
-INGEST_SCHEMA = (
-    "kind string, source string, doc_id string, bucket_ts timestamp, "
-    # tier columns
+_KEY_DDL = "source string, doc_id string, bucket_ts timestamp, "
+_TIER_DDL = (
     "n_obs long, sum_val long, min_val double, max_val double, "
-    "first_val double, last_val double, avg_val double, tier string, "
-    "first_pos long, last_pos long, "  # late-data merge keys
+    "first_val double, last_val double, avg_val double, "
+)
+_ORDER_KEY_DDL = "first_pos long, last_pos long"  # late-data merge keys
+
+INGEST_SCHEMA = (
+    "kind string, " + _KEY_DDL
+    # tier columns
+    + _TIER_DDL + "tier string, " + _ORDER_KEY_DDL + ", "
     # block columns
-    "n_points long, min_ts timestamp, max_ts timestamp, codec string, "
+    + "n_points long, min_ts timestamp, max_ts timestamp, codec string, "
     "block binary"
 )
+# the committed tier columns: split_ingest's tier side without `tier`
+TIER_SCHEMA = _KEY_DDL + _TIER_DDL + _ORDER_KEY_DDL
 
 _TIER_COLS = [
     "n_obs", "sum_val", "min_val", "max_val",

@@ -1,35 +1,43 @@
 """Lineage manifests + watermark checkpoints for exact resume (north rule).
 
-Commit protocol (per input batch, per tier):
-  1. compute tier rows — a PURE function of (input batch, config): integer
-     sums, argmin/argmax by unique keys, deterministic codecs (no
+Commit protocol (per input batch, per stage):
+  1. compute the stage rows — a PURE function of (input batch, config):
+     integer sums, argmin/argmax by unique keys, deterministic codecs (no
      partition-count or batch-order dependence anywhere);
-  2. write the batch's rows under the tier's `batch=<id>` partition with
-     dynamic partition overwrite (re-running replaces exactly that
-     partition — idempotent);
-  3. write the lineage manifest (row count + order-insensitive content hash
-     + config hash) for the (tier, batch);
-  4. LAST, advance the watermark file atomically (temp + rename).
+  2. STAGE them: every pending stage of the batch goes out in one
+     partitioned write under `_staging/<id>/<key>=<stage>/source=<s>/`
+     (stage_batches). The write carries a DataFrame.observe of the
+     manifest-stats fold, one conditional set per stage, so row count,
+     content hash and bucket_ts range come from the write job itself —
+     no read-back;
+  3. RENAME each staged stage into `tiers/<stage>/batch=<id>` (write_batch;
+     an uncommitted tree left there by a crashed attempt is dropped first,
+     so re-running replaces the partition instead of merging into it);
+  4. write the lineage manifest (the observed stats + config hash + the
+     bytes now on disk) for the (stage, batch);
+  5. LAST, advance the watermark file atomically (temp + rename).
 
 Crash between any steps -> the batch is simply reprocessed on resume and
-overwrites its own partition with identical content (verified by the
+replaces its own partition with identical content (verified by the
 kill-and-resume test). The content hash is an order-insensitive fold
-(sum of per-row xxhash64 over canonicalized values), so it is stable under
-any shuffle order or parallelism.
+(bit_xor and modular sum of per-row xxhash64 over canonicalized values),
+so it is stable under any shuffle order or parallelism.
 
-On a real cluster the same protocol runs against Iceberg (`replaceWhere` /
-MERGE per partition + snapshot ids in the manifest); the filesystem layout
-here mirrors that with plain parquet partitions.
+On a real cluster the same protocol runs against Iceberg: steps 2-4 are a
+snapshot append of data files already written, whose manifest carries the
+writer-side column metrics, plus snapshot ids in the lineage manifest; the
+filesystem layout here mirrors that with plain parquet partitions.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -53,6 +61,56 @@ class Manifest:
     supersedes: list[str] | None = None
 
 
+@dataclass
+class Staged:
+    """One stage's rows written but not committed: the staged partition
+    directory (absent when the stage has no rows) and its manifest stats."""
+
+    path: str
+    n_rows: int
+    content_hash: str
+    min_ts: str
+    max_ts: str
+
+
+def _row_hash(cols: list[str]) -> Column:
+    """xxhash64 of a row's `cols` (committed order), canonicalized to strings."""
+    return F.xxhash64(*[F.col(c).cast("string") for c in cols])
+
+
+def _stats_aggs(
+    row_hash: Column, has_ts: bool, tag: str = "", where: Column | None = None
+) -> list[Column]:
+    """The manifest-stats fold as aggregate columns named <tag>0.. —
+    restricted to the rows matching `where`."""
+
+    def only(c: Column) -> Column:
+        return c if where is None else F.when(where, c)
+
+    aggs = [
+        F.count(only(F.lit(1))),
+        F.bit_xor(only(row_hash)),
+        F.sum(only(F.pmod(row_hash, F.lit(2**31)))),
+    ]
+    if has_ts:
+        ts = only(F.col("bucket_ts"))
+        aggs += [F.min(ts), F.max(ts)]
+    return [a.alias(f"{tag}{i}") for i, a in enumerate(aggs)]
+
+
+def _stats_values(vals: list) -> tuple[int, str, str, str]:
+    """_stats_aggs' values -> (n, content hash, min_ts, max_ts)."""
+    n, x, s, lo, hi = [*vals, None, None][:5]
+    x = int(x or 0) & 0xFFFFFFFFFFFFFFFF
+    s = int(s or 0) % (2**31)
+    return (
+        int(n),
+        f"{x:016x}-{s:08x}",
+        "" if lo is None else str(lo),
+        "" if hi is None else str(hi),
+    )
+
+
 def _manifest_stats(df: DataFrame) -> tuple[int, str, str, str]:
     """ONE aggregation pass -> (row count, order-insensitive content hash,
     min/max bucket_ts as ISO strings — empty if the column is absent).
@@ -60,28 +118,10 @@ def _manifest_stats(df: DataFrame) -> tuple[int, str, str, str]:
     (canonicalized to strings) plus a modular sum — both order-insensitive
     and overflow-free, identical under any partitioning/parallelism. The
     (xor, modsum, count) triple makes accidental collisions (duplicate-row
-    cancellation in xor) detectable."""
-    cols = [F.col(c).cast("string") for c in df.columns]
-    row_hash = F.xxhash64(*cols)
-    has_ts = "bucket_ts" in df.columns
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({', '.join(f'cast(`{c}` as string)' for c in df.columns)}))").alias("x"),
-        F.sum(F.pmod(row_hash, F.lit(2**31))).alias("s"),
-    ]
-    if has_ts:
-        aggs += [F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")]
-    agg = df.agg(*aggs).collect()[0]
-    n = int(agg["n"])
-    x = int(agg["x"] or 0) & 0xFFFFFFFFFFFFFFFF
-    s = int(agg["s"] or 0) % (2**31)
-    lo = str(agg["lo"]) if has_ts and agg["lo"] is not None else ""
-    hi = str(agg["hi"]) if has_ts and agg["hi"] is not None else ""
-    return n, f"{x:016x}-{s:08x}", lo, hi
-
-
-# _manifest_stats' hash of zero rows (both folds are empty)
-_EMPTY_HASH = f"{0:016x}-{0:08x}"
+    cancellation in xor) detectable. stage_batches observes the same fold
+    on its write."""
+    aggs = _stats_aggs(_row_hash(df.columns), "bucket_ts" in df.columns)
+    return _stats_values(list(df.agg(*aggs).collect()[0]))
 
 
 def content_hash(df: DataFrame) -> tuple[int, str]:
@@ -90,21 +130,74 @@ def content_hash(df: DataFrame) -> tuple[int, str]:
     return n, h
 
 
+def stage_batches(
+    df: DataFrame, path: str, key: str, keys: list[str]
+) -> dict[str, Staged]:
+    """Step 2 of the protocol: write `df` under `path` in ONE Spark job,
+    partitioned by (`key`, source), and return each key value's Staged
+    partition `path/<key>=<k>`. Its manifest stats are a DataFrame.observe
+    on the write — the fold _manifest_stats runs, over every column but
+    `key` in df order, one conditional set per value in `keys` — so the
+    stats describe exactly the rows written.
+
+    Appends: the caller clears `path` first. The observe sits directly
+    above the write (no exchange between them), so its metrics merge once
+    per successful write task."""
+    cols = [c for c in df.columns if c != key]
+    # the row hash and the key's index are computed once per row, not per
+    # key: write_batches observes up to 52 weekly ids, where a per-key hash
+    # and string compare cost ~1 s of q_retention_horizon
+    keyed = df.withColumn("_row_hash", _row_hash(cols)).withColumn(
+        "_key", F.array_position(F.array(*[F.lit(k) for k in keys]), F.col(key))
+    )
+    per_key = [
+        _stats_aggs(
+            F.col("_row_hash"), "bucket_ts" in cols, f"k{i}_", F.col("_key") == i + 1
+        )
+        for i in range(len(keys))
+    ]
+    obs = Observation()
+    part_cols = [key] + (["source"] if "source" in cols else [])
+    (
+        keyed.observe(obs, *[a for aggs in per_key for a in aggs])
+        .drop("_row_hash", "_key")
+        .write.mode("append")
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
+    got = obs.get
+    return {
+        k: Staged(
+            os.path.join(path, f"{key}={k}"),
+            *_stats_values([got[f"k{i}_{j}"] for j in range(len(per_key[i]))]),
+        )
+        for i, k in enumerate(keys)
+    }
+
+
 class TierStore:
     """Filesystem layout:
-    root/tiers/<tier>/batch=<id>/*.parquet     (dynamic partition overwrite)
+    root/tiers/<tier>/batch=<id>/source=<s>/*.parquet   (committed by rename)
+    root/_staging/<id>/                                  (uncommitted writes)
     root/manifests/<tier>/<batch>.json
-    root/watermarks/<tier>.json                 (atomic rename commit)
+    root/watermarks/<tier>.json                          (atomic rename commit)
     """
 
     def __init__(self, root: str):
         self.root = root
-        for d in ("tiers", "manifests", "watermarks"):
+        for d in ("tiers", "_staging", "manifests", "watermarks"):
             os.makedirs(os.path.join(root, d), exist_ok=True)
 
     # --- paths
     def tier_path(self, tier: str) -> str:
         return os.path.join(self.root, "tiers", tier)
+
+    def batch_path(self, tier: str, batch_id: str) -> str:
+        return os.path.join(self.tier_path(tier), f"batch={batch_id}")
+
+    def stage_path(self, batch_id: str) -> str:
+        """Where a batch's stages are staged before their commit."""
+        return os.path.join(self.root, "_staging", batch_id)
 
     def _manifest_path(self, tier: str, batch_id: str) -> str:
         d = os.path.join(self.root, "manifests", tier)
@@ -158,105 +251,45 @@ class TierStore:
         batch_col: str,
         config_hash: str,
     ) -> dict[str, "Manifest"]:
-        """Commit MANY batches from one DataFrame in O(1) Spark jobs —
-        protocol-equivalent to calling write_batch once per distinct value
-        of `batch_col`, but with ONE partitioned write and ONE grouped
-        manifest-stats pass instead of 2×N jobs (a write_batch loop
-        re-executes the input plan and runs a stats aggregation per batch;
-        at 52 weekly batches that was 104 sequential jobs for seconds of
-        actual data). Same batch=<id>/source=<s>/ layout, same manifest
-        fields (the content hash is an order-insensitive xor/modsum fold,
-        so per-batch values are identical to the loop's), watermarks left
-        to the caller exactly like write_batch."""
-        import shutil
-
-        data_cols = [c for c in df.columns if c != batch_col]
+        """Commit one batch per distinct value of `batch_col`: ONE staged
+        write partitioned by the batch column (stats observed per batch id),
+        then write_batch per id. Same batch=<id>/source=<s>/ layout and
+        manifests as staging each batch on its own; watermarks are left to
+        the caller exactly like write_batch."""
         out = df.withColumnRenamed(batch_col, "batch")
         batch_ids = sorted(
             r["batch"] for r in out.select("batch").distinct().collect()
         )  # bounded: one row per batch
-        for bid in batch_ids:
-            part = os.path.join(self.tier_path(tier), f"batch={bid}")
-            shutil.rmtree(part, ignore_errors=True)
-        part_cols = ["batch"] + (["source"] if "source" in data_cols else [])
-        # cluster rows by the partition dirs before writing (guide §6):
-        # without this every write task sprays a file into every
-        # batch=/source= dir it touches — N_tasks × N_dirs small files
-        (
-            out.repartition(*part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.tier_path(tier))
+        if not batch_ids:
+            return {}
+        staging = tempfile.mkdtemp(
+            prefix=f"{tier}-", dir=os.path.join(self.root, "_staging")
         )
-        spark = df.sparkSession
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
         try:
-            prev_infer = spark.conf.get(infer_key)
-        except Exception:
-            prev_infer = None
-        spark.conf.set(infer_key, "false")
-        try:
-            schema = {f.name: f.dataType for f in df.schema.fields}
-            back = (
-                spark.read.option("basePath", self.tier_path(tier))
-                .parquet(
-                    *[
-                        os.path.join(self.tier_path(tier), f"batch={bid}")
-                        for bid in batch_ids
-                    ]
-                )
-                .select(
-                    "batch",
-                    *[F.col(c).cast(schema[c]).alias(c) for c in data_cols],
-                )
+            # cluster rows by the partition dirs before writing (guide §6):
+            # without this every write task sprays a file into every
+            # batch=/source= dir it touches — N_tasks × N_dirs small files
+            part_cols = ["batch"] + (["source"] if "source" in df.columns else [])
+            staged = stage_batches(
+                out.repartition(*part_cols), staging, "batch", batch_ids
             )
-            # the same aggregate set _manifest_stats runs, grouped by batch
-            # (all order-insensitive => identical per-batch values)
-            cast_cols = ", ".join(f"cast(`{c}` as string)" for c in data_cols)
-            row_hash = F.xxhash64(*[F.col(c).cast("string") for c in data_cols])
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(xxhash64({cast_cols}))").alias("x"),
-                F.sum(F.pmod(row_hash, F.lit(2**31))).alias("s"),
-            ]
-            has_ts = "bucket_ts" in data_cols
-            if has_ts:
-                aggs += [
-                    F.min("bucket_ts").alias("lo"),
-                    F.max("bucket_ts").alias("hi"),
-                ]
-            stats = {r["batch"]: r for r in back.groupBy("batch").agg(*aggs).collect()}
+            return {
+                bid: self.write_batch(staged[bid], tier, bid, config_hash)
+                for bid in batch_ids
+            }
         finally:
-            if prev_infer is None:
-                spark.conf.unset(infer_key)
-            else:
-                spark.conf.set(infer_key, prev_infer)
-        mans: dict[str, Manifest] = {}
-        for bid in batch_ids:
-            r = stats[bid]
-            x = int(r["x"] or 0) & 0xFFFFFFFFFFFFFFFF
-            s = int(r["s"] or 0) % (2**31)
-            lo = str(r["lo"]) if has_ts and r["lo"] is not None else ""
-            hi = str(r["hi"]) if has_ts and r["hi"] is not None else ""
-            part = os.path.join(self.tier_path(tier), f"batch={bid}")
-            m = Manifest(
-                tier, bid, int(r["n"]), f"{x:016x}-{s:08x}", config_hash,
-                self._tree_bytes(part), lo, hi,
-            )
-            self._write_manifest(m)
-            mans[bid] = m
-        return mans
+            shutil.rmtree(staging, ignore_errors=True)
 
     def write_batch(
         self,
-        df: DataFrame,
+        staged: Staged,
         tier: str,
         batch_id: str,
         config_hash: str,
         supersedes: list[str] | None = None,
     ) -> Manifest:
-        """Steps 1-3 of the protocol (caller advances the watermark).
+        """Steps 3-4 of the protocol (caller advances the watermark): move
+        the staged partition in as `batch=<id>` and write its manifest.
         `supersedes`: batch ids this batch rewrites (compaction) — recorded
         in THIS batch's manifest so snapshot readers drop the sources
         atomically with this batch's commit.
@@ -265,72 +298,22 @@ class TierStore:
         partition pruning on the hot filter dimension (the Iceberg analog
         is PARTITIONED BY (batch, source, hours(bucket_ts)))."""
         # An uncommitted batch=<id> tree from a crashed earlier attempt may
-        # hold source= subpartitions the new df no longer produces — dynamic
-        # overwrite would leave them in place (and the read-back below would
-        # hash stale rows). The batch is uncommitted, so dropping the whole
-        # partition first is exactly the overwrite semantics we want.
-        import shutil
-
-        part = os.path.join(self.tier_path(tier), f"batch={batch_id}")
+        # hold source= subpartitions the staged rows no longer produce. The
+        # batch is uncommitted, so dropping the whole partition before the
+        # rename replaces it rather than merging into it.
+        part = self.batch_path(tier, batch_id)
         shutil.rmtree(part, ignore_errors=True)
-        out = df.withColumn("batch", F.lit(batch_id))
-        part_cols = ["batch"] + (["source"] if "source" in df.columns else [])
-        (
-            out.write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.tier_path(tier))
-        )
-        if os.path.isdir(part):
-            n, h, lo, hi = self._partition_stats(df, tier, part)
-        else:
-            # a zero-row batch (empty or all-missing input): partitionBy
-            # creates no batch=<id> directory, so there is nothing to read
-            # back. Record what _manifest_stats gives for 0 rows.
-            n, h, lo, hi = 0, _EMPTY_HASH, "", ""
-        n_bytes = self._tree_bytes(part)
+        # a zero-row stage has no staged directory and commits no partition
+        if os.path.isdir(staged.path):
+            os.makedirs(self.tier_path(tier), exist_ok=True)
+            os.replace(staged.path, part)
         m = Manifest(
-            tier, batch_id, n, h, config_hash, n_bytes, lo, hi,
+            tier, batch_id, staged.n_rows, staged.content_hash, config_hash,
+            self._tree_bytes(part), staged.min_ts, staged.max_ts,
             supersedes=sorted(supersedes) if supersedes else None,
         )
         self._write_manifest(m)
         return m
-
-    def _partition_stats(
-        self, df: DataFrame, tier: str, part: str
-    ) -> tuple[int, str, str, str]:
-        """_manifest_stats of a just-written batch partition. The stats
-        come from the partition files, not a second execution of the
-        input plan, which may be an expensive scan. Partition-column type
-        inference is disabled for the read-back (a numeric-looking source
-        like '0123' must not round-trip as 123); casting to the input
-        schema then restores exact dtypes."""
-        spark = df.sparkSession
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        try:
-            prev_infer = spark.conf.get(infer_key)
-        except Exception:
-            prev_infer = None
-        spark.conf.set(infer_key, "false")
-        try:
-            back = (
-                spark.read.option("basePath", self.tier_path(tier))
-                .parquet(part)
-                .select(
-                    *[
-                        F.col(f.name).cast(f.dataType)
-                        for f in df.schema.fields
-                    ]
-                )
-            )
-            return _manifest_stats(back)
-        finally:
-            # restore the session-wide flag — leaving it flipped changes how
-            # partition columns type-infer in every later unrelated read
-            if prev_infer is None:
-                spark.conf.unset(infer_key)
-            else:
-                spark.conf.set(infer_key, prev_infer)
 
     # --- snapshot-consistent read set
     def live_batches(self, tier: str) -> set[str]:
@@ -398,7 +381,6 @@ class TierStore:
         skipped. Tiers mapped to None (or absent) are kept forever.
 
         Returns {tier: [expired batch ids]}."""
-        import shutil
         from datetime import datetime, timedelta
 
         now_dt = datetime.fromisoformat(now)
@@ -412,7 +394,7 @@ class TierStore:
                     continue
                 if datetime.fromisoformat(m.max_ts) >= cutoff:
                     continue
-                part = os.path.join(self.tier_path(tier), f"batch={m.batch_id}")
+                part = self.batch_path(tier, m.batch_id)
                 if os.path.isdir(part):
                     shutil.rmtree(part)
                 m.expired = True
@@ -427,12 +409,10 @@ class TierStore:
         partition (idempotent). The manifest stays for lineage — content
         hash still documents what the batch held; the committed set is
         untouched so resume keeps skipping the original batch id."""
-        import shutil
-
         m = self.manifest(tier, batch_id)
         if m is None:
             return
-        part = os.path.join(self.tier_path(tier), f"batch={batch_id}")
+        part = self.batch_path(tier, batch_id)
         if os.path.isdir(part):
             shutil.rmtree(part)
         if m.superseded_by != new_batch_id:

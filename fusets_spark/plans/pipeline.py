@@ -1,11 +1,14 @@
 """The continuous-aggregate rollup pipeline (north rule's production job).
 
 Incremental batch processing over an append-only tokenized-sequence table:
-each input batch is staged by ONE token scan (operators/ingest.py:
-ingest_from_tokens, the shuffle-free ladder and Gorilla block fold); every
-tier + the block store then commit per batch from the staged parquet
-through the TierStore protocol (lineage manifest -> atomic watermark), so a
-kill at ANY point resumes to byte-identical content (tested).
+each input batch runs ONE token scan (operators/ingest.py:
+ingest_from_tokens, the shuffle-free ladder and Gorilla block fold),
+persisted for two staged writes — the pending tiers partitioned by
+(stage, source), the blocks by source — whose manifest stats are observed
+on the writes themselves. Every stage then commits by renaming its staged
+partition into the TierStore and writing its lineage manifest, then its
+watermark (plans/lineage.py), so a kill at ANY point resumes to
+byte-identical content (tested).
 
 Deployment shape (cluster): `spark-submit --py-files fusets_spark.zip
 fusets_spark/plans/pipeline.py <input> <store>` against Iceberg; batches =
@@ -21,15 +24,20 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..codec.blocks import BLOCK_SCHEMA
 from ..operators import ingest
 from ..operators.rollup import TIERS
-from .lineage import TierStore
+from .lineage import TierStore, stage_batches
 
 STAGES = [*TIERS.keys(), "blocks"]
+# each stage's committed columns, read back with exactly these types
+STAGE_SCHEMAS = {**{t: ingest.TIER_SCHEMA for t in TIERS}, "blocks": BLOCK_SCHEMA}
 
 # TimescaleDB-style default retention: fine data is the shortest-lived,
 # coarser aggregates keep longer, the 1h tier forever (None).
@@ -39,29 +47,6 @@ DEFAULT_RETENTION: dict[str, float | None] = {
     "5m": 180 * 86400.0,
     "1h": None,
 }
-
-
-def _read_tier_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read a tier's partitioned parquet with partition-column type
-    inference OFF (save/restore, mirroring write_batch): a numeric-
-    looking batch id like '0123' would otherwise infer as int and the
-    string isin() batch filters would silently drop every row. Keeping
-    `batch` a string also keeps those filters plan-time partition-pruning
-    predicates. Inference happens eagerly at read() time, so restoring
-    the conf afterwards is safe."""
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    try:
-        prev_infer = spark.conf.get(infer_key)
-    except Exception:
-        prev_infer = None
-    spark.conf.set(infer_key, "false")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        if prev_infer is None:
-            spark.conf.unset(infer_key)
-        else:
-            spark.conf.set(infer_key, prev_infer)
 
 
 def _config_hash(cfg: dict) -> str:
@@ -91,37 +76,48 @@ class RollupPipeline:
     ) -> None:
         """Commit one input batch through every pending stage.
         `fail_after_stage` simulates an executor/driver loss mid-commit
-        (for the resume test): the stage's data+manifest are written but
+        (for the resume test): the stage's data+manifest are committed but
         the watermark is NOT.
 
-        ONE token scan materializes every tier + the blocks into an
-        uncommitted staging dir; each pending stage then commits from the
-        cheap staged parquet instead of re-scanning the corpus. Staging is
-        overwrite-idempotent: a crash at any point resumes by
-        re-materializing it (content is a pure function of the batch), and
-        committed stages are skipped."""
-        import shutil
-
-        staging = f"{self.store.root}/_staging/{batch_id}"
+        ONE token scan, persisted, feeds two staged writes under
+        `_staging/<id>`: the pending tiers partitioned by (stage, source)
+        and the blocks by source, each observing its stages' manifest
+        stats. Each pending stage then commits by rename. Staging is
+        overwrite-idempotent: a crash at any point resumes by re-staging
+        (content is a pure function of the batch), and committed stages
+        are skipped."""
+        staging = self.store.stage_path(batch_id)
         pending = [
             s for s in STAGES if not self.store.is_committed(s, batch_id)
         ]
         if pending:
+            shutil.rmtree(staging, ignore_errors=True)
             # looked up on the module at call time, so a wrapper installed
             # on ingest.ingest_from_tokens sees every staging scan
-            ingest.ingest_from_tokens(
+            ingested = ingest.ingest_from_tokens(
                 tokens, t0=self.t0, block_seconds=self.block_seconds
-            ).write.mode("overwrite").parquet(staging)
-            tiers, blocks = ingest.split_ingest(
-                tokens.sparkSession.read.parquet(staging)
-            )
+            ).persist()
+            try:
+                tiers, blocks = ingest.split_ingest(ingested)
+                staged = {}
+                tier_stages = [s for s in pending if s in TIERS]
+                if tier_stages:
+                    by_stage = tiers.withColumnRenamed("tier", "stage")
+                    staged |= stage_batches(
+                        by_stage.filter(F.col("stage").isin(tier_stages)),
+                        staging, "stage", tier_stages,
+                    )
+                if "blocks" in pending:
+                    staged |= stage_batches(
+                        blocks.withColumn("stage", F.lit("blocks")),
+                        staging, "stage", ["blocks"],
+                    )
+            finally:
+                ingested.unpersist()
             for stage in pending:
-                df = (
-                    blocks
-                    if stage == "blocks"
-                    else tiers.filter(tiers["tier"] == stage).drop("tier")
+                self.store.write_batch(
+                    staged[stage], stage, batch_id, self.cfg_hash
                 )
-                self.store.write_batch(df, stage, batch_id, self.cfg_hash)
                 if fail_after_stage == stage:
                     raise RuntimeError(
                         f"simulated failure after {stage}/{batch_id}"
@@ -174,9 +170,7 @@ class RollupPipeline:
             if as_of_batches is not None
             else self.store.live_batches(stage)
         )
-        df = _read_tier_parquet(spark, self.store.tier_path(stage)).filter(
-            F.col("batch").isin(sorted(live))
-        )
+        df = self._read_batches(spark, stage, live)
         if merged and stage != "blocks":
             from ..operators.rollup import merge_tier_partials
 
@@ -191,6 +185,32 @@ class RollupPipeline:
                 )
             return merge_tier_partials(df)
         return df
+
+    def _read_batches(
+        self, spark: SparkSession, stage: str, batch_ids
+    ) -> DataFrame:
+        """The rows of exactly these batches of `stage`: only their
+        batch=<id> directories are listed and read with the stage's
+        declared schema, `batch`/`source` as strings (nothing is inferred:
+        id '0123' stays a string). No directory at all (zero-row batches
+        only) reads as an empty frame of the same columns."""
+        schema = f"{STAGE_SCHEMAS[stage]}, batch string"
+        ids = sorted(batch_ids)
+        paths = [
+            p
+            for p in (self.store.batch_path(stage, b) for b in ids)
+            if os.path.isdir(p)
+        ]
+        if not paths:
+            df = spark.createDataFrame([], schema)
+            data = [c for c in df.columns if c not in ("batch", "source")]
+            return df.select(*data, "batch", "source")
+        return (
+            spark.read.schema(schema)
+            .option("basePath", self.store.tier_path(stage))
+            .parquet(*paths)
+            .filter(F.col("batch").isin(ids))
+        )
 
     def apply_compaction(
         self,
@@ -256,8 +276,9 @@ class RollupPipeline:
         raw points at target_seconds directly.
 
         Crash-safe with the same commit discipline as ingest:
-          1. read exactly the source batch partitions (pruned filter),
-             compact, write as `new_batch_id` + manifest, commit watermark;
+          1. read exactly the source batch partitions (snapshot read),
+             compact, stage, commit as `new_batch_id` by rename + manifest,
+             then watermark;
           2. drop each source partition and flag its manifest
              superseded_by=new_batch_id (lineage kept, committed set
              untouched so resume keeps skipping the old ids).
@@ -270,21 +291,25 @@ class RollupPipeline:
         data trees on disk but never a duplicated read."""
         from ..codec.blocks import compact_blocks
 
+        staging = self.store.stage_path(new_batch_id)
         if not self.store.is_committed("blocks", new_batch_id):
-            src = (
-                _read_tier_parquet(spark, self.store.tier_path("blocks"))
-                .filter(F.col("batch").isin(batch_ids))
-                .drop("batch")
+            src = self._read_batches(spark, "blocks", batch_ids).drop("batch")
+            shutil.rmtree(staging, ignore_errors=True)
+            staged = stage_batches(
+                compact_blocks(src, target_seconds).withColumn(
+                    "stage", F.lit("blocks")
+                ),
+                staging, "stage", ["blocks"],
             )
-            compacted = compact_blocks(src, target_seconds)
             self.store.write_batch(
-                compacted, "blocks", new_batch_id,
+                staged["blocks"], "blocks", new_batch_id,
                 config_hash or self.cfg_hash,
                 supersedes=batch_ids,
             )
             self.store.commit_watermark("blocks", new_batch_id)
         for bid in batch_ids:
             self.store.mark_superseded("blocks", bid, new_batch_id)
+        shutil.rmtree(staging, ignore_errors=True)
 
     def apply_retention(
         self, now: str, policy: dict[str, float | None] | None = None
@@ -309,7 +334,6 @@ def main(argv: list[str] | None = None) -> None:
     batches are skipped via the TierStore watermark set, so re-running the
     same command after any crash resumes exactly."""
     import argparse
-    import os
 
     from pyspark.sql import SparkSession
 

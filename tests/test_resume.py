@@ -14,6 +14,19 @@ from fusets_spark.datagen import generate_tokens
 from fusets_spark.plans.pipeline import STAGES, RollupPipeline
 
 
+def _stage_one(store, df, tier, batch_id):
+    """Stage `df` as batch `batch_id` of `tier`, ready for write_batch."""
+    from pyspark.sql import functions as F
+
+    from fusets_spark.plans.lineage import stage_batches
+
+    staging = store.stage_path(batch_id)
+    shutil.rmtree(staging, ignore_errors=True)
+    return stage_batches(
+        df.withColumn("_stage", F.lit(tier)), staging, "_stage", [tier]
+    )[tier]
+
+
 def _batches(spark):
     return {
         f"b{str(i).zfill(3)}": generate_tokens(
@@ -178,8 +191,8 @@ def test_resume_with_non_padded_batch_ids(spark, tmp_path):
 def test_read_tier_numeric_looking_batch_id(spark, tmp_path):
     """A numeric-looking batch id like '0123' must survive read_tier:
     partition-column type inference would coerce it to int 123 and the
-    string isin() filter would silently drop every row (write_batch
-    already disables inference; the read path must too)."""
+    string isin() filter would silently drop every row (read_tier reads
+    with the declared schema, so `batch` is never inferred)."""
     root = str(tmp_path / "numeric")
     toks = generate_tokens(spark, 20, seed=3, min_tok=32, max_tok=64)
     pipe = RollupPipeline(root)
@@ -216,7 +229,9 @@ def test_retention_drops_old_batches_keeps_lineage(spark, tmp_path):
             "1m",
         )
         for stage in ("1m", "1h"):
-            store.write_batch(tier, stage, batch_id, "cfg")
+            store.write_batches(
+                tier.withColumn("_batch", F.lit(batch_id)), stage, "_batch", "cfg"
+            )
             store.commit_watermark(stage, batch_id)
 
     # batches are 0/10/20 days old relative to b2; 5-day horizon drops b0+b1
@@ -455,7 +470,7 @@ def test_snapshot_read_consistency(spark, tmp_path):
     pd.testing.assert_frame_equal(committed_view, after_crash)  # ...reader doesn't
 
     # (2) compaction crash window: commit the rewrite but "crash" before
-    # the source drops (call write_batch + watermark directly)
+    # the source drops (stage, then call write_batch + watermark directly)
     src = (
         spark.read.parquet(pipe.store.tier_path("blocks"))
         .filter(F.col("batch").isin(["b1", "b2"]))
@@ -463,9 +478,11 @@ def test_snapshot_read_consistency(spark, tmp_path):
     )
     from fusets_spark.codec.blocks import compact_blocks
 
+    staged = _stage_one(
+        pipe.store, compact_blocks(src, 3600), "blocks", "compact-1"
+    )
     pipe.store.write_batch(
-        compact_blocks(src, 3600), "blocks", "compact-1", pipe.cfg_hash,
-        supersedes=["b1", "b2"],
+        staged, "blocks", "compact-1", pipe.cfg_hash, supersedes=["b1", "b2"]
     )
     pipe.store.commit_watermark("blocks", "compact-1")
     # both source trees still on disk alongside the rewrite
@@ -551,10 +568,11 @@ def test_policy_driven_compaction(spark, tmp_path):
 
 
 def test_write_batches_equals_write_batch_loop(spark, tmp_path):
-    """write_batches (one partitioned write + one grouped stats pass) must
-    be protocol-equivalent to a write_batch loop: same batch partitions,
-    same read-back rows, and identical manifest count/hash/lo/hi per
-    batch (the order-insensitive stats make the grouped pass exact)."""
+    """write_batches (one staged write, stats observed per batch id) must
+    be protocol-equivalent to a loop staging and committing each batch on
+    its own: same batch partitions, same read-back rows, and identical
+    manifest count/hash/lo/hi per batch (the order-insensitive stats make
+    the per-batch conditional folds exact)."""
     from pyspark.sql import functions as F
 
     from fusets_spark.operators.explode import explode_raw
@@ -572,9 +590,11 @@ def test_write_batches_equals_write_batch_loop(spark, tmp_path):
     )
     loop_mans = {}
     for bid in bids:
-        loop_mans[bid] = loop_store.write_batch(
-            tier.filter(F.col("_batch") == bid).drop("_batch"), "1m", bid, "cfg"
+        staged = _stage_one(
+            loop_store, tier.filter(F.col("_batch") == bid).drop("_batch"),
+            "1m", bid,
         )
+        loop_mans[bid] = loop_store.write_batch(staged, "1m", bid, "cfg")
         loop_store.commit_watermark("1m", bid)
 
     bat_store = TierStore(str(tmp_path / "batched"))
@@ -603,3 +623,125 @@ def test_write_batches_equals_write_batch_loop(spark, tmp_path):
         got_a[["batch"] + cols].reset_index(drop=True),
         got_b[["batch"] + cols].reset_index(drop=True),
     )
+
+
+def test_read_tier_empty_live_set(spark, tmp_path):
+    """A stage with no live rows — a store that committed only zero-row
+    batches, or nothing at all — reads as an empty frame with the declared
+    column names, order and dtypes instead of failing schema inference."""
+    from pyspark.sql import functions as F
+
+    toks = generate_tokens(spark, 12, seed=5, min_tok=32, max_tok=128)
+    empty = RollupPipeline(str(tmp_path / "empty"))
+    missing = toks.withColumn("tokens", F.expr("transform(tokens, t -> -1)"))
+    empty.run(spark, {"b0": missing})
+    fresh = RollupPipeline(str(tmp_path / "fresh"))
+    ref = RollupPipeline(str(tmp_path / "ref"))
+    ref.run(spark, {"b1": toks})
+    for stage in STAGES:
+        assert empty.store.live_batches(stage) == {"b0"}
+        for merged in (False, True):
+            want = ref.read_tier(spark, stage, merged=merged).dtypes
+            for pipe in (empty, fresh):
+                got = pipe.read_tier(spark, stage, merged=merged)
+                assert got.dtypes == want, (stage, merged)
+                assert got.count() == 0
+
+
+def test_observed_manifests_match_committed_files(spark, batches, tmp_path):
+    """Manifest stats are observed on the staged write, never read back.
+    Recomputing _manifest_stats from every committed partition's files
+    (read with the declared schema) must give the manifest's row count,
+    content hash and bucket_ts range, and n_bytes must be the partition's
+    bytes on disk — across a crash + resume, a compaction and a
+    write_batches commit."""
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from fusets_spark.plans.lineage import TierStore, _manifest_stats
+    from fusets_spark.plans.pipeline import STAGE_SCHEMAS
+
+    pipe = RollupPipeline(str(tmp_path / "store"))
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        pipe.run(spark, batches, fail_at=("b001", "5m"))
+    pipe.run(spark, batches)
+    new_id = "compact-b000-b001"
+    pipe.compact_block_batches(spark, ["b000", "b001"], new_id, 86400)
+    by_minute = (
+        pipe.read_tier(spark, "1m")
+        .drop("batch")
+        .withColumn("_batch", F.format_string("m%d", F.minute("bucket_ts")))
+    )
+    minute_mans = pipe.store.write_batches(by_minute, "by_minute", "_batch", "cfg")
+    assert len(minute_mans) > 1
+
+    schemas = {
+        s: spark.createDataFrame([], STAGE_SCHEMAS[s]).schema for s in STAGES
+    }
+    schemas["by_minute"] = StructType(
+        [f for f in by_minute.schema if f.name != "_batch"]
+    )
+    checked = 0
+    for tier, schema in schemas.items():
+        for m in pipe.store.manifests(tier):
+            part = pipe.store.batch_path(tier, m.batch_id)
+            if not os.path.isdir(part):
+                # compaction dropped it, or a zero-row batch has no files
+                assert m.superseded_by or m.n_bytes == 0, (tier, m.batch_id)
+                continue
+            assert m.n_bytes == TierStore._tree_bytes(part), (tier, m.batch_id)
+            back = (
+                spark.read.schema(
+                    StructType([*schema, StructField("batch", StringType())])
+                )
+                .option("basePath", pipe.store.tier_path(tier))
+                .parquet(part)
+                .select(*schema.names)
+            )
+            assert _manifest_stats(back) == (
+                m.n_rows, m.content_hash, m.min_ts, m.max_ts
+            ), (tier, m.batch_id)
+            checked += 1
+    # 3 batches x 3 tiers, b002 + the compacted blocks batch, per-minute ones
+    assert checked == 9 + 2 + len(minute_mans)
+    assert os.listdir(os.path.join(pipe.store.root, "_staging")) == []
+
+
+def test_stale_uncommitted_partition_replaced(spark, batches, clean_pipe, tmp_path):
+    """A crash leaves an uncommitted batch partition (renamed in, manifest
+    written, watermark not) and a half-committed staging dir. Junk planted
+    in both must not survive the resume: the partition is replaced, not
+    merged into, and staging is re-written from scratch."""
+    import glob
+    import os
+
+    root = str(tmp_path / "stale")
+    crash = RollupPipeline(root)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        crash.run(spark, batches, fail_at=("b001", "5m"))
+    part = crash.store.batch_path("5m", "b001")
+    assert os.path.isdir(part) and not crash.store.is_committed("5m", "b001")
+    a_file = sorted(glob.glob(os.path.join(part, "source=*", "*.parquet")))[0]
+    stale_dirs = [
+        os.path.join(part, "source=zzz"),
+        os.path.join(crash.store.stage_path("b001"), "stage=1h", "source=zzz"),
+    ]
+    for d in stale_dirs:
+        os.makedirs(d)
+        shutil.copy(a_file, os.path.join(d, "part-stale.parquet"))
+
+    crash.run(spark, batches)
+    for d in stale_dirs:
+        assert not os.path.exists(d), d
+    assert os.listdir(os.path.join(root, "_staging")) == []
+    for s in STAGES:
+        want = {m.batch_id: m for m in clean_pipe.store.manifests(s)}
+        got = {m.batch_id: m for m in crash.store.manifests(s)}
+        assert want.keys() == got.keys()
+        for b, m in want.items():
+            assert (m.n_rows, m.content_hash, m.min_ts, m.max_ts, m.n_bytes) == (
+                got[b].n_rows, got[b].content_hash, got[b].min_ts,
+                got[b].max_ts, got[b].n_bytes,
+            ), (s, b)
