@@ -239,8 +239,8 @@ def q_whittaker_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # group count inherits session.default_groups (defaultParallelism × 4,
-    # floored at 64) so solver parallelism scales with the cluster
+    # group count follows whittaker.BUCKETS (defaultParallelism × 2,
+    # floored at 32) so solver parallelism scales with the cluster
     out = whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600)
     return out.select(
         "source", "doc_id", "ts", F.round("value_smooth", 6).alias("value_smooth")

@@ -27,10 +27,13 @@ if REPO not in sys.path:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--queries", default="")
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count(),
+    )
     ap.add_argument("--plans-dir", default="")
     ap.add_argument("--plan-suffix", default="")
     ap.add_argument("--full-whittaker", action="store_true",

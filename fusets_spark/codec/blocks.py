@@ -3,15 +3,16 @@
 One block = one (source, doc_id, block bucket) — a block is NEVER split
 across tasks (SURVEY.md §7.3).
 
-Granularity design: the shuffle key is a HASH BUCKET of series
-(source, xxhash64(doc_id) % groups_per_source) — each applyInPandas call
-receives many whole series and encodes ALL their blocks in one pass, with
+Granularity design: the kernels run through kernels.group_kernel, whose
+groups are (source, hash bucket of doc_id) — each kernel call receives
+many whole series and encodes ALL their blocks in one pass, with
 per-(series, bucket) runs found by numpy change detection on the sorted
 frame. Grouping by (series, bucket) directly would create millions of tiny
 groups and drown in Spark's per-group applyInPandas machinery (measured
 ~8 ms/group — 60x slower than the codec itself); hash-bucketing amortizes
-that overhead to ~zero while `groups_per_source` bounds per-task memory at
-cluster scale (results are independent of it).
+that overhead to ~zero while the bucket count bounds per-task memory at
+cluster scale (results are independent of it). The codec's bucket policy
+is BUCKETS (floor 256, 8 per core), which the stream sealer shares.
 
 encode_blocks:  points -> (source, doc_id, bucket_ts, n_points, min/max ts,
                            codec, block: binary)
@@ -25,8 +26,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from ..kernels import Buckets, group_kernel
 from .gorilla import decode_blocks_batch, encode_block, encode_blocks_batched
 
 BLOCK_SCHEMA = (
@@ -36,6 +37,8 @@ BLOCK_SCHEMA = (
 POINTS_SCHEMA = "source string, doc_id string, ts timestamp, value double"
 
 CODEC_NAME = "gorilla-dod-xor-v1"
+
+BUCKETS = Buckets(floor=256, per_core=8)
 
 
 def _dt_ns(ns) -> np.ndarray:
@@ -56,14 +59,10 @@ def encode_blocks(
     points: DataFrame,
     block_seconds: int = 3600,
     value_col: str = "value",
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """Compress raw points into per-(series, bucket) Gorilla blocks.
-
-    groups_per_source: task granularity (hash buckets of doc_id per source);
-    tune so one group's points fit executor memory. Output is independent
-    of it — blocks are keyed by (source, doc_id, bucket_ts) only.
-    """
+    Output is independent of the task grouping — blocks are keyed by
+    (source, doc_id, bucket_ts) only."""
 
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
         # Canonical (doc_id, ts, value) order: with tied timestamps in one
@@ -100,17 +99,7 @@ def encode_blocks(
             }
         )
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(
-        points, minimum=256, per_core=8
-    )
-    grouped = points.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
-        _encode, schema=BLOCK_SCHEMA
-    )
+    return group_kernel(points, _encode, BLOCK_SCHEMA, buckets=BUCKETS)
 
 
 def block_frame(src_arr, doc_arr, d, ep_us, vals, block_seconds):
@@ -142,7 +131,6 @@ def block_frame(src_arr, doc_arr, d, ep_us, vals, block_seconds):
 def compact_blocks(
     blocks: DataFrame,
     target_seconds: int,
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """Tier compaction for the block store (north-rule retention path):
     merge fine (series, bucket) blocks into coarser `target_seconds`
@@ -265,24 +253,13 @@ def compact_blocks(
             return frames[0]
         return pd.concat(frames, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(
-        blocks, minimum=256, per_core=8
-    )
-    grouped = blocks.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
-        _compact, schema=BLOCK_SCHEMA
-    )
+    return group_kernel(blocks, _compact, BLOCK_SCHEMA, buckets=BUCKETS)
 
 
 def roundtrip_points(
     points: DataFrame,
     block_seconds: int = 3600,
     value_col: str = "value",
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """encode∘decode in ONE kernel pass — the codec verification path
     (gorilla_roundtrip). Each group's points are encoded with EXACTLY the
@@ -319,19 +296,7 @@ def roundtrip_points(
             }
         )
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(
-        points, minimum=256, per_core=8
-    )
-    grouped = points.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return (
-        repartition_for_kernel(grouped, "source", "_g")
-        .groupBy("source", "_g")
-        .applyInPandas(_rt, schema=POINTS_SCHEMA)
-    )
+    return group_kernel(points, _rt, POINTS_SCHEMA, buckets=BUCKETS)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:

@@ -38,38 +38,6 @@ _FALLBACK_PREFIX = (1 << (len(_RANGES) + 1)) - 1  # '1' * (len+1)
 _FALLBACK_WIDTH = len(_RANGES) + 1
 
 
-class _BitWriter:
-    """Collect (value, width) codewords; pack once with numpy at the end."""
-
-    __slots__ = ("vals", "widths")
-
-    def __init__(self) -> None:
-        self.vals: list[int] = []
-        self.widths: list[int] = []
-
-    def write(self, value: int, width: int) -> None:
-        self.vals.append(value & ((1 << width) - 1) if width < 64 else value & 0xFFFFFFFFFFFFFFFF)
-        self.widths.append(width)
-
-    def extend(self, values: np.ndarray, widths: np.ndarray) -> None:
-        self.vals.extend(int(v) for v in values)
-        self.widths.extend(int(w) for w in widths)
-
-    def pack(self) -> bytes:
-        vals = np.asarray(self.vals, dtype=np.uint64)
-        widths = np.asarray(self.widths, dtype=np.int64)
-        total = int(widths.sum())
-        if total == 0:
-            return b""
-        ends = np.cumsum(widths)
-        starts = ends - widths
-        row = np.repeat(np.arange(len(vals)), widths)
-        bitpos = np.arange(total, dtype=np.int64) - starts[row]
-        shift = (widths[row] - 1 - bitpos).astype(np.uint64)
-        bits = ((vals[row] >> shift) & np.uint64(1)).astype(np.uint8)
-        return np.packbits(bits).tobytes()
-
-
 class _BitReader:
     """Word-indexed reader: each read touches at most two 64-bit words
     (O(1) per codeword, not O(bits))."""
@@ -95,22 +63,6 @@ class _BitReader:
         p = self.pos
         self.pos = p + 1
         return (self.words[p >> 6] >> (63 - (p & 63))) & 1
-
-
-def _encode_dod(w: _BitWriter, dod: np.ndarray) -> None:
-    for d in dod:
-        d = int(d)
-        if d == 0:
-            w.write(0, 1)
-            continue
-        for i, (bits, ub) in enumerate(_RANGES):
-            if -(ub - 1) <= d <= ub:
-                w.write(2 ** (i + 2) - 2, i + 2)  # prefix '10' / '110' / '1110'
-                w.write(d + (ub - 1), bits)  # bias to unsigned
-                break
-        else:
-            w.write(_FALLBACK_PREFIX, _FALLBACK_WIDTH)
-            w.write(d & 0xFFFFFFFFFFFFFFFF, 64)
 
 
 def _decode_dod(r: _BitReader) -> int:
@@ -397,58 +349,6 @@ def encode_blocks_batched(
     return [
         stream[byte_off[b] : byte_off[b + 1]] for b in range(B)
     ]
-
-
-def encode_block_pointwise(ts: np.ndarray, values: np.ndarray) -> bytes:
-    """Reference per-point encoder (keeps the stateful '10' reuse path of
-    the Gorilla paper). Used in tests to pin decoder compatibility; the
-    vectorized encode_block is the production path."""
-    ts = np.ascontiguousarray(ts, dtype=np.int64)
-    values = np.ascontiguousarray(values, dtype=np.float64)
-    n = len(ts)
-    assert len(values) == n
-    w = _BitWriter()
-    w.write(n, 32)
-    if n == 0:
-        return w.pack()
-    w.write(int(ts[0]) & 0xFFFFFFFFFFFFFFFF, 64)
-    vbits = values.view(np.uint64)
-    w.write(int(vbits[0]), 64)
-    if n > 1:
-        deltas = np.diff(ts)
-        dod = np.empty_like(deltas)
-        dod[0] = deltas[0]  # first delta encoded as DoD with prev_delta = 0
-        dod[1:] = np.diff(deltas)
-        _encode_dod(w, dod)
-        # value stream
-        prev_lead, prev_len = -1, -1
-        prev = int(vbits[0])
-        for cur in vbits[1:]:
-            cur = int(cur)
-            x = prev ^ cur
-            prev = cur
-            if x == 0:
-                w.write(0, 1)
-                continue
-            lead = 64 - x.bit_length()
-            trail = (x & -x).bit_length() - 1
-            if lead > 31:
-                lead = 31
-            mean_len = 64 - lead - trail
-            if (
-                prev_lead >= 0
-                and lead >= prev_lead
-                and trail >= (64 - prev_lead - prev_len)
-            ):
-                w.write(0b10, 2)
-                w.write(x >> (64 - prev_lead - prev_len), prev_len)
-            else:
-                w.write(0b11, 2)
-                w.write(lead, 5)
-                w.write(mean_len - 1, 6)
-                w.write(x >> trail, mean_len)
-                prev_lead, prev_len = lead, mean_len
-    return w.pack()
 
 
 _U0 = np.uint64(0)

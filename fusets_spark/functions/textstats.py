@@ -27,7 +27,7 @@ def text_quality(docs: DataFrame) -> DataFrame:
     punctuation ratio, stopword ratio, distinct-word ratio; plus a blended
     quality score in [0,1] (heuristic: long-enough, low-punct, some
     stopwords, diverse vocabulary)."""
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     # per-row higher-order expressions are CPU-bound and fused into the
     # scan stage; fan narrow scans out so they use every core (per-row
@@ -112,7 +112,7 @@ def doc_fingerprint(docs: DataFrame, shingle_words: int = 5) -> DataFrame:
     """Content fingerprint: lexicographic-min md5 over n-word shingles
     (one per seed salt) — a winnowing-style selection that is stable under
     reordering of equal content and portable to the SQL oracle."""
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     docs = fanout_partitions(docs, keys=("doc_id",))
     idx = ", ".join(f"words[i+{k}]" for k in range(shingle_words))

@@ -23,8 +23,8 @@ Output is one row per fitted segment (every series yields ≥1), with the
 break day that closed it (NULL for the final segment) — the reference's
 `break_day` list is exactly the non-NULL break_day values.
 
-Scale shape: hash-bucketed applyInPandas like every sequential kernel here
-(many whole series per Arrow batch, no per-row Python in the plan).
+Scale shape: kernels.group_kernel like every sequential kernel here (many
+whole series per hash bucket, no per-row Python in the plan).
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from ..kernels import group_kernel
 from .harmonics import AVG_DAYS_YR, design_matrix
 
 SEGMENT_SCHEMA = (
@@ -206,7 +206,6 @@ def ccdc_segments(
     min_obs: int = 8,
     peek: int = 3,
     chi: float = 3.0,
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """CCDC segmentation over (source, doc_id, ts, value): one row per
     fitted segment; break_day is the day of the first observation of the
@@ -235,12 +234,4 @@ def ccdc_segments(
                      "break_day", "n_obs", "rmse"],
         )
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(df)
-    grouped = df.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
-        _run, schema=SEGMENT_SCHEMA
-    )
+    return group_kernel(df, _run, SEGMENT_SCHEMA)

@@ -104,7 +104,7 @@ def minhash_signatures(
     cache — boilerplate shingles repeat heavily), the per-doc mins are one
     numpy minimum.reduceat over the gathered digest-word table, and
     duplicates need no handling because min is duplicate-insensitive.
-    Single-file inputs are fanned out first (session.fanout_partitions) so
+    Single-file inputs are fanned out first (kernels.fanout_partitions) so
     the kernel is never pinned to one core by a lone parquet row group."""
     import numpy as np
     import pandas as pd
@@ -174,33 +174,12 @@ def minhash_signatures(
                 ]
             yield pd.DataFrame(data)
 
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     schema = "doc_id long, " + ", ".join(f"{n} string" for n in names)
     return fanout_partitions(docs.select("doc_id", "text")).mapInPandas(
         _sig, schema=schema
     )
-
-
-def minhash_signatures_expr(
-    docs: DataFrame, n_hashes: int = 8, shingle_words: int = 3
-) -> DataFrame:
-    """Pure-Catalyst signature builder (the pre-round-7 implementation):
-    shingle explode + min-aggregate per doc. min() is duplicate-
-    insensitive, so the shingle stream skips the distinct shuffle. Kept as
-    the independent reference the kernel is pinned against in tests."""
-    sh = _doc_shingles(docs, shingle_words, distinct=False)
-    digests = {
-        j: F.md5(F.concat_ws(":", F.col("shingle"), F.lit(str(j))))
-        for j in range((n_hashes + 3) // 4)
-    }
-    aggs = [
-        F.min(F.substring(digests[i // 4], 8 * (i % 4) + 1, 8)).alias(
-            f"mh{i}"
-        )
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -311,7 +290,7 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     the 64-bit vote rows come from one unpackbits over the digest table,
     and each doc's vote sum is one numpy gather+sum. Still zero shuffle on
     a well-partitioned corpus; single-file inputs are fanned out first
-    (session.fanout_partitions) because a lone parquet row group would pin
+    (kernels.fanout_partitions) because a lone parquet row group would pin
     the kernel to one core. Every word OCCURRENCE votes (duplicates
     kept). Falls back to the expression form when bits % 8 != 0."""
     if bits % 8 == 0:
@@ -378,7 +357,7 @@ def _simhash_kernel(docs: DataFrame, bits: int) -> DataFrame:
                 {"doc_id": pdf["doc_id"].to_numpy(), "simhash": sims}
             )
 
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     return fanout_partitions(docs.select("doc_id", "text")).mapInPandas(
         _fold, schema="doc_id long, simhash string"

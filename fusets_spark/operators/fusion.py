@@ -27,8 +27,9 @@ Matern-3/2 kernel is exactly an SDE, and the coregionalization
 B = (1-ρ)I + ρ11ᵀ factors into √ρ·shared + √(1-ρ)·private independent
 processes, so the smoothed posterior equals the dense GP posterior
 (differential-tested to ~1e-13). At 10^12-sequence scale, per-series cost
-is linear in observations; both paths run inside the same hash-bucketed
-applyInPandas.
+is linear in observations; both paths run inside the same
+kernels.group_kernel call, bucketed by doc_id alone (all of a doc's
+signals in one group).
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernels import group_kernel
 
 FUSED_SCHEMA = (
     "doc_id string, source string, ts timestamp, "
@@ -348,7 +351,6 @@ def mogpr_fuse(
     noise: float = 0.05,
     rho: float = 0.7,
     prediction_period_days: float | None = None,
-    groups: int | None = None,
     method: str = "auto",
 ) -> DataFrame:
     """Distributed fusion over long rows (doc_id, source, ts, value) —
@@ -413,8 +415,6 @@ def mogpr_fuse(
             )
         return pd.concat(outs, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups = groups or default_groups(df)
-    grouped = df.withColumn("_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups)))
-    return repartition_for_kernel(grouped, "_g").groupBy("_g").applyInPandas(_fuse, schema=FUSED_SCHEMA)
+    # a doc's signals arrive as `source` rows, so the group is the doc's
+    # bucket alone
+    return group_kernel(df, _fuse, FUSED_SCHEMA, by=())

@@ -16,7 +16,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..kernels import group_kernel
 
 AVG_DAYS_YR = 365.25
 
@@ -75,7 +76,6 @@ def solve_normal_equations_fixed_order(
 def harmonic_fit(
     df: DataFrame,
     num_coefficients: int = 4,
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """Per-series harmonic coefficients over (source, doc_id, ts, value).
 
@@ -170,19 +170,12 @@ def harmonic_fit(
             out[f"c{i}"] = coef[:, i]
         return pd.DataFrame(out)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(df)
-    grouped = df.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(_fit, schema=schema)
+    return group_kernel(df, _fit, schema)
 
 
 def harmonic_fitted(
     df: DataFrame,
     num_coefficients: int = 4,
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """Per-point FITTED values ŷ = X(XᵀX)⁻¹Xᵀy of the harmonic OLS fit —
     the verifiable face of harmonic_fit: fitted values are invariant to the
@@ -219,12 +212,6 @@ def harmonic_fitted(
             ).astype({"source": str, "doc_id": str, "yhat": np.float64})
         return pd.concat(outs, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(df)
-    grouped = df.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
-        _fit, schema="source string, doc_id string, ts timestamp, yhat double"
+    return group_kernel(
+        df, _fit, "source string, doc_id string, ts timestamp, yhat double"
     )

@@ -5,7 +5,7 @@ backwards along the slope (slope_thr per day), find the recovery end, and
 emit a mask {1: peak/start, -1: valley/end, 0: between, NaN: other}.
 
 The per-series kernel is an inherently sequential state machine -> it runs
-inside a hash-bucketed applyInPandas (many whole series per group), with
+inside kernels.group_kernel (many whole series per hash bucket), with
 numpy peak finding (scipy-free reimplementation of find_peaks' plateau
 midpoint semantics).
 
@@ -19,7 +19,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..kernels import group_kernel
 
 MASK_SCHEMA = "source string, doc_id string, ts timestamp, flag double"
 
@@ -75,7 +76,7 @@ def num_seasons_series(y: np.ndarray) -> int:
     return len(select_by_distance(pk, y[pk], distance))
 
 
-def num_seasons(df: DataFrame, groups_per_source: int | None = None) -> DataFrame:
+def num_seasons(df: DataFrame) -> DataFrame:
     """Per-series season count over (source, doc_id, ts, value)."""
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -87,14 +88,8 @@ def num_seasons(df: DataFrame, groups_per_source: int | None = None) -> DataFram
         ]
         return pd.DataFrame(rows, columns=["source", "doc_id", "num_seasons"])
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(df)
-    grouped = df.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(
-        _run, schema="source string, doc_id string, num_seasons int"
+    return group_kernel(
+        df, _run, "source string, doc_id string, num_seasons int"
     )
 
 
@@ -201,7 +196,6 @@ def peakvalley(
     drop_thr: float = 0.15,
     rec_r: float = 1.0,
     slope_thr: float = -0.007,
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """Distributed peak/valley mask over (source, doc_id, ts, value) rows."""
 
@@ -225,10 +219,4 @@ def peakvalley(
             )
         return pd.concat(out, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(df)
-    grouped = df.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(_run, schema=MASK_SCHEMA)
+    return group_kernel(df, _run, MASK_SCHEMA)

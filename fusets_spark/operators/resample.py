@@ -32,7 +32,7 @@ def resample(
     reducer: 'mean' or 'median' (exact), like the reference's two reducers.
     Output: (source, doc_id, bucket_ts, value, n_obs).
     """
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     unit = _TRUNC[interval]
     v = F.col(value_col)
@@ -55,7 +55,7 @@ def group_by_calendar(
 ) -> DataFrame:
     """Calendar group-reduce across years (reference _phenolopy.py:514-598):
     group by month-of-year (or week-of-year) pooling all years."""
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     v = F.col(value_col)
     key = {"month": F.month("ts"), "week": F.weekofyear("ts")}[part]

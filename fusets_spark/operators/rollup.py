@@ -58,7 +58,7 @@ def rollup_from_raw(
     Output: (source, doc_id, bucket_ts, n_obs, sum_val, min_val, max_val,
              first_val, last_val, avg_val)
     """
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     # Narrow scans (one parquet row group) would otherwise run the whole
     # map-side aggregation on one core; the keyed fan-out keeps exchange
@@ -139,14 +139,6 @@ def rollup_from_tier(lower: DataFrame, tier: str) -> DataFrame:
         )
     )
     return _with_avg(out)
-
-
-def rollup_ladder(points: DataFrame) -> dict[str, DataFrame]:
-    """Full retention ladder; coarser tiers derive from finer ones."""
-    t1m = rollup_from_raw(points, "1m")
-    t5m = rollup_from_tier(t1m, "5m")
-    t1h = rollup_from_tier(t5m, "1h")
-    return {"1m": t1m, "5m": t5m, "1h": t1h}
 
 
 def salted_rollup(

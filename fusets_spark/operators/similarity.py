@@ -440,7 +440,7 @@ def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from ..session import fanout_partitions
+    from ..kernels import fanout_partitions
 
     # fresh StructType: StructType.add MUTATES (and df.schema is cached on
     # the DataFrame), so extending embeddings.schema in place would corrupt

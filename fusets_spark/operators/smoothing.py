@@ -20,7 +20,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..kernels import group_kernel
 
 SMOOTH_SCHEMA = "source string, doc_id string, ts timestamp, value_smooth double"
 
@@ -146,15 +147,15 @@ def loess_trend(y: np.ndarray, seasonal: int = 7) -> np.ndarray:
     return out
 
 
-def stl_trend_col(df: DataFrame, groups_per_source: int | None = None) -> DataFrame:
+def stl_trend_col(df: DataFrame) -> DataFrame:
     """Per-row LOESS/STL trend over (source, doc_id, ts, value) — the
     per-row target curve for phenometrics(method='stl_trend'). Output
     (source string, doc_id string, ts, trend)."""
-    out = _per_series(df, loess_trend, groups_per_source)
+    out = _per_series(df, loess_trend)
     return out.withColumnRenamed("value_smooth", "trend")
 
 
-def _per_series(df: DataFrame, fn, groups_per_source: int) -> DataFrame:
+def _per_series(df: DataFrame, fn) -> DataFrame:
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         # value tie-break: tied timestamps must order deterministically
         # (matching the stl_trend oracle's ORDER BY ts, value)
@@ -173,25 +174,12 @@ def _per_series(df: DataFrame, fn, groups_per_source: int) -> DataFrame:
             )
         return pd.concat(outs, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    groups_per_source = groups_per_source or default_groups(df)
-    grouped = df.withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
-    )
-    return repartition_for_kernel(grouped, "source", "_g").groupBy("source", "_g").applyInPandas(_run, SMOOTH_SCHEMA)
+    return group_kernel(df, _run, SMOOTH_SCHEMA)
 
 
-def savgol_smooth(
-    df: DataFrame, window: int = 7, polyorder: int = 2,
-    groups_per_source: int | None = None,
-) -> DataFrame:
-    return _per_series(
-        df, lambda y: savgol_1d(y, window, polyorder), groups_per_source
-    )
+def savgol_smooth(df: DataFrame, window: int = 7, polyorder: int = 2) -> DataFrame:
+    return _per_series(df, lambda y: savgol_1d(y, window, polyorder))
 
 
-def gaussian_smooth(
-    df: DataFrame, sigma: float = 1.5, groups_per_source: int | None = None
-) -> DataFrame:
-    return _per_series(df, lambda y: gaussian_1d(y, sigma), groups_per_source)
+def gaussian_smooth(df: DataFrame, sigma: float = 1.5) -> DataFrame:
+    return _per_series(df, lambda y: gaussian_1d(y, sigma))

@@ -21,9 +21,16 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..kernels import Buckets, group_kernel
 
 SMOOTH_SCHEMA = "source string, doc_id string, ts timestamp, value_smooth double"
+
+# per_core=2 (not the generic 4): this kernel pays a sequential O(n_grid)
+# loop per group, so fewer/larger groups are faster as long as every core
+# still gets ~2 tasks (measured: 64 vs 128 groups at local[32] = 5.0 vs
+# 5.8 s on sf0.1)
+BUCKETS = Buckets(floor=32, per_core=2)
 
 
 def second_diff_bands(n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -210,8 +217,6 @@ def whittaker_gapfill(
     lmbd: float = 10000.0,
     grid_seconds: int = 86400,
     sample_every: int | None = None,
-    groups_per_source: int | None = None,
-    n_groups: int | None = None,
     max_grid: int = 100_000,
 ) -> DataFrame:
     """Distributed gap-fill: dense-grid Whittaker smoothing per series.
@@ -221,23 +226,17 @@ def whittaker_gapfill(
     (optionally stride-sampled every `sample_every` grid steps).
 
     Scale design: groups are hash buckets of the FULL series key
-    (source, doc_id) so one applyInPandas call receives MANY whole series;
-    they are padded to a common grid length and solved as one (S, n_max)
-    matrix. The total task count is `n_groups` (default
-    session.default_groups = defaultParallelism × 4) regardless of how many
-    sources exist — this kernel's cost is dominated by the sequential
-    O(n_grid) time loop which runs once PER GROUP (vectorized across that
-    group's series), so group count must track cluster parallelism, not
-    data cardinality (measured: 640 vs 40 groups on the same sf0.1 input =
-    2.3× slower). Within a group, series are sub-batched by grid-length
-    octave so short series are never padded to the longest one's grid.
-    Results are independent of the grouping (each series lives in exactly
-    one bucket).
-
-    groups_per_source: deprecated alias (DeprecationWarning) — now treated
-    as a direct n_groups bound; it no longer multiplies by the distinct
-    source count (which fired an eager full-input scan at plan time).
-    Results are grouping-independent either way.
+    (source, doc_id) so one kernel call receives MANY whole series; they
+    are padded to a common grid length and solved as one (S, n_max)
+    matrix. The group count is BUCKETS (max(32, defaultParallelism × 2))
+    regardless of how many sources exist — this kernel's cost is dominated
+    by the sequential O(n_grid) time loop which runs once PER GROUP
+    (vectorized across that group's series), so group count must track
+    cluster parallelism, not data cardinality (measured: 640 vs 40 groups
+    on the same sf0.1 input = 2.3× slower). Within a group, series are
+    sub-batched by grid-length octave so short series are never padded to
+    the longest one's grid. Results are independent of the grouping (each
+    series lives in exactly one bucket).
     """
 
     def _smooth(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -327,34 +326,7 @@ def whittaker_gapfill(
             )
         return pd.concat(out_frames, ignore_index=True)
 
-    from ..session import default_groups, repartition_for_kernel
-
-    if n_groups is None:
-        if groups_per_source is not None:
-            import warnings
-
-            # No eager distinct-count scan here (the old alias semantics
-            # multiplied by source count, firing a full input scan during
-            # plan construction): the alias now bounds n_groups directly.
-            warnings.warn(
-                "groups_per_source is deprecated; use n_groups. The alias "
-                "is now treated as a direct TOTAL-group bound: it no longer "
-                "multiplies by the number of distinct sources, so on a "
-                "multi-source input the same value yields up to n_sources "
-                "times fewer tasks than before. Results are unaffected; "
-                "callers who relied on the per-source scaling should pass "
-                "n_groups = old_value * n_sources explicitly.",
-                DeprecationWarning,
-                stacklevel=2,
-            )
-            n_groups = groups_per_source
-        else:
-            # per_core=2 (not the generic 4): this kernel pays a sequential
-            # O(n_grid) loop per group, so fewer/larger groups are faster as
-            # long as every core still gets ~2 tasks (measured: 64 vs 128
-            # groups at local[32] = 5.0 vs 5.8 s on sf0.1)
-            n_groups = default_groups(points, minimum=32, per_core=2)
-    grouped = points.withColumn(
-        "_g", F.pmod(F.xxhash64("source", "doc_id"), F.lit(n_groups))
+    return group_kernel(
+        points, _smooth, SMOOTH_SCHEMA,
+        by=(), hash_on=("source", "doc_id"), buckets=BUCKETS,
     )
-    return repartition_for_kernel(grouped, "_g").groupBy("_g").applyInPandas(_smooth, schema=SMOOTH_SCHEMA)

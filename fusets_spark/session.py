@@ -38,66 +38,6 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
-def default_groups(
-    df, minimum: int = 64, per_core: int = 4
-) -> int:
-    """Task granularity for hash-bucketed applyInPandas kernels: enough
-    buckets to keep every core of a real cluster busy with headroom for
-    stragglers (defaultParallelism × per_core), floored at `minimum` so
-    small local sessions still amortize per-group Arrow overhead. Kernel
-    results are grouping-independent by construction (each series lives in
-    exactly one bucket), pinned by the cross-partitioning parity tests."""
-    sc = df.sparkSession.sparkContext
-    return max(minimum, sc.defaultParallelism * per_core)
-
-
-def repartition_for_kernel(df, *keys):
-    """AQE-coalesce-proof partitioning for compute-bound applyInPandas
-    kernels.
-
-    AQE's size-based partition coalescing is right for byte-bound ETL
-    shuffles but dead wrong for numpy kernel stages: a few-MB shuffle
-    feeding a CPU-heavy solve gets coalesced to 1-2 tasks and the kernel
-    runs on 2 of 32 cores (measured: whittaker 6.3s -> 1.x s at sf0.1).
-    A USER-SPECIFIED repartition by number+keys is exempt from AQE
-    coalescing, and the following groupBy on the same keys is satisfied
-    by this hash partitioning (ClusteredDistribution), so Spark inserts no
-    second exchange — same shuffle count, fixed task count.
-
-    Partition count = defaultParallelism × 4 (straggler headroom), the
-    same sizing default_groups uses for the bucket modulus."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 4
-    return df.repartition(n, *keys)
-
-
-def fanout_partitions(df, per_core: int = 2, keys: tuple[str, ...] = ()):
-    """Scale-adaptive fan-out for work fused into a narrow scan stage.
-
-    Parquet row groups are atomic scan units, so a single-file/
-    single-row-group input yields ONE scan partition no matter what
-    maxPartitionBytes says — and everything fused into the scan stage
-    (mapInPandas kernels, map-side partial aggregation, per-row expression
-    evaluation) then runs on one core. When the upstream plan has fewer
-    partitions than the session's parallelism, repartition to
-    defaultParallelism × per_core; inputs that are already wide keep their
-    partitioning (no shuffle — the 100-TB case, where the corpus arrives
-    in thousands of files).
-
-    keys: hash-repartition by these columns instead of round-robin. For a
-    downstream groupBy whose keys are a superset, the hash partitioning
-    satisfies the aggregation's ClusteredDistribution, so the groupBy adds
-    NO second exchange — same exchange count as the unfanned plan — and,
-    because a SINGLE upstream map task feeds each reducer one
-    order-preserving block, every group still sees its rows in scan order:
-    float aggregates (rounded sums/avgs) stay bit-identical to the
-    single-partition plan. Round-robin (no keys) is for per-row kernels
-    whose results are partitioning-independent by construction."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism * per_core, *keys)
-
-
 def get_spark(
     app_name: str = "fusets-spark",
     cores: int | None = None,
@@ -111,7 +51,9 @@ def get_spark(
         coalesces; start high and let adaptive execution shrink. AQE does
         not run on streaming queries, so stateful streams do not take this
         width: they start through streaming.start_per_core, which gives
-        them one state shard per core.
+        them one state shard per core. Grouped numpy kernels do not take
+        it either: kernels.group_kernel repartitions them to
+        defaultParallelism × 4, a width AQE does not coalesce.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 8

@@ -40,8 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..codec.blocks import BLOCK_SCHEMA, CODEC_NAME, POINTS_SCHEMA, _dt_ns
+from ..codec.blocks import BLOCK_SCHEMA, BUCKETS, CODEC_NAME, POINTS_SCHEMA, _dt_ns
 from ..codec.gorilla import encode_blocks_batched
+from ..kernels import bucket_col
 from . import start_per_core
 
 # open points ride the state store as PACKED BINARY columns (raw numpy
@@ -101,7 +102,6 @@ def stream_encode_blocks(
     stream: DataFrame,
     block_seconds: int = 3600,
     watermark: str = "0 seconds",
-    groups_per_source: int | None = None,
 ) -> DataFrame:
     """points stream (source, doc_id, ts, value) -> sealed-block stream
     (append mode).
@@ -111,7 +111,7 @@ def stream_encode_blocks(
     (source, doc_id). Per-series state made applyInPandasWithState invoke
     the Python function once per SERIES per micro-batch (~80k calls/batch
     at 1M events; measured ~40 s of pure per-group machinery), while
-    per-bucket state amortizes that to `groups_per_source` calls and seals
+    per-bucket state amortizes that to one call per bucket and seals
     every expired (doc, bucket) run inside one vectorized kernel pass.
     Sealing time depends only on the global bucket grid, never on the
     series, so bucketing changes NO sealed byte (identity with the batch
@@ -180,15 +180,8 @@ def stream_encode_blocks(
             frame.insert(0, "source", key[0])
             yield frame
 
-    from ..session import default_groups
-
-    groups_per_source = groups_per_source or default_groups(
-        stream, minimum=256, per_core=8
-    )
-    from pyspark.sql import functions as F
-
     keyed = stream.withWatermark("ts", watermark).withColumn(
-        "_g", F.pmod(F.xxhash64("doc_id"), F.lit(groups_per_source))
+        "_g", bucket_col(stream, ("doc_id",), BUCKETS)
     )
     return (
         keyed.groupBy("source", "_g")

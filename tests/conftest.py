@@ -11,3 +11,16 @@ def spark() -> SparkSession:
     s = get_spark("fusets-tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def set_buckets(monkeypatch):
+    """set_buckets(n): every grouped kernel built after the call hashes its
+    series into n buckets, whatever its bucket policy. The bucket count is
+    a literal in the plan, so it holds for as long as the frame lives."""
+    from fusets_spark import kernels
+
+    def _set(n: int) -> None:
+        monkeypatch.setattr(kernels, "n_buckets", lambda spark, policy: n)
+
+    return _set

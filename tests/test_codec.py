@@ -65,7 +65,7 @@ def test_roundtrip_property(deltas, seed):
 def test_pointwise_encoder_decodes_identically(deltas, seed):
     """The stateful per-point reference encoder and the vectorized encoder
     must both decode to the same points (format compatibility)."""
-    from fusets_spark.codec.gorilla import encode_block_pointwise
+    from reference_impls import encode_block_pointwise
 
     ts = np.cumsum(np.asarray([1700000000] + deltas, dtype=np.int64))
     rng = np.random.default_rng(seed)
@@ -174,10 +174,8 @@ def test_lockstep_decoder_matches_sequential(spec):
     with the per-block sequential reference on both encoder variants —
     including the stateful '10' reuse-window path only the pointwise
     encoder emits, NaN/Inf/-0.0 payloads, and 64-bit raw DoD fallbacks."""
-    from fusets_spark.codec.gorilla import (
-        decode_blocks_lockstep,
-        encode_block_pointwise,
-    )
+    from fusets_spark.codec.gorilla import decode_blocks_lockstep
+    from reference_impls import encode_block_pointwise
 
     blocks = []
     for n, seed, pointwise in spec:
@@ -212,7 +210,7 @@ def test_lockstep_decoder_matches_sequential(spec):
         )
 
 
-def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
+def test_encode_and_compact_bytes_invariant_to_parallelism(spark, set_buckets):
     """Block bytes must be a pure function of the point MULTISET — invariant
     to shuffle arrival order across partition counts, INCLUDING tied
     timestamps within one (series, bucket) (the ADVICE r4 medium finding:
@@ -241,7 +239,8 @@ def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
 
     def enc_bag(num_parts, groups):
         df = spark.createDataFrame(pdf).repartition(num_parts)
-        out = encode_blocks(df, block_seconds=3600, groups_per_source=groups)
+        set_buckets(groups)
+        out = encode_blocks(df, block_seconds=3600)
         return sorted(
             (r.source, r.doc_id, r.bucket_ts, bytes(r.block))
             for r in out.toPandas().itertuples()
@@ -256,18 +255,18 @@ def test_encode_and_compact_bytes_invariant_to_parallelism(spark):
     half = pdf.iloc[: n // 2], pdf.iloc[n // 2 :]
 
     def comp_bag(frames, num_parts, groups):
+        set_buckets(groups)
         blks = [
             encode_blocks(
                 spark.createDataFrame(f).repartition(num_parts),
                 block_seconds=3600,
-                groups_per_source=groups,
             )
             for f in frames
         ]
         merged = blks[0]
         for x in blks[1:]:
             merged = merged.unionByName(x)
-        out = compact_blocks(merged, 86400, groups_per_source=groups)
+        out = compact_blocks(merged, 86400)
         return sorted(
             (r.source, r.doc_id, r.bucket_ts, r.min_ts, r.max_ts,
              bytes(r.block))

@@ -1,0 +1,143 @@
+"""The grouped-kernel boundary stays single: kernels.py is the only place
+that buckets series, repartitions into a Python kernel or calls
+applyInPandas. Also pins fanout_partitions, the scan-side sizing helper
+that lives beside it."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import pytest
+
+PKG = Path(__file__).resolve().parents[1] / "fusets_spark"
+
+# (file relative to the package, finding) -> why it may stay outside
+# kernels.py
+ALLOWED = {
+    ("operators/similarity.py", "applyInPandas"): (
+        "the LSH pair join groups on its natural keys (table_no, bucket) "
+        "at defaultParallelism × 2, not on hash buckets of a series"
+    ),
+    ("operators/similarity.py", "repartition into kernel"): (
+        "the same pair join: its exchange is on (table_no, bucket)"
+    ),
+    ("streaming/block_stream.py", "applyInPandasWithState"): (
+        "the stateful sealer keeps group state per bucket, which only "
+        "applyInPandasWithState offers; its bucket column comes from "
+        "kernels.bucket_col"
+    ),
+}
+
+_GROUPED_CALLS = {"applyInPandas", "applyInPandasWithState", "applyInArrow"}
+_KERNEL_CALLS = _GROUPED_CALLS | {"mapInPandas", "mapInArrow"}
+_DELETED = {"default_groups", "repartition_for_kernel"}
+
+
+def _method(node) -> str | None:
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        return node.func.attr
+    return None
+
+
+def _findings(tree: ast.AST):
+    for node in ast.walk(tree):
+        name = _method(node)
+        if name in _GROUPED_CALLS:
+            yield name, node.lineno
+        if name in _KERNEL_CALLS:
+            # walk the receiver chain: x.repartition(...).groupBy(...).<kernel>
+            recv = node.func.value
+            while isinstance(recv, (ast.Call, ast.Attribute)):
+                if _method(recv) == "repartition":
+                    yield "repartition into kernel", node.lineno
+                recv = recv.func if isinstance(recv, ast.Call) else recv.value
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "pmod"
+            and node.args
+            and _method(node.args[0]) == "xxhash64"
+        ):
+            yield "xxhash64 bucket", node.lineno
+        ident = getattr(node, "id", None) or getattr(node, "attr", None)
+        if isinstance(node, ast.alias):
+            ident = node.name
+        if ident in _DELETED:
+            yield ident, node.lineno
+
+
+def test_grouped_kernel_boundary_is_single():
+    seen, bad = set(), []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "kernels.py":
+            continue
+        for kind, line in _findings(ast.parse(path.read_text())):
+            if (rel, kind) in ALLOWED:
+                seen.add((rel, kind))
+            else:
+                bad.append(f"{rel}:{line}: {kind}")
+    assert not bad, "route these through fusets_spark.kernels:\n" + "\n".join(bad)
+    assert seen == set(ALLOWED), f"stale allowlist entries: {set(ALLOWED) - seen}"
+
+
+def test_guard_catches_a_hand_wired_kernel():
+    src = (
+        "g = df.withColumn('_g', F.pmod(F.xxhash64('doc_id'), F.lit(64)))\n"
+        "out = g.repartition(16, 'source', '_g').groupBy('source', '_g')"
+        ".applyInPandas(fn, schema)\n"
+        "from ..session import default_groups\n"
+    )
+    kinds = sorted(k for k, _ in _findings(ast.parse(src)))
+    assert kinds == [
+        "applyInPandas", "default_groups", "repartition into kernel",
+        "xxhash64 bucket",
+    ]
+
+
+def _exchanges(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("Exchange ")
+
+
+def test_fanout_runs_no_job_on_a_shuffled_input(spark):
+    """A groupBy output is already as wide as its shuffle. Asking its RDD
+    for a partition count would run the upstream map stage as a Spark job
+    during plan construction and report the AQE-coalesced width, adding a
+    second exchange; fanout_partitions must do neither."""
+    from pyspark.sql import functions as F
+
+    from fusets_spark.kernels import fanout_partitions
+
+    sc = spark.sparkContext
+    agg = (
+        spark.range(200_000)
+        .groupBy((F.col("id") % 1000).alias("k"))
+        .agg(F.count("id").alias("n"))
+    )
+    sc.setJobGroup("fanout-probe", "fanout on a shuffled input")
+    try:
+        out = fanout_partitions(agg)
+        jobs = sc.statusTracker().getJobIdsForGroup("fanout-probe")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(jobs) == []
+    assert _exchanges(out) == _exchanges(agg) == 1
+
+
+@pytest.mark.parametrize("keys", [(), ("doc_id",)])
+def test_fanout_widens_a_single_partition_scan(spark, tmp_path, keys):
+    """The case fanout_partitions exists for: a one-file parquet scan is
+    one partition, and everything fused into it would run on one core."""
+    from fusets_spark.kernels import fanout_partitions
+
+    path = str(tmp_path / "one.parquet")
+    spark.range(100).selectExpr("CAST(id AS STRING) AS doc_id").coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    out = fanout_partitions(scan, keys=keys)
+    width = spark.sparkContext.defaultParallelism * 2
+    assert out.rdd.getNumPartitions() == width
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    kind = "hashpartitioning(doc_id" if keys else "RoundRobinPartitioning("
+    assert kind in plan and f"{width}), REPARTITION_BY_NUM" in plan

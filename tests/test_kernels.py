@@ -50,7 +50,7 @@ def test_peakvalley_reference_golden_pairs():
     np.testing.assert_array_equal(pairs, want)
 
 
-def test_peakvalley_spark_matches_local(spark):
+def test_peakvalley_spark_matches_local(spark, set_buckets):
     fx = harmonic_fixture()
     frames = []
     for k in range(4):
@@ -61,8 +61,9 @@ def test_peakvalley_spark_matches_local(spark):
         frames.append(f)
     pdf = pd.concat(frames, ignore_index=True)
     sdf = spark.createDataFrame(pdf[["source", "doc_id", "ts", "value"]])
+    set_buckets(2)
     got = (
-        peakvalley(sdf, drop_thr=200, rec_r=1.0, slope_thr=0, groups_per_source=2)
+        peakvalley(sdf, drop_thr=200, rec_r=1.0, slope_thr=0)
         .toPandas()
         .sort_values(["doc_id", "ts"])
         .reset_index(drop=True)
@@ -83,7 +84,7 @@ def test_harmonic_fit_reference_golden():
     np.testing.assert_allclose(coef, [5000, 5, 600, 200], atol=3)
 
 
-def test_harmonic_fit_spark(spark):
+def test_harmonic_fit_spark(spark, set_buckets):
     fx = harmonic_fixture()
     frames = []
     for k in range(3):
@@ -94,7 +95,8 @@ def test_harmonic_fit_spark(spark):
         frames.append(f)
     pdf = pd.concat(frames, ignore_index=True)
     sdf = spark.createDataFrame(pdf[["source", "doc_id", "ts", "value"]])
-    got = harmonic_fit(sdf, 4, groups_per_source=2).toPandas()
+    set_buckets(2)
+    got = harmonic_fit(sdf, 4).toPandas()
     assert len(got) == 3
     for _, row in got.iterrows():
         k = int(row["doc_id"].split("-")[1])
@@ -104,7 +106,7 @@ def test_harmonic_fit_spark(spark):
         )
 
 
-def test_harmonic_fitted_spark_matches_numpy(spark):
+def test_harmonic_fitted_spark_matches_numpy(spark, set_buckets):
     """Per-point fitted values ŷ vs a direct numpy OLS replay — the pytest
     home of the former `harmonic_fitted` driver row (demoted when the
     registry was capped at 50; driver coverage of the same kernel continues
@@ -119,8 +121,9 @@ def test_harmonic_fitted_spark_matches_numpy(spark):
         frames.append(f)
     pdf = pd.concat(frames, ignore_index=True)
     sdf = spark.createDataFrame(pdf[["source", "doc_id", "ts", "value"]])
+    set_buckets(2)
     got = (
-        harmonic_fitted(sdf, 4, groups_per_source=2)
+        harmonic_fitted(sdf, 4)
         .toPandas()
         .sort_values(["doc_id", "ts"])
         .reset_index(drop=True)
@@ -162,12 +165,13 @@ def test_fusion_master_gating():
     assert out == {}
 
 
-def test_fusion_spark_shape_contract(spark):
+def test_fusion_spark_shape_contract(spark, set_buckets):
     """F5 contract (reference tests/test_mogpr.py:27-37): output covers all
     series x grid x signals, fused + std per signal, no NaNs."""
     pdf = fusion_fixture()
     sdf = spark.createDataFrame(pdf)
-    got = mogpr_fuse(sdf, groups=2).toPandas()
+    set_buckets(2)
+    got = mogpr_fuse(sdf).toPandas()
     docs = pdf["doc_id"].nunique()
     assert got["doc_id"].nunique() == docs
     assert set(got["source"].unique()) == {"s2ndvi", "rvi"}
@@ -178,7 +182,8 @@ def test_fusion_spark_shape_contract(spark):
     assert not got["value_fused"].isna().any()
     assert not got["value_std"].isna().any()
     # determinism across partitionings
-    again = mogpr_fuse(sdf.repartition(7), groups=5).toPandas()
+    set_buckets(5)
+    again = mogpr_fuse(sdf.repartition(7)).toPandas()
     key = ["doc_id", "source", "ts"]
     a = got.sort_values(key).reset_index(drop=True)
     b = again.sort_values(key).reset_index(drop=True)

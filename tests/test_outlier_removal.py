@@ -37,7 +37,7 @@ def test_select_by_distance_matches_scipy_shape():
     assert list(got) == [3, 10]
 
 
-def test_num_seasons_spark(spark):
+def test_num_seasons_spark(spark, set_buckets):
     fx = harmonic_fixture()
     i = np.arange(365, dtype=float)
     fx["value"] = 600 * np.cos(2 * np.pi * (i - 61) * 3 / 365)  # 3 cycles
@@ -50,7 +50,8 @@ def test_num_seasons_spark(spark):
     sdf = spark.createDataFrame(
         pd.concat(frames)[["source", "doc_id", "ts", "value"]]
     )
-    got = num_seasons(sdf, groups_per_source=2).toPandas()
+    set_buckets(2)
+    got = num_seasons(sdf).toPandas()
     assert (got["num_seasons"] == 3).all() and len(got) == 3
 
 

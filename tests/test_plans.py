@@ -3,6 +3,9 @@ reach the parquet scans (SURVEY.md §4); UDF stages must not widen scans."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -133,34 +136,87 @@ def test_broadcast_join_for_small_side(spark):
     assert "Broadcast" in plan
 
 
-def test_whittaker_groups_scale_with_parallelism(spark):
-    """The whittaker driver query must inherit session.default_groups (task
-    count scales with defaultParallelism) — a hardcoded group cap would
-    ceiling solver parallelism on a real cluster."""
-    import importlib.util
-
-    from fusets_spark.session import default_groups
-
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+def _grouped_operators():
+    """name -> (build(points, blocks), grouping keys before _g, hashed
+    columns, bucket floor, buckets per core)."""
+    from fusets_spark.codec.blocks import (
+        compact_blocks,
+        encode_blocks,
+        roundtrip_points,
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    df = mod.queries()["whittaker_gapfill"](spark, SF)
-    # whittaker uses per_core=2/min 32 (sequential per-group loop — see
-    # whittaker_gapfill docstring); still scales with defaultParallelism
-    expected = default_groups(df, minimum=32, per_core=2)
-    assert expected == max(32, spark.sparkContext.defaultParallelism * 2)
-    # the bucket key literal appears in the plan: pmod(xxhash64(...), G)
-    plan = _plan(df)
-    assert f", {expected})" in plan.replace("L", ""), (
-        f"expected group count {expected} not found in plan"
+    from fusets_spark.operators import (
+        ccdc,
+        fusion,
+        harmonics,
+        peakvalley,
+        smoothing,
+        whittaker,
     )
+
+    series = (("source",), ("doc_id",), 64, 4)
+    codec = (("source",), ("doc_id",), 256, 8)
+    return {
+        "encode_blocks": (lambda p, b: encode_blocks(p), *codec),
+        "compact_blocks": (lambda p, b: compact_blocks(b, 86400), *codec),
+        "roundtrip_points": (lambda p, b: roundtrip_points(p), *codec),
+        "savgol_smooth": (lambda p, b: smoothing.savgol_smooth(p), *series),
+        "gaussian_smooth": (lambda p, b: smoothing.gaussian_smooth(p), *series),
+        "stl_trend_col": (lambda p, b: smoothing.stl_trend_col(p), *series),
+        "harmonic_fit": (lambda p, b: harmonics.harmonic_fit(p), *series),
+        "harmonic_fitted": (lambda p, b: harmonics.harmonic_fitted(p), *series),
+        "ccdc_segments": (lambda p, b: ccdc.ccdc_segments(p), *series),
+        "num_seasons": (lambda p, b: peakvalley.num_seasons(p), *series),
+        "peakvalley": (lambda p, b: peakvalley.peakvalley(p), *series),
+        "whittaker_gapfill": (
+            lambda p, b: whittaker.whittaker_gapfill(p),
+            (), ("source", "doc_id"), 32, 2,
+        ),
+        "mogpr_fuse": (
+            lambda p, b: fusion.mogpr_fuse(p), (), ("doc_id",), 64, 4
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_grouped_operators()))
+def test_grouped_kernel_plan(spark, name):
+    """Every grouped numpy kernel compiles to the same shape: ONE
+    REPARTITION_BY_NUM exchange of width defaultParallelism × 4 on the
+    grouping keys (AQE cannot coalesce it, and the groupBy needs no second
+    one), a bucket modulus of max(floor, defaultParallelism × per_core) —
+    so task count scales with the cluster; 64 / 256 / 32 at local[4] — and
+    the operator's grouping keys. The policies are the measured ones each
+    operator was tuned to."""
+    import datetime
+
+    build, by, hash_on, floor, per_core = _grouped_operators()[name]
+    t = datetime.datetime(2024, 1, 1)
+    points = spark.createDataFrame(
+        [("s", "d", t, 1.0)], "source string, doc_id string, ts timestamp, value double"
+    )
+    from fusets_spark.codec.blocks import BLOCK_SCHEMA
+
+    blocks = spark.createDataFrame(
+        [("s", "d", t, 1, t, t, "c", bytearray(b"x"))], BLOCK_SCHEMA
+    )
+    plan = _plan(build(points, blocks))
+
+    def cols(s):
+        return tuple(re.sub(r"#\d+L?", "", c.strip()) for c in s.split(","))
+
+    dp = spark.sparkContext.defaultParallelism
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    ex = re.search(r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan)
+    assert cols(ex.group(1)) == (*by, "_g") and int(ex.group(2)) == dp * 4
+    mod = re.search(r"pmod\(xxhash64\(([^()]*), 42\), (\d+)\)", plan)
+    assert cols(mod.group(1)) == hash_on
+    assert int(mod.group(2)) == max(floor, dp * per_core)
+    grp = re.search(r"FlatMapGroupsInPandas \[([^\]]*)\]", plan)
+    assert cols(grp.group(1)) == (*by, "_g")
 
 
 def test_kernel_stages_resist_aqe_coalescing(spark):
     """Compute-bound applyInPandas kernels must keep their task count under
-    AQE: session.repartition_for_kernel issues a user-specified
+    AQE: kernels.group_kernel issues a user-specified
     REPARTITION_BY_NUM (exempt from size-based coalescing — AQE was
     measured collapsing the few-MB kernel shuffle to 2 of 32 cores) that
     also satisfies the groupBy distribution, so exactly ONE exchange

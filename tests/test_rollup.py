@@ -13,12 +13,8 @@ import pytest
 
 from fusets_spark.datagen import generate_tokens
 from fusets_spark.operators.explode import explode_raw
-from fusets_spark.operators.rollup import (
-    TIERS,
-    rollup_from_raw,
-    rollup_ladder,
-    salted_rollup,
-)
+from fusets_spark.operators.rollup import TIERS, rollup_from_raw, salted_rollup
+from reference_impls import rollup_ladder
 
 N_DOCS = 120
 

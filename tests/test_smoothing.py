@@ -67,7 +67,7 @@ def test_gaussian_kernel_and_constants():
     np.testing.assert_allclose(gaussian_1d(y, 2.0), y, atol=1e-12)
 
 
-def test_savgol_spark_matches_local(spark):
+def test_savgol_spark_matches_local(spark, set_buckets):
     fx = harmonic_fixture()
     frames = []
     for kk in range(3):
@@ -77,10 +77,11 @@ def test_savgol_spark_matches_local(spark):
         f["value"] = f["value"] + kk
         frames.append(f)
     pdf = pd.concat(frames, ignore_index=True)
+    set_buckets(2)
     got = (
         savgol_smooth(
             spark.createDataFrame(pdf[["source", "doc_id", "ts", "value"]]),
-            window=7, polyorder=2, groups_per_source=2,
+            window=7, polyorder=2,
         )
         .toPandas()
         .sort_values(["doc_id", "ts"])

@@ -663,10 +663,8 @@ def test_minhash_kernel_matches_expression(spark):
     8-hex-char substrings are the digest's big-endian uint32 words and
     fixed-width hex string min == numeric min. Docs with < shingle_words
     words (or NULL text) must be ABSENT in both forms."""
-    from fusets_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_expr,
-    )
+    from fusets_spark.operators.dedup import minhash_signatures
+    from reference_impls import minhash_signatures_expr
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     a = (

@@ -73,7 +73,7 @@ def test_reference_golden_f2():
     assert list((grid[take] - grid[0]) // 86400) == list(range(0, 42, 4))[: len(take)]
 
 
-def test_spark_gapfill_matches_local_oracle(spark):
+def test_spark_gapfill_matches_local_oracle(spark, set_buckets):
     fx = sinusoidal_fixture().dropna(subset=["value"]).copy()
     frames = []
     for k in range(6):  # several series, shifted values, to exercise batching
@@ -84,8 +84,9 @@ def test_spark_gapfill_matches_local_oracle(spark):
         frames.append(f)
     pdf = pd.concat(frames, ignore_index=True)
     sdf = spark.createDataFrame(pdf[["source", "doc_id", "ts", "value"]])
+    set_buckets(2)
     got = (
-        whittaker_gapfill(sdf, lmbd=1.0, grid_seconds=86400, n_groups=2)
+        whittaker_gapfill(sdf, lmbd=1.0, grid_seconds=86400)
         .toPandas()
         .sort_values(["source", "doc_id", "ts"])
         .reset_index(drop=True)
@@ -139,7 +140,7 @@ def test_padded_solve_bit_identical_with_lengths():
             assert (z == z_ref).all(), (n_obs, n, pad)
 
 
-def test_gapfill_grouping_invariant(spark):
+def test_gapfill_grouping_invariant(spark, set_buckets):
     """The distributed operator's output must not depend on how series are
     hash-bucketed (exact equality, not approx)."""
     import numpy as np
@@ -153,13 +154,15 @@ def test_gapfill_grouping_invariant(spark):
         "ts",
         "value",
     )
+    set_buckets(5)
     a = (
-        whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600, n_groups=5)
+        whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600)
         .orderBy("source", "doc_id", "ts")
         .toPandas()
     )
+    set_buckets(61)
     b = (
-        whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600, n_groups=61)
+        whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600)
         .orderBy("source", "doc_id", "ts")
         .toPandas()
     )
