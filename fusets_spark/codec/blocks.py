@@ -14,6 +14,16 @@ that overhead to ~zero while the bucket count bounds per-task memory at
 cluster scale (results are independent of it). The codec's bucket policy
 is BUCKETS (floor 256, 8 per core), which the stream sealer shares.
 
+Every block in the package is built by ONE fold, block_frame: per-point
+arrays in canonical (series, bucket, ts, value) order in, BLOCK_SCHEMA rows
+out, one row per (series, bucket) run. Its five producers only differ in
+how they reach canonical order: token ingest is already in it;
+encode_blocks, roundtrip_points and the stream sealer sort with
+canonical_order; compaction decodes its merging runs, labels each point
+with its block's coarse bucket and sorts with canonical_order. A block's
+bytes are therefore a pure function of its (series, bucket) point
+multiset, whichever path built it.
+
 encode_blocks:  points -> (source, doc_id, bucket_ts, n_points, min/max ts,
                            codec, block: binary)
 decode_blocks:  inverse, restores exact (ts, value) points (µs-exact).
@@ -28,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels import Buckets, group_kernel
-from .gorilla import decode_blocks_batch, encode_block, encode_blocks_batched
+from .gorilla import decode_blocks_batch, encode_blocks_batched
 
 BLOCK_SCHEMA = (
     "source string, doc_id string, bucket_ts timestamp, n_points long, "
@@ -55,6 +65,64 @@ def _dt_ns(ns) -> np.ndarray:
     return np.ascontiguousarray(ns, dtype=np.int64).view("datetime64[ns]")
 
 
+def series_codes(doc_id) -> tuple[np.ndarray, np.ndarray]:
+    """(per-point integer series codes, per-series doc_id labels). Codes
+    follow doc_id order, so block rows come out sorted by doc_id, the row
+    order the stores and sinks have always written (parquet file bytes
+    depend on it)."""
+    return pd.factorize(doc_id, sort=True, use_na_sentinel=False)
+
+
+def canonical_order(series, bucket_us, ts_us, vals) -> np.ndarray:
+    """Permutation of points into the canonical (series, bucket, ts,
+    value) order the block fold requires. The value tie-break matters:
+    with tied timestamps in one (series, bucket), any order left to
+    shuffle arrival or file-read order would change the block bytes.
+    np.lexsort over integer series codes (measured faster than a pandas
+    mergesort at kernel-call sizes, and equal to it in order)."""
+    return np.lexsort((vals, ts_us, bucket_us, series))
+
+
+def block_frame(source, doc_id, series, bucket_us, ts_us, vals) -> pd.DataFrame:
+    """The block fold: per-point arrays in canonical order (series,
+    bucket_us, ts_us µs, vals) -> BLOCK_SCHEMA pandas frame, one encoded
+    Gorilla block per (series, bucket) run. `series` holds integer codes
+    into the per-series label arrays `source` and `doc_id`."""
+    n = len(series)
+    new = np.ones(n, dtype=bool)
+    new[1:] = (series[1:] != series[:-1]) | (bucket_us[1:] != bucket_us[:-1])
+    bs = np.flatnonzero(new)
+    be = np.r_[bs, n][1:]
+    blks = encode_blocks_batched(
+        [ts_us[s:e] for s, e in zip(bs, be)],
+        [vals[s:e] for s, e in zip(bs, be)],
+    )
+    key = series[bs]
+    return pd.DataFrame(
+        {
+            "source": source[key],
+            "doc_id": doc_id[key],
+            "bucket_ts": _dt_ns(bucket_us[bs] * 10**3),
+            "n_points": (be - bs).astype(np.int64),
+            "min_ts": _dt_ns(ts_us[bs] * 10**3),
+            "max_ts": _dt_ns(ts_us[be - 1] * 10**3),
+            "codec": CODEC_NAME,
+            "block": blks,
+        }
+    )
+
+
+def _fold_points(pdf: pd.DataFrame, block_seconds: int, value_col: str):
+    """Blocks of one kernel group's points (one source, many series)."""
+    series, doc_id = series_codes(pdf["doc_id"].to_numpy())
+    ts_us = pdf["ts"].astype("int64").to_numpy() // 10**3
+    vals = pdf[value_col].to_numpy(dtype=np.float64)
+    bucket = ts_us - ts_us % (block_seconds * 10**6)
+    o = canonical_order(series, bucket, ts_us, vals)
+    source = np.full(len(doc_id), pdf["source"].iloc[0], dtype=object)
+    return block_frame(source, doc_id, series[o], bucket[o], ts_us[o], vals[o])
+
+
 def encode_blocks(
     points: DataFrame,
     block_seconds: int = 3600,
@@ -65,67 +133,9 @@ def encode_blocks(
     (source, doc_id, bucket_ts) only."""
 
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Canonical (doc_id, ts, value) order: with tied timestamps in one
-        # series+bucket, a (doc_id, ts)-only sort would leave tied rows in
-        # shuffle-arrival order and the block bytes would differ across
-        # parallelism — and from the stream _seal / compact_blocks paths,
-        # which already canonicalize ties. Same tie-break everywhere keeps
-        # the byte-identity contract a pure function of the point multiset.
-        pdf = pdf.sort_values(["doc_id", "ts", value_col], kind="mergesort")
-        epoch_us = (pdf["ts"].astype("int64") // 10**3).to_numpy()
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        docs = pdf["doc_id"].to_numpy()
-        bucket = epoch_us - epoch_us % (block_seconds * 10**6)
-        # run boundaries: new series OR new bucket (frame sorted by doc, ts)
-        new_doc = docs[1:] != docs[:-1]
-        new_bkt = np.diff(bucket) != 0
-        cut = np.flatnonzero(new_doc | new_bkt) + 1
-        starts = np.r_[0, cut]
-        ends = np.r_[cut, len(bucket)]
-        blocks = encode_blocks_batched(
-            [epoch_us[s:e] for s, e in zip(starts, ends)],
-            [vals[s:e] for s, e in zip(starts, ends)],
-        )
-        return pd.DataFrame(
-            {
-                "source": np.repeat(pdf["source"].iloc[0], len(starts)),
-                "doc_id": docs[starts],
-                "bucket_ts": _dt_ns(bucket[starts] * 10**3),
-                "n_points": (ends - starts).astype(np.int64),
-                "min_ts": _dt_ns(epoch_us[starts] * 10**3),
-                "max_ts": _dt_ns(epoch_us[ends - 1] * 10**3),
-                "codec": CODEC_NAME,
-                "block": blocks,
-            }
-        )
+        return _fold_points(pdf, block_seconds, value_col)
 
     return group_kernel(points, _encode, BLOCK_SCHEMA, buckets=BUCKETS)
-
-
-def block_frame(src_arr, doc_arr, d, ep_us, vals, block_seconds):
-    """Pure-numpy block fold over one decoded batch -> pandas frame of
-    encoded Gorilla blocks (one row per (doc, bucket) run; the decoded
-    arrays must be (doc, ts)-sorted, which token order guarantees)."""
-    bucket = ep_us - ep_us % (block_seconds * 10**6)
-    newblk = np.r_[True, (d[1:] != d[:-1]) | (bucket[1:] != bucket[:-1])]
-    bs = np.flatnonzero(newblk)
-    be = np.r_[bs[1:], len(d)]
-    blks = encode_blocks_batched(
-        [ep_us[s:e] for s, e in zip(bs, be)],
-        [vals[s:e] for s, e in zip(bs, be)],
-    )
-    return pd.DataFrame(
-        {
-            "source": src_arr[d[bs]],
-            "doc_id": doc_arr[d[bs]],
-            "bucket_ts": _dt_ns(bucket[bs] * 10**3),
-            "n_points": (be - bs).astype(np.int64),
-            "min_ts": _dt_ns(ep_us[bs] * 10**3),
-            "max_ts": _dt_ns(ep_us[be - 1] * 10**3),
-            "codec": CODEC_NAME,
-            "block": blks,
-        }
-    )
 
 
 def compact_blocks(
@@ -138,9 +148,9 @@ def compact_blocks(
     count (and per-block header overhead) bounded as tiers cool.
 
     Whole blocks move; a block is never split — the shuffle key is a hash
-    bucket of the series, and each applyInPandas call concatenates runs
-    per (doc, coarse bucket) (blocks cover disjoint time ranges per
-    series, so bucket_ts order == ts order) and re-encodes. Output bytes
+    bucket of the series, and each kernel call decodes the blocks of
+    every (doc, coarse bucket) run that merges, and refolds their points
+    through block_frame in canonical order. Output bytes
     are IDENTICAL to encoding the raw points at target_seconds directly
     (pinned in tests), so compaction composes:
     compact(compact(x, 1d), 7d) == encode(x, 7d).
@@ -164,16 +174,18 @@ def compact_blocks(
         if not len(pdf):
             return pd.DataFrame(columns=cols)
         # min_ts in the sort key: multi-batch inputs can hold several blocks
-        # for the same (doc_id, bucket_ts) (late-data batches) — without it,
-        # ties fall back to file-read order and the compacted bytes vary
-        # across re-runs, breaking the byte-identity contract.
+        # for the same (doc_id, bucket_ts) (late-data batches). Their points
+        # are re-sorted canonically below; min_ts keeps the blocks' order,
+        # and so the order of points canonical_order leaves tied (0.0 and
+        # -0.0 at one timestamp), independent of file-read order.
         pdf = pdf.sort_values(
             ["doc_id", "bucket_ts", "min_ts"], kind="mergesort"
         )
         docs = pdf["doc_id"].to_numpy()
         bkt_us = pdf["bucket_ts"].astype("int64").to_numpy() // 10**3
         coarse = bkt_us - bkt_us % (target_seconds * 10**6)
-        new = np.r_[True, (docs[1:] != docs[:-1]) | (np.diff(coarse) != 0)]
+        new_doc = np.r_[True, docs[1:] != docs[:-1]]
+        new = new_doc | np.r_[True, np.diff(coarse) != 0]
         bs = np.flatnonzero(new)
         be = np.r_[bs[1:], len(docs)]
         run_len = be - bs
@@ -204,49 +216,20 @@ def compact_blocks(
                 )
             )
         if len(multi_rs):
+            # merging runs: decode, label each point with its block's
+            # series and coarse bucket, and fold in canonical order —
+            # overlapping late-data blocks may interleave in time or tie
             mb_idx = np.flatnonzero(multi_blk)
             counts, ts, vals = decode_blocks_batch(
                 [bytes(b) for b in blk_arr[mb_idx]]
             )
-            pt_off = np.r_[0, np.cumsum(counts)]
-            # dense position of each multi block within the decoded subset
-            pos_in_sub = np.cumsum(multi_blk) - 1
-            runs_ts, runs_vals = [], []
-            for r in multi_rs:
-                s = pos_in_sub[bs[r]]
-                e = pos_in_sub[be[r] - 1] + 1
-                rt = ts[pt_off[s] : pt_off[e]]
-                rv = vals[pt_off[s] : pt_off[e]]
-                # Overlapping-block runs (late-data batches for the same
-                # series) may interleave in time or even hold tied
-                # timestamps — re-sort to the CANONICAL (ts, value) order
-                # so the compacted bytes are a pure function of the point
-                # multiset, independent of batch / file-read order.
-                if np.any(np.diff(rt) <= 0):
-                    order = np.lexsort((rv, rt))
-                    rt, rv = rt[order], rv[order]
-                runs_ts.append(rt)
-                runs_vals.append(rv)
-            blks = encode_blocks_batched(runs_ts, runs_vals)
-            idx = bs[multi_rs]
+            series = np.repeat((np.cumsum(new_doc) - 1)[mb_idx], counts)
+            bucket = np.repeat(coarse[mb_idx], counts)
+            o = canonical_order(series, bucket, ts, vals)
             frames.append(
-                pd.DataFrame(
-                    {
-                        "source": src_arr[idx],
-                        "doc_id": docs[idx],
-                        "bucket_ts": _dt_ns(coarse[idx] * 10**3),
-                        "n_points": np.asarray(
-                            [len(rt) for rt in runs_ts], dtype=np.int64
-                        ),
-                        "min_ts": _dt_ns(
-                            np.array([rt[0] for rt in runs_ts]) * 10**3
-                        ),
-                        "max_ts": _dt_ns(
-                            np.array([rt[-1] for rt in runs_ts]) * 10**3
-                        ),
-                        "codec": CODEC_NAME,
-                        "block": blks,
-                    }
+                block_frame(
+                    src_arr[new_doc], docs[new_doc],
+                    series[o], bucket[o], ts[o], vals[o],
                 )
             )
         if len(frames) == 1:
@@ -272,25 +255,12 @@ def roundtrip_points(
     fully encoded and fully decoded."""
 
     def _rt(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["doc_id", "ts", value_col], kind="mergesort")
-        epoch_us = (pdf["ts"].astype("int64") // 10**3).to_numpy()
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        docs = pdf["doc_id"].to_numpy()
-        bucket = epoch_us - epoch_us % (block_seconds * 10**6)
-        new_doc = docs[1:] != docs[:-1]
-        new_bkt = np.diff(bucket) != 0
-        cut = np.flatnonzero(new_doc | new_bkt) + 1
-        starts = np.r_[0, cut]
-        ends = np.r_[cut, len(bucket)]
-        blocks = encode_blocks_batched(
-            [epoch_us[s:e] for s, e in zip(starts, ends)],
-            [vals[s:e] for s, e in zip(starts, ends)],
-        )
-        counts, ts, out_vals = decode_blocks_batch(blocks)
+        blocks = _fold_points(pdf, block_seconds, value_col)
+        counts, ts, out_vals = decode_blocks_batch(blocks["block"].tolist())
         return pd.DataFrame(
             {
-                "source": np.repeat(pdf["source"].iloc[0], len(ts)),
-                "doc_id": np.repeat(docs[starts], counts),
+                "source": np.repeat(blocks["source"].to_numpy(), counts),
+                "doc_id": np.repeat(blocks["doc_id"].to_numpy(), counts),
                 "ts": _dt_ns(ts * 10**3),
                 "value": out_vals,
             }

@@ -7,11 +7,17 @@ pandas/Arrow UDF (numpy bit-packing, no per-row Python in the Spark plan).
 The reference stores raw float arrays (xarray); this codec is the north-rule
 addition for 100 TB retention tiers.
 
-Encode is fully vectorized: every point contributes a few (value, width)
-codewords; codewords are scattered into a flat bit array with numpy
-(repeat/cumsum indexing) and packed with np.packbits. Decode is a sequential
-bit reader (variable-length codes are inherently serial); it is only on the
-verification / point-restore path.
+Encode is fully vectorized and has one codeword layout,
+encode_blocks_batched: every point contributes a few (value, width)
+codewords, which are scattered into 64-bit words with numpy (repeat/cumsum
+indexing) for a whole batch of blocks at once. Every block in the package
+is built by the block fold in codec/blocks.py, which calls it.
+
+Decode runs on the store read path (decode_blocks), on compaction's merging
+runs and in the roundtrip check. Variable-length codes are serial within a
+block, so decode_blocks_lockstep steps all blocks of a batch through their
+points together (vectorized across blocks); batches under 128 blocks use
+the per-block sequential reader decode_block instead.
 
 Bit format (MSB-first):
   header: u32 n_points | i64 first_ts | f64 first_value (raw bits)
@@ -156,108 +162,51 @@ def _pack_codewords(vals: np.ndarray, widths: np.ndarray) -> bytes:
 
 
 def encode_block(ts: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode sorted int64 timestamps and float64 values into one Gorilla
-    block — fully vectorized across points (no per-point Python loop).
-
-    Emits the same bit format decode_block reads. For nonzero value XORs the
-    encoder always emits the '11' new-window control (never the stateful
-    '10' reuse path), which makes the value stream stateless and
-    vectorizable at the cost of ~11 bits per changed value; the decoder
-    handles both."""
-    ts = np.ascontiguousarray(ts, dtype=np.int64)
-    values = np.ascontiguousarray(values, dtype=np.float64)
-    n = len(ts)
-    assert len(values) == n
-    if n == 0:
-        return _pack_codewords(
-            np.zeros(1, dtype=np.uint64), np.asarray([32], dtype=np.int64)
-        )
-    vbits = values.view(np.uint64)
-    head_v = np.asarray(
-        [n, np.uint64(ts[0].astype(np.uint64)), vbits[0]], dtype=np.uint64
-    )
-    head_w = np.asarray([32, 64, 64], dtype=np.int64)
-    if n == 1:
-        return _pack_codewords(head_v, head_w)
-
-    # --- timestamp stream: delta-of-delta, 2 codeword slots per point
-    deltas = np.diff(ts)
-    dod = np.empty_like(deltas)
-    dod[0] = deltas[0]
-    dod[1:] = np.diff(deltas)
-    m = n - 1
-    t_v = np.zeros((m, 2), dtype=np.uint64)
-    t_w = np.zeros((m, 2), dtype=np.int64)
-    done = dod == 0  # '0'
-    t_w[done, 0] = 1
-    for i, (bits, ub) in enumerate(_RANGES):
-        sel = (~done) & (dod >= -(ub - 1)) & (dod <= ub)
-        prefix = np.uint64(2 ** (i + 2) - 2)
-        t_v[sel, 0] = (prefix << np.uint64(bits)) | (
-            (dod[sel] + (ub - 1)).astype(np.uint64)
-        )
-        t_w[sel, 0] = (i + 2) + bits
-        done |= sel
-    rest = ~done  # '11111' + raw 64
-    t_v[rest, 0] = np.uint64(_FALLBACK_PREFIX)
-    t_w[rest, 0] = _FALLBACK_WIDTH
-    t_v[rest, 1] = dod[rest].astype(np.uint64)
-    t_w[rest, 1] = 64
-
-    # --- value stream: XOR, stateless '11' control, 2 slots per point
-    x = vbits[:-1] ^ vbits[1:]
-    v_v = np.zeros((m, 2), dtype=np.uint64)
-    v_w = np.zeros((m, 2), dtype=np.int64)
-    nz = x != 0
-    v_w[~nz, 0] = 1  # '0'
-    if nz.any():
-        xs = x[nz]
-        lead = np.minimum(64 - _bit_length64(xs), 31).astype(np.uint64)
-        trail = _trailing_zeros64(xs)
-        mlen = np.uint64(64) - lead - trail
-        ctrl = (
-            (np.uint64(0b11) << np.uint64(11))
-            | (lead << np.uint64(6))
-            | (mlen - np.uint64(1))
-        )
-        v_v[nz, 0] = ctrl
-        v_w[nz, 0] = 13
-        v_v[nz, 1] = xs >> trail
-        v_w[nz, 1] = mlen.astype(np.int64)
-
-    vals = np.concatenate([head_v, t_v.ravel(), v_v.ravel()])
-    widths = np.concatenate([head_w, t_w.ravel(), v_w.ravel()])
-    return _pack_codewords(vals, widths)
+    """Encode one block's sorted int64 timestamps and float64 values: the
+    single-block call of encode_blocks_batched."""
+    return encode_blocks_batched([ts], [values])[0]
 
 
 def encode_blocks_batched(
     ts_segments: list[np.ndarray], val_segments: list[np.ndarray]
 ) -> list[bytes]:
-    """Encode MANY blocks in one vectorized pass (no per-block Python beyond
-    the final byte slicing). Produces bytes identical to encode_block for
-    each segment: all codewords of all blocks are laid out with scatter
-    indexing, per-block byte padding is computed with reduceat, and one
-    packbits call builds the whole stream, which is then sliced per block.
+    """Encode MANY blocks, one per (timestamps, values) segment, in one
+    vectorized pass (no per-block Python beyond the final byte slicing):
+    all codewords of all blocks are laid out with scatter indexing,
+    per-block byte padding is computed with reduceat, and the packed
+    stream is sliced per block. A block's bytes depend only on its own
+    segment, never on its batch neighbours. An empty segment encodes as
+    the bare 4-byte `u32 0` header.
 
-    This is the production encoder for Arrow batches: per-point cost is
-    ~100 ns instead of the ~0.4 ms/block fixed numpy overhead of
-    encode_block on small blocks."""
+    This is the package's only codeword layout. For nonzero value XORs it
+    always emits the '11' new-window control (never the stateful '10'
+    reuse path), which makes the value stream stateless and vectorizable
+    at the cost of ~11 bits per changed value; the decoder handles both.
+    Per-point cost is ~100 ns."""
     B = len(ts_segments)
+    if len(val_segments) != B:
+        raise ValueError(
+            f"{B} timestamp segments but {len(val_segments)} value segments"
+        )
     if B == 0:
         return []
     L = np.asarray([len(t) for t in ts_segments], dtype=np.int64)
-    if (L == 0).any():
-        # rare: delegate empties to the scalar path, batch the rest
-        return [
-            encode_block(t, v) for t, v in zip(ts_segments, val_segments)
-        ]
-    ts_all = np.concatenate(ts_segments).astype(np.int64, copy=False)
-    v_all = np.concatenate(val_segments).astype(np.float64, copy=False)
+    Lv = np.asarray([len(v) for v in val_segments], dtype=np.int64)
+    if (L != Lv).any():
+        b = int(np.flatnonzero(L != Lv)[0])
+        raise ValueError(
+            f"segment {b}: {L[b]} timestamps but {Lv[b]} values"
+        )
+    # unsafe casting converts each segment straight to the target dtype
+    # (an empty float segment must not promote int64 timestamps to float)
+    ts_all = np.concatenate(ts_segments, dtype=np.int64, casting="unsafe")
+    v_all = np.concatenate(val_segments, dtype=np.float64, casting="unsafe")
     vbits = v_all.view(np.uint64)
     P = len(ts_all)
     seg_start = np.r_[0, np.cumsum(L)[:-1]]
+    has = L > 0  # an empty segment has no first point
     is_first = np.zeros(P, dtype=bool)
-    is_first[seg_start] = True
+    is_first[seg_start[has]] = True
 
     prev_ts = np.r_[np.int64(0), ts_all[:-1]]
     delta = ts_all - prev_ts
@@ -266,8 +215,9 @@ def encode_blocks_batched(
     dod = np.where(is_second, delta, delta - prev_delta)
     x = vbits ^ np.r_[vbits[:1], vbits[:-1]]
 
-    m = L - 1  # non-first points per block
-    # codeword layout per block: hdr(3) + 2m ts slots + 2m val slots + pad(1)
+    m = np.maximum(L - 1, 0)  # non-first points per block
+    # codeword layout per block: hdr(3) + 2m ts slots + 2m val slots + pad(1);
+    # an empty block's first-ts / first-value header slots keep width 0
     n_cw = 3 + 4 * m + 1
     cw_off = np.r_[0, np.cumsum(n_cw)[:-1]]
     total_cw = int(n_cw.sum())
@@ -277,10 +227,11 @@ def encode_blocks_batched(
     # headers
     vals[cw_off] = L.astype(np.uint64)
     widths[cw_off] = 32
-    vals[cw_off + 1] = ts_all[seg_start].astype(np.uint64)
-    widths[cw_off + 1] = 64
-    vals[cw_off + 2] = vbits[seg_start]
-    widths[cw_off + 2] = 64
+    hdr = cw_off[has]
+    vals[hdr + 1] = ts_all[seg_start[has]].astype(np.uint64)
+    widths[hdr + 1] = 64
+    vals[hdr + 2] = vbits[seg_start[has]]
+    widths[hdr + 2] = 64
 
     nf = ~is_first  # the points that carry codewords
     if nf.any():
@@ -406,7 +357,8 @@ def decode_blocks_lockstep(
 
     Returns (counts, ts_concat, vals_concat) in input block order.
     ~10-40x faster than the sequential reader on multi-point blocks; the
-    sequential decode_block remains as the differential-testing reference.
+    sequential decode_block serves small batches and is the
+    differential-testing reference.
     """
     B = len(blocks)
     if B == 0:

@@ -207,13 +207,15 @@ def ingest_from_tokens(
             )
             tiers.insert(0, "kind", "tier")
             yield _pad_nulls(tiers, _BLOCK_COLS)
+            # token order (row, position) is already canonical
+            ep_us = t0_us + pos * 10**6
             blocks = block_frame(
                 src_arr,
                 doc_arr,
                 d,
-                t0_us + pos * 10**6,
+                ep_us - ep_us % (block_seconds * 10**6),
+                ep_us,
                 v.astype(np.float64),
-                block_seconds,
             )
             blocks.insert(0, "kind", "block")
             yield _pad_nulls(blocks, _TIER_COLS)

@@ -12,8 +12,8 @@ query's decode-identity oracle).
 This is the engine's `applyInPandasWithState` surface (brief §custom
 stateful operators): state is a pair of arrays (timestamps µs, values)
 per (source, doc_id); each micro-batch appends its points, seals
-watermark-expired buckets through the same canonical (ts, value) ordering
-+ encoder the batch/compaction paths use, and keeps the remainder. At
+watermark-expired buckets through the block fold every batch path uses
+(codec.blocks.block_frame, in canonical_order), and keeps the remainder. At
 10^12-sequence scale the state store shards by the group key exactly like
 the batch hash buckets, and per-series state is bounded by
 (watermark window / point interval) points.
@@ -40,8 +40,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..codec.blocks import BLOCK_SCHEMA, BUCKETS, CODEC_NAME, POINTS_SCHEMA, _dt_ns
-from ..codec.gorilla import encode_blocks_batched
+from ..codec.blocks import (
+    BLOCK_SCHEMA,
+    BUCKETS,
+    POINTS_SCHEMA,
+    block_frame,
+    canonical_order,
+    series_codes,
+)
 from ..kernels import bucket_col
 from . import start_per_core
 
@@ -54,6 +60,7 @@ STATE_DDL = "docs binary, ts_us binary, vals binary"
 
 
 def _seal(
+    source: str,
     docs: np.ndarray,
     ts_us: np.ndarray,
     vals: np.ndarray,
@@ -63,37 +70,27 @@ def _seal(
     """Split buffered points (possibly MANY series — the state key is a
     hash bucket of series, mirroring the batch encoder's granularity) into
     sealed blocks (bucket fully below the watermark) and the retained open
-    remainder. Points are sealed in the CANONICAL per-series (ts, value)
-    order (same as compact_blocks), so the bytes are a pure function of
-    each (doc, bucket)'s point multiset — batch/stream identical."""
+    remainder. The sealed subset goes through the block fold
+    (codec.blocks.block_frame) in canonical order, so the bytes are a
+    pure function of each (doc, bucket)'s point multiset — batch/stream
+    identical."""
     span = block_seconds * 10**6
-    order = np.lexsort((vals, ts_us, docs))
-    docs, ts_us, vals = docs[order], ts_us[order], vals[order]
+    series, labels = series_codes(docs)
     bucket = ts_us - ts_us % span
+    o = canonical_order(series, bucket, ts_us, vals)
+    series, bucket, ts_us, vals = series[o], bucket[o], ts_us[o], vals[o]
     sealed = bucket + span <= wm_us
-    keep_docs, keep_ts, keep_vals = docs[~sealed], ts_us[~sealed], vals[~sealed]
+    keep = ~sealed
+    keep_docs, keep_ts, keep_vals = labels[series[keep]], ts_us[keep], vals[keep]
     if not sealed.any():
         return None, keep_docs, keep_ts, keep_vals
-    sdocs, sts, svals, sbkt = (
-        docs[sealed], ts_us[sealed], vals[sealed], bucket[sealed]
-    )
-    new = np.r_[True, (sdocs[1:] != sdocs[:-1]) | (np.diff(sbkt) != 0)]
-    bs = np.flatnonzero(new)
-    be = np.r_[bs[1:], len(sbkt)]
-    blocks = encode_blocks_batched(
-        [sts[s:e] for s, e in zip(bs, be)],
-        [svals[s:e] for s, e in zip(bs, be)],
-    )
-    frame = pd.DataFrame(
-        {
-            "doc_id": sdocs[bs],
-            "bucket_ts": _dt_ns(sbkt[bs] * 10**3),
-            "n_points": (be - bs).astype(np.int64),
-            "min_ts": _dt_ns(sts[bs] * 10**3),
-            "max_ts": _dt_ns(sts[be - 1] * 10**3),
-            "codec": CODEC_NAME,
-            "block": blocks,
-        }
+    frame = block_frame(
+        np.full(len(labels), source, dtype=object),
+        labels,
+        series[sealed],
+        bucket[sealed],
+        ts_us[sealed],
+        vals[sealed],
     )
     return frame, keep_docs, keep_ts, keep_vals
 
@@ -157,7 +154,7 @@ def stream_encode_blocks(
         )
         wm_us = state.getCurrentWatermarkMs() * 1000
         frame, keep_docs, keep_ts, keep_vals = _seal(
-            docs, ts_us, vals, block_seconds, wm_us
+            key[0], docs, ts_us, vals, block_seconds, wm_us
         )
         if len(keep_ts):
             state.update(
@@ -177,7 +174,6 @@ def stream_encode_blocks(
         elif state.exists:
             state.remove()
         if frame is not None:
-            frame.insert(0, "source", key[0])
             yield frame
 
     keyed = stream.withWatermark("ts", watermark).withColumn(

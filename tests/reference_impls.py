@@ -75,8 +75,9 @@ def _encode_dod(w: _BitWriter, dod: np.ndarray) -> None:
 
 def encode_block_pointwise(ts: np.ndarray, values: np.ndarray) -> bytes:
     """Reference per-point encoder (keeps the stateful '10' reuse path of
-    the Gorilla paper). Pins decoder compatibility; the vectorized
-    encode_block is the production path."""
+    the Gorilla paper). Pins decoder compatibility; production blocks come
+    from the vectorized encode_blocks_batched, through the block fold in
+    codec/blocks.py."""
     ts = np.ascontiguousarray(ts, dtype=np.int64)
     values = np.ascontiguousarray(values, dtype=np.float64)
     n = len(ts)

@@ -9,7 +9,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fusets_spark.codec.gorilla import decode_block, encode_block
+from fusets_spark.codec.gorilla import (
+    decode_block,
+    encode_block,
+    encode_blocks_batched,
+)
 
 
 def _roundtrip(ts, vals):
@@ -23,7 +27,7 @@ def _roundtrip(ts, vals):
 
 
 def test_empty_and_singleton():
-    _roundtrip([], [])
+    assert _roundtrip([], []) == b"\x00\x00\x00\x00"  # bare u32 0 header
     _roundtrip([1700000000], [3.14159])
 
 
@@ -74,6 +78,52 @@ def test_pointwise_encoder_decodes_identically(deltas, seed):
         t2, v2 = decode_block(enc(ts, vals))
         assert np.array_equal(ts, t2)
         assert np.array_equal(vals.view(np.uint64), v2.view(np.uint64))
+
+
+def _segment(n, seed):
+    """n points: DoD fallbacks (2**33 steps), repeats, NaN, ±inf, -0.0
+    and subnormals mixed with fresh normals."""
+    rng = np.random.default_rng(seed)
+    deltas = rng.choice(
+        [0, 1, 60, 3600, 10**6, 2**33, -5, 127, 255, 2048], size=max(n - 1, 0)
+    )
+    ts = np.cumsum(np.r_[rng.integers(-(2**40), 2**40), deltas])[:n]
+    vals = rng.choice([0.0, -0.0, 1.5, np.nan, np.inf, 2.0**-1074], size=n)
+    fresh = rng.random(n) < 0.5
+    vals[fresh] = rng.normal(size=int(fresh.sum()))
+    return ts.astype(np.int64), vals
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    spec=st.lists(
+        st.tuples(
+            st.one_of(st.just(0), st.just(1), st.integers(0, 40)),  # n points
+            st.integers(min_value=0, max_value=2**31),  # seed
+        ),
+        max_size=12,
+    ),
+)
+def test_batched_blocks_equal_single_segment_encodes(spec):
+    """One encode_blocks_batched call over many segments, empty and
+    one-point ones included: each block equals its segment encoded on its
+    own and decodes to the segment's exact bits."""
+    segs = [_segment(n, seed) for n, seed in spec]
+    blocks = encode_blocks_batched([t for t, _ in segs], [v for _, v in segs])
+    assert len(blocks) == len(segs)
+    for (ts, vals), blk in zip(segs, blocks):
+        assert blk == encode_block(ts, vals)
+        t2, v2 = decode_block(blk)
+        assert np.array_equal(ts, t2)
+        assert np.array_equal(vals.view(np.uint64), v2.view(np.uint64))
+
+
+def test_encoder_rejects_mismatched_lengths():
+    ts = np.arange(3, dtype=np.int64)
+    with pytest.raises(ValueError, match="segment 1: 3 timestamps but 2 values"):
+        encode_blocks_batched([ts, ts], [np.zeros(3), np.zeros(2)])
+    with pytest.raises(ValueError, match="2 timestamp segments but 1 value"):
+        encode_blocks_batched([ts, ts], [np.zeros(3)])
 
 
 def test_compression_ratio_on_token_series():

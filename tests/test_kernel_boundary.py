@@ -1,7 +1,10 @@
 """The grouped-kernel boundary stays single: kernels.py is the only place
 that buckets series, repartitions into a Python kernel or calls
-applyInPandas. Also pins fanout_partitions, the scan-side sizing helper
-that lives beside it."""
+applyInPandas. The block fold stays single too: only codec.blocks.block_frame
+(and the single-block encode_block) call the Gorilla encoder, and nothing in
+the package calls encode_block. Also pins
+fanout_partitions, the scan-side sizing helper that lives beside
+kernels.py's grouped boundary."""
 
 from __future__ import annotations
 
@@ -92,6 +95,73 @@ def test_guard_catches_a_hand_wired_kernel():
     assert kinds == [
         "applyInPandas", "default_groups", "repartition into kernel",
         "xxhash64 bucket",
+    ]
+
+
+# (file relative to the package, enclosing function, encoder) -> why it may
+# call that encoder; nothing in the package may call encode_block
+ENCODER_CALLERS = {
+    ("codec/blocks.py", "block_frame", "encode_blocks_batched"): (
+        "the block fold every producer uses"
+    ),
+    ("codec/gorilla.py", "encode_block", "encode_blocks_batched"): (
+        "the public single-block call"
+    ),
+}
+_ENCODERS = {"encode_blocks_batched", "encode_block"}
+
+
+def _encoder_calls(tree: ast.AST) -> list[tuple[str | None, str, int]]:
+    """(enclosing function or None, encoder, line) of every Gorilla encoder
+    call; a call in a nested def counts against the innermost def."""
+    calls = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            elif isinstance(child, ast.Call):
+                f = child.func
+                name = getattr(f, "id", getattr(f, "attr", None))
+                if name in _ENCODERS:
+                    calls.append((fn, name, child.lineno))
+            visit(child, inner)
+
+    visit(tree, None)
+    return calls
+
+
+def test_blocks_are_built_by_one_fold():
+    seen, bad = set(), []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fn, name, line in _encoder_calls(ast.parse(path.read_text())):
+            if (rel, fn, name) in ENCODER_CALLERS:
+                seen.add((rel, fn, name))
+            else:
+                bad.append(f"{rel}:{line}: {name} in {fn}")
+    assert not bad, "build blocks through codec.blocks.block_frame:\n" + "\n".join(bad)
+    assert seen == set(ENCODER_CALLERS), (
+        f"stale allowlist entries: {set(ENCODER_CALLERS) - seen}"
+    )
+
+
+def test_guard_catches_a_second_block_fold():
+    src = (
+        "def _seal(docs, ts, vals):\n"
+        "    def enc(t, v):\n"
+        "        return gorilla.encode_blocks_batched([t], [v])\n"
+        "    return [encode_block(t, v) for t, v in zip(ts, vals)]\n"
+        "blocks = encode_blocks_batched(a, b)\n"
+        "def block_frame():\n"
+        "    return encode_blocks_batched(a, b)\n"
+    )
+    assert _encoder_calls(ast.parse(src)) == [
+        ("enc", "encode_blocks_batched", 3),
+        ("_seal", "encode_block", 4),
+        (None, "encode_blocks_batched", 5),
+        ("block_frame", "encode_blocks_batched", 7),
     ]
 
 
