@@ -139,9 +139,9 @@ def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     window so the driver can compare against the batch oracle exactly; the
     production shape (append mode + watermark finalization + parquet sink +
     exactly-once checkpoint) is streaming/rollup_stream.start_file_stream_
-    rollup, pinned by tests/test_streaming.py. first/last use
-    min/max(struct(pos, value)) — the streaming-legal argmin/argmax.
-    Oracle: identical SQL as rollup_1m — streaming must not change one
+    rollup, pinned by tests/test_streaming.py. The window aggregate is
+    the batch tiers' own list (rollup.point_aggs: first/last by
+    min_by/max_by on the unique pos). Oracle: identical SQL as rollup_1m — streaming must not change one
     value."""
     import uuid
 

@@ -12,8 +12,10 @@ Exactness strategy (parity at every tier):
   * first/last are argmin/argmax by a *unique* ordering key (pos / ts),
     so min_by/max_by are deterministic without a sort.
 
-Tier k+1 is computed FROM tier k (partial+final reuse — the map-side combine
-the reference never had), so the 1h tier never rescans raw points.
+Every tier site is one fold built from two aggregate lists: `point_aggs`
+turns points into a partial, `merge_aggs` merges partials by their order
+keys. Tier k+1 is computed FROM tier k (partial+final reuse — the map-side
+combine the reference never had), so the 1h tier never rescans raw points.
 
 Skew: `salted_rollup` exposes the two-phase salted aggregation required for
 hot (source, bucket) keys — phase 1 aggregates on (keys..., salt), phase 2
@@ -23,14 +25,53 @@ unique key) are associative+commutative, salting cannot change results.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 TIERS = {"1m": 60, "5m": 300, "1h": 3600}
 SERIES_KEYS = ["source", "doc_id"]
+_ORDER_KEYS = ["first_pos", "last_pos"]
 
-_AGG_COLS = ["n_obs", "sum_val", "min_val", "max_val", "first_val", "last_val"]
+
+def _bucket(col: str, seconds: int) -> Column:
+    """Start of the epoch-aligned `seconds`-wide bucket holding `col`."""
+    return F.timestamp_seconds(
+        F.unix_timestamp(col) - F.pmod(F.unix_timestamp(col), F.lit(seconds))
+    )
+
+
+def point_aggs(v: Column, order: Column, integer_values: bool = True) -> list[Column]:
+    """The tier partial of raw points: n_obs, sum, min, max, the values at
+    the smallest/largest `order` key (first/last) and those keys
+    (first_pos/last_pos), so partials merge exactly through merge_aggs.
+    integer_values=True sums on int64 (bit-exact under any shuffle order)."""
+    return [
+        F.count(v).alias("n_obs"),
+        (F.sum(v.cast("long")) if integer_values else F.sum(v)).alias("sum_val"),
+        F.min(v).alias("min_val"),
+        F.max(v).alias("max_val"),
+        F.min_by(v, order).alias("first_val"),
+        F.max_by(v, order).alias("last_val"),
+        F.min(order).alias("first_pos"),
+        F.max(order).alias("last_pos"),
+    ]
+
+
+def merge_aggs(first: str, last: str) -> list[Column]:
+    """The merge of tier partials: counts and sums add, min/max fold, and
+    first/last come from the partial with the smallest `first` / largest
+    `last` order key. Output columns are point_aggs'."""
+    return [
+        F.sum("n_obs").alias("n_obs"),
+        F.sum("sum_val").alias("sum_val"),
+        F.min("min_val").alias("min_val"),
+        F.max("max_val").alias("max_val"),
+        F.min_by("first_val", F.col(first)).alias("first_val"),
+        F.max_by("last_val", F.col(last)).alias("last_val"),
+        F.min(first).alias("first_pos"),
+        F.max(last).alias("last_pos"),
+    ]
 
 
 def _with_avg(df: DataFrame) -> DataFrame:
@@ -56,7 +97,7 @@ def rollup_from_raw(
     event streams are not).
 
     Output: (source, doc_id, bucket_ts, n_obs, sum_val, min_val, max_val,
-             first_val, last_val, avg_val)
+             first_val, last_val[, first_pos, last_pos], avg_val)
     """
     from ..kernels import fanout_partitions
 
@@ -64,33 +105,11 @@ def rollup_from_raw(
     # map-side aggregation on one core; the keyed fan-out keeps exchange
     # count AND per-group row order identical (see fanout_partitions).
     points = fanout_partitions(points, keys=tuple(SERIES_KEYS))
-    seconds = TIERS[tier]
-    bucket_ts = F.timestamp_seconds(
-        F.unix_timestamp("ts") - F.pmod(F.unix_timestamp("ts"), F.lit(seconds))
-    )
-    v = F.col(value_col)
-    sum_expr = F.sum(v.cast("long")) if integer_values else F.sum(v)
-    extra = (
-        [
-            F.min(F.col(order_col)).alias("first_pos"),
-            F.max(F.col(order_col)).alias("last_pos"),
-        ]
-        if with_order_keys
-        else []
-    )
-    out = (
-        points.groupBy(*SERIES_KEYS, bucket_ts.alias("bucket_ts"))
-        .agg(
-            F.count(v).alias("n_obs"),
-            sum_expr.alias("sum_val"),
-            F.min(v).alias("min_val"),
-            F.max(v).alias("max_val"),
-            F.min_by(v, F.col(order_col)).alias("first_val"),
-            F.max_by(v, F.col(order_col)).alias("last_val"),
-            *extra,
-        )
-    )
-    return _with_avg(out)
+    out = points.groupBy(
+        *SERIES_KEYS, _bucket("ts", TIERS[tier]).alias("bucket_ts")
+    ).agg(*point_aggs(F.col(value_col), F.col(order_col), integer_values))
+    # unused order keys are pruned from the Aggregate by the optimizer
+    return _with_avg(out if with_order_keys else out.drop(*_ORDER_KEYS))
 
 
 def merge_tier_partials(partials: DataFrame) -> DataFrame:
@@ -103,42 +122,23 @@ def merge_tier_partials(partials: DataFrame) -> DataFrame:
     rollup_from_raw(with_order_keys=True)): the merged first is the
     first_val of the partial with the smallest first_pos. Output schema ==
     the input schema (merging is idempotent and composable)."""
-    merged = partials.groupBy(*SERIES_KEYS, "bucket_ts").agg(
-        F.sum("n_obs").alias("n_obs"),
-        F.sum("sum_val").alias("sum_val"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-        F.min_by("first_val", F.col("first_pos")).alias("first_val"),
-        F.max_by("last_val", F.col("last_pos")).alias("last_val"),
-        F.min("first_pos").alias("first_pos"),
-        F.max("last_pos").alias("last_pos"),
+    return _with_avg(
+        partials.groupBy(*SERIES_KEYS, "bucket_ts").agg(
+            *merge_aggs("first_pos", "last_pos")
+        )
     )
-    return _with_avg(merged)
 
 
 def rollup_from_tier(lower: DataFrame, tier: str) -> DataFrame:
     """Re-aggregate a finer tier into a coarser one (1m->5m, 5m->1h).
 
-    first/last merge by bucket_ts (unique per series within the coarser
-    bucket), so the result is identical to aggregating raw directly.
+    first/last merge by the finer bucket_ts (unique per series within the
+    coarser bucket), so the result is identical to aggregating raw directly.
     """
-    seconds = TIERS[tier]
-    bucket_ts = F.timestamp_seconds(
-        F.unix_timestamp("bucket_ts")
-        - F.pmod(F.unix_timestamp("bucket_ts"), F.lit(seconds))
-    )
-    out = (
-        lower.groupBy(*SERIES_KEYS, bucket_ts.alias("bucket_ts"))
-        .agg(
-            F.sum("n_obs").alias("n_obs"),
-            F.sum("sum_val").alias("sum_val"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-            F.min_by("first_val", F.col("bucket_ts")).alias("first_val"),
-            F.max_by("last_val", F.col("bucket_ts")).alias("last_val"),
-        )
-    )
-    return _with_avg(out)
+    out = lower.groupBy(
+        *SERIES_KEYS, _bucket("bucket_ts", TIERS[tier]).alias("bucket_ts")
+    ).agg(*merge_aggs("bucket_ts", "bucket_ts"))
+    return _with_avg(out.drop(*_ORDER_KEYS))
 
 
 def salted_rollup(
@@ -156,35 +156,9 @@ def salted_rollup(
     the result independent of the salt count. AQE handles join skew but not
     groupBy skew on hot series — this does (SURVEY.md §4).
     """
-    seconds = TIERS[tier]
-    bucket_ts = F.timestamp_seconds(
-        F.unix_timestamp("ts") - F.pmod(F.unix_timestamp("ts"), F.lit(seconds))
-    )
-    v = F.col(value_col)
-    sum_expr = F.sum(v.cast("long")) if integer_values else F.sum(v)
-    partial = (
-        points.withColumn("_salt", F.pmod(F.col("pos"), F.lit(n_salts)))
-        .groupBy(*SERIES_KEYS, bucket_ts.alias("bucket_ts"), F.col("_salt"))
-        .agg(
-            F.count(v).alias("n_obs"),
-            sum_expr.alias("sum_val"),
-            F.min(v).alias("min_val"),
-            F.max(v).alias("max_val"),
-            F.min_by(v, F.col("pos")).alias("first_val"),
-            F.min("pos").alias("_first_pos"),
-            F.max_by(v, F.col("pos")).alias("last_val"),
-            F.max("pos").alias("_last_pos"),
-        )
-    )
-    out = (
-        partial.groupBy(*SERIES_KEYS, "bucket_ts")
-        .agg(
-            F.sum("n_obs").alias("n_obs"),
-            F.sum("sum_val").alias("sum_val"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-            F.min_by("first_val", F.col("_first_pos")).alias("first_val"),
-            F.max_by("last_val", F.col("_last_pos")).alias("last_val"),
-        )
-    )
-    return _with_avg(out)
+    partials = points.groupBy(
+        *SERIES_KEYS,
+        _bucket("ts", TIERS[tier]).alias("bucket_ts"),
+        F.pmod(F.col("pos"), F.lit(n_salts)).alias("_salt"),
+    ).agg(*point_aggs(F.col(value_col), F.col("pos"), integer_values))
+    return merge_tier_partials(partials).drop(*_ORDER_KEYS)

@@ -331,19 +331,10 @@ class TierStore:
         its sources atomically with its commit."""
         committed = self.committed(tier)
         mans = {m.batch_id: m for m in self.manifests(tier)}
-        dead: set[str] = set()
+        dead = {b for b, m in mans.items() if m.expired}
         for b in committed:
-            m = mans.get(b)
-            if m is None:
-                continue
-            if m.supersedes:
-                dead |= set(m.supersedes)
-        for b, m in mans.items():
-            # legacy path: supersede recorded only on the source manifest
-            if m.superseded_by and m.superseded_by in committed:
-                dead.add(b)
-            if m.expired:
-                dead.add(b)
+            if b in mans and mans[b].supersedes:
+                dead |= set(mans[b].supersedes)
         return {b for b in committed if b not in dead}
 
     def _write_manifest(self, m: Manifest) -> None:

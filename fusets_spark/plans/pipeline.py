@@ -174,15 +174,6 @@ class RollupPipeline:
         if merged and stage != "blocks":
             from ..operators.rollup import merge_tier_partials
 
-            missing = {"first_pos", "last_pos"} - set(df.columns)
-            if missing:
-                raise ValueError(
-                    f"read_tier(merged=True) on '{stage}': stored rows lack "
-                    f"order-key columns {sorted(missing)} — the tier was "
-                    "written without with_order_keys=True (pre-upgrade or "
-                    "external writer). Re-materialize the tier, or read "
-                    "with merged=False."
-                )
             return merge_tier_partials(df)
         return df
 

@@ -7,11 +7,10 @@ exact resume; this module provides the alternative `readStream` shape for
 true streaming ingestion: tumbling-window aggregates with a watermark for
 late data, checkpointed by Spark's own offset log.
 
-Aggregate set matches the batch tiers EXACTLY (n_obs/sum/min/max/avg +
-first/last): min_by/max_by are not streaming-supported, but
-min/max over struct(pos, value) is a streaming-legal commutative aggregate
-and pos is unique per series, so struct ordering == ordering by pos —
-first_val/last_val agree with the batch ladder bit-for-bit.
+Aggregate set IS the batch tiers' (operators/rollup.point_aggs over the
+window): n_obs/sum/min/max/avg + first/last by min_by/max_by on pos, which
+is unique per series, so first_val/last_val agree with the batch ladder
+bit-for-bit.
 
 State width: the aggregation's state store has one shard per core
 (start_per_core, spark.sql.shuffle.partitions = defaultParallelism at
@@ -25,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.rollup import SERIES_KEYS, point_aggs
 from . import start_per_core
 
 POINTS_DDL = (
@@ -39,37 +39,23 @@ def stream_rollup_df(
     integer_values: bool = True,
 ) -> DataFrame:
     """Windowed tier aggregation over a streaming points frame."""
-    v = F.col("value")
-    sum_expr = F.sum(v.cast("long")) if integer_values else F.sum(v)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(
-            "source",
-            "doc_id",
-            F.window("ts", f"{tier_seconds} seconds").alias("w"),
+            *SERIES_KEYS, F.window("ts", f"{tier_seconds} seconds").alias("w")
         )
-        .agg(
-            F.count(v).alias("n_obs"),
-            sum_expr.alias("sum_val"),
-            F.min(v).alias("min_val"),
-            F.max(v).alias("max_val"),
-            # streaming-legal first/last: pos is unique per series, so
-            # min/max of struct(pos, value) == argmin/argmax by pos
-            F.min(F.struct(F.col("pos"), v.alias("v"))).alias("_first"),
-            F.max(F.struct(F.col("pos"), v.alias("v"))).alias("_last"),
-        )
+        .agg(*point_aggs(F.col("value"), F.col("pos"), integer_values))
     )
     return agg.select(
-        "source",
-        "doc_id",
+        *SERIES_KEYS,
         F.col("w.start").alias("bucket_ts"),
         "n_obs",
         "sum_val",
         "min_val",
         "max_val",
         (F.col("sum_val").cast("double") / F.col("n_obs")).alias("avg_val"),
-        F.col("_first.v").alias("first_val"),
-        F.col("_last.v").alias("last_val"),
+        "first_val",
+        "last_val",
     )
 
 

@@ -2,7 +2,9 @@
 that buckets series, repartitions into a Python kernel or calls
 applyInPandas. The block fold stays single too: only codec.blocks.block_frame
 (and the single-block encode_block) call the Gorilla encoder, and nothing in
-the package calls encode_block. Also pins
+the package calls encode_block. So does the tier aggregate: min_by/max_by
+appear only in rollup.point_aggs / merge_aggs (and phenology's phenometric
+argmins), and no tier site takes min/max over a struct. Also pins
 fanout_partitions, the scan-side sizing helper that lives beside
 kernels.py's grouped boundary."""
 
@@ -111,9 +113,14 @@ ENCODER_CALLERS = {
 _ENCODERS = {"encode_blocks_batched", "encode_block"}
 
 
-def _encoder_calls(tree: ast.AST) -> list[tuple[str | None, str, int]]:
-    """(enclosing function or None, encoder, line) of every Gorilla encoder
-    call; a call in a nested def counts against the innermost def."""
+def _call_name(call: ast.Call) -> str | None:
+    return getattr(call.func, "id", getattr(call.func, "attr", None))
+
+
+def _calls(tree: ast.AST, kind_of) -> list[tuple[str | None, str, int]]:
+    """(enclosing function or None, kind, line) of every call that
+    kind_of(call) names; a call in a nested def counts against the
+    innermost def."""
     calls = []
 
     def visit(node, fn):
@@ -122,14 +129,21 @@ def _encoder_calls(tree: ast.AST) -> list[tuple[str | None, str, int]]:
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 inner = child.name
             elif isinstance(child, ast.Call):
-                f = child.func
-                name = getattr(f, "id", getattr(f, "attr", None))
-                if name in _ENCODERS:
-                    calls.append((fn, name, child.lineno))
+                kind = kind_of(child)
+                if kind:
+                    calls.append((fn, kind, child.lineno))
             visit(child, inner)
 
     visit(tree, None)
     return calls
+
+
+def _encoder_calls(tree: ast.AST) -> list[tuple[str | None, str, int]]:
+    """(enclosing function or None, encoder, line) of every Gorilla encoder
+    call."""
+    return _calls(
+        tree, lambda c: _call_name(c) if _call_name(c) in _ENCODERS else None
+    )
 
 
 def test_blocks_are_built_by_one_fold():
@@ -162,6 +176,81 @@ def test_guard_catches_a_second_block_fold():
         ("_seal", "encode_block", 4),
         (None, "encode_blocks_batched", 5),
         ("block_frame", "encode_blocks_batched", 7),
+    ]
+
+
+# (file relative to the package, enclosing function) -> why it may take an
+# argmin/argmax aggregate; function "*" allows the whole file
+ORDER_KEY_AGGS = {
+    ("operators/rollup.py", "point_aggs"): "the tier partial of raw points",
+    ("operators/rollup.py", "merge_aggs"): "the merge of tier partials",
+    ("operators/phenology.py", "*"): (
+        "phenometric argmins and extrema over a per-series window "
+        "(min_by over candidate structs, max/min over (value, doy) "
+        "structs), not tier rows"
+    ),
+}
+
+
+def _is_struct(node: ast.AST) -> bool:
+    """A struct(...) call, possibly under method calls such as .alias()."""
+    while isinstance(node, ast.Call):
+        if _call_name(node) in ("struct", "named_struct"):
+            return True
+        if not isinstance(node.func, ast.Attribute):
+            return False
+        node = node.func.value
+    return False
+
+
+def _order_key_agg(call: ast.Call) -> str | None:
+    """min_by / max_by, or min / max over a struct."""
+    name = _call_name(call)
+    if name in ("min_by", "max_by"):
+        return name
+    if name in ("min", "max") and call.args and _is_struct(call.args[0]):
+        return f"{name}(struct)"
+    return None
+
+
+def test_tier_aggregate_is_spelled_once():
+    seen, bad = set(), []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fn, kind, line in _calls(ast.parse(path.read_text()), _order_key_agg):
+            key = next(
+                (k for k in ((rel, fn), (rel, "*")) if k in ORDER_KEY_AGGS), None
+            )
+            if key:
+                seen.add(key)
+            else:
+                bad.append(f"{rel}:{line}: {kind} in {fn}")
+    assert not bad, (
+        "build tier aggregates from rollup.point_aggs / merge_aggs:\n"
+        + "\n".join(bad)
+    )
+    assert seen == set(ORDER_KEY_AGGS), (
+        f"stale allowlist entries: {set(ORDER_KEY_AGGS) - seen}"
+    )
+
+
+def test_guard_catches_a_second_tier_aggregate():
+    src = (
+        "def stream_rollup_df(v):\n"
+        "    return [F.min(F.struct(F.col('pos'), v.alias('v'))).alias('f'),\n"
+        "            F.max(F.struct('pos', 'value').alias('s'))]\n"
+        "def merge_tier_partials():\n"
+        "    return [F.min_by('first_val', F.col('first_pos'))]\n"
+        "last = F.max_by(v, order)\n"
+        "def point_aggs(v):\n"
+        "    return [F.min_by(v, order), F.max(v), max(1, 2)]\n"
+    )
+    assert _calls(ast.parse(src), _order_key_agg) == [
+        ("stream_rollup_df", "min(struct)", 2),
+        ("stream_rollup_df", "max(struct)", 3),
+        ("merge_tier_partials", "min_by", 5),
+        (None, "max_by", 6),
+        ("point_aggs", "min_by", 8),
     ]
 
 

@@ -238,3 +238,54 @@ def test_kernel_stages_resist_aqe_coalescing(spark):
         assert f", {n_parts}), REPARTITION_BY_NUM" in plan, (
             f"{name}: kernel partition count does not track parallelism"
         )
+
+
+def _aggregates(plan: str) -> list[str]:
+    """The Aggregate operator lines of a plan, outermost first, with
+    expression ids stripped."""
+    return [
+        re.sub(r"#\d+L?", "", line)
+        for line in plan.splitlines()
+        if "Aggregate [" in line
+    ]
+
+
+def test_tier_rollups_share_one_aggregate(spark, tmp_path):
+    """Every Catalyst tier site is built from rollup.point_aggs /
+    merge_aggs. Order keys a site does not return are pruned from its
+    Aggregate, the salted rollup stays two Aggregates, and the stream takes
+    first/last with min_by/max_by, not min/max over a struct."""
+    import datetime
+
+    from fusets_spark.operators.rollup import rollup_from_raw, salted_rollup
+    from fusets_spark.streaming.rollup_stream import POINTS_DDL, stream_rollup_df
+
+    points = spark.createDataFrame(
+        [("s", "d", 1, datetime.datetime(2024, 1, 1), 1.0)], POINTS_DDL
+    )
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    raw = rollup_from_raw(points, "1m", with_order_keys=False)
+    (agg,) = _aggregates(optimized(raw))
+    assert "min_by(value, pos)" in agg and "max_by(value, pos)" in agg
+    for gone in ("min(pos)", "max(pos)", "first_pos", "last_pos"):
+        assert gone not in agg, gone
+    assert not {"first_pos", "last_pos"} & set(raw.columns)
+
+    salted = salted_rollup(points, "1m", n_salts=4)
+    outer, inner = _aggregates(optimized(salted))
+    assert "min(pos) AS first_pos" in inner and "max(pos) AS last_pos" in inner
+    for gone in ("min(pos)", "max(pos)", "AS first_pos", "AS last_pos"):
+        assert gone not in outer, gone
+    assert not {"first_pos", "last_pos"} & set(salted.columns)
+
+    src = str(tmp_path / "points")
+    points.write.parquet(src)
+    stream = stream_rollup_df(spark.readStream.schema(POINTS_DDL).parquet(src))
+    # a streaming frame only plans inside a started query; its analyzed
+    # plan already holds the aggregate list
+    (agg,) = _aggregates(stream._jdf.queryExecution().analyzed().toString())
+    assert "min_by(value, pos)" in agg and "max_by(value, pos)" in agg
+    assert "struct" not in agg
