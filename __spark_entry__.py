@@ -133,23 +133,17 @@ def _mk_rollup(tier: str) -> Callable[[SparkSession, str], DataFrame]:
 
 def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming twin of rollup_1m (north rule continuous
-    aggregate, SURVEY.md §2.8): the same windowed-aggregate plan run through
-    the real readStream -> trigger(availableNow) -> sink path, returned as a
-    batch frame once the stream drains. Complete output mode emits every
-    window so the driver can compare against the batch oracle exactly; the
-    production shape (append mode + watermark finalization + parquet sink +
-    exactly-once checkpoint) is streaming/rollup_stream.start_file_stream_
-    rollup, pinned by tests/test_streaming.py. The window aggregate is
-    the batch tiers' own list (rollup.point_aggs: first/last by
-    min_by/max_by on the unique pos). Oracle: identical SQL as rollup_1m — streaming must not change one
-    value."""
-    import uuid
-
-    from fusets_spark.streaming import start_per_core
-    from fusets_spark.streaming.rollup_stream import stream_rollup_df
-
-    import os
+    aggregate, SURVEY.md §2.8): the events file drained through the real
+    readStream -> trigger(availableNow) -> checkpointed stream path of
+    streaming/rollup_stream.start_stream_rollup, whose every micro-batch
+    runs the batch rollup_from_raw and publishes a tier partial; the
+    partials are read back through rollup.merge_tier_partials, as any
+    reader of the stream does. Oracle: identical SQL as rollup_1m —
+    streaming must not change one value."""
     import tempfile
+
+    from fusets_spark.operators.rollup import merge_tier_partials
+    from fusets_spark.streaming.rollup_stream import start_stream_rollup
 
     # _t() side effects (UTC pin + package shipping) without a batch read
     _t(spark, sf_dir, "events")
@@ -157,36 +151,27 @@ def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     # the streaming file source requires a DIRECTORY to watch; the test
     # fixture is a single parquet file, so watch a temp dir holding a
-    # symlink to it (zero copy)
-    watch_dir = tempfile.mkdtemp(prefix="fusets_stream_src_")
+    # symlink to it (zero copy). The partials stay there for the caller.
+    root = tempfile.mkdtemp(prefix="fusets_stream_rollup_")
+    watch_dir, out = os.path.join(root, "src"), os.path.join(root, "out")
+    os.mkdir(watch_dir)
     os.symlink(path, os.path.join(watch_dir, "events.parquet"))
     stream = spark.readStream.schema(schema).parquet(watch_dir).select(
         F.col("event_type").alias("source"),
         F.col("user_id").alias("doc_id"),
         F.col("event_id").alias("pos"),
-        # watermarks require an instant (TIMESTAMP); parquet reads NTZ.
-        # Session tz is pinned UTC so the cast is wall-value-preserving.
-        F.col("ts").cast("timestamp").alias("ts"),
+        "ts",
         "value",
     )
-    name = "stream_rollup_" + uuid.uuid4().hex[:8]
-    q = start_per_core(
-        spark,
-        stream_rollup_df(stream, tier_seconds=60, integer_values=False)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True),
+    q = start_stream_rollup(
+        stream, out, os.path.join(root, "ckpt"), integer_values=False
     )
     try:
         if not q.awaitTermination(600):
             raise TimeoutError("streaming rollup did not drain in 600s")
     finally:
         q.stop()
-    out = spark.table(name).withColumn(
-        "bucket_ts", F.col("bucket_ts").cast("timestamp_ntz")
-    )
-    return _round_rollup(out)
+    return _round_rollup(merge_tier_partials(spark.read.parquet(out)))
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,12 +20,12 @@ make outputs bit-reproducible at any parallelism — the engine's parity
 requirement — and mirror the reference's own fit-once/apply-many
 MOGPRTransformer pattern (mogpr.py:35-68, 414-426).
 
-Scale note: two exact-same-posterior paths, auto-selected per series
-(mogpr_fuse `method` knob): dense Cholesky O(n³) for short series, and a
-STATE-SPACE Kalman + RTS smoother O(n·(2(m+1))³) for long ones — the
-Matern-3/2 kernel is exactly an SDE, and the coregionalization
-B = (1-ρ)I + ρ11ᵀ factors into √ρ·shared + √(1-ρ)·private independent
-processes, so the smoothed posterior equals the dense GP posterior
+Scale note: two exact-same-posterior paths, selected per series by its
+joint observation count (SS_OBS_THRESHOLD): dense Cholesky O(n³) for
+short series, and a STATE-SPACE Kalman + RTS smoother O(n·(2(m+1))³) for
+long ones — the Matern-3/2 kernel is exactly an SDE, and the
+coregionalization B = (1-ρ)I + ρ11ᵀ factors into √ρ·shared +
+√(1-ρ)·private independent processes, so the smoothed posterior equals the dense GP posterior
 (differential-tested to ~1e-13). At 10^12-sequence scale, per-series cost
 is linear in observations; both paths run inside the same
 kernels.group_kernel call, bucketed by doc_id alone (all of a doc's
@@ -351,7 +351,6 @@ def mogpr_fuse(
     noise: float = 0.05,
     rho: float = 0.7,
     prediction_period_days: float | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """Distributed fusion over long rows (doc_id, source, ts, value) —
     source = signal name (the reference's band/variable). Output grid per
@@ -359,14 +358,11 @@ def mogpr_fuse(
     grid every `prediction_period_days` (the reference's ISO-8601
     prediction_period, _xarray_utils.py:43-46).
 
-    method: 'dense' (O(n³) Cholesky), 'state_space' (O(n) Kalman + RTS —
-    same posterior, see mogpr_fuse_series_ss), or 'auto' (default): dense
-    below SS_OBS_THRESHOLD joint observations per doc, state-space above —
-    so short series keep the bit-stable dense path the driver oracle pins
-    while long series (the 100-TB shape: years of observations per
-    sequence) never pay a cubic factorization."""
-    if method not in ("auto", "dense", "state_space"):
-        raise ValueError(f"unknown method {method!r}")
+    Kernel per doc: dense O(n³) Cholesky up to SS_OBS_THRESHOLD joint
+    observations, state-space O(n) Kalman + RTS above (same posterior, see
+    mogpr_fuse_series_ss) — so short series keep the bit-stable dense path
+    the driver oracle pins while long series (the 100-TB shape: years of
+    observations per sequence) never pay a cubic factorization."""
 
     def _fuse(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["doc_id", "source", "ts"], kind="mergesort")
@@ -389,10 +385,11 @@ def mogpr_fuse(
             else:
                 out_t = obs_days
             n_obs = int((~np.isnan(g["value"].to_numpy(np.float64))).sum())
-            use_ss = method == "state_space" or (
-                method == "auto" and n_obs > SS_OBS_THRESHOLD
+            kernel = (
+                mogpr_fuse_series_ss
+                if n_obs > SS_OBS_THRESHOLD
+                else mogpr_fuse_series
             )
-            kernel = mogpr_fuse_series_ss if use_ss else mogpr_fuse_series
             fused = kernel(
                 sigs, out_t, lengthscale=lengthscale, noise=noise, rho=rho
             )

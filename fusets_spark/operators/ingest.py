@@ -17,7 +17,8 @@ rows carry the rollup columns, 'block' rows the codec columns; the other
 side holds placeholders); split_ingest separates the two.
 
 Outputs equal the independent references exactly: tiers equal
-rollup_from_raw(explode_raw(tokens), tier, with_order_keys=True), blocks
+rollup_from_raw(explode_raw(tokens), tier, with_order_keys=True) without
+its avg_val (readers derive it as sum/count), blocks
 are byte-identical to encode_blocks(explode_raw(tokens)) (pinned in
 tests/test_rollup.py and tests/test_codec.py)."""
 
@@ -35,7 +36,7 @@ from .rollup import TIERS
 _KEY_DDL = "source string, doc_id string, bucket_ts timestamp, "
 _TIER_DDL = (
     "n_obs long, sum_val long, min_val double, max_val double, "
-    "first_val double, last_val double, avg_val double, "
+    "first_val double, last_val double, "
 )
 _ORDER_KEY_DDL = "first_pos long, last_pos long"  # late-data merge keys
 
@@ -52,7 +53,7 @@ TIER_SCHEMA = _KEY_DDL + _TIER_DDL + _ORDER_KEY_DDL
 
 _TIER_COLS = [
     "n_obs", "sum_val", "min_val", "max_val",
-    "first_val", "last_val", "avg_val", "tier", "first_pos", "last_pos",
+    "first_val", "last_val", "tier", "first_pos", "last_pos",
 ]
 _BLOCK_COLS = ["n_points", "min_ts", "max_ts", "codec", "block"]
 _ORDER = ["kind", "source", "doc_id", "bucket_ts", *_TIER_COLS, *_BLOCK_COLS]
@@ -146,7 +147,6 @@ def ladder_frames(src_arr, doc_arr, d, pos_kept, v, t0_s):
                     "max_val": tmx,
                     "first_val": tf,
                     "last_val": tl,
-                    "avg_val": ts_ / tn,
                     "tier": tier,
                     "first_pos": tfp,
                     "last_pos": tlp,

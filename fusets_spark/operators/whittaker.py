@@ -33,20 +33,6 @@ SMOOTH_SCHEMA = "source string, doc_id string, ts timestamp, value_smooth double
 BUCKETS = Buckets(floor=32, per_core=2)
 
 
-def second_diff_bands(n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Bands (main, first-off, second-off) of D₂ᵀD₂ for n grid points."""
-    m0 = np.zeros(n)
-    m1 = np.zeros(max(n - 1, 0))
-    m2 = np.zeros(max(n - 2, 0))
-    if n >= 3:
-        for k, c in enumerate((1.0, -2.0, 1.0)):
-            m0[k : k + n - 2] += c * c
-        for k, (c0, c1) in enumerate(((1.0, -2.0), (-2.0, 1.0))):
-            m1[k : k + n - 2] += c0 * c1
-        m2[: n - 2] += 1.0
-    return m0, m1, m2
-
-
 def per_series_bands(
     lengths: np.ndarray, n_max: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -93,13 +79,10 @@ def whittaker_solve(
         return Y.copy()
     ridge = 1e-9  # keeps padded/empty rows nonsingular without moving results
     if lengths is None:
-        m0, m1, m2 = second_diff_bands(n)
-        a1 = np.broadcast_to(lmbd * m1, (S, max(n - 1, 0)))
-        a2 = np.broadcast_to(lmbd * m2, (S, max(n - 2, 0)))
-    else:
-        m0, m1, m2 = per_series_bands(lengths, n)
-        a1 = lmbd * m1
-        a2 = lmbd * m2
+        lengths = np.full(S, n)
+    m0, m1, m2 = per_series_bands(lengths, n)
+    a1 = lmbd * m1
+    a2 = lmbd * m2
     a0 = W + lmbd * m0 + ridge
     b = W * Y
 

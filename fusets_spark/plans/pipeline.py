@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codec.blocks import BLOCK_SCHEMA
-from ..operators import ingest
+from ..operators import ingest, rollup
 from ..operators.rollup import TIERS
 from .lineage import TierStore, stage_batches
 
@@ -164,18 +164,19 @@ class RollupPipeline:
         merged=True re-merges per-batch partial rows for the same
         (series, bucket) — exact under late data because stored rows carry
         first_pos/last_pos (see rollup.merge_tier_partials); a
-        no-op-by-value when batches never share a bucket."""
+        no-op-by-value when batches never share a bucket. Tiers store no
+        avg_val: both reads derive it as sum/count."""
         live = (
             as_of_batches
             if as_of_batches is not None
             else self.store.live_batches(stage)
         )
         df = self._read_batches(spark, stage, live)
-        if merged and stage != "blocks":
-            from ..operators.rollup import merge_tier_partials
-
-            return merge_tier_partials(df)
-        return df
+        if stage == "blocks":
+            return df
+        # looked up on the module at call time, so a wrapper installed on
+        # rollup.merge_tier_partials sees every merged read
+        return rollup.merge_tier_partials(df) if merged else rollup._with_avg(df)
 
     def _read_batches(
         self, spark: SparkSession, stage: str, batch_ids

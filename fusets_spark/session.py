@@ -49,9 +49,9 @@ def get_spark(
     cores: local[N] parallelism. Defaults to $SPARK_GRAFT_CPUS or all cores.
     shuffle_partitions: defaults to max(cores, 32) locally. On a cluster AQE
         coalesces; start high and let adaptive execution shrink. AQE does
-        not run on streaming queries, so stateful streams do not take this
-        width: they start through streaming.start_per_core, which gives
-        them one state shard per core. Grouped numpy kernels do not take
+        not run on streaming queries, so the stateful block sealer does not
+        take this width: it starts through streaming.start_per_core, which
+        gives it one state shard per core. Grouped numpy kernels do not take
         it either: kernels.group_kernel repartitions them to
         defaultParallelism × 4, a width AQE does not coalesce.
     """

@@ -1,10 +1,12 @@
 """Streaming twins of the batch rollup ladder and block encoder.
 
-State width rule: every stateful stream starts through start_per_core(),
-so its state store has one shard per core (spark.sql.shuffle.partitions =
-defaultParallelism). AQE does not run on streaming queries, so the
-session's batch-sized shuffle width would otherwise become the state
-width, and every micro-batch pays one state commit per shard.
+The rollup stream (rollup_stream) is stateless. The block sealer
+(block_stream) is the one stateful stream, and it starts through
+start_per_core(), so its state store has one shard per core
+(spark.sql.shuffle.partitions = defaultParallelism). AQE does not run on
+streaming queries, so the session's batch-sized shuffle width would
+otherwise become the state width, and every micro-batch pays one state
+commit per shard.
 """
 
 from __future__ import annotations

@@ -4,7 +4,8 @@ applyInPandas. The block fold stays single too: only codec.blocks.block_frame
 (and the single-block encode_block) call the Gorilla encoder, and nothing in
 the package calls encode_block. So does the tier aggregate: min_by/max_by
 appear only in rollup.point_aggs / merge_aggs (and phenology's phenometric
-argmins), and no tier site takes min/max over a struct. Also pins
+argmins), and no tier site takes min/max over a struct; the rollup
+stream aggregates only through the batch rollup_from_raw. Also pins
 fanout_partitions, the scan-side sizing helper that lives beside
 kernels.py's grouped boundary."""
 
@@ -251,6 +252,40 @@ def test_guard_catches_a_second_tier_aggregate():
         ("merge_tier_partials", "min_by", 5),
         (None, "max_by", 6),
         ("point_aggs", "min_by", 8),
+    ]
+
+
+# the rollup stream runs the batch operator per micro-batch; an aggregate
+# of its own (or a stateful window/watermark) would be a second tier path
+_STREAM_AGG_CALLS = {"groupBy", "groupby", "agg", "window", "withWatermark"}
+
+
+def _stream_aggregate_calls(tree: ast.AST) -> list[tuple[str | None, str, int]]:
+    return _calls(
+        tree,
+        lambda c: _call_name(c) if _call_name(c) in _STREAM_AGG_CALLS else None,
+    )
+
+
+def test_rollup_stream_runs_the_batch_rollup():
+    path = PKG / "streaming" / "rollup_stream.py"
+    src = path.read_text()
+    assert _stream_aggregate_calls(ast.parse(src)) == []
+    assert "rollup.rollup_from_raw(" in src
+
+
+def test_guard_catches_a_stream_aggregate():
+    src = (
+        "def stream_rollup_df(stream):\n"
+        "    return (stream.withWatermark('ts', '10 minutes')\n"
+        "            .groupBy(F.window('ts', '60 seconds'))\n"
+        "            .agg(*point_aggs(v, pos)))\n"
+    )
+    assert sorted(_stream_aggregate_calls(ast.parse(src))) == [
+        ("stream_rollup_df", "agg", 2),
+        ("stream_rollup_df", "groupBy", 2),
+        ("stream_rollup_df", "window", 3),
+        ("stream_rollup_df", "withWatermark", 2),
     ]
 
 

@@ -250,15 +250,14 @@ def _aggregates(plan: str) -> list[str]:
     ]
 
 
-def test_tier_rollups_share_one_aggregate(spark, tmp_path):
+def test_tier_rollups_share_one_aggregate(spark):
     """Every Catalyst tier site is built from rollup.point_aggs /
     merge_aggs. Order keys a site does not return are pruned from its
-    Aggregate, the salted rollup stays two Aggregates, and the stream takes
-    first/last with min_by/max_by, not min/max over a struct."""
+    Aggregate, and the salted rollup stays two Aggregates."""
     import datetime
 
     from fusets_spark.operators.rollup import rollup_from_raw, salted_rollup
-    from fusets_spark.streaming.rollup_stream import POINTS_DDL, stream_rollup_df
+    from fusets_spark.streaming.rollup_stream import POINTS_DDL
 
     points = spark.createDataFrame(
         [("s", "d", 1, datetime.datetime(2024, 1, 1), 1.0)], POINTS_DDL
@@ -280,12 +279,3 @@ def test_tier_rollups_share_one_aggregate(spark, tmp_path):
     for gone in ("min(pos)", "max(pos)", "AS first_pos", "AS last_pos"):
         assert gone not in outer, gone
     assert not {"first_pos", "last_pos"} & set(salted.columns)
-
-    src = str(tmp_path / "points")
-    points.write.parquet(src)
-    stream = stream_rollup_df(spark.readStream.schema(POINTS_DDL).parquet(src))
-    # a streaming frame only plans inside a started query; its analyzed
-    # plan already holds the aggregate list
-    (agg,) = _aggregates(stream._jdf.queryExecution().analyzed().toString())
-    assert "min_by(value, pos)" in agg and "max_by(value, pos)" in agg
-    assert "struct" not in agg

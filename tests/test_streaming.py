@@ -1,9 +1,11 @@
-"""Streaming rollup: the streaming windowed aggregation must agree with the
-batch rollup on every window it emits (complete-mode memory sink for full
-equality; append-mode file pipeline for the production shape)."""
+"""Streaming rollup: every micro-batch of the stateless rollup stream is
+the batch rollup, published as a tier partial; merged reads of the
+partials must equal rollup_from_raw over the same points — across epochs,
+across a replayed epoch and with late points."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -14,102 +16,208 @@ from pyspark.sql import functions as F
 
 from fusets_spark.datagen import generate_tokens
 from fusets_spark.operators.explode import explode_raw
-from fusets_spark.operators.rollup import rollup_from_raw
+from fusets_spark.operators.rollup import merge_tier_partials, rollup_from_raw
+from fusets_spark.streaming import rollup_stream
 from fusets_spark.streaming.rollup_stream import (
     POINTS_DDL,
     start_file_stream_rollup,
-    stream_rollup_df,
+    start_stream_rollup,
 )
 
 WIDTH = "spark.sql.shuffle.partitions"
+KEY = ["source", "doc_id", "bucket_ts"]
 
 
-def _points_pdf(spark, n_docs=40, seed=5):
-    toks = generate_tokens(spark, n_docs, seed=seed, min_tok=32, max_tok=200)
+def _points_pdf(spark, n_docs=40, seed=5, min_tok=32, max_tok=200):
+    toks = generate_tokens(spark, n_docs, seed=seed, min_tok=min_tok, max_tok=max_tok)
     return explode_raw(toks)
 
 
-def test_streaming_equals_batch_complete_mode(spark, tmp_path):
+def _merged(spark, out):
+    """A reader's view of the stream: every published partial, merged."""
+    return merge_tier_partials(spark.read.parquet(out))
+
+
+def _assert_equals_batch(got, want):
+    got, want = got.toPandas(), want.toPandas()
+    assert len(got) > 0 and not got.duplicated(KEY).any()
+    pd.testing.assert_frame_equal(
+        got[want.columns].sort_values(KEY).reset_index(drop=True),
+        want.sort_values(KEY).reset_index(drop=True),
+        check_dtype=False,  # the stream reads pos as long (POINTS_DDL)
+        check_exact=True,
+    )
+
+
+def _write_files(pts, src, n_files):
+    """`pts` as n_files parquet files in `src`, every series split across
+    them (file = pos % n_files)."""
+    staged = src + "_parts"
+    (
+        pts.withColumn("part", F.col("pos") % n_files)
+        .repartition("part")
+        .write.partitionBy("part")
+        .parquet(staged)
+    )
+    os.makedirs(src)
+    for k in range(n_files):
+        (part,) = glob.glob(os.path.join(staged, f"part={k}", "*.parquet"))
+        shutil.move(part, os.path.join(src, f"f{k:03d}.parquet"))
+    shutil.rmtree(staged)
+
+
+def _epochs(out):
+    return sorted(n for n in os.listdir(out) if n.startswith("epoch="))
+
+
+def test_streaming_equals_batch(spark, tmp_path):
     pts = _points_pdf(spark)
     src = str(tmp_path / "pts")
     pts.write.parquet(src)
+    out = str(tmp_path / "out")
 
-    stream = (
-        spark.readStream.schema(POINTS_DDL).parquet(src)
-    )
-    q = (
-        stream_rollup_df(stream, tier_seconds=60)
-        .writeStream.format("memory")
-        .queryName("t1m_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    q = start_stream_rollup(
+        spark.readStream.schema(POINTS_DDL).parquet(src),
+        out, str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
-    cols = ["source", "doc_id", "bucket_ts", "n_obs", "sum_val",
-            "min_val", "max_val", "first_val", "last_val", "avg_val"]
-    got = spark.table("t1m_stream").select(*cols).toPandas()
-    want = rollup_from_raw(spark.read.parquet(src), "1m").select(*cols).toPandas()
-    key = ["source", "doc_id", "bucket_ts"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    want = rollup_from_raw(spark.read.parquet(src), "1m", with_order_keys=True)
+    _assert_equals_batch(_merged(spark, out), want)
 
 
 def test_streaming_file_pipeline_append_mode(spark, tmp_path):
+    """The production file path, and exactly-once on restart: a second
+    drain on the same checkpoint publishes nothing new."""
     pts = _points_pdf(spark, n_docs=30, seed=9)
     src = str(tmp_path / "pts2")
     pts.write.parquet(src)
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
-    q = start_file_stream_rollup(spark, src, out, ckpt, tier_seconds=60)
+    q = start_file_stream_rollup(spark, src, out, ckpt)
     q.awaitTermination(120)
+    want = rollup_from_raw(spark.read.parquet(src), "1m", with_order_keys=True)
+    _assert_equals_batch(_merged(spark, out), want)
 
-    emitted = spark.read.parquet(out).toPandas()
-    batch = rollup_from_raw(spark.read.parquet(src), "1m").toPandas()
-    # append mode emits only watermark-finalized windows: a subset of batch
-    key = ["source", "doc_id", "bucket_ts"]
-    b = batch.set_index(key)
-    for _, row in emitted.iterrows():
-        k = (row["source"], row["doc_id"], row["bucket_ts"])
-        assert k in b.index
-        assert row["n_obs"] == b.loc[k, "n_obs"]
-        assert row["sum_val"] == b.loc[k, "sum_val"]
-    # restarting on the same checkpoint emits nothing new (exactly-once)
-    n_before = len(emitted)
-    q2 = start_file_stream_rollup(spark, src, out, ckpt, tier_seconds=60)
+    epochs = _epochs(out)
+    q2 = start_file_stream_rollup(spark, src, out, ckpt)
     q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_before
+    assert _epochs(out) == epochs
+    _assert_equals_batch(_merged(spark, out), want)
 
 
 def test_stream_output_feeds_coarser_tiers(spark, tmp_path):
     """The streaming 1m output composes with the batch ladder: re-aggregating
-    the streamed tier through rollup_from_tier gives exactly the 1h tier the
-    batch ladder computes from raw — the continuous-aggregate contract."""
+    the merged stream tier through rollup_from_tier gives exactly the 1h
+    tier the batch ladder computes from raw — the continuous-aggregate
+    contract."""
     from fusets_spark.operators.rollup import rollup_from_tier
 
     pts = _points_pdf(spark, n_docs=25, seed=11)
     src = str(tmp_path / "pts3")
     pts.write.parquet(src)
-    stream = spark.readStream.schema(POINTS_DDL).parquet(src)
-    q = (
-        stream_rollup_df(stream, tier_seconds=60)
-        .writeStream.format("memory")
-        .queryName("t1m_compose")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    out = str(tmp_path / "out")
+    q = start_stream_rollup(
+        spark.readStream.schema(POINTS_DDL).parquet(src),
+        out, str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
-    streamed_1m = spark.table("t1m_compose")
-    got = rollup_from_tier(streamed_1m, "1h").toPandas()
-    want = rollup_from_raw(spark.read.parquet(src), "1h").toPandas()
-    key = ["source", "doc_id", "bucket_ts"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    got = rollup_from_tier(_merged(spark, out), "1h")
+    _assert_equals_batch(got, rollup_from_raw(spark.read.parquet(src), "1h"))
+
+
+def _progress(q):
+    return [p if isinstance(p, dict) else json.loads(p.json)
+            for p in q.recentProgress]
+
+
+def test_multi_epoch_drain_equals_batch(spark, tmp_path):
+    """More input files than one epoch takes (16), every series split
+    across files: the drain publishes several partials that share
+    (series, bucket) keys, keeps no state, and the merged read equals the
+    batch rollup with no duplicated key."""
+    pts = _points_pdf(spark, n_docs=30, seed=17)
+    src = str(tmp_path / "pts")
+    _write_files(pts, src, 20)
+    out = str(tmp_path / "out")
+
+    q = start_file_stream_rollup(spark, src, out, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    progress = _progress(q)
+    assert len(progress) == len(_epochs(out)) == 2
+    assert not any(p["stateOperators"] for p in progress)
+    partials = spark.read.parquet(out)
+    assert partials.groupBy(*KEY).count().filter("count > 1").count() > 0
+
+    want = rollup_from_raw(spark.read.parquet(src), "1m", with_order_keys=True)
+    _assert_equals_batch(_merged(spark, out), want)
+
+
+def test_replayed_epoch_replaces_its_partial(spark, tmp_path, monkeypatch):
+    """An epoch that fails after publishing its partial but before Spark
+    commits it is replayed on restart and replaces its own directory: the
+    restarted drain's partials equal a clean drain's, row for row."""
+    pts = _points_pdf(spark, n_docs=30, seed=19)
+    src = str(tmp_path / "pts")
+    _write_files(pts, src, 20)
+
+    def partials(out):
+        return (
+            spark.read.parquet(out)
+            .toPandas()
+            .sort_values(["epoch", *KEY])
+            .reset_index(drop=True)
+        )
+
+    clean = str(tmp_path / "clean")
+    start_file_stream_rollup(
+        spark, src, clean, str(tmp_path / "clean_ckpt")
+    ).awaitTermination(120)
+
+    publish = rollup_stream._publish
+
+    def publish_then_fail(partial, output_path, epoch_id):
+        publish(partial, output_path, epoch_id)
+        raise RuntimeError(f"lost after publishing epoch {epoch_id}")
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    monkeypatch.setattr(rollup_stream, "_publish", publish_then_fail)
+    with pytest.raises(Exception, match="lost after publishing epoch 0"):
+        start_file_stream_rollup(spark, src, out, ckpt).awaitTermination(120)
+    monkeypatch.undo()
+    assert _epochs(out) == ["epoch=0"]
+    assert not os.listdir(os.path.join(ckpt, "commits"))
+
+    start_file_stream_rollup(spark, src, out, ckpt).awaitTermination(120)
+    assert _epochs(out) == _epochs(clean) == ["epoch=0", "epoch=1"]
+    pd.testing.assert_frame_equal(partials(out), partials(clean), check_exact=True)
+    assert os.listdir(os.path.join(out, "_staging")) == []
+
+
+def test_late_points_are_kept(spark, tmp_path):
+    """Points that arrive in a later drain and are more than ten minutes
+    older than everything the first drain saw (an event-time watermark's
+    usual delay) still reach the merged tier."""
+    pts = _points_pdf(spark, n_docs=6, seed=23, min_tok=3000, max_tok=4000)
+    cut = pts.agg(F.min("ts")).first()[0] + pd.Timedelta(minutes=20)
+    src = str(tmp_path / "pts")
+    pts.filter(F.col("ts") >= F.lit(cut)).write.parquet(src)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    start_file_stream_rollup(spark, src, out, ckpt).awaitTermination(120)
+    first_max = spark.read.parquet(src).agg(F.max("ts")).first()[0]
+
+    late_dir = str(tmp_path / "late")
+    late = pts.filter(F.col("ts") < F.lit(cut))
+    late.coalesce(1).write.parquet(late_dir)
+    assert late.agg(F.max("ts")).first()[0] < first_max - pd.Timedelta(minutes=10)
+    (part,) = glob.glob(os.path.join(late_dir, "*.parquet"))
+    shutil.move(part, os.path.join(src, "late.parquet"))
+    start_file_stream_rollup(spark, src, out, ckpt).awaitTermination(120)
+
+    assert _epochs(out) == ["epoch=0", "epoch=1"]
+    want = rollup_from_raw(spark.read.parquet(src), "1m", with_order_keys=True)
+    _assert_equals_batch(_merged(spark, out), want)
 
 
 def _bag(pdf):
@@ -159,51 +267,20 @@ def test_seal_empty_backlog_returns_empty_blocks(spark, tmp_path):
         seal_all_with_sentinels(spark, empty, str(work), sink="memory")
 
 
-def _progress(q):
-    return [p if isinstance(p, dict) else json.loads(p.json)
-            for p in q.recentProgress]
-
-
-def _state_widths(q):
-    return {
-        op["numShufflePartitions"]
-        for p in _progress(q)
-        for op in p["stateOperators"]
-    }
-
-
 def _numbered(path):
     return sorted(int(n) for n in os.listdir(path) if n.isdigit())
 
 
-def _offset_log_width(ckpt):
-    """spark.sql.shuffle.partitions as recorded by the latest offset log
-    entry (line 2 of the entry is the batch metadata JSON)."""
-    last = _numbered(os.path.join(ckpt, "offsets"))[-1]
-    with open(os.path.join(ckpt, "offsets", str(last))) as f:
-        meta = json.loads(f.read().splitlines()[1])
-    return meta["conf"]["spark.sql.shuffle.partitions"]
-
-
 def test_stateful_streams_get_one_state_shard_per_core(spark, tmp_path):
-    """Both stateful streams run one state shard per core, whatever the
-    session's batch shuffle width, and the session's own setting is left
-    as it was. The seal drain takes exactly two micro-batches: the data
-    batch and the no-data batch that seals."""
+    """The stateful stream (the block sealer) runs one state shard per
+    core, whatever the session's batch shuffle width, and the session's
+    own setting is left as it was. The seal drain takes exactly two
+    micro-batches: the data batch and the no-data batch that seals."""
     from fusets_spark.streaming.block_stream import seal_all_with_sentinels
 
     cores = spark.sparkContext.defaultParallelism
     assert (cores, spark.conf.get(WIDTH)) == (4, "8")
     pts = _points_pdf(spark, n_docs=20, seed=3)
-    src = str(tmp_path / "pts")
-    pts.write.parquet(src)
-
-    q = start_file_stream_rollup(
-        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    assert spark.conf.get(WIDTH) == "8"
-    q.awaitTermination(120)
-    assert _state_widths(q) == {cores}
 
     work = tmp_path / "seal"
     seal_all_with_sentinels(
@@ -214,64 +291,6 @@ def test_stateful_streams_get_one_state_shard_per_core(spark, tmp_path):
     ckpt = str(work / "ckpt")
     assert _numbered(os.path.join(ckpt, "commits")) == [0, 1]
     assert _numbered(os.path.join(ckpt, "state", "0")) == list(range(cores))
-
-
-def test_old_rollup_checkpoint_keeps_its_state_width(spark, tmp_path):
-    """A checkpoint created at the session's width (8 state shards, a plain
-    writeStream.start()) restarts through start_file_stream_rollup with a
-    new input file: the offset log keeps width 8 and the output stays
-    exactly-once — every emitted window once, equal to the batch rollup.
-    A zero watermark delay lets both runs finalize windows: the run-1
-    windows still open at the cut carry their state into run 2."""
-    pts = _points_pdf(spark, n_docs=30, seed=21)
-    ts = sorted(r["ts"] for r in pts.select("ts").collect())
-    cut = ts[len(ts) // 2]
-    src = str(tmp_path / "pts")
-    pts.filter(F.col("ts") < F.lit(cut)).write.parquet(src)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = (
-        stream_rollup_df(
-            spark.readStream.schema(POINTS_DDL).parquet(src),
-            watermark="0 seconds",
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert _offset_log_width(ckpt) == "8"
-    n_first = spark.read.parquet(out).count()
-    assert n_first > 0
-
-    later = str(tmp_path / "later")
-    pts.filter(F.col("ts") >= F.lit(cut)).coalesce(1).write.parquet(later)
-    part = next(n for n in os.listdir(later) if n.endswith(".parquet"))
-    shutil.move(os.path.join(later, part), os.path.join(src, "later.parquet"))
-
-    q2 = start_file_stream_rollup(spark, src, out, ckpt, watermark="0 seconds")
-    q2.awaitTermination(120)
-    assert _offset_log_width(ckpt) == "8"
-    assert _state_widths(q2) == {8}
-
-    key = ["source", "doc_id", "bucket_ts"]
-    cols = key + ["n_obs", "sum_val", "min_val", "max_val", "avg_val",
-                  "first_val", "last_val"]
-    got = spark.read.parquet(out).select(*cols).toPandas()
-    want = rollup_from_raw(spark.read.parquet(src), "1m").select(*cols).toPandas()
-    assert len(got) > n_first
-    assert not got.duplicated(key).any()
-    merged = got.merge(want, on=key, how="left", suffixes=("", "_b"))
-    for c in cols[len(key):]:
-        assert (merged[c] == merged[c + "_b"]).all(), c
-    # every window that closed before the final watermark is emitted
-    wm = pd.Timestamp(ts[-1]) - pd.Timedelta(minutes=1)
-    closed = want[pd.to_datetime(want["bucket_ts"]) + pd.Timedelta(minutes=1) <= wm]
-    assert set(map(tuple, closed[key].values)) <= set(map(tuple, got[key].values))
 
 
 def test_overlapping_starts_restore_the_session_width(spark):

@@ -9,7 +9,7 @@ import pandas as pd
 
 from fusets_spark.datagen import sinusoidal_fixture
 from fusets_spark.operators.whittaker import (
-    second_diff_bands,
+    per_series_bands,
     whittaker_gapfill,
     whittaker_smooth_series,
     whittaker_solve,
@@ -27,7 +27,7 @@ def test_bands_match_dense_matrix():
     for n in (3, 4, 7, 30):
         D2 = np.diff(np.eye(n), 2, axis=0)
         M = D2.T @ D2
-        m0, m1, m2 = second_diff_bands(n)
+        (m0,), (m1,), (m2,) = per_series_bands(np.array([n]), n)
         assert np.allclose(np.diag(M), m0)
         assert np.allclose(np.diag(M, 1), m1)
         assert np.allclose(np.diag(M, 2), m2)
