@@ -19,7 +19,7 @@ Scale notes:
   * ngram_jaccard_pairs frequency-caps hot shingles before the self-join
     (one boilerplate shingle shared by m docs is m²/2 join rows otherwise)
     and then verifies candidates with the EXACT Jaccard over full sets;
-  * simhash is a pure per-row scan (higher-order array fold, zero shuffle).
+  * simhash is a pure per-row scan (a numpy vote-fold kernel, zero shuffle).
 
 Cache lifetime: ngram_jaccard_pairs .persist()s its shingle table — its
 plan genuinely consumes it on several branches (frequency cap, both
@@ -35,7 +35,7 @@ spark.catalog.clearCache() between ops (bench.py does).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 def _words():
@@ -280,29 +280,26 @@ def minhash_lsh_pairs(
 def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     """SimHash as a portable bit-string: word -> md5 hex; hex nibble j
     supplies bit 4j..4j+3; each set bit votes +1, clear bit -1; simhash bit
-    = 1 iff the vote sum > 0. Returned as a `bits`-char '0'/'1' string.
+    = 1 iff the vote sum > 0. Returned as a `bits`-char '0'/'1' string;
+    1 <= bits <= 128 (the md5 width), else ValueError.
 
     Round 7: the vote fold runs as a VECTORIZED numpy kernel (mapInPandas)
     instead of the interpreted per-element Catalyst fold — same integer
     votes, bit-identical output (pinned against the expression form in
-    tests/test_training_ops.py), ~8× the throughput at sf1.0 (19.6 s →
+    tests/reference_impls.py), ~8× the throughput at sf1.0 (19.6 s →
     2.5 s): per batch, each distinct word is md5-hashed once (dict cache),
-    the 64-bit vote rows come from one unpackbits over the digest table,
-    and each doc's vote sum is one numpy gather+sum. Still zero shuffle on
-    a well-partitioned corpus; single-file inputs are fanned out first
-    (kernels.fanout_partitions) because a lone parquet row group would pin
-    the kernel to one core. Every word OCCURRENCE votes (duplicates
-    kept). Falls back to the expression form when bits % 8 != 0."""
-    if bits % 8 == 0:
-        return _simhash_kernel(docs, bits)
-    return simhash_expr(docs, bits)
-
-
-def _simhash_kernel(docs: DataFrame, bits: int) -> DataFrame:
+    the vote rows come from one unpackbits over the first ceil(bits/8)
+    digest bytes, sliced to `bits`, and each doc's vote sum is one numpy
+    gather+sum. Still zero shuffle on a well-partitioned corpus;
+    single-file inputs are fanned out first (kernels.fanout_partitions)
+    because a lone parquet row group would pin the kernel to one core.
+    Every word OCCURRENCE votes (duplicates kept)."""
     import numpy as np
     import pandas as pd
 
-    nbytes = bits // 8
+    if not 1 <= bits <= 128:
+        raise ValueError(f"simhash bits must be in 1..128 (md5 width), got {bits}")
+    nbytes = -(-bits // 8)
 
     def _fold(batches):
         import hashlib
@@ -339,7 +336,8 @@ def _simhash_kernel(docs: DataFrame, bits: int) -> DataFrame:
                     b"".join(digests), dtype=np.uint8
                 ).reshape(-1, nbytes)
                 # unpackbits is MSB-first per byte == hex-nibble bit order
-                votes = np.unpackbits(table, axis=1).astype(np.int32) * 2 - 1
+                bitrows = np.unpackbits(table, axis=1)[:, :bits]
+                votes = bitrows.astype(np.int32) * 2 - 1
             else:
                 votes = np.zeros((0, bits), np.int32)
             sums = np.zeros((n, bits), dtype=np.int64)
@@ -362,53 +360,6 @@ def _simhash_kernel(docs: DataFrame, bits: int) -> DataFrame:
     return fanout_partitions(docs.select("doc_id", "text")).mapInPandas(
         _fold, schema="doc_id long, simhash string"
     )
-
-
-def simhash_expr(docs: DataFrame, bits: int = 64) -> DataFrame:
-    """Pure-Catalyst SimHash (the pre-round-7 implementation): a single
-    per-row higher-order array fold (aggregate over the word-hash array of
-    zip_with'd ±1 vote vectors) — zero shuffle, no Python. Kept as the
-    independent reference the kernel is pinned against in tests."""
-    nibbles = bits // 4
-    hashes = F.transform(_words(), lambda w: F.substring(F.md5(w), 1, nibbles))
-    # hex char -> its 4-bit ±1 vote vector, as a 16-entry literal map: one
-    # lookup + flatten per nibble beats 4 arithmetic bit extractions
-    vote_map = F.create_map(
-        *[
-            part
-            for c in "0123456789abcdef"
-            for part in (
-                F.lit(c),
-                F.array(
-                    *[
-                        F.lit(1 if (int(c, 16) >> (3 - b)) & 1 else -1)
-                        for b in range(4)
-                    ]
-                ),
-            )
-        ]
-    )
-
-    def votes(hx: Column) -> Column:
-        # ±1 vote vector of length `bits` for one word hash: per-nibble
-        # map lookup, flattened in hex-digit order (bit b = nibble b//4,
-        # position 3-(b%4) — exactly the map entries' order).
-        return F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nibbles - 1)),
-                lambda j: F.element_at(vote_map, F.substr(hx, j + 1, F.lit(1))),
-            )
-        )
-
-    acc = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda a, hx: F.zip_with(a, votes(hx), lambda x, v: x + v),
-    )
-    sim = F.concat_ws(
-        "", F.transform(acc, lambda s: (s > 0).cast("int").cast("string"))
-    )
-    return docs.select("doc_id", sim.alias("simhash"))
 
 
 def neardup_components(

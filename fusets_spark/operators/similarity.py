@@ -9,8 +9,10 @@ parallel at any corpus size; only the k survivors are ranked.
 The scale path is random-hyperplane LSH:
   * bucketing — hyperplanes are a deterministic function of
     (table, plane, dim) so bucket assignment is reproducible at any
-    parallelism, and the plane values are plain literals in the plan
-    (mirrorable into a SQL oracle);
+    parallelism, and the same float64 plane values are embedded in the SQL
+    oracle; the corpus side is a numpy kernel and the 1-row query side runs
+    the same fold on the driver (_plane_margins, _cell_scores), so the
+    query reaches the plan only as literals: its probe list and its vector;
   * multi-probe ANN — the query probes its own bucket plus the buckets
     reached by flipping its lowest-|margin| bits, recovering recall without
     more tables;
@@ -30,36 +32,24 @@ from pyspark.sql import functions as F
 from ..datagen import _hash01
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product of two array columns as a double.
-
-    With `dim` given, the sum is UNROLLED into a flat left-associated
-    expression: higher-order functions (zip_with/aggregate) are interpreted
-    per element outside whole-stage codegen, which dominates wall time when
-    the dot runs once per candidate PAIR (millions of rows); the unrolled
-    form compiles to straight-line generated Java. The float result is
-    bit-identical: aggregate's left fold ((0+t0)+t1)+... is exactly the
-    unrolled chain's association order, and each term is the same
-    double(a[k])*double(b[k]). Out-of-bounds terms are NULL either way
-    (zip_with pads with NULL, getItem yields NULL), so short arrays still
-    null out the whole sum."""
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    out: Column = F.lit(0.0)
-    for k in range(dim):
-        out = out + a.getItem(k).cast("double") * b.getItem(k).cast("double")
-    return out
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns as a double: the left fold
+    ((0 + t0) + t1) + … of double(a[k]) * double(b[k]). Out-of-bounds
+    terms are NULL (zip_with pads with NULL), so short arrays null out the
+    whole sum."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def _norm(a: Column | str, dim: int | None = None) -> Column:
-    """L2 norm of an array column; same unrolling contract as _dot. Pass
-    the column NAME together with dim to build the unrolled sum as one
-    parsed SQL expression (a single py4j round trip instead of ~400 —
-    query-construction time is part of the bench for the training ops)."""
+    """L2 norm of an array column, with _dot's fold association. Pass the
+    column NAME together with dim to get the sum UNROLLED into one parsed
+    SQL expression (a single py4j round trip); the unrolled chain
+    ((0.0 + t0) + t1) + … is the same association, so the double is the
+    same."""
     if dim is None:
         assert not isinstance(a, str)
         return F.sqrt(
@@ -69,17 +59,10 @@ def _norm(a: Column | str, dim: int | None = None) -> Column:
                 lambda acc, x: acc + x,
             )
         )
-    if isinstance(a, str):
-        terms = " + ".join(
-            f"CAST({a}[{k}] AS DOUBLE) * CAST({a}[{k}] AS DOUBLE)"
-            for k in range(dim)
-        )
-        return F.expr(f"SQRT(0.0D + {terms})")
-    out: Column = F.lit(0.0)
-    for k in range(dim):
-        x = a.getItem(k).cast("double")
-        out = out + x * x
-    return F.sqrt(out)
+    terms = " + ".join(
+        f"CAST({a}[{k}] AS DOUBLE) * CAST({a}[{k}] AS DOUBLE)" for k in range(dim)
+    )
+    return F.expr(f"SQRT(0.0D + {terms})")
 
 
 def make_planes(n_planes: int, dim: int = 64, seed: int = 42) -> np.ndarray:
@@ -94,33 +77,66 @@ def make_planes(n_planes: int, dim: int = 64, seed: int = 42) -> np.ndarray:
     return planes
 
 
-def _dlit(v: float) -> str:
-    """Exact SQL double literal: repr() is the shortest round-tripping
-    decimal and both Python and Spark parse decimal→double with correct
-    rounding, so the parsed Literal is bit-identical to F.lit(float(v))."""
-    return f"{v!r}D"
+def _embedding_matrix(ids, vectors, dim: int) -> np.ndarray:
+    """Stack embeddings into an (n, dim) float64 matrix — the one loader of
+    every similarity kernel and query side.
+
+    Malformed-input contract: fail fast, naming the row. A NULL embedding,
+    a length other than dim, and a NULL or NaN element each raise
+    ValueError; none of them has a bucket, a cell or a cosine."""
+    V = np.empty((len(vectors), dim), dtype=np.float64)
+    for r, (i, v) in enumerate(zip(ids, vectors)):
+        if v is None:
+            raise ValueError(f"vec_id {i}: NULL embedding")
+        a = np.asarray(v, dtype=np.float64)  # a NULL element becomes NaN
+        if a.shape != (dim,):
+            raise ValueError(f"vec_id {i}: embedding length {a.size} != dim {dim}")
+        V[r] = a
+    bad = np.isnan(V).any(axis=1)
+    if bad.any():
+        raise ValueError(
+            f"vec_id {list(ids)[int(bad.argmax())]}: NULL or NaN embedding element"
+        )
+    return V
 
 
-def _plane_dot(vec_col: str, plane: np.ndarray) -> Column:
-    """vec·plane as ONE parsed SQL expression. Building this per-term with
-    Column operators costs hundreds of py4j round trips PER PLANE (~8 s of
-    driver-side query construction for the 15-plane near-dup query — and
-    the bench times build + execute); one F.expr parse is milliseconds.
-    The parsed tree is the same left-associated
-    (((0.0 + x0·p0) + x1·p1) + ...) chain with CAST(vec[k] AS DOUBLE)
-    terms, so the float result is unchanged."""
-    terms = " + ".join(
-        f"CAST({vec_col}[{k}] AS DOUBLE) * {_dlit(float(v))}"
-        for k, v in enumerate(plane)
+def _plane_margins(V: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """V·p for every row p of planes (last axis); V is one vector or a
+    stack of them. Each dot is the left fold ((0.0 + v0·p0) + v1·p1) + …,
+    one vectorized multiply-add per dimension — never np.dot or @, whose
+    pairwise/BLAS summation changes ULPs and can flip a near-zero
+    margin's sign. This is the association of the SQL oracle's list_sum
+    and of the Catalyst reference forms in tests/reference_impls.py."""
+    out = np.empty(V.shape[:-1] + (len(planes),))
+    for i, p in enumerate(planes):
+        acc = np.zeros(V.shape[:-1])
+        for k in range(V.shape[-1]):
+            acc += V[..., k] * p[k]
+        out[..., i] = acc
+    return out
+
+
+def _cell_scores(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """|c|² − 2·v·c per centroid c (last axis): its argmin is the nearest
+    centroid, as |v|² is the same for every cell. v·c is _plane_margins'
+    fold and |c|² is float(c @ c), the literal the SQL oracle embeds."""
+    n2 = np.array([float(c @ c) for c in C])
+    return n2 - 2.0 * _plane_margins(V, C)
+
+
+def _query_vector(
+    embeddings: DataFrame, query_vec_id: int, dim: int
+) -> np.ndarray | None:
+    """The query row's embedding, read on the driver with one first() job;
+    None when no row has query_vec_id."""
+    row = (
+        embeddings.filter(F.col("vec_id") == query_vec_id)
+        .select("embedding")
+        .first()
     )
-    return F.expr(f"0.0D + {terms}")
-
-
-def _bucket_expr(vec_col: str, planes: np.ndarray) -> Column:
-    bits = [
-        (_plane_dot(vec_col, p) > 0).cast("int").cast("string") for p in planes
-    ]
-    return F.concat(*bits)
+    if row is None:
+        return None
+    return _embedding_matrix([query_vec_id], [row[0]], dim)[0]
 
 
 def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
@@ -165,45 +181,40 @@ def cosine_topk(
     return _ranked_topk(scored, k, id_col)
 
 
-def lsh_bucket(
-    embeddings: DataFrame,
-    n_planes: int = 12,
-    seed: int = 42,
-    dim: int = 64,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH bucket per vector, as an n_planes-char '0'/'1'
-    string — vectorized, UDF-free, reproducible."""
-    planes = make_planes(n_planes, dim, seed)
-    return embeddings.withColumn("bucket", _bucket_expr(vec_col, planes))
+def _ranked_candidates(cand: DataFrame, q: np.ndarray, k: int) -> DataFrame:
+    """Exact cosine of each candidate against the query vector, which
+    enters the plan as an array literal, then the ranked top-k."""
+    qvec = F.lit([float(x) for x in q])
+    cos = _dot(F.col("embedding"), qvec) / (
+        _norm(F.col("embedding")) * _norm(qvec)
+    )
+    return _ranked_topk(
+        cand.select("vec_id", "label", cos.alias("cos")), k, "vec_id"
+    )
 
 
 def _bucket_strings_kernel(
     df: DataFrame,
     sets: list[tuple[str, np.ndarray]],
     dim: int,
-    vec_col: str = "embedding",
     norm_col: str | None = None,
 ) -> DataFrame:
     """Corpus-side bucket assignment as a vectorized mapInPandas kernel
     (guide §4.2) — appends one '0'/'1' bucket-string column per
-    (name, planes) set, passing every input column through.
+    (name, planes) set to a frame with vec_id and embedding columns,
+    passing every input column through.
 
-    Why: `_bucket_expr` over P planes is a ~(P·dim·4)-node expression tree
-    (casts + literal products + concat); past codegen's size limits it
-    evaluates INTERPRETED per row — measured 0.8 s for ONE 8-plane set
-    over 20 k vectors, and the near-dup query carries n_tables sets.
+    Why not Catalyst: the bucket expression over P planes is a
+    ~(P·dim·4)-node tree (casts + literal products + concat); past
+    codegen's size limits it evaluates INTERPRETED per row — measured
+    0.8 s for ONE 8-plane set over 20 k vectors, and the near-dup query
+    carries n_tables sets.
 
-    Bit-identity with the expression form (pinned in
-    tests/test_training_ops.py): each plane dot accumulates with the SAME
-    left-fold association ((0.0 + t0) + t1) + … — one vectorized
-    multiply-accumulate per dimension, never np.dot (pairwise summation
-    changes ULPs and could flip a near-zero margin's sign) — against the
-    same float64 plane literals the SQL form embeds, and the bit is
-    strictly `dot > 0` either way. With norm_col set, the L2 norm is
+    Each bit is strictly `margin > 0` over _plane_margins' left fold,
+    against the same float64 plane values the SQL oracle embeds; the
+    Catalyst form in tests/reference_impls.py is pinned bit-identical
+    (tests/test_training_ops.py). With norm_col set, the L2 norm is
     emitted too, with `_norm`'s exact association chain."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         DoubleType,
         StringType,
@@ -216,22 +227,12 @@ def _bucket_strings_kernel(
             n = len(pdf)
             if n == 0:
                 continue
-            V = np.empty((n, dim), dtype=np.float64)
-            for r, v in enumerate(pdf[vec_col]):
-                a = np.asarray(v, dtype=np.float64)
-                if a.shape[0] != dim:
-                    raise ValueError(
-                        f"embedding length {a.shape[0]} != dim {dim}"
-                    )
-                V[r] = a
+            V = _embedding_matrix(pdf["vec_id"], pdf["embedding"], dim)
             pdf = pdf.copy()
             for name, planes in sets:
-                chars = np.empty((n, len(planes)), dtype=np.uint8)
-                for p_i, p in enumerate(planes):
-                    acc = np.zeros(n, dtype=np.float64)
-                    for k in range(dim):
-                        acc += V[:, k] * p[k]  # exact left-fold order
-                    chars[:, p_i] = np.where(acc > 0, ord("1"), ord("0"))
+                chars = np.where(
+                    _plane_margins(V, planes) > 0, ord("1"), ord("0")
+                ).astype(np.uint8)
                 pdf[name] = [
                     bytes(chars[r]).decode("ascii") for r in range(n)
                 ]
@@ -253,8 +254,10 @@ def _bucket_strings_kernel(
 
 def probe_buckets(qvec: np.ndarray, planes: np.ndarray, n_probes: int) -> list[str]:
     """Query bucket + the n_probes buckets at Hamming distance 1 obtained by
-    flipping the lowest-|margin| planes (classic multi-probe LSH)."""
-    margins = planes @ qvec
+    flipping the lowest-|margin| planes (classic multi-probe LSH). The
+    margins are the corpus kernel's fold, so the query's own bucket is the
+    one the kernel assigns it; ties flip the lower plane first."""
+    margins = _plane_margins(qvec, planes)
     base = ["1" if m > 0 else "0" for m in margins]
     out = ["".join(base)]
     for p in np.argsort(np.abs(margins), kind="stable")[:n_probes]:
@@ -274,74 +277,22 @@ def ann_topk_lsh(
     dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking within the query's probe
-    bucket set (own bucket + n_probes lowest-margin bit flips). The bucket
-    equi-join against a tiny broadcast probe list replaces the full cross
-    join; the probed fraction of the corpus is ~(1 + n_probes)/2^n_planes."""
+    bucket set (own bucket + n_probes lowest-margin bit flips). A bucket
+    filter against the literal probe list replaces the full cross join;
+    the probed fraction of the corpus is ~(1 + n_probes)/2^n_planes. No
+    row with query_vec_id gives an empty frame."""
     planes = make_planes(n_planes, dim, seed)
-    # corpus side: kernel bucket assignment (the interpreted ~2,000-node
-    # bucket expression cost 0.8 s per 20 k vectors — guide §4.2); the
-    # 1-row query side keeps the Catalyst expression (filter pushdown
-    # evaluates it for the one probed row only, and the kernel is pinned
-    # bit-identical to it)
-    bucketed = _bucket_strings_kernel(
-        embeddings, [("bucket", planes)], dim
+    # the 1-row query side runs on the driver through the corpus kernel's
+    # own fold (one first() job): its probe list and its vector enter the
+    # plan as literals, so the plan scans embeddings once, with no join
+    q = _query_vector(embeddings, query_vec_id, dim)
+    if q is None:
+        return _ranked_candidates(embeddings.limit(0), np.zeros(dim), k)
+    bucketed = _bucket_strings_kernel(embeddings, [("bucket", planes)], dim)
+    cand = bucketed.filter(
+        F.col("bucket").isin(probe_buckets(q, planes, n_probes))
     )
-    q = (
-        embeddings.filter(F.col("vec_id") == query_vec_id)
-        .withColumn("bucket", _bucket_expr("embedding", planes))
-        .select(
-            F.col("embedding").alias("qvec"),
-            F.col("bucket").alias("qbucket"),
-        )
-    )
-    # Probe set from the query's margins — computed JVM-side on the 1-row
-    # broadcast frame: flip the n_probes lowest-|margin| bits one at a time.
-    q = q.select(
-        "qvec",
-        "qbucket",
-        *[_plane_dot("qvec", planes[p]).alias(f"_m{p}") for p in range(n_planes)],
-    )
-    lowest = F.slice(
-        F.transform(
-            F.array_sort(
-                F.array(
-                    *[
-                        F.struct(
-                            F.abs(F.col(f"_m{p}")).alias("a"),
-                            F.lit(p).alias("p"),
-                        )
-                        for p in range(n_planes)
-                    ]
-                )
-            ),
-            lambda s: s["p"],
-        ),
-        1,
-        n_probes,
-    )
-
-    def _flip(p: Column) -> Column:  # p = 0-based plane index to flip
-        b = F.col("qbucket")
-        return F.concat(
-            F.substr(b, F.lit(1), p),
-            F.when(F.substr(b, p + 1, F.lit(1)) == "1", F.lit("0")).otherwise(
-                F.lit("1")
-            ),
-            F.substr(b, p + 2, F.lit(n_planes)),
-        )
-
-    probes = F.array_union(
-        F.array(F.col("qbucket")), F.transform(lowest, _flip)
-    )
-    q = q.select("qvec", probes.alias("probes"))
-    cand = bucketed.join(
-        F.broadcast(q), F.array_contains(F.col("probes"), F.col("bucket"))
-    )
-    cos = _dot(F.col("embedding"), F.col("qvec")) / (
-        _norm(F.col("embedding")) * _norm(F.col("qvec"))
-    )
-    scored = cand.select("vec_id", "label", cos.alias("cos"))
-    return _ranked_topk(scored, k, "vec_id")
+    return _ranked_candidates(cand, q, k)
 
 
 def kmeans_fit(X: np.ndarray, n_cells: int, iters: int = 10) -> np.ndarray:
@@ -378,21 +329,15 @@ def train_ivf_centroids(
     At corpus scale the quantizer is trained once on a fixed sample and
     reused across queries/batches."""
     pdf = (
-        embeddings.orderBy(id_col).limit(sample).select(vec_col).toPandas()
+        embeddings.orderBy(id_col)
+        .limit(sample)
+        .select(id_col, vec_col)
+        .toPandas()
     )
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    # the quantizer's dim is the sample's: the first non-NULL vector's length
+    dim = next((len(v) for v in pdf[vec_col] if v is not None), 0)
+    X = _embedding_matrix(pdf[id_col], pdf[vec_col], dim)
     return kmeans_fit(X, n_cells, iters)
-
-
-def _ivf_cell_scores(vec_col: str, centroids: np.ndarray) -> list[Column]:
-    """Per-cell score struct (|c|² − 2·v·c, cell) — argmin of the score is
-    the nearest centroid (the |v|² term is constant across cells)."""
-    out = []
-    for i, c in enumerate(centroids):
-        n2 = float(c @ c)
-        score = F.lit(n2) - 2.0 * _plane_dot(vec_col, c)
-        out.append(F.struct(score.alias("d"), F.lit(i).alias("c")))
-    return out
 
 
 def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
@@ -402,40 +347,20 @@ def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
     expression tree that exceeds codegen limits and evaluates INTERPRETED
     per row (~0.8 ms/row: 16 s for 20k embeddings on one core).
 
-    Bit-identity with the expression form (pinned in
-    tests/test_training_ops.py): the per-cell score accumulates with the
-    SAME left-fold association ((0.0 + t0) + t1) + … — one vectorized
-    axpy per (cell, dim) term, never np.dot (pairwise summation would
-    change ULPs and could flip near-tied argmins) — and np.argmin breaks
-    score ties toward the lower cell index exactly like array_sort's
-    (d, c) struct order."""
-    import pandas as pd
-
+    The cell is the argmin of _cell_scores, whose fold and |c|² term are
+    the ones the SQL oracle and the query side use; np.argmin breaks ties
+    toward the lower cell index, like the oracle's (d, c) struct sort. The
+    Catalyst form in tests/reference_impls.py is pinned to it
+    (tests/test_training_ops.py)."""
     dim = C.shape[1]
-    n_cells = C.shape[0]
-    n2 = (C * C).sum(axis=1)  # |c|² as float64 (== float(c @ c) per cell)
 
     def _assign(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            V = np.empty((n, dim), dtype=np.float64)
-            for r, v in enumerate(pdf["embedding"]):
-                a = np.asarray(v, dtype=np.float64)
-                if a.shape[0] != dim:
-                    raise ValueError(
-                        f"embedding length {a.shape[0]} != quantizer dim {dim}"
-                    )
-                V[r] = a
-            scores = np.empty((n, n_cells), dtype=np.float64)
-            for i in range(n_cells):
-                acc = np.zeros(n, dtype=np.float64)
-                for k in range(dim):
-                    acc = acc + V[:, k] * C[i, k]  # exact left-fold order
-                scores[:, i] = n2[i] - 2.0 * acc
+            V = _embedding_matrix(pdf["vec_id"], pdf["embedding"], dim)
             pdf = pdf.copy()
-            pdf["cell"] = np.argmin(scores, axis=1).astype(np.int32)
+            pdf["cell"] = np.argmin(_cell_scores(V, C), axis=1).astype(np.int32)
             yield pdf
 
     from pyspark.sql.types import IntegerType, StructField, StructType
@@ -466,7 +391,8 @@ def ivf_topk(
     vectors are assigned to their nearest of n_cells k-means centroids
     (cell = shuffle/partition key at scale); the query probes its `nprobe`
     nearest cells and ranks candidates by exact cosine. Probed fraction of
-    the corpus ≈ nprobe/n_cells.
+    the corpus ≈ nprobe/n_cells. No row with query_vec_id gives an empty
+    frame.
 
     centroids: pass a pre-trained quantizer (fit-once/apply-many — the
     production shape: train on one corpus snapshot, reuse across every
@@ -476,30 +402,16 @@ def ivf_topk(
         if centroids is not None
         else train_ivf_centroids(embeddings, n_cells, sample, iters)
     )
-    assigned = _assign_cells_kernel(embeddings, C)
-    # the query row comes from the RAW embeddings (not `assigned`): it only
-    # needs qvec, and deriving it pre-kernel keeps `cell` unambiguous in
-    # the self-joinish candidate join below
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qvec")
+    # the query's probe cells come from the corpus kernel's own scores,
+    # computed on the driver (one first() job) and passed in as literals
+    q = _query_vector(embeddings, query_vec_id, C.shape[1])
+    if q is None:
+        return _ranked_candidates(embeddings.limit(0), np.zeros(C.shape[1]), k)
+    cells = np.argsort(_cell_scores(q, C), kind="stable")[:nprobe]
+    cand = _assign_cells_kernel(embeddings, C).filter(
+        F.col("cell").isin([int(c) for c in cells])
     )
-    probes = F.slice(
-        F.transform(
-            F.array_sort(F.array(*_ivf_cell_scores("qvec", C))),
-            lambda s: s["c"],
-        ),
-        1,
-        nprobe,
-    )
-    q = q.select("qvec", probes.alias("probes"))
-    cand = assigned.join(
-        F.broadcast(q), F.array_contains(F.col("probes"), F.col("cell"))
-    )
-    cos = _dot(F.col("embedding"), F.col("qvec")) / (
-        _norm(F.col("embedding")) * _norm(F.col("qvec"))
-    )
-    scored = cand.select("vec_id", "label", cos.alias("cos"))
-    return _ranked_topk(scored, k, "vec_id")
+    return _ranked_candidates(cand, q, k)
 
 
 def embedding_neardup_pairs(
@@ -635,14 +547,7 @@ def embedding_neardup_pairs(
                 )
             pdf = pdf.sort_values("vec_id", kind="stable")
             ids = pdf["vec_id"].to_numpy()
-            V = np.empty((m, dim), dtype=np.float64)
-            for r, v in enumerate(pdf["embedding"]):
-                a = np.asarray(v, dtype=np.float64)
-                if a.shape[0] != dim:
-                    raise ValueError(
-                        f"embedding length {a.shape[0]} != dim {dim}"
-                    )
-                V[r] = a
+            V = _embedding_matrix(ids, pdf["embedding"], dim)
             nrm = pdf["nrm"].to_numpy()  # kernel fold, bit-equal to _norm
             codes = [
                 pd.factorize(pdf[prev_b[tp]])[0] for tp in range(t)

@@ -7,16 +7,20 @@ of the engine:
 - encode_block_pointwise: the stateful per-point Gorilla encoder, the only
   encoder that emits the '10' reuse-window code
 - minhash_signatures_expr: the pure-Catalyst minhash signature builder
+- _bucket_expr / _plane_dot / _dlit: the Catalyst LSH bucket string, one
+  parsed left-fold dot per hyperplane
+- _ivf_cell_scores: the Catalyst IVF per-cell score structs
+- simhash_expr: the pure-Catalyst SimHash vote fold
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fusets_spark.codec.gorilla import _FALLBACK_PREFIX, _FALLBACK_WIDTH, _RANGES
-from fusets_spark.operators.dedup import _doc_shingles
+from fusets_spark.operators.dedup import _doc_shingles, _words
 from fusets_spark.operators.rollup import rollup_from_raw, rollup_from_tier
 
 
@@ -145,3 +149,91 @@ def minhash_signatures_expr(
         for i in range(n_hashes)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
+
+
+def _dlit(v: float) -> str:
+    """Exact SQL double literal: repr() is the shortest round-tripping
+    decimal and both Python and Spark parse decimal→double with correct
+    rounding, so the parsed Literal is bit-identical to F.lit(float(v))."""
+    return f"{v!r}D"
+
+
+def _plane_dot(vec_col: str, plane: np.ndarray) -> Column:
+    """vec·plane as ONE parsed SQL expression (one py4j round trip, not
+    hundreds per plane): the left-associated (((0.0 + x0·p0) + x1·p1) + ...)
+    chain with CAST(vec[k] AS DOUBLE) terms."""
+    terms = " + ".join(
+        f"CAST({vec_col}[{k}] AS DOUBLE) * {_dlit(float(v))}"
+        for k, v in enumerate(plane)
+    )
+    return F.expr(f"0.0D + {terms}")
+
+
+def _bucket_expr(vec_col: str, planes: np.ndarray) -> Column:
+    """Catalyst LSH bucket: one '0'/'1' char per plane, '1' iff the dot is
+    > 0. similarity._bucket_strings_kernel is pinned to this form."""
+    bits = [
+        (_plane_dot(vec_col, p) > 0).cast("int").cast("string") for p in planes
+    ]
+    return F.concat(*bits)
+
+
+def _ivf_cell_scores(vec_col: str, centroids: np.ndarray) -> list[Column]:
+    """Per-cell score struct (|c|² − 2·v·c, cell) — the first element of
+    their array_sort is the nearest centroid (the |v|² term is constant
+    across cells). similarity._assign_cells_kernel and the IVF query's
+    probe order are pinned to this form."""
+    out = []
+    for i, c in enumerate(centroids):
+        n2 = float(c @ c)
+        score = F.lit(n2) - 2.0 * _plane_dot(vec_col, c)
+        out.append(F.struct(score.alias("d"), F.lit(i).alias("c")))
+    return out
+
+
+def simhash_expr(docs: DataFrame, bits: int = 64) -> DataFrame:
+    """Pure-Catalyst SimHash (the pre-round-7 implementation): a single
+    per-row higher-order array fold (aggregate over the word-hash array of
+    zip_with'd ±1 vote vectors) — zero shuffle, no Python. Reads bits // 4
+    hex nibbles, so it is a reference only for bits % 4 == 0. The
+    independent reference the dedup.simhash kernel is pinned against."""
+    nibbles = bits // 4
+    hashes = F.transform(_words(), lambda w: F.substring(F.md5(w), 1, nibbles))
+    # hex char -> its 4-bit ±1 vote vector, as a 16-entry literal map: one
+    # lookup + flatten per nibble beats 4 arithmetic bit extractions
+    vote_map = F.create_map(
+        *[
+            part
+            for c in "0123456789abcdef"
+            for part in (
+                F.lit(c),
+                F.array(
+                    *[
+                        F.lit(1 if (int(c, 16) >> (3 - b)) & 1 else -1)
+                        for b in range(4)
+                    ]
+                ),
+            )
+        ]
+    )
+
+    def votes(hx: Column) -> Column:
+        # ±1 vote vector of length `bits` for one word hash: per-nibble
+        # map lookup, flattened in hex-digit order (bit b = nibble b//4,
+        # position 3-(b%4) — exactly the map entries' order).
+        return F.flatten(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(nibbles - 1)),
+                lambda j: F.element_at(vote_map, F.substr(hx, j + 1, F.lit(1))),
+            )
+        )
+
+    acc = F.aggregate(
+        hashes,
+        F.array_repeat(F.lit(0), bits),
+        lambda a, hx: F.zip_with(a, votes(hx), lambda x, v: x + v),
+    )
+    sim = F.concat_ws(
+        "", F.transform(acc, lambda s: (s > 0).cast("int").cast("string"))
+    )
+    return docs.select("doc_id", sim.alias("simhash"))

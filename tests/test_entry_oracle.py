@@ -118,6 +118,26 @@ def test_ivf_oracle_exact_off_contract_sf(spark, sf_dir):
     )
 
 
+def test_ivf_cell_norm_term_is_the_oracle_literal():
+    """The IVF kernel's |c|² term must be the double the oracle embeds,
+    float(c @ c), bit for bit. (C * C).sum(axis=1) is not: it differs by
+    up to 2.8e-17 on 7 of the 16 contract-SF centroids. With v = 0 the
+    score |c|² − 2·v·c is the |c|² term alone."""
+    import re
+
+    from fusets_spark.operators.similarity import _cell_scores
+
+    mod = _entry_mod()
+    C = mod._ivf_centroids()
+    lits = re.findall(
+        r"\((\d+), \[[^\]]*\]::DOUBLE\[\], ([^)]+)\)", mod._ivf_oracle()
+    )
+    assert [int(i) for i, _ in lits] == list(range(len(C)))
+    want = np.array([float(n2) for _, n2 in lits])
+    got = _cell_scores(np.zeros(C.shape[1]), C)
+    assert (got.view(np.int64) == want.view(np.int64)).all()
+
+
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.1"])
 def test_mogpr_oracle_exact_off_contract_sf(spark, sf_dir):

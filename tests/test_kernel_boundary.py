@@ -5,9 +5,11 @@ applyInPandas. The block fold stays single too: only codec.blocks.block_frame
 the package calls encode_block. So does the tier aggregate: min_by/max_by
 appear only in rollup.point_aggs / merge_aggs (and phenology's phenometric
 argmins), and no tier site takes min/max over a struct; the rollup
-stream aggregates only through the batch rollup_from_raw. Also pins
-fanout_partitions, the scan-side sizing helper that lives beside
-kernels.py's grouped boundary."""
+stream aggregates only through the batch rollup_from_raw. Each kernel
+has one form in the package: the second forms tests pin it against live
+in tests/reference_impls.py, and no package module defines or imports
+them. Also pins fanout_partitions, the scan-side sizing helper that lives
+beside kernels.py's grouped boundary."""
 
 from __future__ import annotations
 
@@ -286,6 +288,79 @@ def test_guard_catches_a_stream_aggregate():
         ("stream_rollup_df", "groupBy", 2),
         ("stream_rollup_df", "window", 3),
         ("stream_rollup_df", "withWatermark", 2),
+    ]
+
+
+REFERENCE_IMPLS = Path(__file__).resolve().parent / "reference_impls.py"
+# deleted with no reference form: lsh_bucket's only caller was a test
+_DELETED_TWINS = {"lsh_bucket"}
+
+
+def _top_level_names(tree: ast.Module) -> set[str]:
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return names
+
+
+def _twin_findings(tree: ast.Module, reference_names: set[str]) -> list[str]:
+    """A package module's top-level definitions that a reference form
+    already defines (or that were deleted), and any import of
+    reference_impls."""
+    found = [
+        f"defines {n}" for n in sorted(_top_level_names(tree) & reference_names)
+    ]
+    for node in ast.walk(tree):
+        mods = []
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mods = [node.module or ""] + [a.name for a in node.names]
+        found += [
+            f"imports reference_impls:{node.lineno}"
+            for m in mods
+            if m.split(".")[-1] == "reference_impls"
+        ]
+    return found
+
+
+def test_reference_forms_stay_in_the_tests():
+    reference_names = _top_level_names(ast.parse(REFERENCE_IMPLS.read_text()))
+    for name in ("_bucket_expr", "_ivf_cell_scores", "_plane_dot", "_dlit",
+                 "simhash_expr"):
+        assert name in reference_names
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        bad += [
+            f"{rel}: {f}"
+            for f in _twin_findings(tree, reference_names | _DELETED_TWINS)
+        ]
+    assert not bad, (
+        "one form per kernel; second forms belong in tests/reference_impls.py:\n"
+        + "\n".join(bad)
+    )
+
+
+def test_guard_catches_a_returning_twin():
+    src = (
+        "from tests.reference_impls import simhash_expr\n"
+        "import reference_impls\n"
+        "def _bucket_expr(vec_col, planes):\n"
+        "    def simhash_expr(): pass\n"
+        "lsh_bucket = _bucket_expr\n"
+        "class _dlit: pass\n"
+        "def bucket_strings(df): pass\n"
+    )
+    names = {"_bucket_expr", "_dlit", "simhash_expr"} | _DELETED_TWINS
+    assert _twin_findings(ast.parse(src), names) == [
+        "defines _bucket_expr", "defines _dlit", "defines lsh_bucket",
+        "imports reference_impls:1", "imports reference_impls:2",
     ]
 
 

@@ -27,11 +27,19 @@ def test_ann_recall_vs_exact(spark):
 
 
 def test_lsh_bucket_deterministic_across_partitioning(spark):
-    from fusets_spark.operators.similarity import lsh_bucket
+    from fusets_spark.operators.similarity import (
+        _bucket_strings_kernel,
+        make_planes,
+    )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a = lsh_bucket(emb).select("vec_id", "bucket").toPandas()
-    b = lsh_bucket(emb.repartition(13)).select("vec_id", "bucket").toPandas()
+    sets = [("bucket", make_planes(12, 64, 42))]
+    a = _bucket_strings_kernel(emb, sets, 64).select("vec_id", "bucket").toPandas()
+    b = (
+        _bucket_strings_kernel(emb.repartition(13), sets, 64)
+        .select("vec_id", "bucket")
+        .toPandas()
+    )
     a = a.sort_values("vec_id").reset_index(drop=True)
     b = b.sort_values("vec_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
@@ -39,14 +47,14 @@ def test_lsh_bucket_deterministic_across_partitioning(spark):
 
 def test_bucket_kernel_matches_expression(spark):
     """The mapInPandas bucket-assignment kernel must be BIT-IDENTICAL to
-    the `_bucket_expr` Catalyst form on the real corpus, for both the ann
-    plane set and every near-dup table's set, and its norm column must be
-    bit-identical to the `_norm` unrolled expression (int64 bit compare —
-    a single flipped near-zero margin would change a bucket string)."""
+    the `_bucket_expr` Catalyst reference on the real corpus, for both the
+    ann plane set and every near-dup table's set, and its norm column must
+    be bit-identical to the `_norm` unrolled expression (int64 bit compare
+    — a single flipped near-zero margin would change a bucket string)."""
     import numpy as np
+    from reference_impls import _bucket_expr
 
     from fusets_spark.operators.similarity import (
-        _bucket_expr,
         _bucket_strings_kernel,
         _norm,
         make_planes,
@@ -565,8 +573,9 @@ def test_embedding_neardup_matches_naive_reference(spark):
     with local lowest-shared-table dedup) must produce EXACTLY the rows of
     the naive reference shape: per-table self-join on the bucket, union
     over tables, dropDuplicates, per-pair cosine — the round-6 semantics."""
+    from reference_impls import _bucket_expr
+
     from fusets_spark.operators.similarity import (
-        _bucket_expr,
         _dot,
         _norm,
         embedding_neardup_pairs,
@@ -617,20 +626,29 @@ def test_embedding_neardup_matches_naive_reference(spark):
 def test_simhash_kernel_matches_expression(spark):
     """The round-7 vectorized simhash kernel must be BIT-IDENTICAL to the
     pure-Catalyst fold it replaced — integer votes, so exact equality is
-    well-defined. Covers the corpus plus edge cases: NULL text (expression
-    form yields "" via concat_ws over the NULL fold), empty text, spaces
-    only, runs of spaces, unicode."""
-    from fusets_spark.operators.dedup import simhash, simhash_expr
+    well-defined. Covers the corpus at 60, 64 and 124 bits (the kernel
+    reads ceil(bits/8) digest bytes; the reference reads bits/4 nibbles)
+    plus edge cases: NULL text (expression form yields "" via concat_ws
+    over the NULL fold), empty text, spaces only, runs of spaces,
+    unicode. Widths outside 1..128 raise."""
+    from reference_impls import simhash_expr
+
+    from fusets_spark.operators.dedup import simhash
+
+    def _same(df, bits):
+        a = simhash(df, bits).toPandas().sort_values("doc_id").reset_index(drop=True)
+        b = (
+            simhash_expr(df, bits)
+            .toPandas()
+            .sort_values("doc_id")
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(a, b)
+        assert (a["simhash"].str.len().isin([0, bits])).all()
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    a = simhash(docs).toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = (
-        simhash_expr(docs)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    for bits in (60, 64, 124):
+        _same(docs, bits)
 
     edge = spark.createDataFrame(
         pd.DataFrame(
@@ -647,14 +665,10 @@ def test_simhash_kernel_matches_expression(spark):
             }
         )
     )
-    a = simhash(edge).toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = (
-        simhash_expr(edge)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    _same(edge, 64)
+    for bits in (0, 132):  # outside the md5 width
+        with pytest.raises(ValueError, match="1..128"):
+            simhash(edge, bits)
 
 
 def test_minhash_kernel_matches_expression(spark):
@@ -707,15 +721,16 @@ def test_minhash_kernel_matches_expression(spark):
 
 def test_ivf_cell_kernel_matches_expression(spark):
     """The vectorized nearest-centroid kernel must assign EXACTLY the cells
-    the Catalyst form (array_sort over per-cell score structs) assigns —
+    the Catalyst reference (array_sort over per-cell score structs) assigns —
     same left-fold float association, same tie-break toward the lower cell
     index."""
     import numpy as np
     from pyspark.sql import functions as F
 
+    from reference_impls import _ivf_cell_scores
+
     from fusets_spark.operators.similarity import (
         _assign_cells_kernel,
-        _ivf_cell_scores,
         kmeans_fit,
     )
 
@@ -743,3 +758,121 @@ def test_ivf_cell_kernel_matches_expression(spark):
         .reset_index(drop=True)
     )
     assert (got["cell"].to_numpy() == want["cell"].to_numpy()).all()
+
+
+def _ivf_test_centroids(n_cells: int = 4, dim: int = 64) -> np.ndarray:
+    rng = np.random.default_rng(3)
+    return rng.standard_normal((n_cells, dim))
+
+
+def _similarity_op(op: str, emb):
+    from fusets_spark.operators import similarity as S
+
+    if op == "ann_topk_lsh":
+        return S.ann_topk_lsh(emb, 0, n_planes=3)
+    if op == "ivf_topk":
+        return S.ivf_topk(emb, 0, centroids=_ivf_test_centroids())
+    return S.embedding_neardup_pairs(emb, threshold=0.0, n_planes=2)
+
+
+@pytest.mark.parametrize(
+    "bad", ["null_embedding", "short", "null_element", "nan_element"]
+)
+@pytest.mark.parametrize(
+    "op", ["ann_topk_lsh", "ivf_topk", "embedding_neardup_pairs"]
+)
+def test_malformed_embedding_fails_fast_naming_the_row(spark, op, bad):
+    """Malformed-input contract of the embedding operators: a NULL
+    embedding, a wrong length, or a NULL or NaN element fails fast with a
+    ValueError that names the vec_id — never a NaN bucket bit or a NaN
+    cosine that the threshold filter would keep."""
+    rng = np.random.default_rng(0)
+    rows = [(i, rng.standard_normal(64).tolist(), i % 3) for i in range(12)]
+    vec = rows[7][1]
+    rows[7] = (7, {
+        "null_embedding": None,
+        "short": vec[:63],
+        "null_element": vec[:5] + [None] + vec[6:],
+        "nan_element": vec[:5] + [float("nan")] + vec[6:],
+    }[bad], 1)
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    with pytest.raises(Exception, match=r"ValueError: vec_id 7: "):
+        _similarity_op(op, emb).collect()
+
+
+@pytest.mark.parametrize("op", ["ann_topk_lsh", "ivf_topk"])
+def test_malformed_query_row_fails_before_any_kernel(spark, op):
+    """The query side loads its row through the same loader, on the
+    driver, so a NaN query vector fails while the plan is built."""
+    rng = np.random.default_rng(0)
+    rows = [(i, rng.standard_normal(64).tolist(), 0) for i in range(4)]
+    rows[0] = (0, [float("nan")] * 64, 0)
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    with pytest.raises(ValueError, match=r"vec_id 0: NULL or NaN"):
+        _similarity_op(op, emb)
+
+
+def test_absent_query_row_returns_an_empty_ranked_frame(spark):
+    """A query_vec_id with no row ranks nothing: an empty frame with the
+    schema the present-query frame has, from all three top-k operators."""
+    from fusets_spark.operators.similarity import (
+        ann_topk_lsh,
+        cosine_topk,
+        ivf_topk,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    C = _ivf_test_centroids()
+    for topk in (
+        cosine_topk,
+        lambda e, q: ann_topk_lsh(e, q, n_planes=5),
+        lambda e, q: ivf_topk(e, q, centroids=C),
+    ):
+        present, absent = topk(emb, 0), topk(emb, -1)
+        assert absent.schema == present.schema
+        assert absent.schema.simpleString() == (
+            "struct<vec_id:bigint,label:int,cos:double,rank:int>"
+        )
+        assert absent.collect() == []
+
+
+def test_query_side_folds_match_the_catalyst_references(spark):
+    """The driver-side query folds are bit-identical to the Catalyst
+    reference forms: LSH margins against `_plane_dot`, and the IVF probe
+    order against array_sort over `_ivf_cell_scores` (ties to the lower
+    cell in both)."""
+    from reference_impls import _ivf_cell_scores, _plane_dot
+
+    from fusets_spark.operators.similarity import (
+        _cell_scores,
+        _embedding_matrix,
+        _plane_margins,
+        make_planes,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter("vec_id < 40")
+    planes = make_planes(8, 64, 42)
+    C = _ivf_test_centroids(16)
+    ref = (
+        emb.select(
+            "vec_id",
+            "embedding",
+            F.array(*[_plane_dot("embedding", p) for p in planes]).alias("m"),
+            F.transform(
+                F.array_sort(F.array(*_ivf_cell_scores("embedding", C))),
+                lambda s: s["c"],
+            ).alias("order"),
+        )
+        .toPandas()
+        .sort_values("vec_id")
+    )
+    for vid, v, m, order in ref.itertuples(index=False):
+        q = _embedding_matrix([vid], [v], 64)[0]
+        got_m = _plane_margins(q, planes)
+        assert (got_m.view(np.int64) == np.asarray(m).view(np.int64)).all()
+        got_order = np.argsort(_cell_scores(q, C), kind="stable")
+        assert got_order.tolist() == list(order)
