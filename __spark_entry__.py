@@ -55,6 +55,19 @@ _WHIT_CUTOFF = "2024-01-11 00:00:00"
 _MOGPR_CUTOFF = "2024-01-06 00:00:00"
 
 
+def _query_temp_dir(prefix: str) -> str:
+    """A fresh directory under the temp root for one query call, removed at
+    interpreter exit: the lazy frame the query returns still reads from it,
+    so it must outlive the call, and exit is after the frame's last use."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Pin UTC: bucket math is epoch-based (tz-independent) but timestamp
     # rendering at the Arrow boundary and timestamp literals are not. The
@@ -140,8 +153,6 @@ def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials are read back through rollup.merge_tier_partials, as any
     reader of the stream does. Oracle: identical SQL as rollup_1m —
     streaming must not change one value."""
-    import tempfile
-
     from fusets_spark.operators.rollup import merge_tier_partials
     from fusets_spark.streaming.rollup_stream import start_stream_rollup
 
@@ -151,8 +162,9 @@ def q_stream_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     # the streaming file source requires a DIRECTORY to watch; the test
     # fixture is a single parquet file, so watch a temp dir holding a
-    # symlink to it (zero copy). The partials stay there for the caller.
-    root = tempfile.mkdtemp(prefix="fusets_stream_rollup_")
+    # symlink to it (zero copy). The partials stay there for the caller
+    # until interpreter exit.
+    root = _query_temp_dir("fusets_stream_rollup_")
     watch_dir, out = os.path.join(root, "src"), os.path.join(root, "out")
     os.mkdir(watch_dir)
     os.symlink(path, os.path.join(watch_dir, "events.parquet"))
@@ -1220,15 +1232,13 @@ def q_retention_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving tier rows are read back. Oracle = the same 1m rollup minus
     the weeks whose max bucket_ts fell past the horizon — verifying the
     metadata-driven expiry decision AND that surviving data is untouched."""
-    import tempfile
-
     from fusets_spark.plans.lineage import TierStore
 
     pts = _event_points(spark, sf_dir)
     t1m = rollup_from_raw(pts, "1m", integer_values=False).withColumn(
         "week", F.weekofyear("bucket_ts")
     )
-    store = TierStore(tempfile.mkdtemp(prefix="fusets_retention_"))
+    store = TierStore(_query_temp_dir("fusets_retention_"))
     # one staged write for ALL weekly batches (write_batches), manifest
     # stats observed per week on that write — a per-week commit would
     # re-execute the full rollup once per week. Layout and manifest
@@ -1259,8 +1269,6 @@ def q_late_data_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1 obs and would never merge) and partial sums are bit-exact under any
     merge order. first/last merge through the stored order keys
     (first_pos/last_pos), the part a naive re-aggregation gets wrong."""
-    import tempfile
-
     from fusets_spark.operators.rollup import (
         merge_tier_partials,
         rollup_from_raw,
@@ -1274,7 +1282,7 @@ def q_late_data_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.floor(F.col("value") * 1000).cast("long").alias("value"),
     )
-    store = TierStore(tempfile.mkdtemp(prefix="fusets_latedata_"))
+    store = TierStore(_query_temp_dir("fusets_latedata_"))
     # both batches in one staged commit (write_batches), each its own
     # batch partition + manifest + watermark
     batched = [

@@ -8,10 +8,11 @@ convention, whittaker.py:40-42). A (doc_id, bucket) group never spans two
 input rows — the tokens array IS the whole series — so both folds are pure
 maps: no explode, no shuffle.
 
-The dominant cost is the parquet array decode + Arrow transfer + token
-flattening (~85% of kernel CPU at bench shape; the numpy folds are ~15%),
-so each Arrow batch is decoded once (decode_token_batch) and feeds both the
-ladder fold (ladder_frames) and the block fold (codec.blocks.block_frame).
+The dominant cost is the block fold (codec.blocks.block_frame, ~70% of
+kernel CPU on a perfbench-shaped 2048-row batch); the token decode and the
+pandas->Arrow hand-back are ~8% each, the ladder fold ~6%. Each Arrow batch
+is decoded once (decode_token_batch) and feeds both the ladder fold
+(ladder_frames) and the block fold.
 The output is a superset-schema frame with a `kind` discriminator ('tier'
 rows carry the rollup columns, 'block' rows the codec columns; the other
 side holds placeholders); split_ingest separates the two.

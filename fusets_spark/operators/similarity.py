@@ -125,10 +125,11 @@ def _cell_scores(V: np.ndarray, C: np.ndarray) -> np.ndarray:
 
 
 def _query_vector(
-    embeddings: DataFrame, query_vec_id: int, dim: int
+    embeddings: DataFrame, query_vec_id: int, dim: int | None = None
 ) -> np.ndarray | None:
     """The query row's embedding, read on the driver with one first() job;
-    None when no row has query_vec_id."""
+    None when no row has query_vec_id. dim None takes the row's own
+    length."""
     row = (
         embeddings.filter(F.col("vec_id") == query_vec_id)
         .select("embedding")
@@ -136,60 +137,49 @@ def _query_vector(
     )
     if row is None:
         return None
-    return _embedding_matrix([query_vec_id], [row[0]], dim)[0]
+    v = row[0]
+    if dim is None:
+        dim = 0 if v is None else len(v)
+    return _embedding_matrix([query_vec_id], [v], dim)[0]
 
 
-def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Partial top-k (TakeOrderedAndProject — no single-partition global
-    sort), then rank ONLY the k survivors (window over ≤k rows)."""
-    top = scored.orderBy(F.col("cos").desc(), F.col(id_col).asc()).limit(k)
-    # constant partition key: identical ≤k-row cost, but avoids the noisy
-    # (and at-scale alarming) WindowExec "No Partition Defined" warning.
-    # Must be NON-FOLDABLE (id*0, not lit(0)) or Spark 4's
-    # EliminateWindowPartitions folds it away and the warning returns.
-    top = top.withColumn("_p", F.col(id_col) * 0)
-    w = Window.partitionBy("_p").orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col,
-        "label",
-        # cos is signed: normalize -0.0 after rounding (driver hash).
-        (F.round("cos", 6) + F.lit(0.0)).alias("cos"),
-        "rank",
-    )
+def cosine_topk(embeddings: DataFrame, query_vec_id: int, k: int = 20) -> DataFrame:
+    """Exact top-k by cosine similarity to one stored vector. The query row
+    is read on the driver (one first() job) and enters the plan as a
+    literal, so the plan scans embeddings once, with no join. No row with
+    query_vec_id gives an empty frame."""
+    q = _query_vector(embeddings, query_vec_id)
+    return _ranked_candidates(embeddings, q, k)
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine similarity to one stored vector. The 1-row
-    query side is broadcast; ranking is fully deterministic
-    (cos DESC, vec_id ASC)."""
-    q = embeddings.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec")
-    )
-    joined = embeddings.crossJoin(F.broadcast(q))
-    cos = _dot(F.col(vec_col), F.col("qvec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("qvec"))
-    )
-    scored = joined.select(F.col(id_col), F.col("label"), cos.alias("cos"))
-    return _ranked_topk(scored, k, id_col)
-
-
-def _ranked_candidates(cand: DataFrame, q: np.ndarray, k: int) -> DataFrame:
+def _ranked_candidates(cand: DataFrame, q: np.ndarray | None, k: int) -> DataFrame:
     """Exact cosine of each candidate against the query vector, which
-    enters the plan as an array literal, then the ranked top-k."""
+    enters the plan as an array literal, then the ranked top-k, fully
+    deterministic (cos DESC, vec_id ASC). No query vector (q None) ranks
+    nothing: an empty frame with the same schema.
+
+    Partial top-k (TakeOrderedAndProject — no single-partition global
+    sort), then rank ONLY the k survivors (window over ≤k rows)."""
+    if q is None:
+        cand, q = cand.limit(0), np.zeros(1)
     qvec = F.lit([float(x) for x in q])
     cos = _dot(F.col("embedding"), qvec) / (
         _norm(F.col("embedding")) * _norm(qvec)
     )
-    return _ranked_topk(
-        cand.select("vec_id", "label", cos.alias("cos")), k, "vec_id"
+    order = (F.col("cos").desc(), F.col("vec_id").asc())
+    top = cand.select("vec_id", "label", cos.alias("cos")).orderBy(*order).limit(k)
+    # constant partition key: identical ≤k-row cost, but avoids the noisy
+    # (and at-scale alarming) WindowExec "No Partition Defined" warning.
+    # Must be NON-FOLDABLE (id*0, not lit(0)) or Spark 4's
+    # EliminateWindowPartitions folds it away and the warning returns.
+    top = top.withColumn("_p", F.col("vec_id") * 0)
+    w = Window.partitionBy("_p").orderBy(*order)
+    return top.withColumn("rank", F.row_number().over(w)).select(
+        "vec_id",
+        "label",
+        # cos is signed: normalize -0.0 after rounding (driver hash).
+        (F.round("cos", 6) + F.lit(0.0)).alias("cos"),
+        "rank",
     )
 
 
@@ -287,7 +277,7 @@ def ann_topk_lsh(
     # plan as literals, so the plan scans embeddings once, with no join
     q = _query_vector(embeddings, query_vec_id, dim)
     if q is None:
-        return _ranked_candidates(embeddings.limit(0), np.zeros(dim), k)
+        return _ranked_candidates(embeddings, None, k)
     bucketed = _bucket_strings_kernel(embeddings, [("bucket", planes)], dim)
     cand = bucketed.filter(
         F.col("bucket").isin(probe_buckets(q, planes, n_probes))
@@ -406,7 +396,7 @@ def ivf_topk(
     # computed on the driver (one first() job) and passed in as literals
     q = _query_vector(embeddings, query_vec_id, C.shape[1])
     if q is None:
-        return _ranked_candidates(embeddings.limit(0), np.zeros(C.shape[1]), k)
+        return _ranked_candidates(embeddings, None, k)
     cells = np.argsort(_cell_scores(q, C), kind="stable")[:nprobe]
     cand = _assign_cells_kernel(embeddings, C).filter(
         F.col("cell").isin([int(c) for c in cells])

@@ -3,17 +3,40 @@
 Local-mode settings mirror what a 1000-executor cluster deployment would set
 per-executor; on a real cluster the same builder is used with
 ``spark-submit --py-files fusets_spark.zip`` (see plans/pipeline.py docstring).
+
+Python workers start from the engine's own daemon, ``fusets_spark.worker_boot``
+(``spark.python.daemon.module``): PySpark's stock daemon with
+``zipimport.zipimporter.invalidate_caches`` made a no-op. A reused worker
+otherwise re-reads the directory of each of its 17 cached zips (``pyspark.zip``
+and its subpackages, py4j, the spark-core jar, the package zip) before every
+task, which is most of a Python task's fixed cost. The no-op is safe: a zip
+never changes under a live worker, since Spark refuses to re-register a path
+with other content, and a zip added later by ``addPyFile`` has no cached
+importer, so its first import reads it fresh.
+
+The daemon module must be importable before any task ships the package. In
+local mode ``spark.executorEnv.PYTHONPATH`` names the directory holding
+``fusets_spark``. On a cluster ``--py-files fusets_spark.zip`` puts the zip on
+the executors' path, and the boot module resolves from it; the driver-local
+directory in ``spark.executorEnv.PYTHONPATH`` names nothing there and is
+skipped. Workers still load the rest of the package from where they did with
+the stock daemon (cwd, shipped zip, path), because the boot module drops the
+package it was imported through before any worker forks.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import tempfile
 import zipfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[int] = set()
+# the directory holding fusets_spark: where local workers find worker_boot
+_PACKAGE_PARENT = str(Path(__file__).resolve().parents[1])
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -22,18 +45,20 @@ def ship_package(spark: SparkSession) -> None:
     Zips the package and registers it via addPyFile — the same mechanism as
     `spark-submit --py-files fusets_spark.zip` on a real cluster (north rule).
     Needed because the driver's sys.path does not propagate to workers.
-    Idempotent per SparkContext.
+    Idempotent per SparkContext. The zip is written once per process under
+    the temp root (``tempfile.gettempdir()``) and removed at interpreter exit.
     """
     sc = spark.sparkContext
     key = id(sc)
     if key in _SHIPPED:
         return
     pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(f"/tmp/fusets_spark-{os.getpid()}.zip")
+    zip_path = Path(tempfile.gettempdir()) / f"fusets_spark-{os.getpid()}.zip"
     if not zip_path.exists():
         with zipfile.ZipFile(zip_path, "w") as zf:
             for p in sorted(pkg_dir.rglob("*.py")):
                 zf.write(p, f"fusets_spark/{p.relative_to(pkg_dir)}")
+        atexit.register(zip_path.unlink, missing_ok=True)
     sc.addPyFile(str(zip_path))
     _SHIPPED.add(key)
 
@@ -54,6 +79,11 @@ def get_spark(
         gives it one state shard per core. Grouped numpy kernels do not take
         it either: kernels.group_kernel repartitions them to
         defaultParallelism × 4, a width AQE does not coalesce.
+    extra_conf: applied last, so it overrides any setting above, including
+        the two that start Python workers from ``fusets_spark.worker_boot``
+        (``spark.python.daemon.module``, ``spark.executorEnv.PYTHONPATH``;
+        see the module docstring). ``{"spark.python.daemon.module":
+        "pyspark.daemon"}`` restores PySpark's stock daemon.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 8
@@ -77,6 +107,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.python.daemon.module", "fusets_spark.worker_boot")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

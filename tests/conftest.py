@@ -24,3 +24,24 @@ def set_buckets(monkeypatch):
         monkeypatch.setattr(kernels, "n_buckets", lambda spark, policy: n)
 
     return _set
+
+
+@pytest.fixture
+def temp_root(tmp_path, monkeypatch):
+    """tmp_path as the temp root (tempfile.gettempdir()), with atexit
+    registrations recorded instead of registered. Returns (root, run_exit):
+    run_exit() runs the recorded hooks, as interpreter exit would."""
+    import atexit
+    import tempfile
+
+    hooks = []
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *a, **kw: hooks.append((fn, a, kw))
+    )
+
+    def run_exit() -> None:
+        for fn, args, kwargs in hooks:
+            fn(*args, **kwargs)
+
+    return tmp_path, run_exit

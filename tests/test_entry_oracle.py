@@ -96,6 +96,24 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) > 0
 
 
+def test_driver_queries_leave_the_temp_root_as_found(spark, temp_root):
+    """The queries that stage a stream or a store under the temp root
+    (stream rollup, late-data merge, retention) keep it while their lazy
+    frame can still read it and remove it at interpreter exit: collect,
+    run the exit hooks, and the temp root is as the calls found it."""
+    from fusets_spark.session import ship_package
+
+    mod = _entry_mod()
+    root, run_exit = temp_root
+    ship_package(spark)  # its zip has its own test (test_worker_boot.py)
+    before = sorted(root.iterdir())
+    for name in ("stream_rollup_1m", "late_data_merge", "retention_horizon"):
+        assert mod.queries()[name](spark, mod.SF0001).collect()
+    assert len(sorted(root.iterdir())) == len(before) + 3
+    run_exit()
+    assert sorted(root.iterdir()) == before
+
+
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.1"])
 def test_ivf_oracle_exact_off_contract_sf(spark, sf_dir):

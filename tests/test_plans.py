@@ -124,8 +124,9 @@ def test_dedup_reuses_materialized_intermediates(spark):
     )
 
 
-def test_broadcast_join_for_small_side(spark):
-    """The cosine top-k query must broadcast its 1-row query side."""
+def test_cosine_topk_scans_embeddings_once(spark):
+    """The cosine top-k query reads its 1-row query side on the driver, so
+    its plan scans embeddings once, with no join and no broadcast."""
     import importlib.util
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", "/root/repo/__spark_entry__.py"
@@ -133,7 +134,8 @@ def test_broadcast_join_for_small_side(spark):
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     plan = _plan(mod.queries()["cosine_topk"](spark, SF))
-    assert "Broadcast" in plan
+    assert plan.count("FileScan parquet") == 1, "cosine_topk re-scans corpus"
+    assert "Broadcast" not in plan and "Join" not in plan, plan
 
 
 def _grouped_operators():

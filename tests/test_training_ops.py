@@ -768,6 +768,8 @@ def _ivf_test_centroids(n_cells: int = 4, dim: int = 64) -> np.ndarray:
 def _similarity_op(op: str, emb):
     from fusets_spark.operators import similarity as S
 
+    if op == "cosine_topk":
+        return S.cosine_topk(emb, 0)
     if op == "ann_topk_lsh":
         return S.ann_topk_lsh(emb, 0, n_planes=3)
     if op == "ivf_topk":
@@ -802,7 +804,7 @@ def test_malformed_embedding_fails_fast_naming_the_row(spark, op, bad):
         _similarity_op(op, emb).collect()
 
 
-@pytest.mark.parametrize("op", ["ann_topk_lsh", "ivf_topk"])
+@pytest.mark.parametrize("op", ["cosine_topk", "ann_topk_lsh", "ivf_topk"])
 def test_malformed_query_row_fails_before_any_kernel(spark, op):
     """The query side loads its row through the same loader, on the
     driver, so a NaN query vector fails while the plan is built."""
