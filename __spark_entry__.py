@@ -236,8 +236,9 @@ def q_whittaker_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # group count follows whittaker.BUCKETS (defaultParallelism × 2,
-    # floored at 32) so solver parallelism scales with the cluster
+    # group count follows the input's size estimate (kernels.n_buckets:
+    # defaultParallelism × 2 to × 8), so solver parallelism scales with
+    # the cluster
     out = whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600)
     return out.select(
         "source", "doc_id", "ts", F.round("value_smooth", 6).alias("value_smooth")
@@ -257,6 +258,7 @@ def q_stream_block_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte-level equality with encode_blocks is additionally pinned in
     tests/test_streaming.py)."""
     import hashlib
+    import tempfile
 
     from fusets_spark.codec.blocks import decode_blocks
     from fusets_spark.streaming.block_stream import seal_all_with_sentinels
@@ -264,10 +266,11 @@ def q_stream_block_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _event_points(spark, sf_dir).select(
         "source", F.col("doc_id").cast("string").alias("doc_id"), "ts", "value"
     )
-    # fixed per-SF path (overwritten each run) — a fresh mkdtemp per call
-    # would accumulate full event-table copies in /tmp across rounds
+    # fixed per-SF path under the temp root (overwritten each run) — a
+    # fresh mkdtemp per call would accumulate full event-table copies there
+    # across rounds
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    work = f"/tmp/fusets_stream_blocks_{tag}"
+    work = os.path.join(tempfile.gettempdir(), f"fusets_stream_blocks_{tag}")
     # sealed blocks stream straight to parquet files under a checkpoint
     # (exactly-once); the return is a plain scan of the sink
     sealed = seal_all_with_sentinels(
@@ -293,6 +296,7 @@ def q_csv_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reads the same rows straight from parquet, so the whole
     write→infer→melt round trip must be value-exact."""
     import hashlib
+    import tempfile
 
     from fusets_spark.sources.loaders import load_points_csv
 
@@ -305,9 +309,11 @@ def q_csv_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("event_type")
         .agg(F.first("value"))
     )
-    # fixed per-SF path (mode=overwrite) — no /tmp accumulation across runs
+    # fixed per-SF path under the temp root (mode=overwrite) — no
+    # accumulation across runs
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"/tmp/fusets_csv_{tag}/events_wide"
+    root = os.path.join(tempfile.gettempdir(), f"fusets_csv_{tag}")
+    path = os.path.join(root, "events_wide")
     wide.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     out = load_points_csv(
         spark, path, time_col="Index", series_cols=["user_id"]
@@ -334,6 +340,7 @@ def q_netcdf_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
     import shutil
+    import tempfile
 
     import numpy as np
     import pandas as pd
@@ -357,10 +364,10 @@ def q_netcdf_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mean a stale .nc from a prior run (data regenerated with a
     # different event_type set at the same path) would be ingested by
     # load_netcdf_dir and corrupt the row. Local-mode assumption:
-    # executors share the driver's /tmp (true on local[n], which is
+    # executors share the driver's temp root (true on local[n], which is
     # where driver rows run; a cluster would use a shared store).
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/fusets_nc_{tag}"
+    root = os.path.join(tempfile.gettempdir(), f"fusets_nc_{tag}")
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
     first_et = sorted(daily["event_type"].unique())[0]
@@ -445,6 +452,7 @@ def q_geotiff_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
     import shutil
+    import tempfile
 
     import numpy as np
     import pandas as pd
@@ -466,10 +474,10 @@ def q_geotiff_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     di = {d.date(): i for i, d in enumerate(days)}
     nod = -9999.0
     # fixed per-SF dir, fully cleared each run (stale granules from a
-    # prior data generation would corrupt the row); local-mode /tmp
+    # prior data generation would corrupt the row); local-mode temp-root
     # sharing assumption as q_netcdf_load
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/fusets_tif_{tag}"
+    root = os.path.join(tempfile.gettempdir(), f"fusets_tif_{tag}")
     shutil.rmtree(root, ignore_errors=True)
     ets = sorted(daily["event_type"].unique())
     times = list(days)

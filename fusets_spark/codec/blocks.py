@@ -11,8 +11,8 @@ frame. Grouping by (series, bucket) directly would create millions of tiny
 groups and drown in Spark's per-group applyInPandas machinery (measured
 ~8 ms/group — 60x slower than the codec itself); hash-bucketing amortizes
 that overhead to ~zero while the bucket count bounds per-task memory at
-cluster scale (results are independent of it). The codec's bucket policy
-is BUCKETS (floor 256, 8 per core), which the stream sealer shares.
+cluster scale (results are independent of it). The bucket count follows
+the input (kernels.n_buckets), as for every grouped kernel.
 
 Every block in the package is built by ONE fold, block_frame: per-point
 arrays in canonical (series, bucket, ts, value) order in, BLOCK_SCHEMA rows
@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels import Buckets, group_kernel
+from ..kernels import group_kernel
 from .gorilla import decode_blocks_batch, encode_blocks_batched
 
 BLOCK_SCHEMA = (
@@ -47,8 +47,6 @@ BLOCK_SCHEMA = (
 POINTS_SCHEMA = "source string, doc_id string, ts timestamp, value double"
 
 CODEC_NAME = "gorilla-dod-xor-v1"
-
-BUCKETS = Buckets(floor=256, per_core=8)
 
 
 def _dt_ns(ns) -> np.ndarray:
@@ -135,7 +133,7 @@ def encode_blocks(
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
         return _fold_points(pdf, block_seconds, value_col)
 
-    return group_kernel(points, _encode, BLOCK_SCHEMA, buckets=BUCKETS)
+    return group_kernel(points, _encode, BLOCK_SCHEMA)
 
 
 def compact_blocks(
@@ -236,7 +234,7 @@ def compact_blocks(
             return frames[0]
         return pd.concat(frames, ignore_index=True)
 
-    return group_kernel(blocks, _compact, BLOCK_SCHEMA, buckets=BUCKETS)
+    return group_kernel(blocks, _compact, BLOCK_SCHEMA)
 
 
 def roundtrip_points(
@@ -266,7 +264,7 @@ def roundtrip_points(
             }
         )
 
-    return group_kernel(points, _rt, POINTS_SCHEMA, buckets=BUCKETS)
+    return group_kernel(points, _rt, POINTS_SCHEMA)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:

@@ -182,7 +182,8 @@ def encode_blocks_batched(
     always emits the '11' new-window control (never the stateful '10'
     reuse path), which makes the value stream stateless and vectorizable
     at the cost of ~11 bits per changed value; the decoder handles both.
-    Per-point cost is ~100 ns."""
+    Per-point cost is ~500 ns (measured on a ~400k-point ingest batch);
+    _pack_codewords is about half of it."""
     B = len(ts_segments)
     if len(val_segments) != B:
         raise ValueError(

@@ -15,39 +15,34 @@ codec, 60x the codec's own cost). Kernel results are grouping-independent
 by construction (each series lives in exactly one bucket), pinned by the
 grouping-invariance tests.
 
-Each kernel keeps its measured bucket policy (a Buckets constant) at its
-call site; the bucket count is decided here, from the session's
-parallelism. fanout_partitions is the scan-side counterpart for per-row
+The bucket count follows the input (n_buckets): small inputs get a few
+large groups, so the per-group pandas/Arrow overhead is paid a few times,
+not hundreds. fanout_partitions is the scan-side counterpart for per-row
 mapInPandas kernels fused into a narrow scan stage.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-class Buckets(NamedTuple):
-    """Hash-bucket policy of one kernel: max(floor, defaultParallelism ×
-    per_core) buckets — enough to keep every core of a real cluster busy
-    with straggler headroom, floored so small local sessions still
-    amortize the per-group Arrow overhead."""
-
-    floor: int = 64
-    per_core: int = 4
+GROUP_BYTES = 8 << 20  # target input bytes per group
 
 
-def n_buckets(spark: SparkSession, policy: Buckets) -> int:
-    """Bucket count of `policy` on this session."""
-    return max(policy.floor, spark.sparkContext.defaultParallelism * policy.per_core)
+def n_buckets(df: DataFrame) -> int:
+    """min(dP × 8, max(dP × 2, ceil(estimate / GROUP_BYTES))) buckets, dP
+    being defaultParallelism and the estimate the optimized plan's
+    sizeInBytes (no Spark job; unknown is Long.MaxValue, so the cap). The
+    floor keeps every core busy; the cap bounds per-task memory."""
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return min(dp * 8, max(dp * 2, -(-est // GROUP_BYTES)))
 
 
-def bucket_col(df: DataFrame, hash_on: tuple[str, ...], policy: Buckets) -> Column:
-    """pmod(xxhash64(*hash_on), n_buckets): the bucket a series lives in."""
-    n = n_buckets(df.sparkSession, policy)
+def bucket_col(hash_on: tuple[str, ...], n: int) -> Column:
+    """pmod(xxhash64(*hash_on), n): the bucket a series lives in."""
     return F.pmod(F.xxhash64(*hash_on), F.lit(n))
 
 
@@ -58,10 +53,9 @@ def group_kernel(
     *,
     by: tuple[str, ...] = ("source",),
     hash_on: tuple[str, ...] = ("doc_id",),
-    buckets: Buckets = Buckets(),
 ) -> DataFrame:
     """Run `fn` (pandas frame -> pandas frame) once per group of
-    (*by, bucket of hash_on).
+    (*by, bucket of hash_on), with n_buckets(df) buckets.
 
     The exchange is a user-specified repartition by number to
     defaultParallelism × 4 (straggler headroom) on the grouping keys.
@@ -72,7 +66,7 @@ def group_kernel(
     on the same keys is satisfied by it (ClusteredDistribution), so the
     plan has exactly one exchange, of a fixed width."""
     keys = (*by, "_g")
-    grouped = df.withColumn("_g", bucket_col(df, hash_on, buckets))
+    grouped = df.withColumn("_g", bucket_col(hash_on, n_buckets(df)))
     width = df.sparkSession.sparkContext.defaultParallelism * 4
     return (
         grouped.repartition(width, *keys)

@@ -22,15 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels import Buckets, group_kernel
+from ..kernels import group_kernel
 
 SMOOTH_SCHEMA = "source string, doc_id string, ts timestamp, value_smooth double"
-
-# per_core=2 (not the generic 4): this kernel pays a sequential O(n_grid)
-# loop per group, so fewer/larger groups are faster as long as every core
-# still gets ~2 tasks (measured: 64 vs 128 groups at local[32] = 5.0 vs
-# 5.8 s on sf0.1)
-BUCKETS = Buckets(floor=32, per_core=2)
 
 
 def per_series_bands(
@@ -211,15 +205,16 @@ def whittaker_gapfill(
     Scale design: groups are hash buckets of the FULL series key
     (source, doc_id) so one kernel call receives MANY whole series; they
     are padded to a common grid length and solved as one (S, n_max)
-    matrix. The group count is BUCKETS (max(32, defaultParallelism × 2))
-    regardless of how many sources exist — this kernel's cost is dominated
-    by the sequential O(n_grid) time loop which runs once PER GROUP
-    (vectorized across that group's series), so group count must track
-    cluster parallelism, not data cardinality (measured: 640 vs 40 groups
-    on the same sf0.1 input = 2.3× slower). Within a group, series are
-    sub-batched by grid-length octave so short series are never padded to
-    the longest one's grid. Results are independent of the grouping (each
-    series lives in exactly one bucket).
+    matrix. The group count is kernels.n_buckets (from the input's size
+    estimate, between defaultParallelism × 2 and × 8) regardless of how
+    many sources exist — this kernel's cost is dominated by the sequential
+    O(n_grid) time loop which runs once PER GROUP (vectorized across that
+    group's series), so group count must track cluster parallelism, not
+    data cardinality (measured: 640 vs 40 groups on the same sf0.1 input
+    = 2.3× slower). Within a group, series are sub-batched by grid-length
+    octave so short series are never padded to the longest one's grid.
+    Results are independent of the grouping (each series lives in exactly
+    one bucket).
     """
 
     def _smooth(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -311,5 +306,5 @@ def whittaker_gapfill(
 
     return group_kernel(
         points, _smooth, SMOOTH_SCHEMA,
-        by=(), hash_on=("source", "doc_id"), buckets=BUCKETS,
+        by=(), hash_on=("source", "doc_id"),
     )

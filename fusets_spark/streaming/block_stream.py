@@ -42,7 +42,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..codec.blocks import (
     BLOCK_SCHEMA,
-    BUCKETS,
     POINTS_SCHEMA,
     block_frame,
     canonical_order,
@@ -57,6 +56,10 @@ from . import start_per_core
 # boxed objects per micro-batch at 1M buffered points — while
 # tobytes()/frombuffer round-trips are single memcpy-scale operations.
 STATE_DDL = "docs binary, ts_us binary, vals binary"
+
+# fixed bucket floor: _g is part of the state key, so a count that followed
+# the input would misroute a restored checkpoint's open points
+SEAL_BUCKETS = 256
 
 
 def _seal(
@@ -176,8 +179,9 @@ def stream_encode_blocks(
         if frame is not None:
             yield frame
 
+    n = max(SEAL_BUCKETS, stream.sparkSession.sparkContext.defaultParallelism * 8)
     keyed = stream.withWatermark("ts", watermark).withColumn(
-        "_g", bucket_col(stream, ("doc_id",), BUCKETS)
+        "_g", bucket_col(("doc_id",), n)
     )
     return (
         keyed.groupBy("source", "_g")

@@ -16,12 +16,12 @@ def spark() -> SparkSession:
 @pytest.fixture
 def set_buckets(monkeypatch):
     """set_buckets(n): every grouped kernel built after the call hashes its
-    series into n buckets, whatever its bucket policy. The bucket count is
+    series into n buckets, whatever its input's size. The bucket count is
     a literal in the plan, so it holds for as long as the frame lives."""
     from fusets_spark import kernels
 
     def _set(n: int) -> None:
-        monkeypatch.setattr(kernels, "n_buckets", lambda spark, policy: n)
+        monkeypatch.setattr(kernels, "n_buckets", lambda df: n)
 
     return _set
 

@@ -114,6 +114,21 @@ def test_driver_queries_leave_the_temp_root_as_found(spark, temp_root):
     assert sorted(root.iterdir()) == before
 
 
+def test_fixed_query_dirs_land_under_the_temp_root(spark, temp_root):
+    """The queries that write a fixed per-SF directory (the stream sealer's
+    work dir and the csv, netCDF and GeoTIFF granules) root it at
+    tempfile.gettempdir(), wherever that points."""
+    mod = _entry_mod()
+    root, _ = temp_root
+    for q in (mod.q_stream_block_encode, mod.q_csv_load, mod.q_netcdf_load,
+              mod.q_geotiff_load):
+        assert q(spark, mod.SF0001).limit(1).collect()
+    made = sorted(p.name.rsplit("_", 1)[0] for p in root.iterdir())
+    assert made == [
+        "fusets_csv", "fusets_nc", "fusets_stream_blocks", "fusets_tif"
+    ]
+
+
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.1"])
 def test_ivf_oracle_exact_off_contract_sf(spark, sf_dir):

@@ -8,8 +8,9 @@ argmins), and no tier site takes min/max over a struct; the rollup
 stream aggregates only through the batch rollup_from_raw. Each kernel
 has one form in the package: the second forms tests pin it against live
 in tests/reference_impls.py, and no package module defines or imports
-them. Also pins fanout_partitions, the scan-side sizing helper that lives
-beside kernels.py's grouped boundary."""
+them. Also pins the sizing: n_buckets, the grouped kernels' bucket count
+from the input's plan estimate (the stream sealer's count stays fixed), and
+fanout_partitions, its scan-side counterpart."""
 
 from __future__ import annotations
 
@@ -183,14 +184,17 @@ def test_guard_catches_a_second_block_fold():
 
 
 # (file relative to the package, enclosing function) -> why it may take an
-# argmin/argmax aggregate; function "*" allows the whole file
+# argmin/argmax aggregate
 ORDER_KEY_AGGS = {
     ("operators/rollup.py", "point_aggs"): "the tier partial of raw points",
     ("operators/rollup.py", "merge_aggs"): "the merge of tier partials",
-    ("operators/phenology.py", "*"): (
-        "phenometric argmins and extrema over a per-series window "
-        "(min_by over candidate structs, max/min over (value, doy) "
-        "structs), not tier rows"
+    ("operators/phenology.py", "phenometrics"): (
+        "the pos/vos extrema: max/min over (value, doy) structs in a "
+        "per-series window, not tier rows"
+    ),
+    ("operators/phenology.py", "_argmin"): (
+        "the sos/eos argmin: min_by over candidate structs in a per-series "
+        "window, not tier rows"
     ),
 }
 
@@ -221,11 +225,8 @@ def test_tier_aggregate_is_spelled_once():
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         for fn, kind, line in _calls(ast.parse(path.read_text()), _order_key_agg):
-            key = next(
-                (k for k in ((rel, fn), (rel, "*")) if k in ORDER_KEY_AGGS), None
-            )
-            if key:
-                seen.add(key)
+            if (rel, fn) in ORDER_KEY_AGGS:
+                seen.add((rel, fn))
             else:
                 bad.append(f"{rel}:{line}: {kind} in {fn}")
     assert not bad, (
@@ -410,3 +411,68 @@ def test_fanout_widens_a_single_partition_scan(spark, tmp_path, keys):
     plan = out._jdf.queryExecution().executedPlan().toString()
     kind = "hashpartitioning(doc_id" if keys else "RoundRobinPartitioning("
     assert kind in plan and f"{width}), REPARTITION_BY_NUM" in plan
+
+
+@pytest.mark.parametrize(
+    "build, want",
+    [
+        # one row: the floor, a few large groups
+        (lambda s: s.range(1).selectExpr("CAST(id AS STRING) AS doc_id"),
+         lambda dp: dp * 2),
+        # 96 MiB by the estimate: 12 groups of 8 MiB, inside the bounds
+        (lambda s: s.range(12 << 20), lambda dp: min(dp * 8, max(dp * 2, 12))),
+        # ~8 TB: the cap
+        (lambda s: s.range(10**12), lambda dp: dp * 8),
+        # a local list is an RDD scan, which has no size estimate: the cap
+        (lambda s: s.createDataFrame([("d",)], "doc_id string"),
+         lambda dp: dp * 8),
+    ],
+    ids=["one_row", "mid", "huge", "unestimated"],
+)
+def test_bucket_count_follows_the_estimate(spark, build, want):
+    from fusets_spark.kernels import n_buckets
+
+    assert n_buckets(build(spark)) == want(spark.sparkContext.defaultParallelism)
+
+
+def test_group_kernel_sizing_runs_no_job(spark):
+    """The bucket count is read from the optimized plan's estimate, which
+    runs nothing: building a grouped kernel over a shuffled input starts
+    no Spark job."""
+    from pyspark.sql import functions as F
+
+    from fusets_spark.kernels import group_kernel
+
+    sc = spark.sparkContext
+    agg = (
+        spark.range(200_000)
+        .groupBy((F.col("id") % 1000).cast("string").alias("doc_id"))
+        .agg(F.count("id").alias("n"))
+    )
+    sc.setJobGroup("sizing-probe", "grouped kernel sizing")
+    try:
+        out = group_kernel(agg, lambda pdf: pdf, "doc_id string, n long", by=())
+        jobs = sc.statusTracker().getJobIdsForGroup("sizing-probe")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(jobs) == []
+    assert "FlatMapGroupsInPandas" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_sealer_bucket_count_stays_fixed(spark):
+    """The sealer's _g is part of its state key, so its modulus does not
+    follow the input: max(256, defaultParallelism × 8)."""
+    import re
+
+    from fusets_spark.streaming.block_stream import stream_encode_blocks
+
+    stream = (
+        spark.readStream.format("rate").load()
+        .selectExpr(
+            "'s' AS source", "CAST(value AS STRING) AS doc_id",
+            "timestamp AS ts", "CAST(value AS DOUBLE) AS value",
+        )
+    )
+    plan = stream_encode_blocks(stream)._jdf.queryExecution().analyzed().toString()
+    mod = re.search(r"pmod\(xxhash64\(doc_id#\d+, 42\), cast\((\d+) as bigint", plan)
+    assert int(mod.group(1)) == max(256, spark.sparkContext.defaultParallelism * 8)

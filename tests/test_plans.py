@@ -140,7 +140,7 @@ def test_cosine_topk_scans_embeddings_once(spark):
 
 def _grouped_operators():
     """name -> (build(points, blocks), grouping keys before _g, hashed
-    columns, bucket floor, buckets per core)."""
+    columns)."""
     from fusets_spark.codec.blocks import (
         compact_blocks,
         encode_blocks,
@@ -155,12 +155,11 @@ def _grouped_operators():
         whittaker,
     )
 
-    series = (("source",), ("doc_id",), 64, 4)
-    codec = (("source",), ("doc_id",), 256, 8)
+    series = (("source",), ("doc_id",))
     return {
-        "encode_blocks": (lambda p, b: encode_blocks(p), *codec),
-        "compact_blocks": (lambda p, b: compact_blocks(b, 86400), *codec),
-        "roundtrip_points": (lambda p, b: roundtrip_points(p), *codec),
+        "encode_blocks": (lambda p, b: encode_blocks(p), *series),
+        "compact_blocks": (lambda p, b: compact_blocks(b, 86400), *series),
+        "roundtrip_points": (lambda p, b: roundtrip_points(p), *series),
         "savgol_smooth": (lambda p, b: smoothing.savgol_smooth(p), *series),
         "gaussian_smooth": (lambda p, b: smoothing.gaussian_smooth(p), *series),
         "stl_trend_col": (lambda p, b: smoothing.stl_trend_col(p), *series),
@@ -171,10 +170,10 @@ def _grouped_operators():
         "peakvalley": (lambda p, b: peakvalley.peakvalley(p), *series),
         "whittaker_gapfill": (
             lambda p, b: whittaker.whittaker_gapfill(p),
-            (), ("source", "doc_id"), 32, 2,
+            (), ("source", "doc_id"),
         ),
         "mogpr_fuse": (
-            lambda p, b: fusion.mogpr_fuse(p), (), ("doc_id",), 64, 4
+            lambda p, b: fusion.mogpr_fuse(p), (), ("doc_id",)
         ),
     }
 
@@ -184,13 +183,12 @@ def test_grouped_kernel_plan(spark, name):
     """Every grouped numpy kernel compiles to the same shape: ONE
     REPARTITION_BY_NUM exchange of width defaultParallelism × 4 on the
     grouping keys (AQE cannot coalesce it, and the groupBy needs no second
-    one), a bucket modulus of max(floor, defaultParallelism × per_core) —
-    so task count scales with the cluster; 64 / 256 / 32 at local[4] — and
-    the operator's grouping keys. The policies are the measured ones each
-    operator was tuned to."""
+    one), the bucket modulus of kernels.n_buckets — the inputs here are
+    local lists, RDD scans without a size estimate, so the cap,
+    defaultParallelism × 8 — and the operator's grouping keys."""
     import datetime
 
-    build, by, hash_on, floor, per_core = _grouped_operators()[name]
+    build, by, hash_on = _grouped_operators()[name]
     t = datetime.datetime(2024, 1, 1)
     points = spark.createDataFrame(
         [("s", "d", t, 1.0)], "source string, doc_id string, ts timestamp, value double"
@@ -211,7 +209,7 @@ def test_grouped_kernel_plan(spark, name):
     assert cols(ex.group(1)) == (*by, "_g") and int(ex.group(2)) == dp * 4
     mod = re.search(r"pmod\(xxhash64\(([^()]*), 42\), (\d+)\)", plan)
     assert cols(mod.group(1)) == hash_on
-    assert int(mod.group(2)) == max(floor, dp * per_core)
+    assert int(mod.group(2)) == dp * 8
     grp = re.search(r"FlatMapGroupsInPandas \[([^\]]*)\]", plan)
     assert cols(grp.group(1)) == (*by, "_g")
 
