@@ -236,9 +236,9 @@ def q_whittaker_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # group count follows the input's size estimate (kernels.n_buckets:
-    # defaultParallelism × 2 to × 8), so solver parallelism scales with
-    # the cluster
+    # kernel call count follows the input's size estimate
+    # (kernels.n_buckets: defaultParallelism × 2 to × 8), so solver
+    # parallelism scales with the cluster
     out = whittaker_gapfill(pts, lmbd=100.0, grid_seconds=3600)
     return out.select(
         "source", "doc_id", "ts", F.round("value_smooth", 6).alias("value_smooth")

@@ -3,16 +3,17 @@
 One block = one (source, doc_id, block bucket) — a block is NEVER split
 across tasks (SURVEY.md §7.3).
 
-Granularity design: the kernels run through kernels.group_kernel, whose
-groups are (source, hash bucket of doc_id) — each kernel call receives
-many whole series and encodes ALL their blocks in one pass, with
-per-(series, bucket) runs found by numpy change detection on the sorted
-frame. Grouping by (series, bucket) directly would create millions of tiny
-groups and drown in Spark's per-group applyInPandas machinery (measured
-~8 ms/group — 60x slower than the codec itself); hash-bucketing amortizes
-that overhead to ~zero while the bucket count bounds per-task memory at
-cluster scale (results are independent of it). The bucket count follows
-the input (kernels.n_buckets), as for every grouped kernel.
+Granularity design: the kernels run through kernels.group_kernel, which
+hashes (source, doc_id) straight into partitions and calls the kernel once
+per source in each — each kernel call receives many whole series and
+encodes ALL their blocks in one pass, with per-(series, bucket) runs found
+by numpy change detection on the sorted frame. Grouping by (series,
+bucket) directly would create millions of tiny groups and drown in
+Spark's per-group machinery (measured ~8 ms/group — 60x slower than the
+codec itself); hash-partitioning amortizes that overhead to ~zero while
+the partition count bounds per-task memory at cluster scale (results are
+independent of it). The partition count follows the input
+(kernels.n_buckets), as for every grouped kernel.
 
 Every block in the package is built by ONE fold, block_frame: per-point
 arrays in canonical (series, bucket, ts, value) order in, BLOCK_SCHEMA rows

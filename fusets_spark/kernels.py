@@ -1,41 +1,44 @@
 """The grouped Python-kernel boundary.
 
 Every sequential per-series numpy kernel (codec, smoothing, harmonics,
-CCDC, peak/valley, Whittaker, MOGPR fusion) runs through group_kernel —
-the role `xarray.apply_ufunc(..., input_core_dims=[[time_dim]])` plays in
-the reference. The only other grouped Python calls are similarity's LSH
-pair join, which groups on its natural (table_no, bucket) keys, and the
-stateful block sealer, which takes its bucket column from bucket_col
+CCDC, peak/valley, Whittaker, MOGPR fusion) and similarity's LSH pair
+join run through group_kernel — the role
+`xarray.apply_ufunc(..., input_core_dims=[[time_dim]])` plays in the
+reference. The only other grouped Python call is the stateful block
+sealer, which takes its bucket column from bucket_col
 (tests/test_kernel_boundary.py keeps it that way).
 
-Series are hash-bucketed, so one kernel call receives MANY whole series:
-grouping by the series key itself would create millions of tiny groups
-and drown in Spark's per-group machinery (measured ~8 ms per group on the
-codec, 60x the codec's own cost). Kernel results are grouping-independent
-by construction (each series lives in exactly one bucket), pinned by the
-grouping-invariance tests.
+A kernel group is a partition: series are hashed straight into
+n_buckets(df) partitions, so one kernel call receives MANY whole series
+(grouping by the series key itself would create millions of tiny groups
+and drown in Spark's per-group machinery, measured ~8 ms per group on the
+codec, 60x the codec's own cost), and one bucket is one task. Kernel
+results are grouping-independent by construction (each series lives in
+exactly one partition), pinned by the grouping-invariance tests.
 
 The bucket count follows the input (n_buckets): small inputs get a few
-large groups, so the per-group pandas/Arrow overhead is paid a few times,
-not hundreds. fanout_partitions is the scan-side counterpart for per-row
-mapInPandas kernels fused into a narrow scan stage.
+large partitions, so the per-call pandas/Arrow overhead is paid a few
+times, not hundreds. fanout_partitions is the scan-side counterpart for
+per-row mapInPandas kernels fused into a narrow scan stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-GROUP_BYTES = 8 << 20  # target input bytes per group
+GROUP_BYTES = 8 << 20  # target input bytes per bucket
 
 
 def n_buckets(df: DataFrame) -> int:
     """min(dP × 8, max(dP × 2, ceil(estimate / GROUP_BYTES))) buckets, dP
     being defaultParallelism and the estimate the optimized plan's
-    sizeInBytes (no Spark job; unknown is Long.MaxValue, so the cap). The
-    floor keeps every core busy; the cap bounds per-task memory."""
+    sizeInBytes (no Spark job; unknown is Long.MaxValue, so the cap). A
+    bucket is one task, so the floor keeps every core busy and the cap
+    bounds per-task memory."""
     dp = df.sparkSession.sparkContext.defaultParallelism
     est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return min(dp * 8, max(dp * 2, -(-est // GROUP_BYTES)))
@@ -54,28 +57,36 @@ def group_kernel(
     by: tuple[str, ...] = ("source",),
     hash_on: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
-    """Run `fn` (pandas frame -> pandas frame) once per group of
-    (*by, bucket of hash_on), with n_buckets(df) buckets.
+    """Run `fn` (pandas frame -> pandas frame) on whole series: the input
+    is hash-partitioned on (*by, *hash_on) into n_buckets(df) partitions,
+    and each partition's rows are one pandas frame, handed to `fn` once
+    per distinct `by` value (once per partition when by=()). Empty
+    partitions make no call.
 
-    The exchange is a user-specified repartition by number to
-    defaultParallelism × 4 (straggler headroom) on the grouping keys.
-    AQE's size-based coalescing is right for byte-bound ETL shuffles but
-    wrong for numpy kernel stages: a few-MB shuffle feeding a CPU-heavy
-    solve gets coalesced to 1-2 tasks (measured: whittaker 6.3 s -> 1.x s
-    at sf0.1 once exempt). A REPARTITION_BY_NUM is exempt, and the groupBy
-    on the same keys is satisfied by it (ClusteredDistribution), so the
-    plan has exactly one exchange, of a fixed width."""
-    keys = (*by, "_g")
-    grouped = df.withColumn("_g", bucket_col(hash_on, n_buckets(df)))
-    width = df.sparkSession.sparkContext.defaultParallelism * 4
-    return (
-        grouped.repartition(width, *keys)
-        .groupBy(*keys)
-        .applyInPandas(fn, schema=schema)
+    The exchange is a user-specified repartition by number, which AQE does
+    not coalesce. Size-based coalescing is right for byte-bound ETL
+    shuffles but wrong for numpy kernel stages: a few-MB shuffle feeding a
+    CPU-heavy solve gets coalesced to 1-2 tasks (measured: whittaker 6.3 s
+    -> 1.x s at sf0.1 once exempt). So the plan has exactly one exchange,
+    n_buckets(df) wide, and one bucket is one task."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
+        if not by:
+            yield fn(pdf)
+            return
+        for _, group in pdf.groupby(list(by), sort=False, dropna=False):
+            yield fn(group.reset_index(drop=True))
+
+    return df.repartition(n_buckets(df), *by, *hash_on).mapInPandas(
+        run, schema=schema
     )
 
 
-def fanout_partitions(df: DataFrame, per_core: int = 2, keys: tuple[str, ...] = ()):
+def fanout_partitions(df: DataFrame, keys: tuple[str, ...] = ()):
     """Scale-adaptive fan-out for work fused into a narrow scan stage.
 
     Parquet row groups are atomic scan units, so a single-file/
@@ -84,7 +95,7 @@ def fanout_partitions(df: DataFrame, per_core: int = 2, keys: tuple[str, ...] = 
     (mapInPandas kernels, map-side partial aggregation, per-row expression
     evaluation) then runs on one core. When the upstream plan has fewer
     partitions than the session's parallelism, repartition to
-    defaultParallelism × per_core; inputs that are already wide keep their
+    defaultParallelism × 2; inputs that are already wide keep their
     partitioning (no shuffle — the 100-TB case, where the corpus arrives
     in thousands of files).
 
@@ -112,4 +123,4 @@ def fanout_partitions(df: DataFrame, per_core: int = 2, keys: tuple[str, ...] = 
         return df
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
-    return df.repartition(sc.defaultParallelism * per_core, *keys)
+    return df.repartition(sc.defaultParallelism * 2, *keys)

@@ -28,8 +28,8 @@ coregionalization B = (1-ρ)I + ρ11ᵀ factors into √ρ·shared +
 √(1-ρ)·private independent processes, so the smoothed posterior equals the dense GP posterior
 (differential-tested to ~1e-13). At 10^12-sequence scale, per-series cost
 is linear in observations; both paths run inside the same
-kernels.group_kernel call, bucketed by doc_id alone (all of a doc's
-signals in one group).
+kernels.group_kernel call, partitioned by doc_id alone (all of a doc's
+signals in one call).
 """
 
 from __future__ import annotations
@@ -54,6 +54,24 @@ def matern32(dist: np.ndarray, lengthscale: float) -> np.ndarray:
     return (1.0 + r) * np.exp(-r)
 
 
+def _normalized(
+    signals: dict[str, tuple[np.ndarray, np.ndarray]],
+) -> dict[str, tuple[np.ndarray, np.ndarray, float, float]]:
+    """{name: (t, z, mean, sd)} in name order: each signal's NaNs dropped
+    and its values z-scored with its own mean and ddof=0 sd (sd 0 -> 1).
+    Signals with no observation are left out."""
+    clean = {}
+    for name in sorted(signals):
+        t, y = signals[name]
+        ok = ~np.isnan(y)
+        if not ok.any():
+            continue
+        yy = y[ok]
+        mu, sd = float(np.mean(yy)), float(np.std(yy)) or 1.0
+        clean[name] = (t[ok], (yy - mu) / sd, mu, sd)
+    return clean
+
+
 def mogpr_fuse_series(
     signals: dict[str, tuple[np.ndarray, np.ndarray]],
     out_t: np.ndarray,
@@ -68,17 +86,7 @@ def mogpr_fuse_series(
     Empty master signal -> empty dict (reference qflag gating)."""
     names = sorted(signals)
     master = master or names[0]
-    clean: dict[str, tuple[np.ndarray, np.ndarray, float, float]] = {}
-    for name in names:
-        t, y = signals[name]
-        ok = ~np.isnan(y)
-        if ok.sum() == 0:
-            continue
-        yy = y[ok]
-        mu, sd = float(np.mean(yy)), float(np.std(yy))
-        if sd == 0.0:
-            sd = 1.0
-        clean[name] = (t[ok], (yy - mu) / sd, mu, sd)
+    clean = _normalized(signals)
     if master not in clean:
         return {}
 
@@ -151,17 +159,7 @@ def mogpr_fuse_series_ss(
         raise ValueError("mogpr_fuse_series_ss requires sorted out_t")
     names = sorted(signals)
     master = master or names[0]
-    clean: dict[str, tuple[np.ndarray, np.ndarray, float, float]] = {}
-    for name in names:
-        t, y = signals[name]
-        ok = ~np.isnan(y)
-        if ok.sum() == 0:
-            continue
-        yy = y[ok]
-        mu, sd = float(np.mean(yy)), float(np.std(yy))
-        if sd == 0.0:
-            sd = 1.0
-        clean[name] = (t[ok], (yy - mu) / sd, mu, sd)
+    clean = _normalized(signals)
     if master not in clean:
         return {}
 
@@ -273,22 +271,13 @@ def _log_marginal_likelihood(
 ) -> float:
     """GP log marginal likelihood of one series' joint observations under
     the fixed-hyperparameter kernel (normalized per signal)."""
-    names = sorted(signals)
-    ts, ys, ss = [], [], []
-    for i, name in enumerate(names):
-        t, y = signals[name]
-        ok = ~np.isnan(y)
-        if ok.sum() == 0:
-            continue
-        yy = y[ok]
-        sd = float(np.std(yy)) or 1.0
-        ts.append(t[ok])
-        ys.append((yy - np.mean(yy)) / sd)
-        ss.append(np.full(ok.sum(), i))
-    if not ts:
+    clean = list(_normalized(signals).values())
+    if not clean:
         return -np.inf
-    T, Y, S = np.concatenate(ts), np.concatenate(ys), np.concatenate(ss)
-    n_sig = len(names)
+    T = np.concatenate([c[0] for c in clean])
+    Y = np.concatenate([c[1] for c in clean])
+    S = np.concatenate([np.full(len(c[0]), i) for i, c in enumerate(clean)])
+    n_sig = len(clean)
     B = (1.0 - rho) * np.eye(n_sig) + rho * np.ones((n_sig, n_sig))
     K = B[S[:, None], S[None, :]] * matern32(T[:, None] - T[None, :], lengthscale)
     A = K + noise * np.eye(len(T))
@@ -365,7 +354,7 @@ def mogpr_fuse(
     observations per sequence) never pay a cubic factorization."""
 
     def _fuse(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["doc_id", "source", "ts"], kind="mergesort")
+        pdf = pdf.sort_values(["doc_id", "source", "ts", "value"], kind="mergesort")
         outs = []
         for doc, g in pdf.groupby("doc_id", sort=False):
             epoch = g["ts"].astype("int64").to_numpy() // 10**9
@@ -412,6 +401,6 @@ def mogpr_fuse(
             )
         return pd.concat(outs, ignore_index=True)
 
-    # a doc's signals arrive as `source` rows, so the group is the doc's
-    # bucket alone
+    # a doc's signals arrive as `source` rows, so the call is the doc's
+    # partition alone
     return group_kernel(df, _fuse, FUSED_SCHEMA, by=())

@@ -186,7 +186,7 @@ def harmonic_fitted(
     num_coefficients observations are dropped (as in harmonic_fit)."""
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["doc_id", "ts"], kind="mergesort")
+        pdf = pdf.sort_values(["doc_id", "ts", "value"], kind="mergesort")
         outs = []
         for doc, g in pdf.groupby("doc_id", sort=False):
             day = (g["ts"].astype("int64") // 10**9).to_numpy() / 86400.0

@@ -80,7 +80,7 @@ def num_seasons(df: DataFrame) -> DataFrame:
     """Per-series season count over (source, doc_id, ts, value)."""
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["doc_id", "ts"], kind="mergesort")
+        pdf = pdf.sort_values(["doc_id", "ts", "value"], kind="mergesort")
         rows = [
             (g["source"].iloc[0], doc,
              num_seasons_series(g["value"].to_numpy(np.float64)))
@@ -200,7 +200,7 @@ def peakvalley(
     """Distributed peak/valley mask over (source, doc_id, ts, value) rows."""
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["doc_id", "ts"], kind="mergesort")
+        pdf = pdf.sort_values(["doc_id", "ts", "value"], kind="mergesort")
         out = []
         for doc, g in pdf.groupby("doc_id", sort=False):
             day = (g["ts"].astype("int64") // 10**9).to_numpy() / 86400.0

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..datagen import _hash01
+from ..kernels import fanout_partitions, group_kernel
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -355,8 +356,6 @@ def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from ..kernels import fanout_partitions
-
     # fresh StructType: StructType.add MUTATES (and df.schema is cached on
     # the DataFrame), so extending embeddings.schema in place would corrupt
     # the source frame's schema for every later use in the same session
@@ -447,7 +446,6 @@ def embedding_neardup_pairs(
     cluster of m near-identical embeddings can produce (identical vectors
     share every bucket no matter how many planes, so n_planes alone cannot
     prevent the blowup)."""
-    n_part = embeddings.sparkSession.sparkContext.defaultParallelism * 2
     plane_sets = [
         (f"_b{t}", make_planes(n_planes, dim, seed + 7919 * t))
         for t in range(n_tables)
@@ -511,10 +509,10 @@ def embedding_neardup_pairs(
         #
         # Shuffle cost: each vector crosses the (table_no, bucket)
         # exchange once per table with its 64-float payload — corpus ×
-        # n_tables bytes, NOT per-pair bytes; the user repartition is
-        # AQE-exempt so the kernel runs wide even though the stacked
-        # table is only a few MB (§2.5). Scale note: a bucket of m
-        # vectors is one kernel group with m²/2 candidate pairs — the
+        # n_tables bytes, NOT per-pair bytes; kernels.group_kernel's
+        # exchange is AQE-exempt so the kernel runs wide even though the
+        # stacked table is only a few MB (§2.5). Scale note: a bucket of m
+        # vectors is one kernel call with m²/2 candidate pairs — the
         # same volume the self-join emitted — chunked so peak memory is
         # bounded; components consumers at 100-TB scale should use the
         # opt-in star cap below, which bounds the volume itself.
@@ -524,8 +522,8 @@ def embedding_neardup_pairs(
         out_schema = "vec_a long, vec_b long, cos double"
         prev_b = all_b  # bucket-string columns, table order
 
-        def _bucket_pairs(key, pdf):
-            t = int(key[0])
+        def _bucket_pairs(pdf):
+            t = int(pdf["table_no"].iat[0])
             m = len(pdf)
             if m < 2:
                 return pd.DataFrame(
@@ -595,10 +593,9 @@ def embedding_neardup_pairs(
                 )
             return pd.concat(outs, ignore_index=True)
 
-        raw = (
-            stacked.repartition(n_part, "table_no", "bucket")
-            .groupBy("table_no", "bucket")
-            .applyInPandas(_bucket_pairs, schema=out_schema)
+        raw = group_kernel(
+            stacked, _bucket_pairs, out_schema, by=("table_no", "bucket"),
+            hash_on=(),
         )
         return (
             raw.filter(F.col("cos") >= threshold)
@@ -622,6 +619,7 @@ def embedding_neardup_pairs(
         # -- up to max_bucket_size^2/2 rows PER bucket row -- onto 1-2
         # tasks. A user repartition by the bucket key is exempt from AQE
         # coalescing and spreads the explode across the cluster.
+        n_part = embeddings.sparkSession.sparkContext.defaultParallelism * 2
         buckets = buckets.repartition(n_part, "table_no", "bucket")
         all_pairs = F.expr(
             "flatten(transform(vs, (x, i) -> "

@@ -202,24 +202,25 @@ def whittaker_gapfill(
     Output: (source, doc_id, ts, value_smooth) on each series' dense grid
     (optionally stride-sampled every `sample_every` grid steps).
 
-    Scale design: groups are hash buckets of the FULL series key
-    (source, doc_id) so one kernel call receives MANY whole series; they
-    are padded to a common grid length and solved as one (S, n_max)
-    matrix. The group count is kernels.n_buckets (from the input's size
-    estimate, between defaultParallelism × 2 and × 8) regardless of how
-    many sources exist — this kernel's cost is dominated by the sequential
-    O(n_grid) time loop which runs once PER GROUP (vectorized across that
-    group's series), so group count must track cluster parallelism, not
-    data cardinality (measured: 640 vs 40 groups on the same sf0.1 input
-    = 2.3× slower). Within a group, series are sub-batched by grid-length
+    Scale design: the FULL series key (source, doc_id) is hashed into
+    partitions and each partition is ONE kernel call (by=()), so a call
+    receives MANY whole series; they are padded to a common grid length
+    and solved as one (S, n_max) matrix. The partition count is
+    kernels.n_buckets (from the input's size estimate, between
+    defaultParallelism × 2 and × 8) regardless of how many sources exist
+    — this kernel's cost is dominated by the sequential O(n_grid) time
+    loop which runs once PER CALL (vectorized across that call's series),
+    so the call count must track cluster parallelism, not data
+    cardinality (measured: 640 vs 40 groups on the same sf0.1 input =
+    2.3× slower). Within a call, series are sub-batched by grid-length
     octave so short series are never padded to the longest one's grid.
-    Results are independent of the grouping (each series lives in exactly
-    one bucket).
+    Results are independent of the partitioning (each series lives in
+    exactly one partition).
     """
 
     def _smooth(pdf: pd.DataFrame) -> pd.DataFrame:
         out_frames = []
-        pdf = pdf.sort_values(["source", "doc_id", "ts"], kind="mergesort")
+        pdf = pdf.sort_values(["source", "doc_id", "ts", "value"], kind="mergesort")
         epoch_all = pdf["ts"].astype("int64").to_numpy() // 10**9
         vals_all = pdf["value"].to_numpy(dtype=np.float64)
         src_all = pdf["source"].to_numpy()

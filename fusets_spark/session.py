@@ -77,8 +77,8 @@ def get_spark(
         not run on streaming queries, so the stateful block sealer does not
         take this width: it starts through streaming.start_per_core, which
         gives it one state shard per core. Grouped numpy kernels do not take
-        it either: kernels.group_kernel repartitions them to
-        defaultParallelism × 4, a width AQE does not coalesce.
+        it either: kernels.group_kernel sizes their exchange from the
+        input (kernels.n_buckets), a width AQE does not coalesce.
     extra_conf: applied last, so it overrides any setting above, including
         the two that start Python workers from ``fusets_spark.worker_boot``
         (``spark.python.daemon.module``, ``spark.executorEnv.PYTHONPATH``;

@@ -101,7 +101,6 @@ def _seal(
 def stream_encode_blocks(
     stream: DataFrame,
     block_seconds: int = 3600,
-    watermark: str = "0 seconds",
 ) -> DataFrame:
     """points stream (source, doc_id, ts, value) -> sealed-block stream
     (append mode).
@@ -180,7 +179,7 @@ def stream_encode_blocks(
             yield frame
 
     n = max(SEAL_BUCKETS, stream.sparkSession.sparkContext.defaultParallelism * 8)
-    keyed = stream.withWatermark("ts", watermark).withColumn(
+    keyed = stream.withWatermark("ts", "0 seconds").withColumn(
         "_g", bucket_col(("doc_id",), n)
     )
     return (

@@ -1,9 +1,25 @@
 from __future__ import annotations
 
+import importlib.util
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import SparkSession
 
 from fusets_spark.session import get_spark
+
+
+def entry_mod():
+    """This checkout's __spark_entry__.py, loaded as module __spark_entry__
+    (the driver contract: a standalone file, not a package import)."""
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules["__spark_entry__"] = mod
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")
@@ -16,8 +32,9 @@ def spark() -> SparkSession:
 @pytest.fixture
 def set_buckets(monkeypatch):
     """set_buckets(n): every grouped kernel built after the call hashes its
-    series into n buckets, whatever its input's size. The bucket count is
-    a literal in the plan, so it holds for as long as the frame lives."""
+    series into n buckets, whatever its input's size, so it runs n tasks
+    (a bucket is a partition). The bucket count is a literal in the plan,
+    so it holds for as long as the frame lives."""
     from fusets_spark import kernels
 
     def _set(n: int) -> None:

@@ -4,31 +4,17 @@ row count + schema + order-insensitive exact values."""
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-from pathlib import Path
-
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import entry_mod
 
-REPO = Path(__file__).resolve().parents[1]
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-
-def _entry_mod():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", REPO / "__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["__spark_entry__"] = mod
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.fixture(scope="module")
@@ -59,12 +45,12 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _query_names():
-    return sorted(_entry_mod().queries().keys())
+    return sorted(entry_mod().queries().keys())
 
 
 @pytest.mark.parametrize("name", _query_names())
 def test_query_matches_duckdb_oracle(spark, duck, name):
-    mod = _entry_mod()
+    mod = entry_mod()
     q = mod.queries()[name]
     oracles = mod.oracle_sql()
     got = _canon(q(spark, SF_DIR).toPandas())
@@ -90,7 +76,7 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
 
 
 def test_entry_smoke(spark):
-    mod = _entry_mod()
+    mod = entry_mod()
     df = mod.entry(spark)
     assert df.count() > 0
     assert len(df.schema.fields) > 0
@@ -103,7 +89,7 @@ def test_driver_queries_leave_the_temp_root_as_found(spark, temp_root):
     run the exit hooks, and the temp root is as the calls found it."""
     from fusets_spark.session import ship_package
 
-    mod = _entry_mod()
+    mod = entry_mod()
     root, run_exit = temp_root
     ship_package(spark)  # its zip has its own test (test_worker_boot.py)
     before = sorted(root.iterdir())
@@ -118,7 +104,7 @@ def test_fixed_query_dirs_land_under_the_temp_root(spark, temp_root):
     """The queries that write a fixed per-SF directory (the stream sealer's
     work dir and the csv, netCDF and GeoTIFF granules) root it at
     tempfile.gettempdir(), wherever that points."""
-    mod = _entry_mod()
+    mod = entry_mod()
     root, _ = temp_root
     for q in (mod.q_stream_block_encode, mod.q_csv_load, mod.q_netcdf_load,
               mod.q_geotiff_load):
@@ -135,7 +121,7 @@ def test_ivf_oracle_exact_off_contract_sf(spark, sf_dir):
     """ann_ivf_topk parity OFF the contract SF (VERDICT r3 #9): the query
     applies the frozen contract-SF quantizer at every sf_dir, so the
     oracle's embedded literal centroids match at sf0.001 and sf0.1 too."""
-    mod = _entry_mod()
+    mod = entry_mod()
     got = _canon(mod.queries()["ann_ivf_topk"](spark, sf_dir).toPandas())
     con = duckdb.connect()
     for t in TABLES:
@@ -160,7 +146,7 @@ def test_ivf_cell_norm_term_is_the_oracle_literal():
 
     from fusets_spark.operators.similarity import _cell_scores
 
-    mod = _entry_mod()
+    mod = entry_mod()
     C = mod._ivf_centroids()
     lits = re.findall(
         r"\((\d+), \[[^\]]*\]::DOUBLE\[\], ([^)]+)\)", mod._ivf_oracle()
@@ -179,7 +165,7 @@ def test_mogpr_oracle_exact_off_contract_sf(spark, sf_dir):
     (after the shared 5dp rounding) at every SF, not just the driver's
     sf0.01 — the 5-day subset keeps joint n small at any corpus size
     because per-user event density is SF-independent."""
-    mod = _entry_mod()
+    mod = entry_mod()
     got = _canon(mod.queries()["mogpr_fusion"](spark, sf_dir).toPandas())
     con = duckdb.connect()
     for t in TABLES:

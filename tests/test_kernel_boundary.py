@@ -1,16 +1,17 @@
 """The grouped-kernel boundary stays single: kernels.py is the only place
-that buckets series, repartitions into a Python kernel or calls
-applyInPandas. The block fold stays single too: only codec.blocks.block_frame
-(and the single-block encode_block) call the Gorilla encoder, and nothing in
-the package calls encode_block. So does the tier aggregate: min_by/max_by
+that buckets series or repartitions into a Python kernel, and the stateful
+sealer's applyInPandasWithState is the only grouped Python call. The block
+fold stays single too: only codec.blocks.block_frame (and the single-block
+encode_block) call the Gorilla encoder, and nothing in the package calls
+encode_block. So does the tier aggregate: min_by/max_by
 appear only in rollup.point_aggs / merge_aggs (and phenology's phenometric
 argmins), and no tier site takes min/max over a struct; the rollup
 stream aggregates only through the batch rollup_from_raw. Each kernel
 has one form in the package: the second forms tests pin it against live
 in tests/reference_impls.py, and no package module defines or imports
 them. Also pins the sizing: n_buckets, the grouped kernels' bucket count
-from the input's plan estimate (the stream sealer's count stays fixed), and
-fanout_partitions, its scan-side counterpart."""
+from the input's plan estimate (the stream sealer's count stays fixed) and
+one task per bucket, and fanout_partitions, its scan-side counterpart."""
 
 from __future__ import annotations
 
@@ -24,13 +25,6 @@ PKG = Path(__file__).resolve().parents[1] / "fusets_spark"
 # (file relative to the package, finding) -> why it may stay outside
 # kernels.py
 ALLOWED = {
-    ("operators/similarity.py", "applyInPandas"): (
-        "the LSH pair join groups on its natural keys (table_no, bucket) "
-        "at defaultParallelism × 2, not on hash buckets of a series"
-    ),
-    ("operators/similarity.py", "repartition into kernel"): (
-        "the same pair join: its exchange is on (table_no, bucket)"
-    ),
     ("streaming/block_stream.py", "applyInPandasWithState"): (
         "the stateful sealer keeps group state per bucket, which only "
         "applyInPandasWithState offers; its bucket column comes from "
@@ -456,7 +450,27 @@ def test_group_kernel_sizing_runs_no_job(spark):
     finally:
         sc._jsc.clearJobGroup()
     assert list(jobs) == []
-    assert "FlatMapGroupsInPandas" in out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_one_bucket_is_one_task(spark, set_buckets):
+    """A bucket is a partition: 2000 docs in 8 buckets make 8 kernel
+    calls, each in a partition of its own, so no core runs two buckets
+    while another idles."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from fusets_spark.kernels import group_kernel
+
+    set_buckets(8)
+    docs = spark.range(2000).selectExpr(
+        "'s' AS source", "CAST(id AS STRING) AS doc_id"
+    )
+    calls = group_kernel(
+        docs, lambda pdf: pd.DataFrame({"rows": [len(pdf)]}), "rows long"
+    ).select("rows", F.spark_partition_id().alias("part")).toPandas()
+    assert len(calls) == 8 and calls["rows"].sum() == 2000
+    assert calls["part"].nunique() == 8
 
 
 def test_sealer_bucket_count_stays_fixed(spark):

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
+from conftest import entry_mod
 
 from fusets_spark.datagen import fusion_fixture, harmonic_fixture
 from fusets_spark.operators.fusion import mogpr_fuse, mogpr_fuse_series
@@ -21,6 +23,7 @@ from fusets_spark.operators.harmonics import (
 )
 from fusets_spark.operators.peakvalley import (
     find_peaks_1d,
+    num_seasons,
     peakvalley,
     peakvalley_series,
 )
@@ -235,26 +238,57 @@ def test_ccdc_segments_spark_partition_invariant(spark):
     assert (n_seg[[f"doc{d}" for d in (0, 2, 4)]] == 1).all()
 
 
+@pytest.mark.parametrize(
+    "op",
+    ["peakvalley", "num_seasons", "harmonic_fitted", "mogpr_fuse",
+     "whittaker_gapfill"],
+)
+def test_tied_timestamps_do_not_depend_on_row_order(spark, op):
+    """Rows of one series that tie on ts reach a kernel in shuffle order;
+    every per-series kernel sorts them by value, so feeding the same rows
+    in the opposite order gives the identical result."""
+    from fusets_spark.operators.whittaker import whittaker_gapfill
+
+    run = {
+        "peakvalley": peakvalley,
+        "num_seasons": num_seasons,
+        "harmonic_fitted": harmonic_fitted,
+        "mogpr_fuse": mogpr_fuse,
+        "whittaker_gapfill": lambda df: whittaker_gapfill(df, lmbd=100.0),
+    }[op]
+    rng = np.random.default_rng(3)
+    rows = []
+    for doc in range(3):
+        for source in ("a", "b"):
+            for day in range(60):
+                ts = pd.Timestamp("2024-01-01") + pd.Timedelta(days=day)
+                v = 50 + 30 * np.sin(2 * np.pi * day / 20) + rng.normal(0, 2)
+                rows.append((source, f"doc{doc}", ts, v))
+                if day % 4 == 1:  # a second reading at the same instant
+                    rows.append((source, f"doc{doc}", ts, v + 9.0))
+    pdf = pd.DataFrame(rows, columns=["source", "doc_id", "ts", "value"])
+
+    def result(frame: pd.DataFrame) -> pd.DataFrame:
+        # one input partition: the kernel sees the rows in frame order
+        out = run(spark.createDataFrame(frame).coalesce(1)).toPandas()
+        return out.sort_values(list(out.columns)).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(
+        result(pdf), result(pdf.iloc[::-1]), check_exact=True
+    )
+
+
 def test_peakvalley_oracle_equivalence_randomized():
     """The recursive-CTE SQL replay (_peakvalley_oracle) must equal the
     numpy kernel on adversarial synthetic series — plateaus, monotonic
     runs, tiny series, deep drops — not just on the driver dataset."""
-    import importlib.util
-    import sys
-
     import duckdb
     import numpy as np
     import pandas as pd
 
     from fusets_spark.operators.peakvalley import peakvalley_series
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["__spark_entry__"] = mod
-    spec.loader.exec_module(mod)
-    sql = mod.oracle_sql()["peakvalley"]
+    sql = entry_mod().oracle_sql()["peakvalley"]
 
     rng = np.random.default_rng(42)
     rows = []

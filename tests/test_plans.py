@@ -6,6 +6,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from conftest import entry_mod
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -27,12 +28,7 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 def test_pricing_summary_pushdown(spark):
-    import importlib.util, sys
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     plan = _plan(mod.queries()["pricing_summary"](spark, SF))
     assert "l_shipdate" in plan.split("DataFilters:")[1][:200]
     # only the needed 6 columns are read
@@ -41,14 +37,9 @@ def test_pricing_summary_pushdown(spark):
 
 
 def test_udf_stage_does_not_widen_scan(spark):
-    """Column pruning must survive the applyInPandas optimizer barrier:
+    """Column pruning must survive the Python-kernel optimizer barrier:
     the whittaker query never reads `props` or `event_id`."""
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     plan = _plan(mod.queries()["whittaker_gapfill"](spark, SF))
     scan = plan.split("FileScan parquet")[1][:300]
     assert "props" not in scan and "event_id" not in scan
@@ -58,12 +49,7 @@ def test_topk_has_no_global_window_sort(spark):
     """Top-k must compile to TakeOrderedAndProject (parallel partial top-k),
     never a single-partition global sort feeding a window: the window may
     only run AFTER the k-row limit."""
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     for name in ("cosine_topk", "ann_lsh_topk"):
         plan = _plan(mod.queries()[name](spark, SF))
         assert "TakeOrderedAndProject" in plan, name
@@ -78,12 +64,7 @@ def test_phenometrics_single_scan_single_exchange(spark):
     """phenometrics must stay a one-pass window plan: ONE parquet scan and
     ONE hash exchange on the series key (the old groupBy + join-back shape
     re-scanned and re-shuffled the input 7x — at 100 TB that is 7x the IO)."""
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     plan = _plan(mod.queries()["phenometrics"](spark, SF))
     assert plan.count("FileScan parquet") == 1, "phenometrics re-scans input"
     assert plan.count("Exchange hashpartitioning") == 1, (
@@ -100,12 +81,7 @@ def test_dedup_reuses_materialized_intermediates(spark):
     and carry NO cache (a persist there is a pure extra
     materialization pass); banded/near-dup stacking must be an explode,
     not a per-band union that re-scans the corpus."""
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     plan = _plan(mod.queries()["dedup_ngram_jaccard"](spark, SF))
     assert "InMemoryTableScan" in plan, "ngram: shingles not cached"
     plan = _plan(mod.queries()["dedup_minhash_lsh"](spark, SF))
@@ -116,9 +92,10 @@ def test_dedup_reuses_materialized_intermediates(spark):
     # per-(table, bucket) pair+cosine kernel — the only exchange is the
     # small stacked (vector × table) repartition; pair generation, the
     # lowest-shared-table dedup and the exact cosine all happen inside
-    # FlatMapGroupsInPandas, so no corpus-scale pair exchange may exist.
+    # the grouped kernel (MapInPandas over the kernels.group_kernel
+    # exchange), so no corpus-scale pair exchange may exist.
     assert plan.count("FileScan parquet") == 1, "neardup re-scans corpus"
-    assert "FlatMapGroupsInPandas" in plan, "neardup: pair kernel missing"
+    assert "MapInPandas" in plan, "neardup: pair kernel missing"
     assert "hashpartitioning(vec_a" not in plan, (
         "neardup: corpus-scale pair exchange crept back in"
     )
@@ -127,19 +104,14 @@ def test_dedup_reuses_materialized_intermediates(spark):
 def test_cosine_topk_scans_embeddings_once(spark):
     """The cosine top-k query reads its 1-row query side on the driver, so
     its plan scans embeddings once, with no join and no broadcast."""
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     plan = _plan(mod.queries()["cosine_topk"](spark, SF))
     assert plan.count("FileScan parquet") == 1, "cosine_topk re-scans corpus"
     assert "Broadcast" not in plan and "Join" not in plan, plan
 
 
 def _grouped_operators():
-    """name -> (build(points, blocks), grouping keys before _g, hashed
+    """name -> (build(points, blocks, embeddings), grouping keys, hashed
     columns)."""
     from fusets_spark.codec.blocks import (
         compact_blocks,
@@ -151,29 +123,34 @@ def _grouped_operators():
         fusion,
         harmonics,
         peakvalley,
+        similarity,
         smoothing,
         whittaker,
     )
 
     series = (("source",), ("doc_id",))
     return {
-        "encode_blocks": (lambda p, b: encode_blocks(p), *series),
-        "compact_blocks": (lambda p, b: compact_blocks(b, 86400), *series),
-        "roundtrip_points": (lambda p, b: roundtrip_points(p), *series),
-        "savgol_smooth": (lambda p, b: smoothing.savgol_smooth(p), *series),
-        "gaussian_smooth": (lambda p, b: smoothing.gaussian_smooth(p), *series),
-        "stl_trend_col": (lambda p, b: smoothing.stl_trend_col(p), *series),
-        "harmonic_fit": (lambda p, b: harmonics.harmonic_fit(p), *series),
-        "harmonic_fitted": (lambda p, b: harmonics.harmonic_fitted(p), *series),
-        "ccdc_segments": (lambda p, b: ccdc.ccdc_segments(p), *series),
-        "num_seasons": (lambda p, b: peakvalley.num_seasons(p), *series),
-        "peakvalley": (lambda p, b: peakvalley.peakvalley(p), *series),
+        "encode_blocks": (lambda p, b, e: encode_blocks(p), *series),
+        "compact_blocks": (lambda p, b, e: compact_blocks(b, 86400), *series),
+        "roundtrip_points": (lambda p, b, e: roundtrip_points(p), *series),
+        "savgol_smooth": (lambda p, b, e: smoothing.savgol_smooth(p), *series),
+        "gaussian_smooth": (lambda p, b, e: smoothing.gaussian_smooth(p), *series),
+        "stl_trend_col": (lambda p, b, e: smoothing.stl_trend_col(p), *series),
+        "harmonic_fit": (lambda p, b, e: harmonics.harmonic_fit(p), *series),
+        "harmonic_fitted": (lambda p, b, e: harmonics.harmonic_fitted(p), *series),
+        "ccdc_segments": (lambda p, b, e: ccdc.ccdc_segments(p), *series),
+        "num_seasons": (lambda p, b, e: peakvalley.num_seasons(p), *series),
+        "peakvalley": (lambda p, b, e: peakvalley.peakvalley(p), *series),
         "whittaker_gapfill": (
-            lambda p, b: whittaker.whittaker_gapfill(p),
+            lambda p, b, e: whittaker.whittaker_gapfill(p),
             (), ("source", "doc_id"),
         ),
         "mogpr_fuse": (
-            lambda p, b: fusion.mogpr_fuse(p), (), ("doc_id",)
+            lambda p, b, e: fusion.mogpr_fuse(p), (), ("doc_id",)
+        ),
+        "embedding_neardup_pairs": (
+            lambda p, b, e: similarity.embedding_neardup_pairs(e),
+            ("table_no", "bucket"), (),
         ),
     }
 
@@ -181,11 +158,12 @@ def _grouped_operators():
 @pytest.mark.parametrize("name", sorted(_grouped_operators()))
 def test_grouped_kernel_plan(spark, name):
     """Every grouped numpy kernel compiles to the same shape: ONE
-    REPARTITION_BY_NUM exchange of width defaultParallelism × 4 on the
-    grouping keys (AQE cannot coalesce it, and the groupBy needs no second
-    one), the bucket modulus of kernels.n_buckets — the inputs here are
-    local lists, RDD scans without a size estimate, so the cap,
-    defaultParallelism × 8 — and the operator's grouping keys."""
+    REPARTITION_BY_NUM exchange (AQE cannot coalesce it) hashing the
+    operator's grouping keys and series key straight into kernels.n_buckets
+    partitions — the inputs here are local lists, RDD scans without a size
+    estimate, so the cap, defaultParallelism × 8 — and a MapInPandas above
+    it that runs the kernel per partition: no groupBy (so no Sort and no
+    FlatMapGroupsInPandas) and no bucket column."""
     import datetime
 
     build, by, hash_on = _grouped_operators()[name]
@@ -198,7 +176,10 @@ def test_grouped_kernel_plan(spark, name):
     blocks = spark.createDataFrame(
         [("s", "d", t, 1, t, t, "c", bytearray(b"x"))], BLOCK_SCHEMA
     )
-    plan = _plan(build(points, blocks))
+    emb = spark.createDataFrame(
+        [(1, [1.0] * 64)], "vec_id long, embedding array<float>"
+    )
+    plan = _plan(build(points, blocks, emb))
 
     def cols(s):
         return tuple(re.sub(r"#\d+L?", "", c.strip()) for c in s.split(","))
@@ -206,37 +187,36 @@ def test_grouped_kernel_plan(spark, name):
     dp = spark.sparkContext.defaultParallelism
     assert plan.count("REPARTITION_BY_NUM") == 1, plan
     ex = re.search(r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan)
-    assert cols(ex.group(1)) == (*by, "_g") and int(ex.group(2)) == dp * 4
-    mod = re.search(r"pmod\(xxhash64\(([^()]*), 42\), (\d+)\)", plan)
-    assert cols(mod.group(1)) == hash_on
-    assert int(mod.group(2)) == dp * 8
-    grp = re.search(r"FlatMapGroupsInPandas \[([^\]]*)\]", plan)
-    assert cols(grp.group(1)) == (*by, "_g")
+    assert cols(ex.group(1)) == (*by, *hash_on) and int(ex.group(2)) == dp * 8
+    assert -1 < plan.find("MapInPandas") < ex.start(), plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert not re.search(r"\bSort\b", plan), plan
+    assert not re.search(r"\b_g#", plan), plan
 
 
-def test_kernel_stages_resist_aqe_coalescing(spark):
-    """Compute-bound applyInPandas kernels must keep their task count under
-    AQE: kernels.group_kernel issues a user-specified
-    REPARTITION_BY_NUM (exempt from size-based coalescing — AQE was
-    measured collapsing the few-MB kernel shuffle to 2 of 32 cores) that
-    also satisfies the groupBy distribution, so exactly ONE exchange
-    appears and it is the non-coalescible kind."""
-    import importlib.util
+def test_kernel_stages_resist_aqe_coalescing(spark, monkeypatch):
+    """Compute-bound numpy kernels must keep their task count under AQE:
+    kernels.group_kernel issues a user-specified REPARTITION_BY_NUM
+    (exempt from size-based coalescing — AQE was measured collapsing the
+    few-MB kernel shuffle to 2 of 32 cores), n_buckets of the query's
+    input wide, so exactly ONE exchange appears and it is the
+    non-coalescible kind."""
+    from fusets_spark import kernels
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+    n_buckets, sized = kernels.n_buckets, []
+    monkeypatch.setattr(
+        kernels, "n_buckets", lambda df: sized.append(n_buckets(df)) or sized[-1]
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = entry_mod()
     for name in ("whittaker_gapfill", "gorilla_roundtrip"):
-        df = mod.queries()[name](spark, SF)
-        plan = _plan(df)
+        sized.clear()
+        plan = _plan(mod.queries()[name](spark, SF))
         assert "REPARTITION_BY_NUM" in plan, (
             f"{name}: kernel shuffle lost its AQE-coalesce exemption"
         )
-        n_parts = spark.sparkContext.defaultParallelism * 4
+        (n_parts,) = sized
         assert f", {n_parts}), REPARTITION_BY_NUM" in plan, (
-            f"{name}: kernel partition count does not track parallelism"
+            f"{name}: kernel partition count is not n_buckets of its input"
         )
 
 
