@@ -75,6 +75,7 @@ def group_kernel(
         if not frames:
             return
         pdf = pd.concat(frames, ignore_index=True)
+        del frames  # pdf holds its own copy of every batch
         if not by:
             yield fn(pdf)
             return

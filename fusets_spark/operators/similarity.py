@@ -513,8 +513,12 @@ def embedding_neardup_pairs(
         # exchange is AQE-exempt so the kernel runs wide even though the
         # stacked table is only a few MB (§2.5). Scale note: a bucket of m
         # vectors is one kernel call with m²/2 candidate pairs — the
-        # same volume the self-join emitted — chunked so peak memory is
-        # bounded; components consumers at 100-TB scale should use the
+        # same volume the self-join emitted. The pairs are generated in
+        # row bands: bounded scratch, not bounded output. `outs` still
+        # holds every threshold-surviving pair of the bucket, so a hot
+        # bucket of near-identical vectors can fill one task's memory.
+        # Exact-path consumers of clustered corpora (and components
+        # consumers at 100-TB scale) should set max_bucket_size, the
         # opt-in star cap below, which bounds the volume itself.
         stacked = _stacked(with_payload=True)
         import pandas as pd

@@ -12,7 +12,10 @@ and its subpackages, py4j, the spark-core jar, the package zip) before every
 task, which is most of a Python task's fixed cost. The no-op is safe: a zip
 never changes under a live worker, since Spark refuses to re-register a path
 with other content, and a zip added later by ``addPyFile`` has no cached
-importer, so its first import reads it fresh.
+importer, so its first import reads it fresh. The daemon also imports pandas,
+pyarrow and pyarrow's pandas converter, collects and ``gc.freeze()``s its
+heap before it forks: workers share those modules as copy-on-write pages,
+and PySpark's per-task ``gc.collect()`` skips them (see the module).
 
 The daemon module must be importable before any task ships the package. In
 local mode ``spark.executorEnv.PYTHONPATH`` names the directory holding

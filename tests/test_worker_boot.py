@@ -1,9 +1,10 @@
 """The engine's Python worker boot (fusets_spark/worker_boot.py) and the
 package zip: every worker of a get_spark session runs with zip-directory
-re-reads off, a zip added after the first job still imports, workers load
-the package from where the stock daemon's would, extra_conf restores the
-stock daemon, and ship_package's zip lives under the temp root until exit.
-No timing is asserted here."""
+re-reads off and is forked from a daemon that froze its heap, a zip added
+after the first job still imports, workers load the package from where the
+stock daemon's would, extra_conf restores the stock daemon, and
+ship_package's zip lives under the temp root until exit. No timing is
+asserted here."""
 
 from __future__ import annotations
 
@@ -20,11 +21,13 @@ REPO = Path(__file__).resolve().parents[1]
 
 def _probe(spark, tasks: int = 16):
     """One row per task: its worker pid, whether the worker runs the boot
-    module's invalidate_caches, and where it loaded fusets_spark from. The
+    module's invalidate_caches, how many objects the daemon froze before it
+    forked the worker, and where it loaded fusets_spark from. The
     UDF is nested so that it is pickled by value: workers never import
     this test module."""
 
     def _boot_probe(batches):
+        import gc
         import os
         import zipimport
 
@@ -37,13 +40,16 @@ def _probe(spark, tasks: int = 16):
                 {
                     "pid": [os.getpid()],
                     "patched": [code.co_filename.endswith("worker_boot.py")],
+                    "frozen": [gc.get_freeze_count()],
                     "file": [fusets_spark.__file__],
                 }
             )
 
     return (
         spark.range(0, 4 * tasks, numPartitions=tasks)
-        .mapInPandas(_boot_probe, "pid long, patched boolean, file string")
+        .mapInPandas(
+            _boot_probe, "pid long, patched boolean, frozen long, file string"
+        )
         .collect()
     )
 
@@ -53,6 +59,7 @@ def test_every_worker_runs_the_patched_invalidation(spark):
     rows = _probe(spark)
     assert len(rows) == 16
     assert all(r.patched for r in rows), sorted({(r.pid, r.patched) for r in rows})
+    assert all(r.frozen > 0 for r in rows), sorted({(r.pid, r.frozen) for r in rows})
 
 
 def test_zip_added_after_the_first_job_imports(spark, tmp_path):
@@ -87,7 +94,11 @@ for extra in (None, {{"spark.python.daemon.module": "pyspark.daemon"}}):
     spark = get_spark("boot-probe", cores=1, shuffle_partitions=1, extra_conf=extra)
     ship_package(spark)
     rows = _probe(spark, tasks=2)
-    out.append({{"patched": [r.patched for r in rows], "file": [r.file for r in rows]}})
+    out.append({{
+        "patched": [r.patched for r in rows],
+        "frozen": [r.frozen for r in rows],
+        "file": [r.file for r in rows],
+    }})
     spark.stop()
 print("RESULT " + json.dumps({{"pid": os.getpid(), "sessions": out}}))
 """
@@ -97,9 +108,10 @@ def test_boot_keeps_package_location_and_stock_daemon_is_one_conf_away(tmp_path)
     """In a fresh driver started outside the repository, with the package
     shipped: the default session's workers are patched, a session built
     with extra_conf={"spark.python.daemon.module": "pyspark.daemon"} runs
-    the stock daemon, and both load fusets_spark from the shipped zip, as
-    the stock daemon did before the boot module existed. The zip is gone
-    from the driver's temp root once the driver exits."""
+    the stock daemon, whose workers hold no frozen objects, and both load
+    fusets_spark from the shipped zip, as the stock daemon did before the
+    boot module existed. The zip is gone from the driver's temp root once
+    the driver exits."""
     script = tmp_path / "sessions.py"
     script.write_text(_SESSIONS.format(tests=str(REPO / "tests")))
     env = dict(
@@ -122,6 +134,8 @@ def test_boot_keeps_package_location_and_stock_daemon_is_one_conf_away(tmp_path)
     boot, stock = got["sessions"]
     assert boot["patched"] == [True, True]
     assert stock["patched"] == [False, False]
+    assert all(n > 0 for n in boot["frozen"]), boot["frozen"]
+    assert stock["frozen"] == [0, 0]
     zip_name = f"fusets_spark-{got['pid']}.zip"
     for f in boot["file"] + stock["file"]:
         assert f.endswith(os.path.join(zip_name, "fusets_spark", "__init__.py")), f
