@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels import group_kernel
+from ..kernels import group_kernel, map_kernel
 from .gorilla import decode_blocks_batch, encode_blocks_batched
 
 BLOCK_SCHEMA = (
@@ -271,21 +271,17 @@ def roundtrip_points(
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """Restore exact points from Gorilla blocks (verification / read path)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            blks = [bytes(b) for b in pdf["block"]]
-            counts, ts, vals = decode_blocks_batch(blks)
-            yield pd.DataFrame(
-                {
-                    "source": np.repeat(pdf["source"].to_numpy(), counts),
-                    "doc_id": np.repeat(pdf["doc_id"].to_numpy(), counts),
-                    "ts": _dt_ns(ts * 10**3),
-                    "value": vals,
-                }
-            )
+    def _decode(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        counts, ts, vals = decode_blocks_batch([bytes(b) for b in pdf["block"]])
+        yield pd.DataFrame(
+            {
+                "source": np.repeat(pdf["source"].to_numpy(), counts),
+                "doc_id": np.repeat(pdf["doc_id"].to_numpy(), counts),
+                "ts": _dt_ns(ts * 10**3),
+                "value": vals,
+            }
+        )
 
-    return blocks.select("source", "doc_id", "block").mapInPandas(
-        _decode, schema=POINTS_SCHEMA
+    return map_kernel(
+        blocks.select("source", "doc_id", "block"), _decode, POINTS_SCHEMA
     )

@@ -4,7 +4,7 @@ F1: the canonical tokenized-sequence table (BASELINE.json input_hint)::
 
     doc_id: string, tokens: array<int>, n_tok: int, source: string
 
-Generation is *distributed* (spark.range -> mapInPandas) and *deterministic
+Generation is *distributed* (spark.range -> map_kernel) and *deterministic
 independent of partitioning*: every token value is a pure function of
 (doc index, position), so the same (n_docs, seed) always yields byte-identical
 tables at any parallelism — required for the resume/parity tests.
@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from . import TOKEN_MISSING, VALUE_SCALE
+from .kernels import map_kernel
 
 TOKENS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -87,22 +88,21 @@ def generate_tokens(
 ) -> DataFrame:
     """F1 tokenized-sequence table, generated distributed + deterministic."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            src_idx = _doc_source_idx(ids, seed)
-            toks = [_doc_tokens(int(i), seed, min_tok, max_tok) for i in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [f"{SOURCES[s]}-{i:010d}" for i, s in zip(ids, src_idx)],
-                    "tokens": toks,
-                    "n_tok": np.asarray([len(t) for t in toks], dtype=np.int32),
-                    "source": [SOURCES[s] for s in src_idx],
-                }
-            )
+    def gen(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        ids = pdf["id"].to_numpy()
+        src_idx = _doc_source_idx(ids, seed)
+        toks = [_doc_tokens(int(i), seed, min_tok, max_tok) for i in ids]
+        yield pd.DataFrame(
+            {
+                "doc_id": [f"{SOURCES[s]}-{i:010d}" for i, s in zip(ids, src_idx)],
+                "tokens": toks,
+                "n_tok": np.asarray([len(t) for t in toks], dtype=np.int32),
+                "source": [SOURCES[s] for s in src_idx],
+            }
+        )
 
     rng = spark.range(n_docs, numPartitions=partitions)
-    return rng.mapInPandas(gen, schema=TOKENS_SCHEMA)
+    return map_kernel(rng, gen, TOKENS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

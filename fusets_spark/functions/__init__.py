@@ -15,8 +15,3 @@ def epoch_us(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
 
-
-def epoch_s(col: Column | str) -> Column:
-    """Whole seconds since epoch (floor), NTZ-tolerant."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_timestamp(c.cast("timestamp"))

@@ -1,4 +1,12 @@
-"""The grouped Python-kernel boundary.
+"""The Python-kernel boundary: every Python call over a DataFrame's rows,
+bar the stateful block sealer, goes through this module.
+
+Per-row kernels (token ingest, block decode, the MinHash/SimHash folds,
+the LSH bucket and IVF cell assignment, the media decoders, the netCDF and
+GeoTIFF loaders, the token generator) run through map_kernel: it owns the
+batch loop, skips empty batches, fans a narrow scan out (fanout_partitions)
+and picks the batch type the kernel was written for, pandas frames
+(mapInPandas) or Arrow record batches (mapInArrow).
 
 Every sequential per-series numpy kernel (codec, smoothing, harmonics,
 CCDC, peak/valley, Whittaker, MOGPR fusion) and similarity's LSH pair
@@ -18,8 +26,7 @@ exactly one partition), pinned by the grouping-invariance tests.
 
 The bucket count follows the input (n_buckets): small inputs get a few
 large partitions, so the per-call pandas/Arrow overhead is paid a few
-times, not hundreds. fanout_partitions is the scan-side counterpart for
-per-row mapInPandas kernels fused into a narrow scan stage.
+times, not hundreds.
 """
 
 from __future__ import annotations
@@ -38,7 +45,9 @@ def n_buckets(df: DataFrame) -> int:
     being defaultParallelism and the estimate the optimized plan's
     sizeInBytes (no Spark job; unknown is Long.MaxValue, so the cap). A
     bucket is one task, so the floor keeps every core busy and the cap
-    bounds per-task memory."""
+    bounds the task count. It does not bound per-task memory: past
+    dP × 8 × GROUP_BYTES (256 MiB at local[4]) every bucket grows with the
+    input (ROADMAP direction 4)."""
     dp = df.sparkSession.sparkContext.defaultParallelism
     est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return min(dp * 8, max(dp * 2, -(-est // GROUP_BYTES)))
@@ -87,13 +96,37 @@ def group_kernel(
     )
 
 
+def map_kernel(
+    df: DataFrame, fn: Callable, schema, *, arrow: bool = False
+) -> DataFrame:
+    """Run `fn` on every batch of `df`'s rows: fn(batch) returns an iterator
+    of output batches (a loader yields one per file or band, ingest two).
+    `fn` never sees an empty batch. A narrow scan is fanned out first
+    (fanout_partitions, round-robin), so a kernel's results must not depend
+    on how rows are split into batches or partitions.
+
+    arrow: batches are pyarrow RecordBatches in and out (mapInArrow), for a
+    kernel that reads list or binary columns as Arrow and returns typed
+    nulls; otherwise pandas frames (mapInPandas)."""
+
+    def run(batches: Iterator) -> Iterator:
+        for batch in batches:
+            if len(batch):
+                yield from fn(batch)
+
+    df = fanout_partitions(df)
+    if arrow:
+        return df.mapInArrow(run, schema)
+    return df.mapInPandas(run, schema=schema)
+
+
 def fanout_partitions(df: DataFrame, keys: tuple[str, ...] = ()):
     """Scale-adaptive fan-out for work fused into a narrow scan stage.
 
     Parquet row groups are atomic scan units, so a single-file/
     single-row-group input yields ONE scan partition no matter what
     maxPartitionBytes says — and everything fused into the scan stage
-    (mapInPandas kernels, map-side partial aggregation, per-row expression
+    (map_kernel calls, map-side partial aggregation, per-row expression
     evaluation) then runs on one core. When the upstream plan has fewer
     partitions than the session's parallelism, repartition to
     defaultParallelism × 2; inputs that are already wide keep their
@@ -114,8 +147,8 @@ def fanout_partitions(df: DataFrame, keys: tuple[str, ...] = ()):
     because a SINGLE upstream map task feeds each reducer one
     order-preserving block, every group still sees its rows in scan order:
     float aggregates (rounded sums/avgs) stay bit-identical to the
-    single-partition plan. Round-robin (no keys) is for per-row kernels
-    whose results are partitioning-independent by construction."""
+    single-partition plan. Round-robin (no keys) is map_kernel's: per-row
+    kernels' results are partitioning-independent by construction."""
     sc = df.sparkSession.sparkContext
     plan = df._jdf.queryExecution().executedPlan().toString()
     # "Exchange" covers shuffle, broadcast and reused exchanges; a

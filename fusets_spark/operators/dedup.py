@@ -38,6 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import map_kernel
+
+
 def _words():
     """Whitespace tokenization of `text` (built lazily: constructing a
     Column requires an active SparkContext, so no module-level Columns)."""
@@ -94,7 +97,7 @@ def minhash_signatures(
     formula is portable (md5 + substring exist in every engine, incl. the
     DuckDB oracle).
 
-    Round 7: signatures are built by a VECTORIZED mapInPandas kernel —
+    Round 7: signatures are built by a VECTORIZED kernel (map_kernel) —
     bit-identical to the expression form (the 8-hex-char substrings are
     exactly the digest's big-endian uint32 words, and fixed-width-hex
     string min == uint32 min; pinned in tests/test_training_ops.py) —
@@ -104,82 +107,77 @@ def minhash_signatures(
     cache — boilerplate shingles repeat heavily), the per-doc mins are one
     numpy minimum.reduceat over the gathered digest-word table, and
     duplicates need no handling because min is duplicate-insensitive.
-    Single-file inputs are fanned out first (kernels.fanout_partitions) so
-    the kernel is never pinned to one core by a lone parquet row group."""
+    map_kernel fans single-file inputs out first, so the kernel is never
+    pinned to one core by a lone parquet row group."""
     import numpy as np
     import pandas as pd
 
     n_digests = (n_hashes + 3) // 4
     names = [f"mh{i}" for i in range(n_hashes)]
 
-    def _sig(batches):
+    def _sig(pdf):
         import binascii
         import hashlib
         import re
 
         split = re.compile(" +").split
-        for pdf in batches:
-            cache: dict[str, int] = {}
-            rows: list[bytes] = []  # n_digests*16 raw md5 bytes per shingle
-            flat: list[int] = []
-            starts: list[int] = []
-            ids: list[int] = []
-            for doc_id, t in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
-                if t is None:
-                    continue
-                words = split(t.strip(" "))
-                if len(words) < shingle_words:
-                    # mirrors the expression form: no shingles -> the doc
-                    # has no signature row at all
-                    continue
-                ids.append(doc_id)
-                starts.append(len(flat))
-                for i in range(len(words) - shingle_words + 1):
-                    s = " ".join(words[i : i + shingle_words])
-                    j = cache.get(s)
-                    if j is None:
-                        j = len(rows)
-                        cache[s] = j
-                        rows.append(
-                            b"".join(
-                                hashlib.md5(
-                                    (s + ":" + str(d)).encode("utf-8")
-                                ).digest()
-                                for d in range(n_digests)
-                            )
-                        )
-                    flat.append(j)
-            if not ids:
+        cache: dict[str, int] = {}
+        rows: list[bytes] = []  # n_digests*16 raw md5 bytes per shingle
+        flat: list[int] = []
+        starts: list[int] = []
+        ids: list[int] = []
+        for doc_id, t in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
+            if t is None:
                 continue
-            # digest words, big-endian uint32: word w of digest d is the
-            # hex substring substr(md5, 8*w+1, 8) as a number
-            table = np.frombuffer(b"".join(rows), dtype=">u4").reshape(
-                -1, 4 * n_digests
-            )[:, :n_hashes]
-            mins = np.minimum.reduceat(
-                table[np.asarray(flat, dtype=np.int64)],
-                np.asarray(starts, dtype=np.int64),
-                axis=0,
-            )
-            data = {"doc_id": np.asarray(ids, dtype=np.int64)}
-            for k in range(n_hashes):
-                # ufunc outputs are native-endian regardless of the input's
-                # byte order — cast back to big-endian so the hex bytes come
-                # out in digest order
-                hx = binascii.hexlify(
-                    mins[:, k].astype(">u4").tobytes()
-                ).decode("ascii")
-                data[names[k]] = [
-                    hx[8 * i : 8 * i + 8] for i in range(len(ids))
-                ]
-            yield pd.DataFrame(data)
-
-    from ..kernels import fanout_partitions
+            words = split(t.strip(" "))
+            if len(words) < shingle_words:
+                # mirrors the expression form: no shingles -> the doc
+                # has no signature row at all
+                continue
+            ids.append(doc_id)
+            starts.append(len(flat))
+            for i in range(len(words) - shingle_words + 1):
+                s = " ".join(words[i : i + shingle_words])
+                j = cache.get(s)
+                if j is None:
+                    j = len(rows)
+                    cache[s] = j
+                    rows.append(
+                        b"".join(
+                            hashlib.md5(
+                                (s + ":" + str(d)).encode("utf-8")
+                            ).digest()
+                            for d in range(n_digests)
+                        )
+                    )
+                flat.append(j)
+        if not ids:
+            return
+        # digest words, big-endian uint32: word w of digest d is the
+        # hex substring substr(md5, 8*w+1, 8) as a number
+        table = np.frombuffer(b"".join(rows), dtype=">u4").reshape(
+            -1, 4 * n_digests
+        )[:, :n_hashes]
+        mins = np.minimum.reduceat(
+            table[np.asarray(flat, dtype=np.int64)],
+            np.asarray(starts, dtype=np.int64),
+            axis=0,
+        )
+        data = {"doc_id": np.asarray(ids, dtype=np.int64)}
+        for k in range(n_hashes):
+            # ufunc outputs are native-endian regardless of the input's
+            # byte order — cast back to big-endian so the hex bytes come
+            # out in digest order
+            hx = binascii.hexlify(
+                mins[:, k].astype(">u4").tobytes()
+            ).decode("ascii")
+            data[names[k]] = [
+                hx[8 * i : 8 * i + 8] for i in range(len(ids))
+            ]
+        yield pd.DataFrame(data)
 
     schema = "doc_id long, " + ", ".join(f"{n} string" for n in names)
-    return fanout_partitions(docs.select("doc_id", "text")).mapInPandas(
-        _sig, schema=schema
-    )
+    return map_kernel(docs.select("doc_id", "text"), _sig, schema)
 
 
 def minhash_lsh_pairs(
@@ -283,7 +281,7 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     = 1 iff the vote sum > 0. Returned as a `bits`-char '0'/'1' string;
     1 <= bits <= 128 (the md5 width), else ValueError.
 
-    Round 7: the vote fold runs as a VECTORIZED numpy kernel (mapInPandas)
+    Round 7: the vote fold runs as a VECTORIZED numpy kernel (map_kernel)
     instead of the interpreted per-element Catalyst fold — same integer
     votes, bit-identical output (pinned against the expression form in
     tests/reference_impls.py), ~8× the throughput at sf1.0 (19.6 s →
@@ -291,8 +289,8 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     the vote rows come from one unpackbits over the first ceil(bits/8)
     digest bytes, sliced to `bits`, and each doc's vote sum is one numpy
     gather+sum. Still zero shuffle on a well-partitioned corpus;
-    single-file inputs are fanned out first (kernels.fanout_partitions)
-    because a lone parquet row group would pin the kernel to one core.
+    map_kernel fans single-file inputs out first, because a lone parquet
+    row group would pin the kernel to one core.
     Every word OCCURRENCE votes (duplicates kept)."""
     import numpy as np
     import pandas as pd
@@ -301,64 +299,59 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
         raise ValueError(f"simhash bits must be in 1..128 (md5 width), got {bits}")
     nbytes = -(-bits // 8)
 
-    def _fold(batches):
+    def _fold(pdf):
         import hashlib
         import re
 
         split = re.compile(" +").split
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+        n = len(pdf)
+        # distinct-word digest cache: md5 each word once per batch
+        word_ix: dict[str, int] = {}
+        digests: list[bytes] = []
+        doc_words: list[list[int] | None] = []
+        for t in pdf["text"]:
+            if t is None:
+                # matches the expression form: concat_ws over the NULL
+                # fold result yields an empty string
+                doc_words.append(None)
                 continue
-            # distinct-word digest cache: md5 each word once per batch
-            word_ix: dict[str, int] = {}
-            digests: list[bytes] = []
-            doc_words: list[list[int] | None] = []
-            for t in pdf["text"]:
-                if t is None:
-                    # matches the expression form: concat_ws over the NULL
-                    # fold result yields an empty string
-                    doc_words.append(None)
-                    continue
-                idxs = []
-                for w in split(t.strip(" ")):
-                    j = word_ix.get(w)
-                    if j is None:
-                        j = len(digests)
-                        word_ix[w] = j
-                        digests.append(
-                            hashlib.md5(w.encode("utf-8")).digest()[:nbytes]
-                        )
-                    idxs.append(j)
-                doc_words.append(idxs)
-            if digests:
-                table = np.frombuffer(
-                    b"".join(digests), dtype=np.uint8
-                ).reshape(-1, nbytes)
-                # unpackbits is MSB-first per byte == hex-nibble bit order
-                bitrows = np.unpackbits(table, axis=1)[:, :bits]
-                votes = bitrows.astype(np.int32) * 2 - 1
-            else:
-                votes = np.zeros((0, bits), np.int32)
-            sums = np.zeros((n, bits), dtype=np.int64)
-            for i, idxs in enumerate(doc_words):
-                if idxs:
-                    sums[i] = votes[idxs].sum(axis=0, dtype=np.int64)
-            chars = np.where(sums > 0, ord("1"), ord("0")).astype(np.uint8)
-            sims = [
-                bytes(chars[i]).decode("ascii")
-                if doc_words[i] is not None
-                else ""
-                for i in range(n)
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "simhash": sims}
-            )
+            idxs = []
+            for w in split(t.strip(" ")):
+                j = word_ix.get(w)
+                if j is None:
+                    j = len(digests)
+                    word_ix[w] = j
+                    digests.append(
+                        hashlib.md5(w.encode("utf-8")).digest()[:nbytes]
+                    )
+                idxs.append(j)
+            doc_words.append(idxs)
+        if digests:
+            table = np.frombuffer(
+                b"".join(digests), dtype=np.uint8
+            ).reshape(-1, nbytes)
+            # unpackbits is MSB-first per byte == hex-nibble bit order
+            bitrows = np.unpackbits(table, axis=1)[:, :bits]
+            votes = bitrows.astype(np.int32) * 2 - 1
+        else:
+            votes = np.zeros((0, bits), np.int32)
+        sums = np.zeros((n, bits), dtype=np.int64)
+        for i, idxs in enumerate(doc_words):
+            if idxs:
+                sums[i] = votes[idxs].sum(axis=0, dtype=np.int64)
+        chars = np.where(sums > 0, ord("1"), ord("0")).astype(np.uint8)
+        sims = [
+            bytes(chars[i]).decode("ascii")
+            if doc_words[i] is not None
+            else ""
+            for i in range(n)
+        ]
+        yield pd.DataFrame(
+            {"doc_id": pdf["doc_id"].to_numpy(), "simhash": sims}
+        )
 
-    from ..kernels import fanout_partitions
-
-    return fanout_partitions(docs.select("doc_id", "text")).mapInPandas(
-        _fold, schema="doc_id long, simhash string"
+    return map_kernel(
+        docs.select("doc_id", "text"), _fold, "doc_id long, simhash string"
     )
 
 

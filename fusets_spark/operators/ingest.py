@@ -8,20 +8,23 @@ convention, whittaker.py:40-42). A (doc_id, bucket) group never spans two
 input rows — the tokens array IS the whole series — so both folds are pure
 maps: no explode, no shuffle.
 
-The dominant cost is the block fold (codec.blocks.block_frame, ~70% of
-kernel CPU on a perfbench-shaped 2048-row batch); the token decode and the
-pandas->Arrow hand-back are ~8% each, the ladder fold ~6%. Each Arrow batch
-is decoded once (decode_token_batch) and feeds both the ladder fold
-(ladder_frames) and the block fold.
-The output is a superset-schema frame with a `kind` discriminator ('tier'
-rows carry the rollup columns, 'block' rows the codec columns; the other
-side holds placeholders); split_ingest separates the two.
+The dominant cost is the block fold (codec.blocks.block_frame, ~80% of
+kernel CPU on a perfbench-shaped 2048-row batch); the token decode is ~10%,
+the ladder fold and building the Arrow output ~5% each. The kernel
+runs on Arrow batches (kernels.map_kernel with arrow=True): each batch's
+token lists are decoded once from their flattened values (decode_token_batch)
+and feed both the ladder fold (ladder_columns) and the block fold.
+The output holds the rollup tiers (kind='tier') and the encoded blocks
+(kind='block') in one superset schema; a row's other-kind columns are
+nulls. split_ingest separates the two.
 
 Outputs equal the independent references exactly: tiers equal
 rollup_from_raw(explode_raw(tokens), tier, with_order_keys=True) without
 its avg_val (readers derive it as sum/count), blocks
 are byte-identical to encode_blocks(explode_raw(tokens)) (pinned in
-tests/test_rollup.py and tests/test_codec.py)."""
+tests/test_rollup.py and tests/test_codec.py), NULL tokens included: a
+NULL element is a missing point and a NULL array has no points, as in
+explode_raw."""
 
 from __future__ import annotations
 
@@ -29,68 +32,77 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from ..codec.blocks import _dt_ns, block_frame
+from .. import TOKEN_MISSING
+from ..codec.blocks import block_frame
+from ..kernels import map_kernel
 from .rollup import TIERS
 
-_KEY_DDL = "source string, doc_id string, bucket_ts timestamp, "
-_TIER_DDL = (
-    "n_obs long, sum_val long, min_val double, max_val double, "
-    "first_val double, last_val double, "
-)
-_ORDER_KEY_DDL = "first_pos long, last_pos long"  # late-data merge keys
+# Spark's timestamp type as Arrow hands it over (the session pins UTC)
+_TS = pa.timestamp("us", tz="UTC")
+_KEY = {"source": pa.string(), "doc_id": pa.string(), "bucket_ts": _TS}
+_TIER = {
+    "n_obs": pa.int64(), "sum_val": pa.int64(),
+    "min_val": pa.float64(), "max_val": pa.float64(),
+    "first_val": pa.float64(), "last_val": pa.float64(),
+    "tier": pa.string(),
+    # late-data merge keys
+    "first_pos": pa.int64(), "last_pos": pa.int64(),
+}
+_BLOCK = {
+    "n_points": pa.int64(), "min_ts": _TS, "max_ts": _TS,
+    "codec": pa.string(), "block": pa.binary(),
+}
+_OUT = pa.schema({"kind": pa.string(), **_KEY, **_TIER, **_BLOCK})
+_TIER_COLS = list(_TIER)
+_BLOCK_COLS = list(_BLOCK)
 
-INGEST_SCHEMA = (
-    "kind string, " + _KEY_DDL
-    # tier columns
-    + _TIER_DDL + "tier string, " + _ORDER_KEY_DDL + ", "
-    # block columns
-    + "n_points long, min_ts timestamp, max_ts timestamp, codec string, "
-    "block binary"
-)
+_DDL = {
+    pa.string(): "string", pa.int64(): "long", pa.float64(): "double",
+    _TS: "timestamp", pa.binary(): "binary",
+}
+
+
+def _ddl(fields) -> str:
+    return ", ".join(f"{f.name} {_DDL[f.type]}" for f in fields)
+
+
+INGEST_SCHEMA = _ddl(_OUT)
 # the committed tier columns: split_ingest's tier side without `tier`
-TIER_SCHEMA = _KEY_DDL + _TIER_DDL + _ORDER_KEY_DDL
-
-_TIER_COLS = [
-    "n_obs", "sum_val", "min_val", "max_val",
-    "first_val", "last_val", "tier", "first_pos", "last_pos",
-]
-_BLOCK_COLS = ["n_points", "min_ts", "max_ts", "codec", "block"]
-_ORDER = ["kind", "source", "doc_id", "bucket_ts", *_TIER_COLS, *_BLOCK_COLS]
+TIER_SCHEMA = _ddl(
+    f for f in _OUT if f.name in _KEY or f.name in _TIER and f.name != "tier"
+)
 
 
-def decode_token_batch(pdf):
-    """Flatten one pandas batch's `tokens` arrays into (src_arr, doc_arr,
-    d, pos, v): d indexes src_arr/doc_arr, pos is the 0-based token
-    position and v the token value, with -1 sentinels (missing) dropped.
-    Returns None for empty / all-missing batches."""
-    tok_list = [np.asarray(t, dtype=np.int64) for t in pdf["tokens"]]
-    if not tok_list:
-        return None
-    lens = np.asarray([len(t) for t in tok_list], dtype=np.int64)
-    toks = np.concatenate(tok_list)
-    doc_idx = np.repeat(np.arange(len(tok_list)), lens)
-    doc_start = np.r_[0, np.cumsum(lens)[:-1]]
-    pos = np.arange(len(toks), dtype=np.int64) - doc_start[doc_idx]
-    keep = toks != -1
+def decode_token_batch(batch: pa.RecordBatch):
+    """Flatten one Arrow batch's `tokens` lists into (d, pos, v): d indexes
+    the batch's rows, pos is the 0-based token position and v the token
+    value. Missing points are dropped: -1 sentinels and NULL elements (both
+    keep their position), and a NULL array has no points. flatten() and
+    list_value_length skip a NULL array's slot (the list's .values and
+    list_parent_indices would not). Returns None when no point is left."""
+    toks = batch.column("tokens")
+    flat = pc.fill_null(toks.flatten(), TOKEN_MISSING).to_numpy()
+    lens = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
+    starts = np.cumsum(lens) - lens
+    d = np.repeat(np.arange(len(lens)), lens)
+    pos = np.arange(len(flat), dtype=np.int64) - starts[d]
+    keep = flat != TOKEN_MISSING
     if not keep.any():
         return None
-    return (
-        pdf["source"].to_numpy(),
-        pdf["doc_id"].to_numpy(),
-        doc_idx[keep],
-        pos[keep],
-        toks[keep],
-    )
+    return d[keep], pos[keep], flat[keep].astype(np.int64)
 
 
-def ladder_frames(src_arr, doc_arr, d, pos_kept, v, t0_s):
-    """Pure-numpy ladder fold over one decoded batch -> list of per-tier
-    pandas frames: 1m reduced from raw positions, 5m re-aggregating the
-    in-memory 1m group arrays, 1h the 5m arrays (the same associative
-    merges as rollup_from_tier). Every frame carries the first_pos /
-    last_pos order keys."""
+def ladder_columns(d, pos_kept, v, t0_s) -> dict[str, np.ndarray]:
+    """Pure-numpy ladder fold over one decoded batch -> the tier rows of
+    every tier, as columns: 1m reduced from raw positions, 5m
+    re-aggregating the in-memory 1m group arrays, 1h the 5m arrays (the
+    same associative merges as rollup_from_tier). `row` indexes the batch
+    rows, `tier` indexes TIERS, `bucket` is in epoch seconds, and every row
+    carries the first_pos / last_pos order keys."""
 
     def reduce_tier(d, bucket, n, s, mn, mx, fv, lv, fp, lp, seconds):
         # merge finer-tier group arrays into coarser buckets (order keys
@@ -131,59 +143,29 @@ def ladder_frames(src_arr, doc_arr, d, pos_kept, v, t0_s):
         pos_kept[st],
         pos_kept[en - 1],
     )
-    frames = []
-    for tier, seconds in TIERS.items():
-        if tier != "1m":
+    tiers = []
+    for seconds in TIERS.values():
+        if seconds != TIERS["1m"]:
             cur = reduce_tier(*cur, seconds)
-        td, tb, tn, ts_, tmn, tmx, tf, tl, tfp, tlp = cur
-        frames.append(
-            pd.DataFrame(
-                {
-                    "source": src_arr[td],
-                    "doc_id": doc_arr[td],
-                    "bucket_ts": _dt_ns(tb * 10**9),
-                    "n_obs": tn,
-                    "sum_val": ts_,
-                    "min_val": tmn,
-                    "max_val": tmx,
-                    "first_val": tf,
-                    "last_val": tl,
-                    "tier": tier,
-                    "first_pos": tfp,
-                    "last_pos": tlp,
-                }
-            )
-        )
-    return frames
+        tiers.append(cur)
+    names = (
+        "row", "bucket", "n_obs", "sum_val", "min_val", "max_val",
+        "first_val", "last_val", "first_pos", "last_pos",
+    )
+    cols = {k: np.concatenate(c) for k, c in zip(names, zip(*tiers))}
+    cols["tier"] = np.repeat(np.arange(len(tiers)), [len(t[0]) for t in tiers])
+    return cols
 
 
-def _pad_nulls(frame: pd.DataFrame, null_cols: list[str]) -> pd.DataFrame:
-    # Pad the other kind's columns with NATIVE-dtype placeholders.
-    # Two hard constraints, both measured:
-    #   * NEVER concat tier+block frames into one — mixing typed
-    #     numerics with object Nones coerces the numeric columns to
-    #     object dtype and Arrow serialization goes per-element
-    #     (2x wall on the whole job);
-    #   * NEVER use pandas extension dtypes ("Int64" masked ints) for
-    #     the padded long columns — their Arrow conversion crashed
-    #     Python workers sporadically under load (silent worker exit
-    #     mid-stage, which local mode turns into a hung job). Integer
-    #     placeholders are 0, not null: split_ingest selects only the
-    #     columns matching the row's `kind`, so padded cells are never
-    #     read.
-    for col in null_cols:
-        if col in ("min_ts", "max_ts"):
-            frame[col] = pd.Series(pd.NaT, index=frame.index)
-        elif col in ("codec", "tier"):
-            frame[col] = ""
-        elif col == "block":
-            frame[col] = None  # binary: object column either way
-        elif col in ("n_obs", "sum_val", "n_points", "first_pos",
-                     "last_pos"):
-            frame[col] = np.int64(0)
-        else:
-            frame[col] = np.nan
-    return frame[_ORDER]
+def _out_batch(kind: str, cols: dict[str, pa.Array]) -> pa.RecordBatch:
+    """One output batch of `kind` rows: `cols` and typed nulls for the
+    other kind's columns."""
+    n = len(cols["doc_id"])
+    cols["kind"] = pa.repeat(pa.scalar(kind), n)
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in _OUT],
+        schema=_OUT,
+    )
 
 
 def ingest_from_tokens(
@@ -195,34 +177,46 @@ def ingest_from_tokens(
     and the encoded Gorilla blocks (kind='block'), from a single scan."""
     t0_s = int(pd.Timestamp(t0).value // 10**9)
     t0_us = t0_s * 10**6
+    tier_names = pa.array(list(TIERS))
 
-    def _ingest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dec = decode_token_batch(pdf)
-            if dec is None:
-                continue
-            src_arr, doc_arr, d, pos, v = dec
-            tiers = pd.concat(
-                ladder_frames(src_arr, doc_arr, d, pos, v, t0_s),
-                ignore_index=True,
-            )
-            tiers.insert(0, "kind", "tier")
-            yield _pad_nulls(tiers, _BLOCK_COLS)
-            # token order (row, position) is already canonical
-            ep_us = t0_us + pos * 10**6
-            blocks = block_frame(
-                src_arr,
-                doc_arr,
-                d,
-                ep_us - ep_us % (block_seconds * 10**6),
-                ep_us,
-                v.astype(np.float64),
-            )
-            blocks.insert(0, "kind", "block")
-            yield _pad_nulls(blocks, _TIER_COLS)
+    def _ingest(batch: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
+        dec = decode_token_batch(batch)
+        if dec is None:
+            return
+        d, pos, v = dec
+        src, doc = batch.column("source"), batch.column("doc_id")
+        t = ladder_columns(d, pos, v, t0_s)
+        row = pa.array(t.pop("row"))
+        yield _out_batch(
+            "tier",
+            {
+                "source": src.take(row),
+                "doc_id": doc.take(row),
+                "bucket_ts": pa.array(t.pop("bucket") * 10**6, _TS),
+                "tier": tier_names.take(pa.array(t.pop("tier"))),
+                **{k: pa.array(c) for k, c in t.items()},
+            },
+        )
+        # token order (row, position) is already canonical
+        ep_us = t0_us + pos * 10**6
+        blocks = block_frame(
+            src.to_numpy(zero_copy_only=False),
+            doc.to_numpy(zero_copy_only=False),
+            d,
+            ep_us - ep_us % (block_seconds * 10**6),
+            ep_us,
+            v.astype(np.float64),
+        )
+        yield _out_batch(
+            "block",
+            {c: pa.array(blocks[c], _OUT.field(c).type) for c in blocks},
+        )
 
-    return tokens_df.select("source", "doc_id", "tokens").mapInPandas(
-        _ingest, schema=INGEST_SCHEMA
+    return map_kernel(
+        tokens_df.select("source", "doc_id", "tokens"),
+        _ingest,
+        INGEST_SCHEMA,
+        arrow=True,
     )
 
 

@@ -10,7 +10,7 @@ byte layouts:
   * WAV — RIFF/WAVE container with a 'fmt ' chunk; channels (uint16 LE at
     22), sample rate (uint32 LE at 24), bits (uint16 LE at 34) and the
     'data' chunk size at 40 (canonical 44-byte header).
-Runs as a pure-Python mapInPandas over Arrow byte batches (header peeks —
+Runs as a pure-Python map_kernel over byte batches (header peeks —
 no per-pixel work), so it needs no media libraries and is exactly
 SQL-mirrorable (the driver oracle derives every parsed field independently
 and compares).
@@ -35,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernels import map_kernel
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -72,39 +74,25 @@ def decode_media_headers(
     df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Typed metadata from real container bytes (PNG IHDR / WAV RIFF) — a
-    mapInPandas header peek, one output row per media item."""
+    map_kernel header peek, one output row per media item."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                kind, w, h, ch, sr, ns = parse_media_header(data)
-                rows.append(
-                    (
-                        str(mid),
-                        kind,
-                        len(data),
-                        hashlib.sha256(data).hexdigest(),
-                        w,
-                        h,
-                        ch,
-                        sr,
-                        ns,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "n_bytes", "sha256",
-                    "width", "height", "n_channels", "sample_rate",
-                    "n_samples",
-                ],
-            )
+    def _run(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        rows = []
+        for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            data = bytes(payload)
+            kind, w, h, ch, sr, ns = parse_media_header(data)
+            sha = hashlib.sha256(data).hexdigest()
+            rows.append((str(mid), kind, len(data), sha, w, h, ch, sr, ns))
+        yield pd.DataFrame(
+            rows,
+            columns=[
+                "media_id", "media_type", "n_bytes", "sha256",
+                "width", "height", "n_channels", "sample_rate",
+                "n_samples",
+            ],
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=HEADER_SCHEMA
-    )
+    return map_kernel(df.select(id_col, payload_col), _run, HEADER_SCHEMA)
 
 MEDIA_SCHEMA = (
     "media_id string, media_type string, n_bytes long, sha256 string, "
@@ -183,44 +171,31 @@ def decode_media_pixels(
     df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
     """REAL per-pixel decode of BMP payloads to exploded (media_id, y, x,
-    px) rows — mapInPandas over Arrow byte batches, numpy reshape/flip per
+    px) rows — a map_kernel over byte batches, numpy reshape/flip per
     item (no per-pixel Python). This retires the former declared stub: the
     container in/pixels out path is fully real for the dependency-free
     uncompressed format; compressed containers still require external
     decoders (decode_bmp raises a descriptive error for them)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ys, xs, pxs = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, arr = decode_bmp(bytes(payload))
-                ids.append(
-                    np.repeat(np.asarray([str(mid)], dtype=object), w * h)
-                )
-                ys.append(np.repeat(np.arange(h, dtype=np.int64), w))
-                xs.append(np.tile(np.arange(w, dtype=np.int64), h))
-                pxs.append(arr.ravel().astype(np.int64))
-            if not ids:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pd.Series(dtype=object),
-                        "y": pd.Series(dtype=np.int64),
-                        "x": pd.Series(dtype=np.int64),
-                        "px": pd.Series(dtype=np.int64),
-                    }
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": np.concatenate(ids),
-                    "y": np.concatenate(ys),
-                    "x": np.concatenate(xs),
-                    "px": np.concatenate(pxs),
-                }
-            )
+    def _run(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        ids, ys, xs, pxs = [], [], [], []
+        for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            w, h, arr = decode_bmp(bytes(payload))
+            ids.append(np.repeat(np.asarray([str(mid)], dtype=object), w * h))
+            ys.append(np.repeat(np.arange(h, dtype=np.int64), w))
+            xs.append(np.tile(np.arange(w, dtype=np.int64), h))
+            pxs.append(arr.ravel().astype(np.int64))
+        yield pd.DataFrame(
+            {
+                "media_id": np.concatenate(ids),
+                "y": np.concatenate(ys),
+                "x": np.concatenate(xs),
+                "px": np.concatenate(pxs),
+            }
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=PIXEL_DECODE_SCHEMA
+    return map_kernel(
+        df.select(id_col, payload_col), _run, PIXEL_DECODE_SCHEMA
     )
 
 
@@ -259,36 +234,25 @@ def extract_media_features(
     media_type: str = "image",
     fake: bool = False,
 ) -> DataFrame:
-    """Decode/feature-extract media payloads via mapInPandas (Arrow batches
+    """Decode/feature-extract media payloads via map_kernel (batches
     of raw bytes; one output row per media item)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                w, h, nf, mi = _decode_one(data, media_type, fake)
-                rows.append(
-                    (
-                        str(mid),
-                        media_type,
-                        len(data),
-                        hashlib.sha256(data).hexdigest(),
-                        w,
-                        h,
-                        nf,
-                        mi,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "n_bytes", "sha256",
-                    "width", "height", "n_frames", "mean_intensity",
-                ],
-            )
+    def _run(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        rows = []
+        for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            data = bytes(payload)
+            w, h, nf, mi = _decode_one(data, media_type, fake)
+            sha = hashlib.sha256(data).hexdigest()
+            rows.append((str(mid), media_type, len(data), sha, w, h, nf, mi))
+        yield pd.DataFrame(
+            rows,
+            columns=[
+                "media_id", "media_type", "n_bytes", "sha256",
+                "width", "height", "n_frames", "mean_intensity",
+            ],
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(_run, schema=MEDIA_SCHEMA)
+    return map_kernel(df.select(id_col, payload_col), _run, MEDIA_SCHEMA)
 
 
 def frame_sample_plan(
@@ -330,8 +294,8 @@ def resize_raw_media(
     """REAL nearest-neighbor resize over raw single-channel bitmap buffers
     (row-major uint8, one byte per pixel) — no media libraries required,
     so unlike the compressed-pixel path this is NOT a stub: the gather is
-    plain vectorized numpy (`arr[np.ix_(rows, cols)]`) inside mapInPandas
-    over Arrow byte batches. Compressed containers (PNG/JPEG) must be
+    plain vectorized numpy (`arr[np.ix_(rows, cols)]`) inside a map_kernel
+    over byte batches. Compressed containers (PNG/JPEG) must be
     decoded to raw first (that step is the container-blocked stub in
     extract_media_features); raw tiles are also exactly what a training
     pipeline stores after ingest-time decode.
@@ -342,51 +306,47 @@ def resize_raw_media(
     if output not in ("binary", "pixels"):
         raise ValueError(f"unknown output mode {output!r}")
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = np.repeat(np.arange(out_h, dtype=np.int64), out_w)
-        xs = np.tile(np.arange(out_w, dtype=np.int64), out_h)
-        for pdf in batches:
-            out_rows = []
-            for mid, payload, w, h in zip(
-                pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col]
-            ):
-                w, h = int(w), int(h)
-                buf = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if len(buf) < w * h:
-                    raise ValueError(
-                        f"payload of {mid!r} holds {len(buf)} bytes < "
-                        f"{w}x{h} bitmap"
-                    )
-                arr = buf[: w * h].reshape(h, w)
-                res = arr[np.ix_(_nn_index(out_h, h), _nn_index(out_w, w))]
-                if output == "binary":
-                    out_rows.append(
-                        (str(mid), out_w, out_h, res.tobytes())
-                    )
-                else:
-                    out_rows.append((str(mid), res))
-            if output == "binary":
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=["media_id", "out_w", "out_h", "resized"],
+    ys = np.repeat(np.arange(out_h, dtype=np.int64), out_w)
+    xs = np.tile(np.arange(out_w, dtype=np.int64), out_h)
+
+    def _run(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        ids, res = [], []
+        for mid, payload, w, h in zip(
+            pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col]
+        ):
+            w, h = int(w), int(h)
+            buf = np.frombuffer(bytes(payload), dtype=np.uint8)
+            if len(buf) < w * h:
+                raise ValueError(
+                    f"payload of {mid!r} holds {len(buf)} bytes < "
+                    f"{w}x{h} bitmap"
                 )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "media_id": np.repeat(
-                            np.asarray([r[0] for r in out_rows], dtype=object),
-                            out_w * out_h,
-                        ),
-                        "y": np.tile(ys, len(out_rows)),
-                        "x": np.tile(xs, len(out_rows)),
-                        "px": np.concatenate(
-                            [r[1].ravel() for r in out_rows]
-                        ).astype(np.int64)
-                        if out_rows
-                        else np.empty(0, np.int64),
-                    }
-                )
+            arr = buf[: w * h].reshape(h, w)
+            ids.append(str(mid))
+            res.append(arr[np.ix_(_nn_index(out_h, h), _nn_index(out_w, w))])
+        if output == "binary":
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "out_w": out_w,
+                    "out_h": out_h,
+                    "resized": [r.tobytes() for r in res],
+                }
+            )
+        else:
+            yield pd.DataFrame(
+                {
+                    "media_id": np.repeat(
+                        np.asarray(ids, dtype=object), out_w * out_h
+                    ),
+                    "y": np.tile(ys, len(ids)),
+                    "x": np.tile(xs, len(ids)),
+                    "px": np.concatenate([r.ravel() for r in res]).astype(
+                        np.int64
+                    ),
+                }
+            )
 
     cols = [id_col, payload_col, width_col, height_col]
     schema = RESIZE_SCHEMA if output == "binary" else PIXEL_SCHEMA
-    return df.select(*cols).mapInPandas(_run, schema=schema)
+    return map_kernel(df.select(*cols), _run, schema)

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..datagen import _hash01
-from ..kernels import fanout_partitions, group_kernel
+from ..kernels import group_kernel, map_kernel
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -190,7 +190,7 @@ def _bucket_strings_kernel(
     dim: int,
     norm_col: str | None = None,
 ) -> DataFrame:
-    """Corpus-side bucket assignment as a vectorized mapInPandas kernel
+    """Corpus-side bucket assignment as a vectorized map_kernel
     (guide §4.2) — appends one '0'/'1' bucket-string column per
     (name, planes) set to a frame with vec_id and embedding columns,
     passing every input column through.
@@ -213,26 +213,23 @@ def _bucket_strings_kernel(
         StructType,
     )
 
-    def _assign(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = _embedding_matrix(pdf["vec_id"], pdf["embedding"], dim)
-            pdf = pdf.copy()
-            for name, planes in sets:
-                chars = np.where(
-                    _plane_margins(V, planes) > 0, ord("1"), ord("0")
-                ).astype(np.uint8)
-                pdf[name] = [
-                    bytes(chars[r]).decode("ascii") for r in range(n)
-                ]
-            if norm_col is not None:
-                acc = np.zeros(n, dtype=np.float64)
-                for k in range(dim):
-                    acc += V[:, k] * V[:, k]  # _norm's exact fold
-                pdf[norm_col] = np.sqrt(acc)
-            yield pdf
+    def _assign(pdf):
+        n = len(pdf)
+        V = _embedding_matrix(pdf["vec_id"], pdf["embedding"], dim)
+        pdf = pdf.copy()
+        for name, planes in sets:
+            chars = np.where(
+                _plane_margins(V, planes) > 0, ord("1"), ord("0")
+            ).astype(np.uint8)
+            pdf[name] = [
+                bytes(chars[r]).decode("ascii") for r in range(n)
+            ]
+        if norm_col is not None:
+            acc = np.zeros(n, dtype=np.float64)
+            for k in range(dim):
+                acc += V[:, k] * V[:, k]  # _norm's exact fold
+            pdf[norm_col] = np.sqrt(acc)
+        yield pdf
 
     # fresh StructType (never .add on a cached schema — it mutates)
     fields = list(df.schema.fields) + [
@@ -240,7 +237,7 @@ def _bucket_strings_kernel(
     ]
     if norm_col is not None:
         fields.append(StructField(norm_col, DoubleType(), False))
-    return df.mapInPandas(_assign, schema=StructType(fields))
+    return map_kernel(df, _assign, StructType(fields))
 
 
 def probe_buckets(qvec: np.ndarray, planes: np.ndarray, n_probes: int) -> list[str]:
@@ -332,8 +329,8 @@ def train_ivf_centroids(
 
 
 def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
-    """Corpus-side nearest-centroid assignment as a vectorized mapInPandas
-    kernel (guide §4.2). The Catalyst form — array_sort over n_cells
+    """Corpus-side nearest-centroid assignment as a vectorized map_kernel
+    (guide §4.2). The Catalyst form — array_sort over n_cells
     structs each holding an unrolled 64-term dot — is a ~1,000-node
     expression tree that exceeds codegen limits and evaluates INTERPRETED
     per row (~0.8 ms/row: 16 s for 20k embeddings on one core).
@@ -345,14 +342,11 @@ def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
     (tests/test_training_ops.py)."""
     dim = C.shape[1]
 
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _embedding_matrix(pdf["vec_id"], pdf["embedding"], dim)
-            pdf = pdf.copy()
-            pdf["cell"] = np.argmin(_cell_scores(V, C), axis=1).astype(np.int32)
-            yield pdf
+    def _assign(pdf):
+        V = _embedding_matrix(pdf["vec_id"], pdf["embedding"], dim)
+        pdf = pdf.copy()
+        pdf["cell"] = np.argmin(_cell_scores(V, C), axis=1).astype(np.int32)
+        yield pdf
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -363,7 +357,7 @@ def _assign_cells_kernel(embeddings: DataFrame, C: np.ndarray) -> DataFrame:
         list(embeddings.schema.fields)
         + [StructField("cell", IntegerType(), False)]
     )
-    return fanout_partitions(embeddings).mapInPandas(_assign, schema=schema)
+    return map_kernel(embeddings, _assign, schema)
 
 
 def ivf_topk(

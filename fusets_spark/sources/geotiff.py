@@ -25,7 +25,7 @@ Gated (clear NotImplementedError): other compressions (JPEG/ZSTD…),
 the floating-point Predictor 3, and planar configuration 2.
 
 Scale path: `sources.loaders.load_sits_geotiff` explodes raster pixels
-to long rows ON EXECUTORS (binaryFile + mapInPandas), one granule per
+to long rows ON EXECUTORS (binaryFile + kernels.map_kernel), one granule per
 task — the reference's "raster pixel -> row explosion" recast.
 """
 

@@ -12,7 +12,7 @@
   equivalent). Uses xarray when installed; otherwise a dependency-free
   CLASSIC-format byte parser (sources/netcdf3.py) takes over — single
   file on the driver, or a whole directory parsed ON EXECUTORS via the
-  binaryFile source + mapInPandas. NetCDF-4/HDF5 stays gated.
+  binaryFile source + kernels.map_kernel. NetCDF-4/HDF5 stays gated.
 
 Sinks are plain `df.write.parquet` / the TierStore commit protocol — the
 reference's netCDF sink (tests/test_whittaker.py:73-76) maps to the tier
@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..kernels import map_kernel
 
 _NUMERIC = (
     T.DoubleType, T.FloatType, T.IntegerType, T.LongType,
@@ -195,7 +197,7 @@ def load_sits_netcdf(spark: SparkSession, path: str) -> DataFrame:
 
 def load_netcdf_dir(spark: SparkSession, path: str) -> DataFrame:
     """DISTRIBUTED netCDF ingest: every file in `path` is parsed on an
-    executor (Spark's binaryFile source ships the bytes; a mapInPandas
+    executor (Spark's binaryFile source ships the bytes; a map_kernel
     batch runs the pure-numpy parser), so ingest parallelism is
     file-count bound exactly like the production parquet path. Classic
     CDF-1/2 and NetCDF-4 (HDF5; contiguous or chunked-compressed) granules
@@ -213,18 +215,13 @@ def load_netcdf_dir(spark: SparkSession, path: str) -> DataFrame:
     probe["src_file"] = ""
     schema = spark.createDataFrame(probe.head(1)).schema
 
-    def _parse(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                frame = _classic_to_frame(
-                    read_netcdf_auto(bytes(row["content"]))
-                )
-                frame["src_file"] = row["path"]
-                yield frame
+    def _parse(pdf):
+        for src_file, content in zip(pdf["path"], pdf["content"]):
+            frame = _classic_to_frame(read_netcdf_auto(bytes(content)))
+            frame["src_file"] = src_file
+            yield frame
 
-    return files.select("path", "content").mapInPandas(
-        _parse, schema=schema
-    )
+    return map_kernel(files.select("path", "content"), _parse, schema)
 
 
 def load_sits_geotiff(
@@ -250,7 +247,7 @@ def load_sits_geotiff(
         silent drop of trailing coords).
 
     Parsing runs ON EXECUTORS (binaryFile ships each granule's bytes; a
-    mapInPandas batch runs the dependency-free baseline-TIFF parser in
+    map_kernel batch runs the dependency-free baseline-TIFF parser in
     sources/geotiff.py), so ingest parallelism is granule-count bound.
     Georeferenced rasters emit cell-center map coordinates from the
     GeoTIFF tags; ungeoreferenced ones emit pixel indices. Nodata pixels
@@ -312,62 +309,57 @@ def load_sits_geotiff(
         "ts timestamp, y double, x double, value double, src_file string"
     )
 
-    def _explode(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                page = read_tiff(bytes(row["content"]))[0]
-                native = np.asarray(page.data)
-                # nodata must be compared in the raster's NATIVE dtype:
-                # float64(float32(-9999.9)) != float('-9999.9'), so a
-                # post-cast compare silently passes fractional-nodata
-                # pixels through as valid (rioxarray masks pre-cast too)
-                arr = native.astype(np.float64)
-                if page.nodata is not None:
-                    nd = np.asarray(page.nodata).astype(native.dtype)
-                    # integer rasters: only mask when the tag is exactly
-                    # representable in the native dtype — a wrapping cast
-                    # (e.g. -9999 tagged on a u8/u16 raster) lands on an
-                    # arbitrary in-range value and would NaN out real
-                    # pixels. Float rasters keep the pre-cast compare
-                    # (float32(-9999.9) == float32 tag, by construction).
-                    representable = (
-                        float(nd) == float(page.nodata)
-                        if np.issubdtype(native.dtype, np.integer)
-                        else True
-                    )
-                    if representable:
-                        arr[native == nd] = np.nan
-                bands = (
-                    [arr[:, :, b] for b in range(arr.shape[2])]
-                    if arr.ndim == 3
-                    else [arr]
+    def _explode(pdf):
+        for src_file, content in zip(pdf["path"], pdf["content"]):
+            page = read_tiff(bytes(content))[0]
+            native = np.asarray(page.data)
+            # nodata must be compared in the raster's NATIVE dtype:
+            # float64(float32(-9999.9)) != float('-9999.9'), so a
+            # post-cast compare silently passes fractional-nodata
+            # pixels through as valid (rioxarray masks pre-cast too)
+            arr = native.astype(np.float64)
+            if page.nodata is not None:
+                nd = np.asarray(page.nodata).astype(native.dtype)
+                # integer rasters: only mask when the tag is exactly
+                # representable in the native dtype — a wrapping cast
+                # (e.g. -9999 tagged on a u8/u16 raster) lands on an
+                # arbitrary in-range value and would NaN out real
+                # pixels. Float rasters keep the pre-cast compare
+                # (float32(-9999.9) == float32 tag, by construction).
+                representable = (
+                    float(nd) == float(page.nodata)
+                    if np.issubdtype(native.dtype, np.integer)
+                    else True
                 )
-                gt = page.geotransform()
-                rows_idx, cols_idx = np.meshgrid(
-                    np.arange(page.height), np.arange(page.width),
-                    indexing="ij",
+                if representable:
+                    arr[native == nd] = np.nan
+            bands = (
+                [arr[:, :, b] for b in range(arr.shape[2])]
+                if arr.ndim == 3
+                else [arr]
+            )
+            gt = page.geotransform()
+            rows_idx, cols_idx = np.meshgrid(
+                np.arange(page.height), np.arange(page.width),
+                indexing="ij",
+            )
+            if gt is not None:
+                xs = gt[0] + (cols_idx + 0.5) * gt[1]
+                ys = gt[3] + (rows_idx + 0.5) * gt[5]
+            else:
+                xs = cols_idx.astype(np.float64)
+                ys = rows_idx.astype(np.float64)
+            for b, band in enumerate(bands):
+                vals = band.ravel()
+                ts = times[b] if band_mode else path_to_ts[src_file]
+                yield pd.DataFrame(
+                    {
+                        "ts": ts,
+                        "y": ys.ravel(),
+                        "x": xs.ravel(),
+                        "value": vals,
+                        "src_file": src_file,
+                    }
                 )
-                if gt is not None:
-                    xs = gt[0] + (cols_idx + 0.5) * gt[1]
-                    ys = gt[3] + (rows_idx + 0.5) * gt[5]
-                else:
-                    xs = cols_idx.astype(np.float64)
-                    ys = rows_idx.astype(np.float64)
-                for b, band in enumerate(bands):
-                    vals = band.ravel()
-                    ts = (
-                        times[b] if band_mode else path_to_ts[row["path"]]
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "ts": ts,
-                            "y": ys.ravel(),
-                            "x": xs.ravel(),
-                            "value": vals,
-                            "src_file": row["path"],
-                        }
-                    )
 
-    return files.select("path", "content").mapInPandas(
-        _explode, schema=schema
-    )
+    return map_kernel(files.select("path", "content"), _explode, schema)

@@ -24,7 +24,7 @@ sources/hdf5.py via read_netcdf_auto.
 Scale path: `sources.loaders.load_sits_netcdf` uses this for one file;
 `load_netcdf_dir` parses a DIRECTORY of classic files distributedly —
 Spark's binaryFile source ships each file's bytes to an executor and a
-mapInPandas batch parses it there, so ingest parallelism is file-count
+map_kernel batch parses it there, so ingest parallelism is file-count
 bound exactly like the production parquet path.
 """
 

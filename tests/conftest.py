@@ -22,6 +22,23 @@ def entry_mod():
     return mod
 
 
+def with_null_tokens(spark, toks):
+    """toks plus three rows explode_raw reads as missing data: a NULL
+    element (a missing point that keeps its position), a NULL tokens array
+    (no points) and an all-missing row (no points)."""
+    from fusets_spark.datagen import TOKENS_SCHEMA
+
+    elems = [100 + 7 * i for i in range(150)]
+    elems[3] = elems[70] = None
+    elems[5] = -1
+    rows = [
+        ("s2ndvi-null-elem", elems, len(elems), "s2ndvi"),
+        ("s2ndvi-null-array", None, 0, "s2ndvi"),
+        ("rvi-all-missing", [-1, -1, -1], 3, "rvi"),
+    ]
+    return toks.unionByName(spark.createDataFrame(rows, TOKENS_SCHEMA))
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = get_spark("fusets-tests", cores=4, shuffle_partitions=8)

@@ -1,6 +1,8 @@
-"""The grouped-kernel boundary stays single: kernels.py is the only place
-that buckets series or repartitions into a Python kernel, and the stateful
-sealer's applyInPandasWithState is the only grouped Python call. The block
+"""The Python-kernel boundary stays single: kernels.py is the only place
+that buckets series, repartitions into a Python kernel or calls
+mapInPandas/mapInArrow (every per-row kernel goes through map_kernel), and
+the stateful sealer's applyInPandasWithState is the only grouped Python
+call outside it. The block
 fold stays single too: only codec.blocks.block_frame (and the single-block
 encode_block) call the Gorilla encoder, and nothing in the package calls
 encode_block. So does the tier aggregate: min_by/max_by
@@ -11,7 +13,8 @@ has one form in the package: the second forms tests pin it against live
 in tests/reference_impls.py, and no package module defines or imports
 them. Also pins the sizing: n_buckets, the grouped kernels' bucket count
 from the input's plan estimate (the stream sealer's count stays fixed) and
-one task per bucket, and fanout_partitions, its scan-side counterpart."""
+one task per bucket, and fanout_partitions, its scan-side counterpart,
+which map_kernel applies to every per-row kernel's input."""
 
 from __future__ import annotations
 
@@ -46,7 +49,7 @@ def _method(node) -> str | None:
 def _findings(tree: ast.AST):
     for node in ast.walk(tree):
         name = _method(node)
-        if name in _GROUPED_CALLS:
+        if name in _KERNEL_CALLS:
             yield name, node.lineno
         if name in _KERNEL_CALLS:
             # walk the receiver chain: x.repartition(...).groupBy(...).<kernel>
@@ -90,11 +93,12 @@ def test_guard_catches_a_hand_wired_kernel():
         "out = g.repartition(16, 'source', '_g').groupBy('source', '_g')"
         ".applyInPandas(fn, schema)\n"
         "from ..session import default_groups\n"
+        "pts = blocks.select('block').mapInPandas(decode, schema)\n"
     )
     kinds = sorted(k for k, _ in _findings(ast.parse(src)))
     assert kinds == [
-        "applyInPandas", "default_groups", "repartition into kernel",
-        "xxhash64 bucket",
+        "applyInPandas", "default_groups", "mapInPandas",
+        "repartition into kernel", "xxhash64 bucket",
     ]
 
 
@@ -389,21 +393,35 @@ def test_fanout_runs_no_job_on_a_shuffled_input(spark):
     assert _exchanges(out) == _exchanges(agg) == 1
 
 
-@pytest.mark.parametrize("keys", [(), ("doc_id",)])
+@pytest.mark.parametrize("keys", [(), ("doc_id",), "map_kernel"])
 def test_fanout_widens_a_single_partition_scan(spark, tmp_path, keys):
     """The case fanout_partitions exists for: a one-file parquet scan is
-    one partition, and everything fused into it would run on one core."""
-    from fusets_spark.kernels import fanout_partitions
+    one partition, and everything fused into it would run on one core.
+    A per-row kernel on it (map_kernel) runs at dP × 2 tasks."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from fusets_spark.kernels import fanout_partitions, map_kernel
 
     path = str(tmp_path / "one.parquet")
     spark.range(100).selectExpr("CAST(id AS STRING) AS doc_id").coalesce(1).write.parquet(path)
     scan = spark.read.parquet(path)
     assert scan.rdd.getNumPartitions() == 1
-    out = fanout_partitions(scan, keys=keys)
     width = spark.sparkContext.defaultParallelism * 2
+    if keys == "map_kernel":
+        out = map_kernel(
+            scan, lambda pdf: iter([pd.DataFrame({"rows": [len(pdf)]})]),
+            "rows long",
+        )
+        calls = out.select("rows", F.spark_partition_id().alias("task"))
+        calls = calls.toPandas()
+        assert calls["rows"].sum() == 100 and calls["task"].nunique() == width
+    else:
+        out = fanout_partitions(scan, keys=keys)
     assert out.rdd.getNumPartitions() == width
     plan = out._jdf.queryExecution().executedPlan().toString()
-    kind = "hashpartitioning(doc_id" if keys else "RoundRobinPartitioning("
+    hashed = keys == ("doc_id",)
+    kind = "hashpartitioning(doc_id" if hashed else "RoundRobinPartitioning("
     assert kind in plan and f"{width}), REPARTITION_BY_NUM" in plan
 
 
