@@ -16,7 +16,8 @@ token lists are decoded once from their flattened values (decode_token_batch)
 and feed both the ladder fold (ladder_columns) and the block fold.
 The output holds the rollup tiers (kind='tier') and the encoded blocks
 (kind='block') in one superset schema; a row's other-kind columns are
-nulls. split_ingest separates the two.
+nulls. The pipeline labels each row with its stage and stages them all in
+one write (plans/pipeline.py), whose reads take each stage's own columns.
 
 Outputs equal the independent references exactly: tiers equal
 rollup_from_raw(explode_raw(tokens), tier, with_order_keys=True) without
@@ -57,8 +58,6 @@ _BLOCK = {
     "codec": pa.string(), "block": pa.binary(),
 }
 _OUT = pa.schema({"kind": pa.string(), **_KEY, **_TIER, **_BLOCK})
-_TIER_COLS = list(_TIER)
-_BLOCK_COLS = list(_BLOCK)
 
 _DDL = {
     pa.string(): "string", pa.int64(): "long", pa.float64(): "double",
@@ -71,7 +70,7 @@ def _ddl(fields) -> str:
 
 
 INGEST_SCHEMA = _ddl(_OUT)
-# the committed tier columns: split_ingest's tier side without `tier`
+# the committed tier columns: the tier rows' columns without `tier`
 TIER_SCHEMA = _ddl(
     f for f in _OUT if f.name in _KEY or f.name in _TIER and f.name != "tier"
 )
@@ -218,17 +217,3 @@ def ingest_from_tokens(
         INGEST_SCHEMA,
         arrow=True,
     )
-
-
-def split_ingest(ingested: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(tiers, blocks) views of a fused ingest frame — cheap filters; use
-    after persisting the fused output (or over its parquet sink) so the
-    token scan is not recomputed per side. Tier rows keep their `tier`
-    label; both sides keep their committed column order."""
-    tiers = ingested.filter("kind = 'tier'").select(
-        "source", "doc_id", "bucket_ts", *_TIER_COLS
-    )
-    blocks = ingested.filter("kind = 'block'").select(
-        "source", "doc_id", "bucket_ts", *_BLOCK_COLS
-    )
-    return tiers, blocks

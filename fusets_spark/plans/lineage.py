@@ -5,11 +5,12 @@ Commit protocol (per input batch, per stage):
      integer sums, argmin/argmax by unique keys, deterministic codecs (no
      partition-count or batch-order dependence anywhere);
   2. STAGE them: every pending stage of the batch goes out in one
-     partitioned write under `_staging/<id>/<key>=<stage>/source=<s>/`
-     (stage_batches). The write carries a DataFrame.observe of the
-     manifest-stats fold, one conditional set per stage, so row count,
-     content hash and bucket_ts range come from the write job itself —
-     no read-back;
+     partitioned write under `_staging/<id>/<key>=<stage>/source=<s>/`,
+     clustered by (stage, source) so a small batch writes one file per
+     directory (stage_batches). The write carries a DataFrame.observe of
+     the manifest-stats fold, one conditional set per stage over that
+     stage's committed columns, so row count, content hash and bucket_ts
+     range come from the write itself — no read-back;
   3. RENAME each staged stage into `tiers/<stage>/batch=<id>` (write_batch;
      an uncommitted tree left there by a crashed attempt is dropped first,
      so re-running replaces the partition instead of merging into it);
@@ -131,35 +132,54 @@ def content_hash(df: DataFrame) -> tuple[int, str]:
 
 
 def stage_batches(
-    df: DataFrame, path: str, key: str, keys: list[str]
+    df: DataFrame, path: str, key: str, keys: list[str] | dict[str, list[str]]
 ) -> dict[str, Staged]:
-    """Step 2 of the protocol: write `df` under `path` in ONE Spark job,
+    """Step 2 of the protocol: write `df` under `path` in ONE write,
     partitioned by (`key`, source), and return each key value's Staged
     partition `path/<key>=<k>`. Its manifest stats are a DataFrame.observe
-    on the write — the fold _manifest_stats runs, over every column but
-    `key` in df order, one conditional set per value in `keys` — so the
-    stats describe exactly the rows written.
+    on the write — the fold _manifest_stats runs, one conditional set per
+    key value — so the stats describe exactly the rows written. A key
+    value's row hash covers its committed columns in order: `keys` maps
+    each value to them, or lists values that all commit every column but
+    `key`, in df order.
+
+    The rows are clustered by the partition columns with a rebalance hint
+    before the write: adaptive execution packs a small write into one file
+    per directory and splits an oversized one at the session's advisory
+    partition size, where an unclustered write sprays one file per write
+    task into every directory it touches.
 
     Appends: the caller clears `path` first. The observe sits directly
-    above the write (no exchange between them), so its metrics merge once
-    per successful write task."""
-    cols = [c for c in df.columns if c != key]
+    above the write (the rebalance exchange is below it), so its metrics
+    merge once per successful write task."""
+    if not isinstance(keys, dict):
+        keys = dict.fromkeys(keys, [c for c in df.columns if c != key])
+    part_cols = [key] + (["source"] if "source" in df.columns else [])
     # the row hash and the key's index are computed once per row, not per
     # key: write_batches observes up to 52 weekly ids, where a per-key hash
-    # and string compare cost ~1 s of q_retention_horizon
-    keyed = df.withColumn("_row_hash", _row_hash(cols)).withColumn(
-        "_key", F.array_position(F.array(*[F.lit(k) for k in keys]), F.col(key))
-    )
+    # and string compare cost ~1 s of q_retention_horizon. Key values that
+    # commit the same columns share one hash expression.
+    by_cols: dict[tuple[str, ...], list[int]] = {}
+    for i, cols in enumerate(keys.values(), start=1):
+        by_cols.setdefault(tuple(cols), []).append(i)
+    hashes = [(_row_hash(list(c)), idx) for c, idx in by_cols.items()]
+    row_hash = hashes[0][0]
+    for h, idx in hashes[1:]:
+        row_hash = F.when(F.col("_key").isin(idx), h).otherwise(row_hash)
+    has_ts = "bucket_ts" in df.columns
     per_key = [
-        _stats_aggs(
-            F.col("_row_hash"), "bucket_ts" in cols, f"k{i}_", F.col("_key") == i + 1
-        )
+        _stats_aggs(F.col("_row_hash"), has_ts, f"k{i}_", F.col("_key") == i + 1)
         for i in range(len(keys))
     ]
     obs = Observation()
-    part_cols = [key] + (["source"] if "source" in cols else [])
     (
-        keyed.observe(obs, *[a for aggs in per_key for a in aggs])
+        df.hint("rebalance", *part_cols)
+        .withColumn(
+            "_key",
+            F.array_position(F.array(*[F.lit(k) for k in keys]), F.col(key)),
+        )
+        .withColumn("_row_hash", row_hash)
+        .observe(obs, *[a for aggs in per_key for a in aggs])
         .drop("_row_hash", "_key")
         .write.mode("append")
         .partitionBy(*part_cols)
@@ -266,13 +286,8 @@ class TierStore:
             prefix=f"{tier}-", dir=os.path.join(self.root, "_staging")
         )
         try:
-            # cluster rows by the partition dirs before writing (guide §6):
-            # without this every write task sprays a file into every
-            # batch=/source= dir it touches — N_tasks × N_dirs small files
-            part_cols = ["batch"] + (["source"] if "source" in df.columns else [])
-            staged = stage_batches(
-                out.repartition(*part_cols), staging, "batch", batch_ids
-            )
+            # stage_batches clusters the rows by (batch, source)
+            staged = stage_batches(out, staging, "batch", batch_ids)
             return {
                 bid: self.write_batch(staged[bid], tier, bid, config_hash)
                 for bid in batch_ids

@@ -2,13 +2,14 @@
 
 Incremental batch processing over an append-only tokenized-sequence table:
 each input batch runs ONE token scan (operators/ingest.py:
-ingest_from_tokens, the shuffle-free ladder and Gorilla block fold),
-persisted for two staged writes — the pending tiers partitioned by
-(stage, source), the blocks by source — whose manifest stats are observed
-on the writes themselves. Every stage then commits by renaming its staged
-partition into the TierStore and writing its lineage manifest, then its
-watermark (plans/lineage.py), so a kill at ANY point resumes to
-byte-identical content (tested).
+ingest_from_tokens, the shuffle-free ladder and Gorilla block fold) into
+ONE staged write: every tier row and block row is labelled with its
+stage, and the pending stages are written partitioned and clustered by
+(stage, source), so a small batch lands as one file per (stage, source).
+Each stage's manifest stats are observed on that write. Every stage then
+commits by renaming its staged partition into the TierStore and writing
+its lineage manifest, then its watermark (plans/lineage.py), so a kill at
+ANY point resumes to byte-identical content (tested).
 
 Deployment shape (cluster): `spark-submit --py-files fusets_spark.zip
 fusets_spark/plans/pipeline.py <input> <store>` against Iceberg; batches =
@@ -38,6 +39,10 @@ from .lineage import TierStore, stage_batches
 STAGES = [*TIERS.keys(), "blocks"]
 # each stage's committed columns, read back with exactly these types
 STAGE_SCHEMAS = {**{t: ingest.TIER_SCHEMA for t in TIERS}, "blocks": BLOCK_SCHEMA}
+# their names in committed order: what each stage's manifest hash covers
+STAGE_COLS = {
+    s: [f.split()[0] for f in ddl.split(", ")] for s, ddl in STAGE_SCHEMAS.items()
+}
 
 # TimescaleDB-style default retention: fine data is the shortest-lived,
 # coarser aggregates keep longer, the 1h tier forever (None).
@@ -79,13 +84,16 @@ class RollupPipeline:
         (for the resume test): the stage's data+manifest are committed but
         the watermark is NOT.
 
-        ONE token scan, persisted, feeds two staged writes under
-        `_staging/<id>`: the pending tiers partitioned by (stage, source)
-        and the blocks by source, each observing its stages' manifest
-        stats. Each pending stage then commits by rename. Staging is
-        overwrite-idempotent: a crash at any point resumes by re-staging
-        (content is a pure function of the batch), and committed stages
-        are skipped."""
+        ONE token scan feeds ONE staged write under `_staging/<id>`:
+        tier rows are labelled with their tier and block rows with
+        `blocks`, the pending stages are written partitioned by (stage,
+        source), and each stage's manifest stats are observed over its own
+        committed columns (STAGE_COLS). A file carries the other kind's
+        columns as nulls; reads take only the stage's own columns
+        (STAGE_SCHEMAS). Each pending stage then commits by rename.
+        Staging is overwrite-idempotent: a crash at any point resumes by
+        re-staging (content is a pure function of the batch), and
+        committed stages are skipped."""
         staging = self.store.stage_path(batch_id)
         pending = [
             s for s in STAGES if not self.store.is_committed(s, batch_id)
@@ -96,24 +104,16 @@ class RollupPipeline:
             # on ingest.ingest_from_tokens sees every staging scan
             ingested = ingest.ingest_from_tokens(
                 tokens, t0=self.t0, block_seconds=self.block_seconds
-            ).persist()
-            try:
-                tiers, blocks = ingest.split_ingest(ingested)
-                staged = {}
-                tier_stages = [s for s in pending if s in TIERS]
-                if tier_stages:
-                    by_stage = tiers.withColumnRenamed("tier", "stage")
-                    staged |= stage_batches(
-                        by_stage.filter(F.col("stage").isin(tier_stages)),
-                        staging, "stage", tier_stages,
-                    )
-                if "blocks" in pending:
-                    staged |= stage_batches(
-                        blocks.withColumn("stage", F.lit("blocks")),
-                        staging, "stage", ["blocks"],
-                    )
-            finally:
-                ingested.unpersist()
+            )
+            label = F.when(F.col("kind") == "tier", F.col("tier")).otherwise(
+                F.lit("blocks")
+            )
+            staged = stage_batches(
+                ingested.withColumn("stage", label)
+                .filter(F.col("stage").isin(pending))
+                .drop("kind", "tier"),
+                staging, "stage", {s: STAGE_COLS[s] for s in pending},
+            )
             for stage in pending:
                 self.store.write_batch(
                     staged[stage], stage, batch_id, self.cfg_hash

@@ -39,6 +39,16 @@ def with_null_tokens(spark, toks):
     return toks.unionByName(spark.createDataFrame(rows, TOKENS_SCHEMA))
 
 
+def split_ingest(ingested):
+    """(tiers, blocks) views of a fused ingest frame, each in its stage's
+    committed column order; tier rows keep their `tier` label last."""
+    from fusets_spark.plans.pipeline import STAGE_COLS
+
+    tiers = ingested.filter("kind = 'tier'").select(*STAGE_COLS["1m"], "tier")
+    blocks = ingested.filter("kind = 'block'").select(*STAGE_COLS["blocks"])
+    return tiers, blocks
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = get_spark("fusets-tests", cores=4, shuffle_partitions=8)

@@ -140,11 +140,11 @@ def test_compression_ratio_on_token_series():
 def test_token_direct_encode_equals_explode_path(spark):
     """The shuffle-free token ingest must produce byte-identical blocks to
     explode_raw + generic encode_blocks, NULL tokens included."""
-    from conftest import with_null_tokens
+    from conftest import split_ingest, with_null_tokens
     from fusets_spark.codec.blocks import encode_blocks
     from fusets_spark.datagen import generate_tokens
     from fusets_spark.operators.explode import explode_raw
-    from fusets_spark.operators.ingest import ingest_from_tokens, split_ingest
+    from fusets_spark.operators.ingest import ingest_from_tokens
 
     toks = with_null_tokens(
         spark, generate_tokens(spark, 50, min_tok=32, max_tok=300)

@@ -27,6 +27,31 @@ def _stage_one(store, df, tier, batch_id):
     )[tier]
 
 
+def _execution_ids(spark) -> set[int]:
+    """Ids of the SQL executions in the status store, once every event
+    posted so far has reached it. New executions are told apart by id: the
+    store's count stops growing at spark.sql.ui.retainedExecutions, which a
+    whole test session passes."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().executionId())
+    return ids
+
+
+def _files_per_dir(store) -> dict[str, int]:
+    """Parquet files per committed batch=/source= directory."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(os.path.join(store.root, "tiers")):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            out[os.path.relpath(d, store.root)] = n
+    return out
+
+
 def _batches(spark):
     return {
         f"b{str(i).zfill(3)}": generate_tokens(
@@ -133,7 +158,13 @@ def test_partition_pruning_on_source(spark, batches, tmp_path):
     prune partitions at scan time, and manifests carry byte counts."""
     root = str(tmp_path / "prune")
     pipe = RollupPipeline(root)
+    before = _execution_ids(spark)
     pipe.run(spark, dict(list(batches.items())[:1]))
+    # a commit is one staged write: one SQL execution, and one file per
+    # (stage, source) directory of the batch
+    assert len(_execution_ids(spark) - before) == 1
+    files = _files_per_dir(pipe.store)
+    assert files and set(files.values()) == {1}, files
     df = pipe.read_tier(spark, "1m").filter("source = 's2ndvi'")
     plan = df._jdf.queryExecution().executedPlan().toString()
     # both the user's source filter AND the snapshot read's live-batch
@@ -648,13 +679,18 @@ def test_read_tier_empty_live_set(spark, tmp_path):
                 assert got.count() == 0
 
 
-def test_observed_manifests_match_committed_files(spark, batches, tmp_path):
+@pytest.mark.parametrize("advisory", [None, "4k"], ids=["default", "4k"])
+def test_observed_manifests_match_committed_files(
+    spark, batches, tmp_path, advisory
+):
     """Manifest stats are observed on the staged write, never read back.
     Recomputing _manifest_stats from every committed partition's files
     (read with the declared schema) must give the manifest's row count,
     content hash and bucket_ts range, and n_bytes must be the partition's
     bytes on disk — across a crash + resume, a compaction and a
-    write_batches commit."""
+    write_batches commit. At a 4k advisory partition size adaptive
+    execution splits an oversized (stage, source) directory over several
+    files, which a plain repartition by (stage, source) never does."""
     import os
 
     from pyspark.sql import functions as F
@@ -663,19 +699,29 @@ def test_observed_manifests_match_committed_files(spark, batches, tmp_path):
     from fusets_spark.plans.lineage import TierStore, _manifest_stats
     from fusets_spark.plans.pipeline import STAGE_SCHEMAS
 
+    advisory_conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     pipe = RollupPipeline(str(tmp_path / "store"))
-    with pytest.raises(RuntimeError, match="simulated failure"):
-        pipe.run(spark, batches, fail_at=("b001", "5m"))
-    pipe.run(spark, batches)
-    new_id = "compact-b000-b001"
-    pipe.compact_block_batches(spark, ["b000", "b001"], new_id, 86400)
-    by_minute = (
-        pipe.read_tier(spark, "1m")
-        .drop("batch")
-        .withColumn("_batch", F.format_string("m%d", F.minute("bucket_ts")))
-    )
-    minute_mans = pipe.store.write_batches(by_minute, "by_minute", "_batch", "cfg")
+    if advisory:
+        spark.conf.set(advisory_conf, advisory)
+    try:
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            pipe.run(spark, batches, fail_at=("b001", "5m"))
+        pipe.run(spark, batches)
+        new_id = "compact-b000-b001"
+        pipe.compact_block_batches(spark, ["b000", "b001"], new_id, 86400)
+        by_minute = (
+            pipe.read_tier(spark, "1m")
+            .drop("batch")
+            .withColumn("_batch", F.format_string("m%d", F.minute("bucket_ts")))
+        )
+        minute_mans = pipe.store.write_batches(
+            by_minute, "by_minute", "_batch", "cfg"
+        )
+    finally:
+        spark.conf.unset(advisory_conf)
     assert len(minute_mans) > 1
+    if advisory:
+        assert max(_files_per_dir(pipe.store).values()) > 1
 
     schemas = {
         s: spark.createDataFrame([], STAGE_SCHEMAS[s]).schema for s in STAGES

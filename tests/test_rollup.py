@@ -75,8 +75,8 @@ def test_salted_rollup_is_exact(spark, raw_points):
 def test_tokens_native_rollup_equals_explode_path(spark):
     """The shuffle-free token ingest's tiers, order keys included, must
     equal explode_raw + groupBy exactly, NULL tokens included."""
-    from conftest import with_null_tokens
-    from fusets_spark.operators.ingest import ingest_from_tokens, split_ingest
+    from conftest import split_ingest, with_null_tokens
+    from fusets_spark.operators.ingest import ingest_from_tokens
 
     toks = with_null_tokens(
         spark, generate_tokens(spark, 80, seed=7, min_tok=32, max_tok=400)
