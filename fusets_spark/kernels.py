@@ -12,9 +12,13 @@ Every sequential per-series numpy kernel (codec, smoothing, harmonics,
 CCDC, peak/valley, Whittaker, MOGPR fusion) and similarity's LSH pair
 join run through group_kernel — the role
 `xarray.apply_ufunc(..., input_core_dims=[[time_dim]])` plays in the
-reference. The only other grouped Python call is the stateful block
-sealer, which takes its bucket column from bucket_col
-(tests/test_kernel_boundary.py keeps it that way).
+reference. Two of them run their time loop once per call, vectorized
+across the call's series, not once per series: Whittaker's banded
+solve, and fusion's state-space path (batched Kalman + RTS sweeps over
+the call's long docs, each sweep's arrays bounded by GROUP_BYTES). The
+only other grouped Python call is the stateful block sealer, which
+takes its bucket column from bucket_col (tests/test_kernel_boundary.py
+keeps it that way).
 
 A kernel group is a partition: series are hashed straight into
 n_buckets(df) partitions, so one kernel call receives MANY whole series

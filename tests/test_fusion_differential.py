@@ -193,3 +193,67 @@ def test_state_space_twin_matches_dense():
     for s in dense:
         assert np.abs(dense[s][0] - ss[s][0]).max() < 1e-7
         assert np.abs(dense[s][1] - ss[s][1]).max() < 1e-7
+
+
+def _companion_docs(rng):
+    """22 random docs for the state-space sweep: 1-3 signals, lengths from
+    just over SS_OBS_THRESHOLD to ~1000 observations, an all-NaN master, a
+    constant signal, duplicate timestamps inside one signal, and both grid
+    modes (observed union and a regular prediction_period_days grid)."""
+    docs = []
+    for k in range(22):
+        n_sig = 1 + k % 3
+        n_obs = {0: 201, 1: 999, 2: 202, 3: 1000}.get(k, int(rng.integers(210, 700)))
+        sizes = np.full(n_sig, n_obs // n_sig)
+        sizes[0] += n_obs - sizes.sum()
+        sigs = {}
+        for i, n in enumerate(sizes):
+            t = np.sort(np.round(rng.uniform(0, 3 * n_obs, n)))  # whole days tie
+            if k % 4 == 1:  # a second reading at the same instant
+                t[1::7] = t[0:-1:7]
+            y = np.sin(t / (9.0 + 4 * i)) * 20 + rng.normal(0, 1.5, n)
+            if k % 5 == 2 and i == n_sig - 1:
+                y[:] = 4.0  # constant signal
+            if n_obs > 202:  # docs 0 and 2 sit just over the threshold
+                y[rng.integers(0, n, n // 20)] = np.nan
+            sigs[f"s{i}"] = (t, y)
+        if k == 5:  # all-NaN master: gated, no output
+            sigs["a"] = (sigs["s0"][0], np.full(len(sigs["s0"][0]), np.nan))
+        obs = np.unique(
+            np.concatenate([t[~np.isnan(y)] for t, y in sigs.values()])
+        )
+        out_t = obs if k % 2 else np.arange(obs[0], obs[-1] + 1e-9, 2.5)
+        docs.append((sigs, out_t))
+    return docs
+
+
+def test_state_space_sweep_output_does_not_depend_on_batch(monkeypatch):
+    """mogpr_fuse batches every long doc of a call into shared Kalman + RTS
+    sweeps; a doc's (mean, std) must be bit-identical to its solo sweep
+    whatever docs share it, and stay the dense GP posterior."""
+    from fusets_spark.operators import fusion
+
+    docs = _companion_docs(np.random.default_rng(7))
+    sweeps = []
+    run = fusion._sweep
+    monkeypatch.setattr(
+        fusion, "_sweep", lambda batch, *a: sweeps.append(batch) or run(batch, *a)
+    )
+    ls, nz, rho = 16.0, 0.05, 0.6
+    batched = fusion.mogpr_fuse_sweep(docs, ls, nz, rho)
+    # the docs really shared sweeps, a short doc beside a ~1000-step one
+    assert len(sweeps) < len(docs) - 1
+    steps = [[len(d.times) for d in b] for b in sweeps]
+    assert any(min(n) < 250 and max(n) > 800 for n in steps), steps
+    for (sigs, out_t), got in zip(docs, batched):
+        solo = fusion.mogpr_fuse_series_ss(sigs, out_t, ls, nz, rho)
+        dense = fusion.mogpr_fuse_series(sigs, out_t, ls, nz, rho)
+        assert sorted(got) == sorted(solo) == sorted(dense)
+        n_obs = sum(int((~np.isnan(y)).sum()) for _, y in sigs.values())
+        tol = 1e-7 if n_obs > 500 else 1e-8
+        for s in got:
+            assert np.array_equal(got[s][0], solo[s][0])
+            assert np.array_equal(got[s][1], solo[s][1])
+            assert np.abs(got[s][0] - dense[s][0]).max() < tol
+            assert np.abs(got[s][1] - dense[s][1]).max() < tol
+    assert batched[5] == {}

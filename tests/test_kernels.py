@@ -193,6 +193,43 @@ def test_fusion_spark_shape_contract(spark, set_buckets):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_fusion_state_space_docs_match_across_bucketings(spark, set_buckets):
+    """Docs over SS_OBS_THRESHOLD share batched state-space sweeps with the
+    other long docs of their bucket; a different bucketing gives them other
+    batch-mates, and their rows must stay bit-identical."""
+    from fusets_spark.operators.fusion import SS_OBS_THRESHOLD
+
+    rng = np.random.default_rng(17)
+    rows = []
+    for k in range(9):
+        sources = ("a", "b", "c") if k % 4 == 3 else ("a", "b")
+        n = int(rng.integers(120, 260))
+        days = np.sort(rng.choice(900, n, replace=False))
+        for i, src in enumerate(sources):
+            # the signals share most timestamps; a few tie inside one signal
+            d = np.sort(np.r_[days[rng.random(n) < 0.9], days[:: 37]])
+            v = 40 + 25 * np.sin(d / (15.0 + 6 * i)) + rng.normal(0, 2, len(d))
+            for day, val in zip(d, v):
+                rows.append((f"doc{k}", src,
+                             pd.Timestamp("2023-01-01") + pd.Timedelta(days=int(day)),
+                             float(val)))
+    pdf = pd.DataFrame(rows, columns=["doc_id", "source", "ts", "value"])
+    assert (pdf.groupby("doc_id").size() > SS_OBS_THRESHOLD).all()
+    sdf = spark.createDataFrame(pdf)
+    key = ["doc_id", "source", "ts"]
+
+    def fused(df):
+        out = mogpr_fuse(df, lengthscale=20.0).toPandas()
+        return out.sort_values(key).reset_index(drop=True)
+
+    set_buckets(2)
+    a = fused(sdf)
+    set_buckets(5)
+    b = fused(sdf.repartition(7))
+    assert a["doc_id"].nunique() == 9
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
 def test_ccdc_detects_step_change():
     """A clean level shift must yield exactly two segments with the break
     at the first post-shift observation; an unbroken harmonic yields one."""
